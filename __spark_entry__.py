@@ -1116,13 +1116,16 @@ def q_doc_lsh_recall(spark, sf_dir):
     one bucket, so candidate generation materialized ~Σ B² ≈ 1.6B pair
     rows at sf1.0 (measured >985 s) only for the semi-join to keep the
     few thousand true pairs. With NO bucket cap and threshold 0.0,
-    `pair ∈ candidates ⟺ the two signatures agree on ≥ 1 band`, so the
-    query now computes the SAME membership per TRUE pair directly:
+    `pair ∈ candidates ⟺ the two signatures share a band bucket`, so
+    the query now tests the membership per TRUE pair directly:
     broadcast the exact-Jaccard pairs onto the signature table (the
     identical k=64/seed-42/xxh64 signatures minhash_lsh_pairs builds)
     and test band agreement with one `exists` over the 32 band slices —
-    |true_pairs| work instead of Σ B². n_true/n_found/recall are
-    provably unchanged."""
+    |true_pairs| work instead of Σ B². n_true is unchanged. n_found
+    (and so recall) is unchanged up to hash collisions: the old bucket
+    key was xxhash64(band, slice), so two DIFFERENT slices colliding in
+    one band (probability ~2^-64 per pair and band) counted a pair that
+    the exact slice comparison here does not."""
     docs = _docs(spark, sf_dir, where=F.col("doc_id") % 2 == 0)
     true_pairs = D.ngram_jaccard_pairs(docs, n=3, threshold=0.9).select(
         "id_a", "id_b"
@@ -1577,12 +1580,6 @@ def q_doc_minhash_pairs(spark, sf_dir):
     operating point τ=0.8; max_bucket bounds the candidate join against
     the corpus's giant template clusters (one B-member bucket otherwise
     yields B² candidates)."""
-    # r7 note: dict_hash=True (hash the 377-shingle domain once,
-    # broadcast back, skip 7.5M per-occurrence md5s) was A/B-measured
-    # at sf1.0 and came out a wash (8.8-10.1 s vs 8.1-9.9 s warm
-    # interleaved) — the distinct+broadcast build job eats exactly what
-    # the cheaper hashing saves, matching the sf0.1 measurement in the
-    # operator docstring. Left at the default.
     return D.minhash_lsh_pairs(
         _docs(spark, sf_dir), k=32, bands=8, threshold=0.8,
         max_bucket=200, hash_mode="md5",

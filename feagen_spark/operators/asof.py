@@ -252,7 +252,6 @@ def asof_join_nearest(
     include_right_ts: str | None = None,
     chunked: bool = False,
     chunk_span_s: int = 3600,
-    broadcast_carries: bool = True,
 ) -> DataFrame:
     """Nearest-in-time join (pandas ``merge_asof(direction='nearest')``
     analogue — sensor fusion / closest-reading attachment): each left
@@ -279,8 +278,7 @@ def asof_join_nearest(
     pathologically hot key becomes O(span/chunk_span_s) parallel tasks
     per leg instead of one pinned task. The forward leg's ordering
     column is negated epoch-µs, so its bucket width is passed in column
-    units (``chunk_span_s`` · 10⁶); ``broadcast_carries`` is forwarded
-    to both legs."""
+    units (``chunk_span_s`` · 10⁶)."""
     on = list(on)
     if values is None:
         values = [c for c in right.columns if c not in set(on) | {right_ts}]
@@ -297,10 +295,7 @@ def asof_join_nearest(
 
     def _leg(l, r, span_kwargs, **kw):
         if chunked:
-            return asof_join_chunked(
-                l, r, broadcast_carries=broadcast_carries,
-                **span_kwargs, **kw,
-            )
+            return asof_join_chunked(l, r, **span_kwargs, **kw)
         return asof_join(l, r, **kw)
 
     back = _leg(
@@ -373,7 +368,6 @@ def asof_join_chunked(
     value_prefix: str = "",
     chunk_span_s: int = 3600,
     chunk_span: int | None = None,
-    broadcast_carries: bool = True,
     tolerance_s: float | None = None,
     include_right_ts: str | None = None,
 ) -> DataFrame:
@@ -402,10 +396,6 @@ def asof_join_chunked(
     ``chunk_span_s`` seconds. For NUMERIC ordering columns pass
     ``chunk_span`` — the width in the column's own units (epoch-seconds,
     row index, ...); guessing would silently mis-size the buckets.
-
-    ``broadcast_carries=False`` drops the broadcast hint on the fixup
-    join — use it when keys × chunks is itself huge (the carries frame
-    then shuffles like a normal join under AQE).
     """
     au = _asof_union(
         left, right, on, left_ts, right_ts, values, strict, right_order,
@@ -471,11 +461,8 @@ def asof_join_chunked(
     )
     # carries holds one row per non-empty (key, chunk) — usually small
     # next to the data; the broadcast keeps the fixup join shuffle-free
-    # on the big side. broadcast_carries=False when keys × chunks is
-    # itself large (AQE then plans the join normally).
-    if broadcast_carries:
-        carries = F.broadcast(carries)
-    out = within.join(carries, on=[*au.on, _CHUNK], how="left")
+    # on the big side.
+    out = within.join(F.broadcast(carries), on=[*au.on, _CHUNK], how="left")
     out = out.withColumn(_SNAP, F.coalesce(F.col("__within"), F.col("__carry")))
     out = _apply_tolerance(au, out, tolerance_s)
     return _asof_project(au, out, include_right_ts)

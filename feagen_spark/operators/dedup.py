@@ -5,11 +5,15 @@ Scale design (the point of each choice):
 
 - ``exact_dedup``: hash-groupBy on the normalized text — one shuffle on
   the text hash, min-id winner, AQE handles skewed duplicates.
-- ``ngram_jaccard_pairs``: exact Jaccard via shingle-explode + self-join
-  on the shingle. O(sum shingle-pair counts); ``max_df`` drops shingles
-  that occur in more than N docs (stopword-shingles are what blow this
-  up at scale — same trick as common-token filtering in SpGFF/ANN
-  literature). Ground truth for the probabilistic variants below.
+- ``ngram_jaccard_pairs``: exact Jaccard via blocked pair counting —
+  docs hash into blocks, each block pair is one task that counts shared
+  shingles with a dense 0/1 matmul, and the JVM re-derives the exact
+  jaccard from the integer counts. Never materializes the Σ df(s)²
+  rows of a shingle self-join (that plan is kept only as the test
+  oracle, ``tests/oracles.py``); ``max_df`` drops shingles that occur
+  in more than N docs (stopword-shingles — same trick as common-token
+  filtering in SpGFF/ANN literature). Ground truth for the
+  probabilistic variants below.
 - ``minhash_lsh_pairs``: MinHash signatures (k Kirsch-Mitzenmacher mins
   from ONE xxhash64 per shingle, computed in ONE groupBy), banded LSH bucket
   join so candidate generation never compares all pairs; candidates are
@@ -205,8 +209,6 @@ def boilerplate_scrub(
     sep: str = "\n",
     min_chars: int = 1,
     count_col: str | None = "n_lines_dropped",
-    method: str = "exact",
-    capacity: int = 1 << 15,
 ) -> DataFrame:
     """C4-style boilerplate-line removal: drop EVERY occurrence of any
     normalized line that appears ``min_count``-or-more times
@@ -217,15 +219,9 @@ def boilerplate_scrub(
     reassembled in original order with a ``count_col`` audit; NULL
     text is treated as empty (the row survives).
 
-    ``method='exact'`` (default): one groupBy over line md5 DIGESTS
-    elects the hot set — line text never rides that wire, the same
-    shuffle class as ``paragraph_dedup``'s election; works at any
-    threshold. ``method='sketch'``: ``sketches.heavy_hitters`` bounds
-    the shuffle to MG summaries + candidate rows — the cheaper path
-    when ``min_count`` is LARGE (true heavy boilerplate at corpus
-    scale); its error-bound guard RAISES when ``min_count`` sits
-    inside the sketch error (a low threshold over a huge line domain),
-    so it never silently under-scrubs — fall back to 'exact' then.
+    One groupBy over line md5 DIGESTS elects the hot set — line text
+    never rides that wire, the same shuffle class as
+    ``paragraph_dedup``'s election; exact at any threshold.
     Survivor filter is a null-safe LEFT ANTI join on the digest
     (structural lines carry a NULL digest and always survive)."""
     if min_count < 2:
@@ -236,23 +232,14 @@ def boilerplate_scrub(
         F.length(_norm("__para")) >= int(min_chars), F.md5(_norm("__para"))
     )
     keyed = paras.withColumn("__k", key)
-    eligible = keyed.where(F.col("__k").isNotNull()).select("__k")
-    if method == "exact":
-        hot = (
-            eligible.groupBy("__k")
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .where(F.col("__n") >= int(min_count))
-            .select("__k")
-        )
-    elif method == "sketch":
-        from .sketches import heavy_hitters
-
-        hot = heavy_hitters(
-            eligible, "__k", threshold=int(min_count), capacity=capacity,
-            item_col="__k",
-        ).select("__k")
-    else:
-        raise ValueError(f"unknown method {method!r}")
+    hot = (
+        keyed.where(F.col("__k").isNotNull())
+        .select("__k")
+        .groupBy("__k")
+        .agg(F.count(F.lit(1)).alias("__n"))
+        .where(F.col("__n") >= int(min_count))
+        .select("__k")
+    )
     survivors = keyed.join(hot, on="__k", how="left_anti").select(
         F.col(id_col), "__pos", "__para"
     )
@@ -290,89 +277,73 @@ def ngram_jaccard_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     max_df: int | None = None,
-    mode: str = "auto",
     n_blocks: int = 8,
 ) -> DataFrame:
     """Exact n-gram Jaccard similarity pairs (a<b) with sim >= threshold.
 
-    Two physical plans, same exact result:
-
-    - ``mode='blocked'`` (the ``'auto'`` default, r7 optimization): the
-      shingle-explode self-join blows up as Σ_s df(s)² — on a templated
-      corpus the char-n-gram vocabulary is tiny (measured 377 distinct
-      3-grams over 10k driver docs), every shingle is hot, and the join
-      materializes BILLIONS of rows (8.9B at sf1.0, 162 s). Instead the
-      pair space itself is partitioned: docs hash into ``n_blocks``
-      blocks, every unordered block pair (i ≤ j) is one task, and each
-      task receives exactly its two blocks' shingle rows (each row
-      replicated n_blocks times — shuffle is n·B *shingle* rows, never
-      pair rows). Inside a task the intersection counts come from one
-      dense 0/1 matmul over the locally factorized vocabulary (exact:
-      0/1 products, counts ≤ 2²⁴ in float32) when the local vocab is
-      small, else a vectorized pandas merge+groupby (the join algorithm,
-      local). Candidates pass a τ−1e-6 prefilter in float64 (the same
-      IEEE division the JVM performs — the margin only guards the
-      HALF_EVEN/HALF_UP rounding difference); the returned jaccard is
-      re-derived in the JVM from the exact integer (inter, sz_a, sz_b),
-      so emitted values are bit-identical to the join plan. Measured on
-      the sf1.0 cluster subset (10k docs, 18.9M qualifying pairs):
-      ~230 s (isolated join plan, dominated by the blowup) → 3.8 s warm
-      for the full pair list.
-    - ``mode='join'``: the original shingle-explode self-join — fastest
-      when df(s) is uniformly tiny and pairs are rare.
+    Blocked plan (r7): a shingle-explode self-join blows up as
+    Σ_s df(s)² — on a templated corpus the char-n-gram vocabulary is
+    tiny (measured 377 distinct 3-grams over 10k driver docs), every
+    shingle is hot, and the join materializes BILLIONS of rows (8.9B at
+    sf1.0, 162 s). Instead the pair space itself is partitioned: docs
+    hash into ``n_blocks`` blocks, every unordered block pair (i ≤ j) is
+    one task, and each task receives exactly its two blocks' shingle
+    rows (each row replicated n_blocks times — shuffle is n·B *shingle*
+    rows, never pair rows). Inside a task the intersection counts come
+    from one dense 0/1 matmul over the locally factorized vocabulary
+    (exact: 0/1 products, counts ≤ 2²⁴ in float32) when the local vocab
+    is small, else a vectorized pandas merge+groupby (the join
+    algorithm, local). Candidates pass a τ−1e-6 prefilter in float64
+    (the same IEEE division the JVM performs — the margin only guards
+    the HALF_EVEN/HALF_UP rounding difference); the returned jaccard is
+    re-derived in the JVM from the exact integer (inter, sz_a, sz_b),
+    so emitted values are bit-identical to the self-join plan, which
+    the tests keep as the parity oracle. Measured on the sf1.0 cluster
+    subset (10k docs, 18.9M qualifying pairs): ~230 s (isolated join
+    plan, dominated by the blowup) → 3.8 s warm for the full pair list.
 
     At 100 TB: exact all-pairs Jaccard is inherently O(pairs) work;
     ``n_blocks`` spreads the B(B+1)/2 block-pair tasks across the
     cluster (size it so one block's shingle rows fit a task), and the
     subquadratic escape hatch stays ``minhash_lsh_pairs``.
     """
-    if mode not in ("auto", "blocked", "join"):
-        raise ValueError(f"unknown ngram_jaccard_pairs mode {mode!r}")
-    sh = shingles(df, n=n, id_col=id_col, text_col=text_col)
-    if max_df is not None:
-        hot = (
-            sh.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .where(F.col("df") > max_df)
-            .select("shingle")
-        )
-        sh = sh.join(F.broadcast(hot), on="shingle", how="left_anti")
-    if mode == "join":
-        sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
-        a = sh.alias("a")
-        b = sh.alias("b")
-        inter = (
-            a.join(b, on="shingle")
-            .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-            .groupBy(
-                F.col(f"a.{id_col}").alias("id_a"),
-                F.col(f"b.{id_col}").alias("id_b"),
-            )
-            .agg(F.count(F.lit(1)).alias("inter"))
-        )
-        sa = sizes.select(
-            F.col(id_col).alias("id_a"), F.col("sz").alias("sz_a")
-        )
-        sb = sizes.select(
-            F.col(id_col).alias("id_b"), F.col("sz").alias("sz_b")
-        )
-        cand = inter.join(sa, "id_a").join(sb, "id_b")
-    else:
-        cand = _blocked_pair_counts(
-            sh, id_col=id_col, threshold=threshold, n_blocks=n_blocks
-        )
-    return (
-        cand.withColumn(
-            "jaccard",
-            F.round(
-                F.col("inter")
-                / (F.col("sz_a") + F.col("sz_b") - F.col("inter")),
-                6,
-            ),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
+    sh = _filtered_shingles(df, n, id_col, text_col, max_df)
+    cand = _blocked_pair_counts(
+        sh, id_col=id_col, threshold=threshold, n_blocks=n_blocks
     )
+    return _jaccard_at_least(cand, threshold).select("id_a", "id_b", "jaccard")
+
+
+def _filtered_shingles(
+    df: DataFrame, n: int, id_col: str, text_col: str, max_df: int | None
+) -> DataFrame:
+    """``shingles`` minus every shingle occurring in more than ``max_df``
+    docs (None keeps all): the stopword-shingle cut shared by every
+    n-gram Jaccard plan — a broadcast anti-join against the hot set."""
+    sh = shingles(df, n=n, id_col=id_col, text_col=text_col)
+    if max_df is None:
+        return sh
+    hot = (
+        sh.groupBy("shingle")
+        .agg(F.count(F.lit(1)).alias("df"))
+        .where(F.col("df") > max_df)
+        .select("shingle")
+    )
+    return sh.join(F.broadcast(hot), on="shingle", how="left_anti")
+
+
+def _jaccard_at_least(cand: DataFrame, threshold: float) -> DataFrame:
+    """Adds the JVM ``jaccard = round(inter/(sz_a+sz_b−inter), 6)`` to
+    (id_a, id_b, inter, sz_a, sz_b) counts and keeps rows with
+    ``jaccard >= threshold`` — the ONE bit-exact decision every n-gram
+    Jaccard plan applies to its exact integer counts."""
+    return cand.withColumn(
+        "jaccard",
+        F.round(
+            F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")),
+            6,
+        ),
+    ).where(F.col("jaccard") >= threshold)
 
 
 # dense-matmul cutoff for the in-task intersection counter: above this
@@ -639,33 +610,15 @@ def ngram_jaccard_cluster_edges(
     list applies — so the resulting components are provably identical
     (see ``_blocked_pair_counts``). Returns (id_a, id_b) rows: stars ∪
     JVM-passed boundary pairs."""
-    sh = shingles(df, n=n, id_col=id_col, text_col=text_col)
-    if max_df is not None:
-        hot = (
-            sh.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .where(F.col("df") > max_df)
-            .select("shingle")
-        )
-        sh = sh.join(F.broadcast(hot), on="shingle", how="left_anti")
+    sh = _filtered_shingles(df, n, id_col, text_col, max_df)
     mixed = _blocked_pair_counts(
         sh, id_col=id_col, threshold=threshold, n_blocks=n_blocks,
         cluster_edges=True,
     )
     stars = mixed.where(F.col("inter").isNull()).select("id_a", "id_b")
-    boundary = (
-        mixed.where(F.col("inter").isNotNull())
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("inter")
-                / (F.col("sz_a") + F.col("sz_b") - F.col("inter")),
-                6,
-            ),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b")
-    )
+    boundary = _jaccard_at_least(
+        mixed.where(F.col("inter").isNotNull()), threshold
+    ).select("id_a", "id_b")
     return stars.unionByName(boundary)
 
 
@@ -682,7 +635,6 @@ def minhash_signatures(
     text_col: str = "text",
     seed: int = 42,
     hash_mode: str = "xxh64",
-    dict_hash: bool = False,
 ) -> DataFrame:
     """k-permutation MinHash: ONE groupBy over exploded shingles; the k
     mins are computed as k map-side-combinable aggregates (no UDF).
@@ -703,19 +655,11 @@ def minhash_signatures(
     md5(seed || shingle), so an external engine (the DuckDB oracle, a
     Trino/Flink consumer) can reproduce signatures bit-for-bit.
 
-    ``dict_hash`` (default False): hash the DISTINCT shingle domain
-    once and broadcast-join the (h1, h2) pair back onto the exploded
-    shingle rows, instead of hashing every occurrence — bit-identical
-    output (min over a multiset == min over its support; tested). Char
-    n-gram domains are bounded by |charset|^n (the corpus volume grows
-    occurrences, not the domain), so the broadcast stays small at any
-    scale. OFF by default because it was measured SLOWER at sf0.1
-    (warm interleaved best-of-4, r6: signatures 0.92 s per-occurrence
-    vs 1.39 s dict; an earlier cold-JIT run had suggested the
-    opposite) — the distinct pass + broadcast probe costs more than
-    md5 on 3-char strings saves. The knob exists for genuinely
-    expensive hash functions or long shingles, where per-occurrence
-    hashing dominates; measure before enabling."""
+    Every shingle OCCURRENCE is hashed: hashing the distinct shingle
+    domain once and broadcast-joining (h1, h2) back lost its A/B in r6
+    (sf0.1 warm best-of-4: 0.92 s per-occurrence vs 1.39 s) and r7
+    (sf1.0 ``doc_minhash_pairs``: a wash) — the distinct pass +
+    broadcast probe costs what hashing 3-char strings saves."""
     sh = shingles(df, n=n, id_col=id_col, text_col=text_col)
     if hash_mode == "md5":
         hx = F.md5(F.concat(F.lit(str(seed)), F.col("shingle")))
@@ -727,25 +671,11 @@ def minhash_signatures(
         h2 = base.bitwiseAND(F.lit(_MH_MASK))
     else:
         raise ValueError(f"unknown hash_mode {hash_mode!r}")
-    if dict_hash:
-        dic = (
-            sh.select("shingle")
-            .distinct()
-            .select(
-                "shingle",
-                h1.alias("__h1"),
-                h2.bitwiseOR(F.lit(1)).alias("__h2"),
-            )
-        )
-        sh = sh.join(F.broadcast(dic), on="shingle").select(
-            id_col, "__h1", "__h2"
-        )
-    else:
-        sh = sh.select(
-            id_col,
-            h1.alias("__h1"),
-            h2.bitwiseOR(F.lit(1)).alias("__h2"),
-        )
+    sh = sh.select(
+        id_col,
+        h1.alias("__h1"),
+        h2.bitwiseOR(F.lit(1)).alias("__h2"),
+    )
     mins = [
         F.min(
             (F.col("__h1") + F.lit(i) * F.col("__h2")).bitwiseAND(F.lit(_MH_MASK))
@@ -769,7 +699,6 @@ def minhash_lsh_pairs(
     seed: int = 42,
     max_bucket: int | None = 500,
     hash_mode: str = "xxh64",
-    dict_hash: bool = False,
 ) -> DataFrame:
     """Banded-LSH candidate generation + signature-estimated Jaccard.
 
@@ -790,7 +719,7 @@ def minhash_lsh_pairs(
         raise ValueError("k must be divisible by bands")
     sig = minhash_signatures(
         df, k=k, n=n, id_col=id_col, text_col=text_col, seed=seed,
-        hash_mode=hash_mode, dict_hash=dict_hash,
+        hash_mode=hash_mode,
     )
 
     # carry the signature THROUGH the band explode: the candidate join then
@@ -944,7 +873,6 @@ def minhash_probe_increment(
     seed: int = 42,
     max_bucket: int | None = 500,
     hash_mode: str = "xxh64",
-    broadcast_increment: bool = True,
     tag_kind: bool = False,
     index_where: F.Column | None = None,
     fmt: str = "parquet",
@@ -960,9 +888,9 @@ def minhash_probe_increment(
     Scale shape: only the increment is signatured (one groupBy over its
     shingles); the corpus side is a column-pruned scan of the index.
     The cross join broadcasts the banded increment (a daily batch is
-    small next to the corpus — set ``broadcast_increment=False`` when
-    it isn't), so the index NEVER shuffles; increment-internal pairs
-    reuse the batch operator's self-join on the tiny side. The
+    small next to the corpus), so the index NEVER shuffles;
+    increment-internal pairs reuse the batch operator's self-join on
+    the tiny side. The
     ``max_bucket`` hot-bucket cap counts corpus + increment members
     per bucket — identical semantics to the one-shot operator — via a
     (band, bucket)-only scan of the index, no signatures or text on
@@ -996,8 +924,7 @@ def minhash_probe_increment(
     )
     return probe_band_rows(
         spark, index_path, inc_bands, k=k, threshold=threshold,
-        id_col=id_col, max_bucket=max_bucket,
-        broadcast_increment=broadcast_increment, tag_kind=tag_kind,
+        id_col=id_col, max_bucket=max_bucket, tag_kind=tag_kind,
         index_where=index_where, fmt=fmt,
     )
 
@@ -1010,7 +937,6 @@ def probe_band_rows(
     threshold: float = 0.7,
     id_col: str = "doc_id",
     max_bucket: int | None = 500,
-    broadcast_increment: bool = True,
     tag_kind: bool = False,
     index_where: F.Column | None = None,
     fmt: str = "parquet",
@@ -1038,14 +964,14 @@ def probe_band_rows(
         hot = F.broadcast(counts)
         idx = idx.join(hot, on=["band", "bucket"], how="left_anti")
         inc_bands = inc_bands.join(hot, on=["band", "bucket"], how="left_anti")
-    probe = inc_bands.select(
-        "band",
-        "bucket",
-        F.col(id_col).alias("__id_i"),
-        F.col("signature").alias("__sig_i"),
+    probe = F.broadcast(
+        inc_bands.select(
+            "band",
+            "bucket",
+            F.col(id_col).alias("__id_i"),
+            F.col("signature").alias("__sig_i"),
+        )
     )
-    if broadcast_increment:
-        probe = F.broadcast(probe)
     cross = (
         idx.select(
             "band",
@@ -1066,9 +992,7 @@ def probe_band_rows(
     )
     if tag_kind:
         cross = cross.withColumn("pair_kind", F.lit("cross"))
-    self_pairs = band_rows_self_pairs(
-        inc_bands, k, id_col=id_col, broadcast_side=broadcast_increment
-    )
+    self_pairs = band_rows_self_pairs(inc_bands, k, id_col=id_col)
     if tag_kind:
         self_pairs = self_pairs.withColumn("pair_kind", F.lit("intra"))
     return (
@@ -1082,17 +1006,14 @@ def band_rows_self_pairs(
     band_rows: DataFrame,
     k: int,
     id_col: str = "doc_id",
-    broadcast_side: bool = True,
 ) -> DataFrame:
     """Un-thresholded candidate pairs (a<b) WITHIN one banded set —
     shared by the probe's intra leg and the streaming cold-start path
     (both already hold band rows; re-deriving pairs from raw text would
     shingle the batch a second time)."""
-    a, b = band_rows.alias("a"), band_rows.alias("b")
-    if broadcast_side:
-        # the self-join is increment × increment — broadcast one side so
-        # no signature array ever rides a shuffle (plan-asserted)
-        b = F.broadcast(b)
+    # the self-join is increment × increment — broadcast one side so no
+    # signature array ever rides a shuffle (plan-asserted)
+    a, b = band_rows.alias("a"), F.broadcast(band_rows.alias("b"))
     return (
         a.join(b, on=["band", "bucket"])
         .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
@@ -1195,7 +1116,6 @@ def cross_ngram_overlap(
     min_shared: int = 5,
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_benchmark: bool = True,
 ) -> DataFrame:
     """Benchmark decontamination: (corpus_id, bench_id, shared) pairs
     where a corpus document shares >= ``min_shared`` distinct word
@@ -1206,17 +1126,13 @@ def cross_ngram_overlap(
     (eval suites vs a 100 TB crawl), so its exploded gram set is
     BROADCAST and the corpus side stays a map-only scan + explode — no
     corpus shuffle at all until the (corpus_id, bench_id) count, which
-    carries only matching rows. Set ``broadcast_benchmark=False`` when
-    the right side is genuinely large (falls back to a hash join on the
-    gram)."""
+    carries only matching rows."""
     cg = word_ngrams(corpus, n=n, id_col=id_col, text_col=text_col)
     bg = word_ngrams(benchmark, n=n, id_col=id_col, text_col=text_col).select(
         F.col(id_col).alias("bench_id"), "gram"
     )
-    if broadcast_benchmark:
-        bg = F.broadcast(bg)
     return (
-        cg.join(bg, on="gram")
+        cg.join(F.broadcast(bg), on="gram")
         .groupBy(F.col(id_col).alias("corpus_id"), "bench_id")
         .agg(F.count(F.lit(1)).alias("shared"))
         .where(F.col("shared") >= min_shared)
@@ -1239,24 +1155,32 @@ def _forest_reduce(pairs: DataFrame, id_a: str, id_b: str) -> DataFrame:
     happened to build — a clique's pairs can come back as a path and
     cost diameter/2 propagation rounds). Map-only (no shuffle); rows
     with a NULL endpoint pass through unreduced (they never merge
-    components in the propagation joins either)."""
+    components in the propagation joins either).
+
+    Arrow batches, not pandas: a pandas batch holding a NULL turns the
+    int64 id column into float64, which rounds ids above 2**53 and can
+    merge or split components. NULL-endpoint rows are split off with
+    ``pyarrow.compute`` and the remaining ids reach numpy as int64."""
     import numpy as np
-    import pandas as pd
 
     sel = pairs.select(id_a, id_b)
-    schema = sel.schema
     _cc_labels = _make_np_cc()  # by-value for worker closures
 
     def _reduce(batches):
-        a_all, b_all = [], []
-        for pdf in batches:
-            ka = pdf[id_a]
-            kb = pdf[id_b]
-            null_mask = ka.isna() | kb.isna()
-            if null_mask.any():
-                yield pdf[null_mask]
-            a_all.append(ka[~null_mask].to_numpy())
-            b_all.append(kb[~null_mask].to_numpy())
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        a_all, b_all, out_schema = [], [], None
+        for rb in batches:
+            out_schema = rb.schema
+            ka, kb = rb.column(0), rb.column(1)
+            null_mask = pc.or_(pc.is_null(ka), pc.is_null(kb))
+            if pc.any(null_mask).as_py():
+                yield rb.filter(null_mask)
+                keep = pc.invert(null_mask)
+                ka, kb = ka.filter(keep), kb.filter(keep)
+            a_all.append(ka.to_numpy(zero_copy_only=False))
+            b_all.append(kb.to_numpy(zero_copy_only=False))
         if not a_all:
             return
         av = np.concatenate(a_all)
@@ -1271,9 +1195,15 @@ def _forest_reduce(pairs: DataFrame, id_a: str, id_b: str) -> DataFrame:
             np.searchsorted(verts, bv),
             len(verts),
         )
-        yield pd.DataFrame({id_a: verts[lab], id_b: verts})
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array(verts[lab], type=out_schema.field(0).type),
+                pa.array(verts, type=out_schema.field(1).type),
+            ],
+            schema=out_schema,
+        )
 
-    return sel.mapInPandas(_reduce, schema)
+    return sel.mapInArrow(_reduce, sel.schema)
 
 
 def connected_components(

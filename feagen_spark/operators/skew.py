@@ -175,7 +175,6 @@ def chunked_cumulative(
     order_col: str,
     specs: Sequence[CumulativeSpec],
     chunk_size: int = 10_000,
-    broadcast_prefixes: bool | None = None,
 ) -> DataFrame:
     """Two-pass cumulative for giant keys (closes the halo-chunking gap:
     unbounded frames can't use a bounded halo).
@@ -184,15 +183,6 @@ def chunked_cumulative(
     parallelism O(rows/chunk_size). Pass 2: per-chunk totals (one row
     per chunk) prefix-summed over a tiny window, joined back on
     (key, chunk). cum = prefix_of_previous_chunks + within_chunk_running.
-
-    ``broadcast_prefixes``: the prefix table has one row per
-    (key, chunk) — tiny when this routes a FEW giant keys (the
-    intended use, where the hint is forced), but one-row-per-key-sized
-    when applied to a whole table, where a forced broadcast would blow
-    the 8GB broadcast cap / driver memory on exactly the inputs the
-    operator exists for (code-review r6). Default None = no hint:
-    Catalyst/AQE broadcasts when the stats say it fits. Pass True only
-    when the caller KNOWS the key set is small.
 
     Requires ``order_col`` dense 0..n-1 per key (C14 guarantees it).
     Value-identical to a plain unbounded window (tests/test_skew.py).
@@ -231,8 +221,7 @@ def chunked_cumulative(
             for s in specs
         ],
     )
-    if broadcast_prefixes:
-        prefixes = F.broadcast(prefixes)
+    # no broadcast hint: whole-table prefixes are key-sized (code-review r6)
     d = d.join(prefixes, on=[key, "__chunk"], how="left")
     for s in specs:
         d = d.withColumn(

@@ -149,11 +149,12 @@ def main() -> None:
 
     ls = cfg.get("line_scrub")
     if ls:
-        # C4 boilerplate-line removal: REPLACES text (cookie banners,
-        # nav menus dropped everywhere they repeat); downstream
-        # quality/token stages see the scrubbed text. Doc count is
-        # unchanged — compose with quality/gopher floors to drop docs
-        # the scrub hollowed out.
+        # C4 boilerplate-line removal (keys: min_count, min_chars):
+        # REPLACES text (cookie banners, nav menus dropped everywhere
+        # they repeat, hot lines elected by an exact digest groupBy);
+        # downstream quality/token stages see the scrubbed text. Doc
+        # count is unchanged — compose with quality/gopher floors to
+        # drop docs the scrub hollowed out.
         docs = checkpointed(
             D.boilerplate_scrub(
                 docs,
@@ -161,8 +162,6 @@ def main() -> None:
                 id_col=id_col,
                 text_col=text_col,
                 min_chars=int(ls.get("min_chars", 1)),
-                method=ls.get("method", "exact"),
-                capacity=int(ls.get("capacity", 1 << 15)),
             ),
             "line_scrub",
         )

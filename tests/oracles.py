@@ -4,12 +4,18 @@ Deliberately written as explicit per-conversation loops — slow, obvious,
 and independent of the Spark implementations they check. Leakage-safe
 semantics mirror SURVEY.md §2.C: trailing frames end strictly before the
 current row (row frames) or at ts - 1µs (time frames).
+
+Also holds plain-Spark reference plans that the library replaced with
+faster ones and keeps only as parity oracles (``ngram_jaccard_pairs_join``).
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+from pyspark.sql import functions as F
+
+from feagen_spark.operators import dedup as D
 
 SESSION_GAP_S = 1800
 
@@ -116,3 +122,30 @@ def oracle_session_aggs(pdf_with_sessions: pd.DataFrame) -> pd.DataFrame:
             }
         )
     return pd.DataFrame(rows)
+
+
+def ngram_jaccard_pairs_join(
+    df, n=3, threshold=0.8, id_col="doc_id", text_col="text", max_df=None
+):
+    """Reference plan for ``dedup.ngram_jaccard_pairs``: the shingle-
+    explode self-join — every shared shingle is one joined row, counted
+    per (id_a < id_b) pair, then joined to both set sizes. Σ df(s)² rows,
+    so test-sized inputs only. Shares the library's shingle + ``max_df``
+    prefilter and its JVM jaccard expression, so the emitted doubles are
+    comparable bit for bit."""
+    sh = D._filtered_shingles(df, n, id_col, text_col, max_df)
+    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
+    a, b = sh.alias("a"), sh.alias("b")
+    inter = (
+        a.join(b, on="shingle")
+        .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+        .groupBy(
+            F.col(f"a.{id_col}").alias("id_a"),
+            F.col(f"b.{id_col}").alias("id_b"),
+        )
+        .agg(F.count(F.lit(1)).alias("inter"))
+    )
+    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("sz").alias("sz_a"))
+    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("sz").alias("sz_b"))
+    cand = inter.join(sa, "id_a").join(sb, "id_b")
+    return D._jaccard_at_least(cand, threshold).select("id_a", "id_b", "jaccard")

@@ -158,18 +158,20 @@ def test_ngram_jaccard_blocked_equals_join(docs):
     original shingle-self-join plan — pair set, jaccard doubles, and
     under max_df / every n_blocks (1 ⇒ a single in-task matmul; 3 ⇒
     docs split across real block pairs)."""
+    from oracles import ngram_jaccard_pairs_join
+
     for kw in ({}, {"max_df": 5}):
         ref = {
             (r["id_a"], r["id_b"]): r["jaccard"]
-            for r in D.ngram_jaccard_pairs(
-                docs, n=3, threshold=0.3, mode="join", **kw
+            for r in ngram_jaccard_pairs_join(
+                docs, n=3, threshold=0.3, **kw
             ).collect()
         }
         for nb in (1, 3):
             got = {
                 (r["id_a"], r["id_b"]): r["jaccard"]
                 for r in D.ngram_jaccard_pairs(
-                    docs, n=3, threshold=0.3, mode="blocked", n_blocks=nb, **kw
+                    docs, n=3, threshold=0.3, n_blocks=nb, **kw
                 ).collect()
             }
             assert got == ref, (kw, nb)
@@ -236,6 +238,27 @@ def test_forest_reduce_preserves_components(spark):
     ).count()
     n_vertices = len(ref)
     assert red1 == n_vertices
+
+
+def test_connected_components_big_ids_next_to_null(spark):
+    """Ids above 2**53 must survive a partition that also holds a
+    NULL-endpoint row: a pandas batch would turn the id columns into
+    float64 and collapse 2**60+1..2**60+4 into one vertex."""
+    base = 2**60
+    edges = [(base + 1, base + 2), (base + 4, base + 3), (base + 1, None)]
+    df = spark.createDataFrame(edges, "id_a long, id_b long").coalesce(1)
+    got = {
+        (r["id"], r["cluster_id"])
+        for r in D.connected_components(df).where(
+            F.col("id").isNotNull()
+        ).collect()
+    }
+    assert got == {
+        (base + 1, base + 1),
+        (base + 2, base + 1),
+        (base + 3, base + 3),
+        (base + 4, base + 3),
+    }
 
 
 def test_ngram_cluster_edges_same_components(spark, docs):
@@ -355,16 +378,6 @@ def test_minhash_probe_increment_hot_bucket_parity(spark, tmp_path):
         ).collect()
     }
     assert got == expected
-
-
-def test_minhash_dict_hash_bit_identical(docs):
-    # dict_hash hashes the DISTINCT shingle domain once and joins back;
-    # it must be bit-identical to per-occurrence hashing in both modes
-    # (min over a multiset == min over its support).
-    for mode in ("md5", "xxh64"):
-        a = D.minhash_signatures(docs, k=16, hash_mode=mode, dict_hash=True)
-        b = D.minhash_signatures(docs, k=16, hash_mode=mode, dict_hash=False)
-        assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0, mode
 
 
 def test_simhash_near_dups(docs):
@@ -1780,47 +1793,19 @@ def test_boilerplate_scrub_matches_loop_reference(spark):
 
 
 def test_boilerplate_scrub_sketch_mode_and_guards(spark):
-    from pyspark.errors import PySparkException
-
+    """The guards of the exact digest groupBy (the only plan left; the
+    name dates from the removed sketch path): a wide line domain at a
+    low threshold scrubs every doc, and min_count=1 is refused."""
     df = spark.createDataFrame(BOILER_DOCS, "doc_id long, text string")
-    exact = {
-        r["doc_id"]: (r["text"], r["n_lines_dropped"])
-        for r in D.boilerplate_scrub(df, min_count=2).collect()
-    }
-    sk = {
-        r["doc_id"]: (r["text"], r["n_lines_dropped"])
-        for r in D.boilerplate_scrub(
-            df, min_count=2, method="sketch", capacity=256
-        ).collect()
-    }
-    assert sk == exact  # capacity >> domain: D=0, sketch == exact
-    # low threshold inside the sketch error bound -> loud, never
-    # a silent under-scrub (500 distinct lines through 8 counters)
-    import pyspark.sql.functions as SF
-
     wide = spark.range(4000).select(
-        SF.col("id").alias("doc_id"),
-        SF.concat(
-            SF.lit("line-"), SF.pmod("id", SF.lit(500)).cast("string")
+        F.col("id").alias("doc_id"),
+        F.concat(
+            F.lit("line-"), F.pmod("id", F.lit(500)).cast("string")
         ).alias("text"),
     )
-    with pytest.raises(PySparkException, match="error bound"):
-        D.boilerplate_scrub(
-            wide, min_count=3, method="sketch", capacity=8
-        ).collect()
-    # exact mode handles the same input at any threshold
     n = D.boilerplate_scrub(wide, min_count=3).where(
-        SF.col("n_lines_dropped") > 0
+        F.col("n_lines_dropped") > 0
     ).count()
     assert n == 4000  # every line repeats 8x >= 3
     with pytest.raises(ValueError, match="min_count"):
         D.boilerplate_scrub(df, min_count=1)
-
-
-def test_boilerplate_scrub_sketch_empty_corpus_noop(spark):
-    """sketch mode on an empty / all-structural corpus is a clean
-    no-op like exact mode, not a missing-summary crash."""
-    df = spark.createDataFrame([(1, ""), (2, None)], "doc_id long, text string")
-    got = {r["doc_id"]: (r["text"], r["n_lines_dropped"])
-           for r in D.boilerplate_scrub(df, min_count=2, method="sketch").collect()}
-    assert got == {1: ("", 0), 2: ("", 0)}
