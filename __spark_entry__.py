@@ -798,7 +798,9 @@ def q_doc_ngram_pairs(spark, sf_dir):
       result EQUALS the one-shot operator over the union restricted to
       increment-touching pairs — which is exactly what the DuckDB
       oracle recomputes end-to-end (signatures, bands, cap, est)."""
+    import atexit
     import os
+    import shutil
     import tempfile
 
     docs = _docs(spark, sf_dir, where=F.col("doc_id") % 5 == 0)
@@ -813,12 +815,13 @@ def q_doc_ngram_pairs(spark, sf_dir):
     # per-PROCESS unique index dir (mkdtemp), cached per sf_dir: a fixed
     # /tmp path would race concurrent crosscheck/driver runs — one
     # process's overwrite deleting files under another's lazy scan
-    # (code-review r6)
+    # (code-review r6). The scan is lazy, so the dir lives until the
+    # process exits.
     idx_path = _MH_INDEX_DIRS.get(sf_dir)
     if idx_path is None:
-        idx_path = os.path.join(
-            tempfile.mkdtemp(prefix="feagen_mh_index_"), "idx"
-        )
+        idx_dir = tempfile.mkdtemp(prefix="feagen_mh_index_")
+        atexit.register(shutil.rmtree, idx_dir, ignore_errors=True)
+        idx_path = os.path.join(idx_dir, "idx")
         _MH_INDEX_DIRS[sf_dir] = idx_path
     D.write_minhash_index(
         corpus, idx_path, k=32, bands=8, n=3, hash_mode="md5"

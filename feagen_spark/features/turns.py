@@ -14,8 +14,10 @@ Scale notes (100TB mindset):
   Window exec → the whole suite costs one shuffle on conv_id.
 - Time-range windows re-sort by unix_micros(ts) within the same
   conv_id partitioning — an intra-partition sort, not a second shuffle.
-- Skew (giant conversations) is handled at the engine level
-  (operators/skew.py): these functions stay declarative.
+- Skew (giant conversations): nothing here or in the engine splits a
+  giant conversation — its window runs in one task. The chunked
+  window tools in operators/skew.py are opt-in for callers; these
+  functions stay declarative.
 
 Registry: :func:`transcript_nodes` wires the features into FeatureNodes
 for the DAG engine (feagen @will_generate analogue).

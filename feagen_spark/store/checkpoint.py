@@ -14,8 +14,6 @@ install (verified, SURVEY.md §1.2), so tables are parquet + a JSON
 manifest carrying the Iceberg-style metadata the north rule requires —
 snapshot id, per-partition (per-file) row counts + min/max ts from
 parquet footer statistics, and an order-independent content checksum.
-The store interface is format-agnostic: on a real cluster pass
-``table_format='iceberg'`` and the same calls route through a catalog.
 """
 
 from __future__ import annotations
@@ -45,21 +43,21 @@ class CheckpointStore:
     filename, distinct fingerprints never touch each other, and a
     same-fingerprint race is idempotent (both writers produced the same
     logical table; whichever table-swap lands second detects the
-    winner's table and keeps it). ``manifest.json`` from older stores is
-    still read (compat) and NEVER rewritten — invalidating a
-    legacy-manifest entry writes a per-fingerprint TOMBSTONE file
-    instead (entry files shadow the legacy manifest), so no code path
-    read-modify-writes a shared file."""
+    winner's table and keeps it).
+
+    Every checkpoint's files live under ``root`` at
+    ``<node>-<fingerprint[:16]>/``, in both layouts; nothing is written
+    to the Spark warehouse."""
 
     def __init__(
         self,
         root: str,
-        table_format: str = "parquet",
         bucket_by: tuple[int, str | tuple[str, ...]] | None = None,
     ) -> None:
-        """``bucket_by=(n_buckets, key_col_or_cols)`` switches
-        checkpoints to CATALOG-MANAGED BUCKETED tables (Spark-native
-        bucketing): the resume join-back then reads a table whose
+        """``bucket_by=(n_buckets, key_col_or_cols)`` writes each
+        checkpoint as Spark-native BUCKETED files and registers them as
+        an EXTERNAL catalog table over the checkpoint's directory under
+        ``root``: the resume join-back then reads a table whose
         HashPartitioning is already known to the planner, so the
         checkpoint side of the join needs NO exchange. Bucket on the
         FULL join-back key set (the Engine's ``keys``): Spark's default
@@ -68,36 +66,22 @@ class CheckpointStore:
         is not enough (verified by the plan tests). Default None keeps
         the plain path-based parquet layout."""
         self.root = root
-        self.table_format = table_format
         self.bucket_by = bucket_by
         self.manifest_dir = os.path.join(root, "manifest.d")
         os.makedirs(self.manifest_dir, exist_ok=True)
-        self.legacy_manifest_path = os.path.join(root, "manifest.json")
 
     # -- manifest -------------------------------------------------------------
     def _entry_path(self, fingerprint: str) -> str:
         return os.path.join(self.manifest_dir, f"{fingerprint}.json")
 
-    def _load_legacy(self) -> dict:
-        """Entries from a pre-manifest.d combined manifest.json (read-
-        only compat; {} when absent)."""
-        if os.path.exists(self.legacy_manifest_path):
-            with open(self.legacy_manifest_path) as f:
-                return json.load(f)
-        return {}
-
     def _load_manifest(self) -> dict:
-        """Full manifest view (audits/tooling). Entry files win over any
-        legacy combined manifest.json."""
-        m = dict(self._load_legacy())
+        """Full manifest view (audits/tooling)."""
+        m = {}
         for fn in sorted(os.listdir(self.manifest_dir)):
             if fn.endswith(".json"):
                 with open(os.path.join(self.manifest_dir, fn)) as f:
                     e = json.load(f)
-                if e.get("deleted"):
-                    m.pop(e["fingerprint"], None)  # tombstone shadows legacy
-                else:
-                    m[e["fingerprint"]] = e
+                m[e["fingerprint"]] = e
         return m
 
     def _save_entry(self, entry: dict) -> None:
@@ -109,27 +93,20 @@ class CheckpointStore:
 
     def entry(self, fingerprint: str) -> dict | None:
         p = self._entry_path(fingerprint)
-        if os.path.exists(p):
-            with open(p) as f:
-                e = json.load(f)
-            return None if e.get("deleted") else e
-        return self._load_legacy().get(fingerprint)
+        if not os.path.exists(p):
+            return None
+        with open(p) as f:
+            return json.load(f)
 
     def exists(self, fingerprint: str) -> bool:
         entry = self.entry(fingerprint)
         return entry is not None and os.path.exists(entry["path"])
 
     def invalidate(self, fingerprint: str) -> None:
-        """Remove the per-fingerprint entry file; if the fingerprint
-        came from a legacy manifest.json, shadow it with an atomic
-        tombstone entry instead of rewriting the shared file (a
-        read-modify-write there would reintroduce the concurrent-writer
-        lost-update race this layout exists to eliminate)."""
+        """Remove the per-fingerprint entry file."""
         p = self._entry_path(fingerprint)
         if os.path.exists(p):
             os.remove(p)
-        if fingerprint in self._load_legacy():
-            self._save_entry({"fingerprint": fingerprint, "deleted": True})
 
     # -- read/write -----------------------------------------------------------
     def read(self, spark: SparkSession, fingerprint: str) -> DataFrame:
@@ -140,16 +117,17 @@ class CheckpointStore:
             # MUST go through the catalog: a path read would discard the
             # bucketing metadata and the shuffle-free join-back with it.
             # Catalog registrations die with the session (default
-            # in-memory catalog), but the warehouse dir + manifest entry
-            # persist — so after a restart exists() is True while the
-            # table name resolves to nothing. Re-register the EXTERNAL
-            # bucketed table from the manifest before reading (ADVICE
-            # r3): Spark recovers each file's bucket id from the
-            # saveAsTable file naming, so the shuffle-free join-back
-            # survives the restart too.
+            # in-memory catalog), but the files + manifest entry persist
+            # — so after a restart exists() is True while the table name
+            # resolves to nothing. Re-register the EXTERNAL bucketed
+            # table from the manifest before reading (ADVICE r3): Spark
+            # recovers each file's bucket id from the bucketed-write file
+            # naming, so the shuffle-free join-back survives the restart.
             if not spark.catalog.tableExists(entry["table"]):
                 try:
-                    self._register_bucketed(spark, entry)
+                    self._register_bucketed(
+                        spark, entry, spark.read.parquet(entry["path"]).schema
+                    )
                 except Exception:
                     # registration is an optimization; the data itself
                     # lives at entry['path'] — degrade to a path read
@@ -159,24 +137,22 @@ class CheckpointStore:
         return spark.read.parquet(entry["path"])
 
     @staticmethod
-    def _register_bucketed(spark: SparkSession, entry: dict) -> None:
-        """CREATE TABLE ... USING parquet CLUSTERED BY ... LOCATION from
-        a manifest entry. Schema comes from the parquet footers (a
-        metadata-only read, no job); on any registration failure the
-        caller still has ``entry['path']`` — fall back to a plain path
-        read (correct rows, bucketing metadata lost) rather than
-        failing the resume."""
+    def _register_bucketed(
+        spark: SparkSession, entry: dict, schema: T.StructType
+    ) -> None:
+        """CREATE TABLE ... USING parquet CLUSTERED BY ... LOCATION
+        ``entry['path']`` under the name ``entry['table']`` (a no-op if
+        a concurrent writer registered it first). Dropping such an
+        EXTERNAL table later never deletes the files."""
         n, cols = entry["bucket_by"]
-        cols = [cols] if isinstance(cols, str) else list(cols)
-        sch = spark.read.parquet(entry["path"]).schema
         ddl = ", ".join(
-            f"`{f.name}` {f.dataType.simpleString()}" for f in sch.fields
+            f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
         )
         clustered = ", ".join(f"`{c}`" for c in cols)
         spark.sql(
-            f"CREATE TABLE {entry['table']} ({ddl}) USING parquet "
-            f"CLUSTERED BY ({clustered}) INTO {n} BUCKETS "
-            f"LOCATION '{entry['path']}'"
+            f"CREATE TABLE IF NOT EXISTS {entry['table']} ({ddl}) "
+            f"USING parquet CLUSTERED BY ({clustered}) INTO {n} BUCKETS "
+            f"LOCATION '{os.path.abspath(entry['path'])}'"
         )
 
     def write(
@@ -200,24 +176,23 @@ class CheckpointStore:
         survive untouched. Only a validated staging dir is renamed into
         the final path. The checksum observed during the write describes
         exactly the materialized files even for nondeterministic
-        upstreams.
+        upstreams. Both layouts share this swap; the bucketed one then
+        points (or refreshes) its catalog table at the final path.
         """
         import shutil
 
         from pyspark.sql import Observation
 
         self._check_node_name(node_name)
-        if self.bucket_by is not None:
-            return self._write_bucketed(df, fingerprint, node_name, ts_col, audit_nan)
-
         path = os.path.join(self.root, f"{node_name}-{fingerprint[:16]}")
         token = uuid.uuid4().hex[:8]
         staging = f"{path}.staging-{token}"
+        table = self._table_name(node_name, fingerprint)
 
         float_cols, aggs = self._audit_aggs(df, audit_nan)
         obs = Observation(f"ckpt_audit_{node_name}")
         try:
-            df.observe(obs, *aggs).write.mode("overwrite").parquet(staging)
+            self._stage(df.observe(obs, *aggs), staging, f"{table}_stg_{token}")
             audit = obs.get
             self._check_nan(audit, float_cols, node_name)
             # validated: swap staging into place. Ordering (ADVICE r2):
@@ -265,25 +240,63 @@ class CheckpointStore:
             # must not leak the staging dir
             shutil.rmtree(staging, ignore_errors=True)
 
-        partitions = self._file_metrics(path, ts_col)
         entry = {
             "node": node_name,
             "fingerprint": fingerprint,
             "path": path,
-            "format": self.table_format,
+            "format": "parquet",
             "snapshot_id": uuid.uuid4().hex,
             "created_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
             "row_count": int(audit["__rows"] or 0),
             "checksum": int(audit["__checksum"] or 0),
             "columns": df.columns,
-            "partitions": partitions,
         }
+        if self.bucket_by is not None:
+            entry.update(
+                table=table,
+                format="parquet+bucketed",
+                bucket_by=list(self._bucket_spec()),
+            )
+            # the table's LOCATION is always this fingerprint's path, so
+            # an existing registration only needs its cached file
+            # listing dropped
+            spark = df.sparkSession
+            if spark.catalog.tableExists(table):
+                spark.sql(f"REFRESH TABLE {table}")
+            else:
+                self._register_bucketed(spark, entry, df.schema)
+        entry["partitions"] = self._file_metrics(path, ts_col)
         self._save_entry(entry)
         return entry
 
+    def _stage(self, df: DataFrame, staging: str, staging_table: str) -> None:
+        """Materialize ``df`` at ``staging`` — the one step where the two
+        layouts differ. The bucketed write needs a catalog table to
+        carry the bucket spec; given a path, ``saveAsTable`` makes it
+        EXTERNAL, so dropping that staging pointer right away keeps the
+        files."""
+        if self.bucket_by is None:
+            df.write.parquet(staging)
+            return
+        n, cols = self._bucket_spec()
+        try:
+            (
+                df.write.format("parquet")
+                .bucketBy(n, *cols)
+                .option("path", os.path.abspath(staging))
+                .saveAsTable(staging_table)
+            )
+        finally:
+            df.sparkSession.sql(f"DROP TABLE IF EXISTS {staging_table}")
+
+    def _bucket_spec(self) -> tuple[int, list[str]]:
+        n, cols = self.bucket_by
+        return n, [cols] if isinstance(cols, str) else list(cols)
+
     @staticmethod
     def _audit_aggs(df: DataFrame, audit_nan: bool):
-        """Observe-metric expressions shared by both write paths."""
+        """Observe-metric expressions: content checksum, row count and,
+        with ``audit_nan``, one NaN count per float column."""
         float_cols = (
             [
                 f.name
@@ -327,12 +340,11 @@ class CheckpointStore:
 
     @staticmethod
     def _check_node_name(node_name: str) -> None:
-        """Node names become SQL identifiers (bucketed saveAsTable /
-        ALTER TABLE) and filesystem path segments; an unsafe name fails
-        the FIRST write with a ParseException or corrupts the path
-        layout (code-review r6). Reject it by name up front — decorated
-        methods are always identifiers, this only bites hand-built
-        FeatureNodes."""
+        """Node names become SQL identifiers (bucketed table names) and
+        filesystem path segments; an unsafe name fails the FIRST write
+        with a ParseException or corrupts the path layout (code-review
+        r6). Reject it by name up front — decorated methods are always
+        identifiers, this only bites hand-built FeatureNodes."""
         if not re.fullmatch(r"[A-Za-z0-9_]+", node_name or ""):
             raise ValueError(
                 f"checkpoint node name {node_name!r} must match "
@@ -342,222 +354,9 @@ class CheckpointStore:
 
     def _table_name(self, node_name: str, fingerprint: str) -> str:
         """Catalog identifier for a bucketed checkpoint: scoped by a hash
-        of the store ROOT so two stores sharing one warehouse can never
+        of the store ROOT so two stores sharing one session can never
         collide on (node, fingerprint)."""
         return f"ckpt_{self._root_tag()}_{node_name}_{fingerprint[:16]}".lower()
-
-    @staticmethod
-    def _table_location(spark: SparkSession, name: str) -> str:
-        """Filesystem path of a catalog table's location (file: scheme
-        stripped; other schemes returned as-is)."""
-        from urllib.parse import urlparse
-
-        location = (
-            spark.sql(f"DESCRIBE TABLE EXTENDED {name}")
-            .where("col_name = 'Location'")
-            .first()["data_type"]
-        )
-        return urlparse(location).path if location.startswith("file:") else location
-
-    @staticmethod
-    def _is_external(spark: SparkSession, name: str) -> bool:
-        row = (
-            spark.sql(f"DESCRIBE TABLE EXTENDED {name}")
-            .where("col_name = 'Type'")
-            .first()
-        )
-        return row is not None and row["data_type"].strip().upper() == "EXTERNAL"
-
-    def _write_bucketed(
-        self,
-        df: DataFrame,
-        fingerprint: str,
-        node_name: str,
-        ts_col: str | None,
-        audit_nan: bool,
-    ) -> dict:
-        """Bucketed-table twin of the path write: same single-pass
-        observe audit, same rename-aside swap discipline, expressed in
-        catalog operations (RENAME TO is a metastore pointer move, same
-        atomicity role as os.rename). A NaN-rejected write drops only
-        the staging table; the prior table and entry survive."""
-        from pyspark.sql import Observation
-
-        spark = df.sparkSession
-        n, cols = self.bucket_by
-        cols = [cols] if isinstance(cols, str) else list(cols)
-        token = uuid.uuid4().hex[:8]
-        name = self._table_name(node_name, fingerprint)
-        staging_tbl = f"{name}_stg_{token}"
-        old_tbl = f"{name}_old_{token}"
-
-        float_cols, aggs = self._audit_aggs(df, audit_nan)
-        obs = Observation(f"ckpt_audit_{node_name}")
-        try:
-            (
-                df.observe(obs, *aggs)
-                .write.mode("overwrite")
-                .format("parquet")
-                .bucketBy(n, *cols)
-                .saveAsTable(staging_tbl)
-            )
-            audit = obs.get
-            self._check_nan(audit, float_cols, node_name)
-            renamed_old = False
-            ext_aside = ext_loc = None
-            if spark.catalog.tableExists(name):
-                if self._is_external(spark, name):
-                    # post-restart path (ADVICE r4): _register_bucketed
-                    # re-created this table as EXTERNAL, and renaming an
-                    # external table keeps its LOCATION — the aside
-                    # table would still occupy the directory the staging
-                    # rename needs, failing with LOCATION_ALREADY_EXISTS.
-                    # Instead: drop the catalog POINTER (external drop
-                    # never deletes files), move the files aside with one
-                    # atomic dir rename, and only delete them after the
-                    # new version has landed. A failed swap restores the
-                    # files and re-registers the external table, so no
-                    # window destroys the prior version.
-                    ext_loc = self._table_location(spark, name)
-                    if not os.path.isdir(ext_loc):
-                        # non-local location (hdfs:/s3a:): the driver
-                        # cannot move these files aside, and dropping the
-                        # pointer first would lose the only recoverable
-                        # handle (code-review r5) — fail BEFORE touching
-                        # anything
-                        raise RuntimeError(
-                            f"bucketed rewrite of external checkpoint "
-                            f"table {name} at non-local location "
-                            f"{ext_loc!r} is not supported from this "
-                            f"driver; invalidate and relocate it with "
-                            f"storage-native tooling first"
-                        )
-                    spark.sql(f"DROP TABLE {name}")
-                    ext_aside = f"{ext_loc}.old-{token}"
-                    os.rename(ext_loc, ext_aside)
-                    # rename keeps the ORIGINAL mtime — without a touch,
-                    # an aside of files written before the grace horizon
-                    # is instantly vacuum-eligible mid-swap, and it is
-                    # the only copy of the prior version (code-review r5)
-                    os.utime(ext_aside, None)
-                else:
-                    spark.sql(f"ALTER TABLE {name} RENAME TO {old_tbl}")
-                    renamed_old = True
-            else:
-                # wiped-manifest / invalidated-entry leftovers: the
-                # catalog has no such table (fresh session) but the
-                # MANAGED location may still exist on disk — RENAME TO
-                # would then fail with LOCATION_ALREADY_EXISTS. The dir
-                # is unreachable (no catalog entry, no manifest entry —
-                # the fingerprint was judged absent or we wouldn't be
-                # writing) and _table_name scopes locations per store
-                # root, so removing it is safe. Found by a spark-submit
-                # drive against a half-wiped demo store.
-                self._remove_orphan_location(spark, name)
-            try:
-                spark.sql(f"ALTER TABLE {staging_tbl} RENAME TO {name}")
-            except Exception:
-                if renamed_old and not spark.catalog.tableExists(name):
-                    spark.sql(f"ALTER TABLE {old_tbl} RENAME TO {name}")
-                    # prior version restored — falling through would
-                    # _save_entry the NEW audit over the OLD table
-                    # (code-review r5); the swap failed, say so
-                    raise
-                if ext_aside is not None and not spark.catalog.tableExists(name):
-                    # restore the prior external version. Anything at
-                    # ext_loc now can only be OUR partially-materialized
-                    # staging rename (a concurrent winner would have
-                    # registered `name`, handled below) — clear the
-                    # debris so the rename-back cannot be skipped and
-                    # the aside copy never gets deleted while the
-                    # location holds partial files (code-review r5).
-                    import shutil as _sh
-
-                    if os.path.exists(ext_loc):
-                        _sh.rmtree(ext_loc, ignore_errors=True)
-                    if os.path.isdir(ext_aside) and not os.path.exists(ext_loc):
-                        os.rename(ext_aside, ext_loc)
-                        ext_aside = None
-                    elif os.path.isdir(ext_aside):
-                        # debris survived the rmtree, so the rename-back
-                        # was SKIPPED: the aside dir holds the only copy
-                        # of the prior version and vacuum() will sweep
-                        # it after the grace window. Say so loudly with
-                        # the recovery path — a silent fall-through here
-                        # loses the checkpoint with no signal beyond the
-                        # original swap exception (ADVICE r5).
-                        raise RuntimeError(
-                            f"checkpoint swap for {name!r} failed AND the "
-                            f"restore of {ext_loc!r} was blocked by "
-                            "leftover files; the prior version is "
-                            f"preserved ONLY at {ext_aside!r} — recover "
-                            "it before the vacuum grace window expires"
-                        )
-                    try:
-                        self._register_bucketed(
-                            spark,
-                            {"table": name, "path": ext_loc,
-                             "bucket_by": [n, cols]},
-                        )
-                    except Exception:
-                        pass  # data is intact at ext_loc; raising anyway
-                    raise
-                if not spark.catalog.tableExists(name):
-                    raise
-                # else: a concurrent same-fingerprint WINNER holds name —
-                # identical logical table; the entry below is true of it
-            if renamed_old:
-                spark.sql(f"DROP TABLE IF EXISTS {old_tbl}")
-            if ext_aside is not None:
-                import shutil
-
-                shutil.rmtree(ext_aside, ignore_errors=True)
-        finally:
-            spark.sql(f"DROP TABLE IF EXISTS {staging_tbl}")
-
-        path = self._table_location(spark, name)
-        entry = {
-            "node": node_name,
-            "fingerprint": fingerprint,
-            "path": path,
-            "table": name,
-            "format": f"{self.table_format}+bucketed",
-            "bucket_by": [n, cols],
-            "snapshot_id": uuid.uuid4().hex,
-            "created_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            "row_count": int(audit["__rows"] or 0),
-            "checksum": int(audit["__checksum"] or 0),
-            "columns": df.columns,
-            # a non-local warehouse (hdfs:/s3a:) keeps its full URI —
-            # os.listdir cannot walk it, and crashing HERE (after the
-            # swap, before _save_entry) would leave the data written but
-            # unresumable (code-review r6)
-            "partitions": (
-                self._file_metrics(path, ts_col) if os.path.isdir(path) else []
-            ),
-        }
-        self._save_entry(entry)
-        return entry
-
-    @staticmethod
-    def _warehouse_path(spark: SparkSession) -> str:
-        """Local filesystem path of the session warehouse dir (file:
-        scheme stripped) — ONE resolution shared by every sweep."""
-        from urllib.parse import urlparse
-
-        wh = spark.conf.get("spark.sql.warehouse.dir")
-        return urlparse(wh).path if wh.startswith("file:") else wh
-
-    @classmethod
-    def _remove_orphan_location(cls, spark: SparkSession, table_name: str) -> None:
-        """Delete a managed-table location that exists on disk with no
-        catalog entry behind it (manifest wiped / entry invalidated in a
-        prior session)."""
-        import shutil
-
-        loc = os.path.join(cls._warehouse_path(spark), table_name.lower())
-        if os.path.isdir(loc):
-            shutil.rmtree(loc, ignore_errors=True)
 
     def vacuum(
         self, spark: SparkSession | None = None, grace_s: float = 24 * 3600
@@ -566,17 +365,15 @@ class CheckpointStore:
 
         - ``.staging-*`` / ``.old-*`` dirs older than ``grace_s`` (the
           grace period protects writers that are mid-swap right now);
-        - tombstone entry files that no longer shadow anything (their
-          legacy manifest.json entry is gone);
-        - with a session: orphaned ``_stg_``/``_old_`` CATALOG tables
-          from bucketed-mode crashes (no age is tracked for these —
-          only run the catalog sweep when no writer is active). The
-          sweep is scoped to THIS store's ``ckpt_<root_tag>_`` prefix
-          (ADVICE r4): vacuuming store A must never drop a mid-swap
-          staging table belonging to store B in the same session.
+        - with a session: orphaned ``_stg_`` CATALOG tables from
+          bucketed-mode crashes (no age is tracked for these — only run
+          the catalog sweep when no writer is active). The sweep is
+          scoped to THIS store's ``ckpt_<root_tag>_`` prefix (ADVICE
+          r4): vacuuming store A must never drop a mid-swap staging
+          table belonging to store B in the same session.
 
-        Never touches live tables, live entries, or the legacy
-        manifest. Returns what it removed (for the operator's log)."""
+        Never touches live tables or live entries. Returns what it
+        removed (for the operator's log)."""
         import shutil
 
         removed: list[str] = []
@@ -590,42 +387,12 @@ class CheckpointStore:
             ):
                 shutil.rmtree(p, ignore_errors=True)
                 removed.append(fn)
-        legacy = self._load_legacy()
-        for fn in sorted(os.listdir(self.manifest_dir)):
-            if not fn.endswith(".json"):
-                continue
-            fp = os.path.join(self.manifest_dir, fn)
-            with open(fp) as f:
-                e = json.load(f)
-            if e.get("deleted") and e["fingerprint"] not in legacy:
-                os.remove(fp)
-                removed.append(f"manifest.d/{fn}")
         if spark is not None:
             prefix = f"ckpt_{self._root_tag()}_"
             for t in spark.catalog.listTables():
-                if t.name.startswith(prefix) and (
-                    "_stg_" in t.name or "_old_" in t.name
-                ):
+                if t.name.startswith(prefix) and "_stg_" in t.name:
                     spark.sql(f"DROP TABLE IF EXISTS {t.name}")
                     removed.append(f"table:{t.name}")
-            # a crashed EXTERNAL rewrite strands its files-aside dir
-            # (<location>.old-<token>) in the WAREHOUSE, outside
-            # self.root — sweep those too, same prefix scoping + grace
-            # (the writer touches the aside at set-aside time, so the
-            # grace window is measured from the swap, not the original
-            # write)
-            wh_path = self._warehouse_path(spark)
-            if os.path.isdir(wh_path):
-                for fn in os.listdir(wh_path):
-                    p = os.path.join(wh_path, fn)
-                    if (
-                        fn.startswith(prefix)
-                        and ".old-" in fn
-                        and os.path.isdir(p)
-                        and now - os.path.getmtime(p) >= grace_s
-                    ):
-                        shutil.rmtree(p, ignore_errors=True)
-                        removed.append(f"warehouse:{fn}")
         return removed
 
     @staticmethod

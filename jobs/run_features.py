@@ -124,9 +124,10 @@ def main() -> None:
         input_columns=tuple(df.columns),
     )
     # checkpoint_bucket_by: [n_buckets, key_or_key_list] switches the
-    # store to catalog-managed BUCKETED checkpoints — the plan-proved
-    # shuffle-free resume join-back becomes the DEPLOYED configuration
-    # (VERDICT r3 #8). Default: bucket on the engine join-back keys.
+    # store to BUCKETED checkpoints (external tables under the store
+    # root) — the plan-proved shuffle-free resume join-back becomes the
+    # DEPLOYED configuration (VERDICT r3 #8). Absent: plain unbucketed
+    # parquet checkpoints.
     bucket_by = None
     if cfg.get("checkpoint_bucket_by"):
         n, cols = cfg["checkpoint_bucket_by"]

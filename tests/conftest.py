@@ -11,12 +11,17 @@ from feagen_spark.session import get_spark  # noqa: E402
 
 
 @pytest.fixture(scope="session")
-def spark():
+def spark(tmp_path_factory):
+    # a per-session warehouse: no test, failing or not, leaves tables in
+    # the checkout
     s = get_spark(
         app_name="feagen_spark_tests",
         master="local[4]",
         shuffle_partitions=4,
-        extra_conf={"spark.sql.autoBroadcastJoinThreshold": "1048576"},
+        extra_conf={
+            "spark.sql.autoBroadcastJoinThreshold": "1048576",
+            "spark.sql.warehouse.dir": str(tmp_path_factory.mktemp("warehouse")),
+        },
     )
     yield s
 

@@ -16,6 +16,11 @@ from feagen_spark.datagen.transcripts import lifetime
 
 INPUT_COLS = ("conv_id", "turn_idx", "role", "text", "tool", "ts")
 
+# the two checkpoint layouts share one swap; the swap tests run both
+LAYOUTS = pytest.mark.parametrize(
+    "bucket_by", [None, (2, "conv_id")], ids=["plain", "bucketed"]
+)
+
 
 def _dag(checkpoint_nodes=()):
     nodes = []
@@ -339,8 +344,9 @@ def test_concurrent_checkpoint_writers_lose_nothing(spark, tmp_path):
     assert len(reader._load_manifest()) == 2
 
 
+@LAYOUTS
 def test_rejected_rewrite_keeps_prior_checkpoint_and_leaves_no_staging(
-    spark, tmp_path
+    spark, tmp_path, bucket_by
 ):
     """A NaN-rejected REWRITE of an existing fingerprint must leave the
     prior valid checkpoint (files + entry) untouched and leak neither a
@@ -352,7 +358,7 @@ def test_rejected_rewrite_keeps_prior_checkpoint_and_leaves_no_staging(
     from feagen_spark.store.checkpoint import NaNWriteError
 
     root = str(tmp_path / "ck_swap")
-    store = CheckpointStore(root)
+    store = CheckpointStore(root, bucket_by=bucket_by)
     good = spark.range(10).select(
         F.col("id").alias("conv_id"), F.lit(1.0).alias("v")
     )
@@ -372,7 +378,8 @@ def test_rejected_rewrite_keeps_prior_checkpoint_and_leaves_no_staging(
     assert leftovers == [], f"leaked dirs: {leftovers}"
 
 
-def test_concurrent_same_fingerprint_writers_idempotent(spark, tmp_path):
+@LAYOUTS
+def test_concurrent_same_fingerprint_writers_idempotent(spark, tmp_path, bucket_by):
     """Two writers racing on the SAME fingerprint (idempotent retry /
     speculative job): both must succeed, one table survives, no
     .staging/.old leftovers (code-review r3 finding)."""
@@ -386,7 +393,7 @@ def test_concurrent_same_fingerprint_writers_idempotent(spark, tmp_path):
 
     def writer() -> None:
         try:
-            store = CheckpointStore(root)
+            store = CheckpointStore(root, bucket_by=bucket_by)
             df = spark.range(40).select(
                 F.col("id").alias("conv_id"), F.lit(1.0).alias("v")
             )
@@ -401,7 +408,7 @@ def test_concurrent_same_fingerprint_writers_idempotent(spark, tmp_path):
         t.join()
     assert errs == [], errs
 
-    reader = CheckpointStore(root)
+    reader = CheckpointStore(root, bucket_by=bucket_by)
     assert reader.exists("fp_same" * 4)
     assert reader.read(spark, "fp_same" * 4).count() == 40
     leftovers = [
@@ -410,47 +417,13 @@ def test_concurrent_same_fingerprint_writers_idempotent(spark, tmp_path):
     assert leftovers == [], leftovers
 
 
-def test_invalidate_legacy_manifest_uses_tombstone(spark, tmp_path):
-    """Invalidating an entry that lives in a legacy manifest.json must
-    not rewrite the shared file — it writes an atomic tombstone entry
-    that shadows it (code-review r3 finding)."""
-    import json
-    import os
-
-    root = str(tmp_path / "ck_legacy")
-    os.makedirs(root)
-    table_dir = os.path.join(root, "legacy-table")
-    os.makedirs(table_dir)
-    legacy = {
-        "fp_old": {
-            "fingerprint": "fp_old",
-            "path": table_dir,
-            "node": "n",
-        }
-    }
-    with open(os.path.join(root, "manifest.json"), "w") as f:
-        json.dump(legacy, f)
-    before = open(os.path.join(root, "manifest.json")).read()
-
-    store = CheckpointStore(root)
-    assert store.exists("fp_old")
-    store.invalidate("fp_old")
-    assert not store.exists("fp_old")
-    assert store.entry("fp_old") is None
-    assert "fp_old" not in store._load_manifest()
-    # the shared legacy file was not rewritten
-    assert open(os.path.join(root, "manifest.json")).read() == before
-    # a fresh store instance sees the tombstone too
-    assert not CheckpointStore(root).exists("fp_old")
-
-
 def test_bucketed_checkpoint_resume_and_shuffle_free_join(
     tiny_transcripts, tmp_path, spark
 ):
-    """CheckpointStore(bucket_by=...) writes catalog-managed bucketed
-    tables: resume works identically, and two checkpoints bucketed on
-    the same key join with ZERO exchanges (the shuffle-free resume
-    join-back layout)."""
+    """CheckpointStore(bucket_by=...) writes bucketed checkpoints as
+    external tables under the store root: resume works identically, and
+    two checkpoints bucketed on the same key join with ZERO exchanges
+    (the shuffle-free resume join-back layout)."""
     import re
 
     store = CheckpointStore(str(tmp_path / "ckb"), bucket_by=(4, "conv_id"))
@@ -521,7 +494,10 @@ def test_bucketed_checkpoint_nan_reject_keeps_prior(spark, tmp_path):
     spark.sql(f"DROP TABLE IF EXISTS {entry['table']}")
 
 
-def test_rename_aside_race_loser_still_succeeds(spark, tmp_path, monkeypatch):
+@LAYOUTS
+def test_rename_aside_race_loser_still_succeeds(
+    spark, tmp_path, monkeypatch, bucket_by
+):
     """Same-fingerprint race on the rename-aside itself: the loser's
     os.rename(path, old) hits FileNotFoundError because the winner
     already moved the prior version aside — the write must treat that
@@ -531,7 +507,7 @@ def test_rename_aside_race_loser_still_succeeds(spark, tmp_path, monkeypatch):
     from pyspark.sql import functions as F
 
     root = str(tmp_path / "ck_race")
-    store = CheckpointStore(root)
+    store = CheckpointStore(root, bucket_by=bucket_by)
     df = spark.range(20).select(
         F.col("id").alias("conv_id"), F.lit(1.0).alias("v")
     )
@@ -560,13 +536,12 @@ def test_rename_aside_race_loser_still_succeeds(spark, tmp_path, monkeypatch):
 
 def test_bucketed_checkpoint_read_survives_catalog_loss(spark, tmp_path):
     """Driver restart scenario (ADVICE r3 medium): the in-memory catalog
-    registration dies with the session while the warehouse files and the
-    manifest entry persist. read() must re-register the table from the
-    manifest — keeping the BUCKETED layout, so the shuffle-free
+    registration dies with the session while the checkpoint files and
+    the manifest entry persist. read() must re-register the table from
+    the manifest — keeping the BUCKETED layout, so the shuffle-free
     join-back survives the restart — instead of raising
     TABLE_OR_VIEW_NOT_FOUND."""
     import re
-    import shutil
 
     from pyspark.sql import functions as F
 
@@ -575,16 +550,12 @@ def test_bucketed_checkpoint_read_survives_catalog_loss(spark, tmp_path):
         F.col("id").alias("conv_id"), (F.col("id") * 2.0).alias("v")
     )
     entry = store.write(df, "fp_sess" * 4, "node_sess")
-    tbl, path = entry["table"], entry["path"]
+    tbl = entry["table"]
 
-    # simulate the restart: stash the data files, drop the MANAGED table
-    # (which deletes them), restore the files at the same location —
+    # simulate the restart: dropping the external table keeps its files —
     # catalog empty, disk + manifest intact, exactly the post-crash state
-    stash = str(tmp_path / "stash")
-    shutil.copytree(path, stash)
     spark.sql(f"DROP TABLE {tbl}")
     assert not spark.catalog.tableExists(tbl)
-    shutil.copytree(stash, path)
 
     assert store.exists("fp_sess" * 4)  # manifest + files say yes
     got = store.read(spark, "fp_sess" * 4)
@@ -617,10 +588,8 @@ def test_bucketed_checkpoint_read_survives_catalog_loss(spark, tmp_path):
 
 
 def test_vacuum_removes_only_stranded_leftovers(spark, tmp_path):
-    """vacuum(): aged .staging/.old dirs and shadow-less tombstones go;
-    fresh staging (a writer mid-swap), live tables and live entries
-    stay."""
-    import json
+    """vacuum(): aged .staging/.old dirs go; fresh staging (a writer
+    mid-swap), live tables and live entries stay."""
     import os
     import time as _time
 
@@ -639,30 +608,19 @@ def test_vacuum_removes_only_stranded_leftovers(spark, tmp_path):
     os.makedirs(fresh_stg)
     aged = _time.time() - 48 * 3600
     os.utime(old_dir, (aged, aged))
-    # tombstone with no legacy manifest behind it
-    with open(os.path.join(root, "manifest.d", "fp_ghost.json"), "w") as f:
-        json.dump({"fingerprint": "fp_ghost", "deleted": True}, f)
 
     removed = store.vacuum(grace_s=3600)
     assert "node_live-x.old-dead" in removed
-    assert "manifest.d/fp_ghost.json" in removed
     assert os.path.isdir(fresh_stg)            # inside grace: kept
     assert store.exists("fp_live" * 4)         # live entry untouched
     assert store.read(spark, "fp_live" * 4).count() == 10
 
-    # a tombstone that DOES shadow a legacy entry must survive vacuum
-    with open(os.path.join(root, "manifest.json"), "w") as f:
-        json.dump({"fp_old": {"fingerprint": "fp_old", "path": root}}, f)
-    store.invalidate("fp_old")
-    assert store.vacuum(grace_s=3600) == []
-    assert not store.exists("fp_old")
-
 
 def test_bucketed_rewrite_after_wiped_manifest(spark, tmp_path):
     """Manifest wiped (or entry invalidated) in a prior session while
-    the MANAGED warehouse location survives: the rewrite must clear the
-    orphaned location instead of dying on LOCATION_ALREADY_EXISTS —
-    found by a spark-submit drive against a half-wiped demo store."""
+    the checkpoint files survive under the root: the rewrite must
+    replace them instead of dying on the occupied location — found by a
+    spark-submit drive against a half-wiped demo store."""
     import shutil
 
     from pyspark.sql import functions as F
@@ -673,14 +631,11 @@ def test_bucketed_rewrite_after_wiped_manifest(spark, tmp_path):
         F.col("id").alias("conv_id"), F.lit(1.0).alias("v")
     )
     entry = store.write(df, "fp_orph" * 4, "node_orph")
-    tbl, path = entry["table"], entry["path"]
+    tbl = entry["table"]
 
     # simulate the wipe + restart: data dir survives, catalog and
     # manifest do not
-    stash = str(tmp_path / "stash_orph")
-    shutil.copytree(path, stash)
-    spark.sql(f"DROP TABLE {tbl}")           # also deletes the location
-    shutil.copytree(stash, path)             # ...restore the orphan dir
+    spark.sql(f"DROP TABLE {tbl}")           # external: files kept
     shutil.rmtree(store.manifest_dir)
 
     store2 = CheckpointStore(root, bucket_by=(2, "conv_id"))
@@ -693,13 +648,8 @@ def test_bucketed_rewrite_after_wiped_manifest(spark, tmp_path):
 def test_bucketed_rewrite_after_restart_external_table(spark, tmp_path):
     """ADVICE r4: after a restart, read() re-registers the bucketed
     checkpoint as an EXTERNAL table. invalidate()+rewrite of that
-    fingerprint must still succeed: renaming an external table aside
-    keeps its LOCATION, so the old swap discipline collided with the
-    occupied directory (LOCATION_ALREADY_EXISTS). The writer now moves
-    the external files aside with an atomic dir rename and lands the
-    staging table in their place."""
-    import shutil
-
+    fingerprint must still succeed, and reads must see the new version
+    through the re-registered table."""
     from pyspark.sql import functions as F
 
     root = str(tmp_path / "ck_ext")
@@ -708,17 +658,13 @@ def test_bucketed_rewrite_after_restart_external_table(spark, tmp_path):
         F.col("id").alias("conv_id"), F.lit(1.0).alias("v")
     )
     entry = store.write(df, "fp_extr" * 4, "node_ext")
-    tbl, path = entry["table"], entry["path"]
+    tbl = entry["table"]
 
     # simulate the restart (catalog gone, files + manifest intact), then
     # a read that re-registers the table as EXTERNAL
-    stash = str(tmp_path / "stash_ext")
-    shutil.copytree(path, stash)
     spark.sql(f"DROP TABLE {tbl}")
-    shutil.copytree(stash, path)
     assert store.read(spark, "fp_extr" * 4).count() == 20
     assert spark.catalog.tableExists(tbl)
-    assert CheckpointStore._is_external(spark, tbl)
 
     # rewrite the same fingerprint with NEW data: must not raise, and
     # reads must see the new version through the catalog
@@ -758,7 +704,10 @@ def test_vacuum_catalog_sweep_scoped_to_own_store(spark, tmp_path):
     assert f"table:{b_stg}" in removed_b
 
 
-def test_path_swap_failure_restores_prior_and_raises(spark, tmp_path, monkeypatch):
+@LAYOUTS
+def test_path_swap_failure_restores_prior_and_raises(
+    spark, tmp_path, monkeypatch, bucket_by
+):
     """Code-review r5: when the staging→final rename fails and the prior
     version is rolled back, write() must RAISE — falling through would
     record the NEW data's audit over the OLD restored files. The prior
@@ -768,7 +717,7 @@ def test_path_swap_failure_restores_prior_and_raises(spark, tmp_path, monkeypatc
     from pyspark.sql import functions as F
 
     root = str(tmp_path / "ck_swapfail")
-    store = CheckpointStore(root)
+    store = CheckpointStore(root, bucket_by=bucket_by)
     df1 = spark.range(10).select(
         F.col("id").alias("conv_id"), F.lit(1.0).alias("v")
     )
@@ -789,7 +738,7 @@ def test_path_swap_failure_restores_prior_and_raises(spark, tmp_path, monkeypatc
     df2 = spark.range(30).select(
         F.col("id").alias("conv_id"), F.lit(2.0).alias("v")
     )
-    store2 = CheckpointStore(root)
+    store2 = CheckpointStore(root, bucket_by=bucket_by)
     import pytest as _pt
 
     with _pt.raises(OSError, match="injected"):
@@ -807,35 +756,32 @@ def test_path_swap_failure_restores_prior_and_raises(spark, tmp_path, monkeypatc
     assert entry_after["checksum"] == entry1["checksum"]
 
 
-def test_vacuum_sweeps_stranded_external_aside_dirs(spark, tmp_path):
-    """A crashed external rewrite strands <location>.old-<token> in the
-    WAREHOUSE (outside the store root); vacuum must clear aged ones —
-    scoped to this store's prefix — and respect the grace period."""
-    import os as _os
-    import time as _time
+def test_bucketed_store_writes_nothing_outside_root(spark, tmp_path):
+    """A bucketed store keeps every file under its root: the Spark
+    warehouse listing is unchanged after write + rewrite + invalidate."""
+    import os
     from urllib.parse import urlparse
 
-    store = CheckpointStore(str(tmp_path / "ck_whsweep"), bucket_by=(2, "k"))
+    from pyspark.sql import functions as F
+
     wh = spark.conf.get("spark.sql.warehouse.dir")
     wh_path = urlparse(wh).path if wh.startswith("file:") else wh
-    prefix = f"ckpt_{store._root_tag()}_"
-    aged = _os.path.join(wh_path, prefix + "node_x.old-dead")
-    fresh = _os.path.join(wh_path, prefix + "node_y.old-live")
-    other = _os.path.join(wh_path, "ckpt_deadbeef_node_z.old-dead")
-    for d in (aged, fresh, other):
-        _os.makedirs(d, exist_ok=True)
-    t = _time.time() - 48 * 3600
-    _os.utime(aged, (t, t))
-    _os.utime(other, (t, t))
 
-    removed = store.vacuum(spark, grace_s=3600)
-    assert f"warehouse:{prefix}node_x.old-dead" in removed
-    assert not _os.path.isdir(aged)
-    assert _os.path.isdir(fresh)   # inside grace: kept
-    assert _os.path.isdir(other)   # other store's prefix: never touched
-    import shutil as _sh
-    for d in (fresh, other):
-        _sh.rmtree(d, ignore_errors=True)
+    def listing():
+        return sorted((d, sorted(ds), sorted(fs)) for d, ds, fs in os.walk(wh_path))
+
+    before = listing()
+    store = CheckpointStore(str(tmp_path / "ck_inroot"), bucket_by=(2, "conv_id"))
+    df = spark.range(10).select(
+        F.col("id").alias("conv_id"), F.lit(1.0).alias("v")
+    )
+    entry = store.write(df, "fp_root" * 4, "node_root")
+    store.write(df.withColumn("v", F.lit(2.0)), "fp_root" * 4, "node_root")
+    assert store.read(spark, "fp_root" * 4).agg(F.sum("v")).first()[0] == 20.0
+    store.invalidate("fp_root" * 4)
+    assert listing() == before
+    assert entry["path"].startswith(store.root)
+    spark.sql(f"DROP TABLE IF EXISTS {entry['table']}")
 
 
 def test_checkpoint_node_name_validated(spark, tmp_path):
