@@ -15,9 +15,9 @@ Scale notes (100TB mindset):
 - Time-range windows re-sort by unix_micros(ts) within the same
   conv_id partitioning — an intra-partition sort, not a second shuffle.
 - Skew (giant conversations): nothing here or in the engine splits a
-  giant conversation — its window runs in one task. The chunked
-  window tools in operators/skew.py are opt-in for callers; these
-  functions stay declarative.
+  giant conversation — its window runs in one task. Splitting one
+  would belong in the engine, per node; these functions stay
+  declarative.
 
 Registry: :func:`transcript_nodes` wires the features into FeatureNodes
 for the DAG engine (feagen @will_generate analogue).

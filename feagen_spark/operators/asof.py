@@ -28,8 +28,8 @@ skewed window partition, so one pathologically hot key pins one task.
 :func:`asof_join_chunked` is the skew-safe variant: it buckets the
 union by time span and runs the carry-forward in two passes (within-
 chunk window + per-chunk-prefix fixup), turning a giant key's single
-task into O(span_count) parallel tasks — the same two-pass idea as
-operators.skew.chunked_cumulative.
+task into O(span_count) parallel tasks. :func:`asof_join_nearest` runs
+two plain legs, so a hot key pins one task per leg.
 """
 
 from __future__ import annotations
@@ -250,8 +250,6 @@ def asof_join_nearest(
     value_prefix: str = "",
     tolerance_s: float | None = None,
     include_right_ts: str | None = None,
-    chunked: bool = False,
-    chunk_span_s: int = 3600,
 ) -> DataFrame:
     """Nearest-in-time join (pandas ``merge_asof(direction='nearest')``
     analogue — sensor fusion / closest-reading attachment): each left
@@ -270,15 +268,7 @@ def asof_join_nearest(
     within the backward leg → largest ``right_order`` wins (as-of
     convention), within the forward leg → smallest. ``right_order``
     columns must be numeric (they are negated for the forward leg);
-    timestamps only for the ts columns.
-
-    ``chunked=True`` (VERDICT r4 #3) runs BOTH legs through
-    :func:`asof_join_chunked` instead of the plain single-window join —
-    value-identical by the chunked==plain guarantee of each leg, but a
-    pathologically hot key becomes O(span/chunk_span_s) parallel tasks
-    per leg instead of one pinned task. The forward leg's ordering
-    column is negated epoch-µs, so its bucket width is passed in column
-    units (``chunk_span_s`` · 10⁶)."""
+    timestamps only for the ts columns."""
     on = list(on)
     if values is None:
         values = [c for c in right.columns if c not in set(on) | {right_ts}]
@@ -293,14 +283,8 @@ def asof_join_nearest(
     NEG, BTS, FTS = "__nr_neg", "__nr_bts", "__nr_fts"
     bp, fp_ = "__nr_b_", "__nr_f_"
 
-    def _leg(l, r, span_kwargs, **kw):
-        if chunked:
-            return asof_join_chunked(l, r, **span_kwargs, **kw)
-        return asof_join(l, r, **kw)
-
-    back = _leg(
-        left, right, {"chunk_span_s": chunk_span_s},
-        on=on, left_ts=left_ts, right_ts=right_ts,
+    back = asof_join(
+        left, right, on=on, left_ts=left_ts, right_ts=right_ts,
         values=values, strict=False, right_order=right_order,
         value_prefix=bp, tolerance_s=tolerance_s, include_right_ts=BTS,
     )
@@ -313,11 +297,9 @@ def asof_join_nearest(
     for c in right_order:
         rneg = rneg.withColumn(f"__nr_no_{c}", -F.col(c))
         neg_order.append(f"__nr_no_{c}")
-    fwd = _leg(
+    fwd = asof_join(
         back.withColumn(NEG, -lus),
         rneg,
-        # NEG is numeric → bucket width in column units (µs)
-        {"chunk_span": int(chunk_span_s) * 1_000_000},
         on=on,
         left_ts=NEG,
         right_ts=NEG,

@@ -183,17 +183,6 @@ def _make_signer(dim: int, n_planes: int, seed: int):
     return sign_bits
 
 
-def _band_cols(sig_col: str, n_planes: int, bands: int) -> list[F.Column]:
-    r = n_planes // bands
-    mask = (1 << r) - 1
-    return [
-        F.shiftrightunsigned(F.col(sig_col), b * r).bitwiseAND(F.lit(mask)).alias(
-            f"band_{b}"
-        )
-        for b in range(bands)
-    ]
-
-
 def lsh_topk(
     corpus: DataFrame,
     queries: DataFrame,

@@ -442,55 +442,6 @@ def test_asof_nearest_tie_rules_and_tolerance(spark):
     assert got[100][1] == ts(90) and got[101][1] == ts(500)
 
 
-def test_asof_nearest_chunked_value_identical(spark):
-    """chunked=True (VERDICT r4 #3) must be value-identical to the plain
-    nearest join on the full corner-case fixture — cross-side distance
-    ties, forward-only matches, TTL expiry, equal-ts ties on both sides
-    — at chunk spans smaller than, near, and larger than the data span
-    (chunk boundaries land between tied rows in the small-span cases)."""
-    import datetime as dt
-
-    from feagen_spark.operators.asof import asof_join_nearest
-
-    t0 = dt.datetime(2025, 6, 1)
-
-    def ts(s):
-        return t0 + dt.timedelta(seconds=s)
-
-    right = spark.createDataFrame(
-        [
-            ("u", 1, ts(90), 1.0), ("u", 2, ts(110), 2.0),
-            ("u", 3, ts(500), 3.0), ("u", 4, ts(5000), 4.0),
-            ("w", 5, ts(200), 5.0), ("w", 6, ts(200), 6.0),
-            ("x", 7, ts(300), 7.0), ("x", 8, ts(300), 8.0),
-        ],
-        "k string, rid long, ts timestamp, v double",
-    )
-    left = spark.createDataFrame(
-        [
-            ("u", 100, ts(100)), ("u", 101, ts(450)), ("u", 102, ts(3000)),
-            ("w", 103, ts(200)), ("x", 104, ts(250)),
-        ],
-        "k string, lid long, ts timestamp",
-    )
-    kw = dict(
-        on=["k"], values=["v"], right_order=("rid",),
-        tolerance_s=600, include_right_ts="src_ts",
-    )
-    plain = {
-        r["lid"]: (r["v"], r["src_ts"])
-        for r in asof_join_nearest(left, right, **kw).collect()
-    }
-    for span in (60, 500, 100_000):
-        chunked = {
-            r["lid"]: (r["v"], r["src_ts"])
-            for r in asof_join_nearest(
-                left, right, chunked=True, chunk_span_s=span, **kw
-            ).collect()
-        }
-        assert chunked == plain, (span, chunked, plain)
-
-
 def _ref_nearest(left_rows, right_rows, tol):
     """Loop reference for the nearest-direction join: smallest |ts
     distance| within tolerance; ties — backward beats forward, max
@@ -527,15 +478,12 @@ if _HYP:
             min_size=0, max_size=10,
         ),
         tol=st.one_of(st.none(), st.integers(0, 30)),
-        chunked=st.booleans(),
     )
-    def test_asof_nearest_property_matches_reference(
-        spark, left, right, tol, chunked
-    ):
-        """asof_join_nearest (plain AND chunked) on random streams —
-        duplicate timestamps on either side, cross-side exact-distance
-        ties, empty right sides, TTL on/off — must equal the loop
-        reference exactly (VERDICT r4 #5)."""
+    def test_asof_nearest_property_matches_reference(spark, left, right, tol):
+        """asof_join_nearest on random streams — duplicate timestamps
+        on either side, cross-side exact-distance ties, empty right
+        sides, TTL on/off — must equal the loop reference exactly
+        (VERDICT r4 #5)."""
         import datetime as dt
 
         from feagen_spark.operators.asof import asof_join_nearest
@@ -557,7 +505,7 @@ if _HYP:
         )
         out = asof_join_nearest(
             ldf, rdf, on=["k"], values=["v"], right_order=("rid",),
-            tolerance_s=tol, chunked=chunked, chunk_span_s=13,
+            tolerance_s=tol,
         )
         got = {r["lid"]: r["v"] for r in out.collect()}
         want = {

@@ -1,188 +1,7 @@
-"""Skew handling (C11): halo-chunked windows must be value-identical to
-plain windows; salted aggregation must match a direct groupBy."""
+"""Key-skew pre-flight report (C11): exact top-k counts, shares and
+uniform ratios, compiled to a distributed top-k."""
 
 from __future__ import annotations
-
-import pandas as pd
-import pytest
-from pyspark.sql import functions as F
-
-from feagen_spark.operators import skew as SK
-
-
-def _specs():
-    return [
-        SK.TrailingSpec(
-            "prev_role", lambda w: F.lag("role", 1).over(w), reach=1
-        ),
-        SK.TrailingSpec(
-            "user_last_10",
-            lambda w: F.coalesce(
-                F.sum((F.col("role") == "user").cast("int")).over(
-                    w.rowsBetween(-10, -1)
-                ),
-                F.lit(0),
-            ),
-            reach=10,
-        ),
-        SK.TrailingSpec(
-            "role_lag_25", lambda w: F.lag("role", 25).over(w), reach=25
-        ),
-    ]
-
-
-def _canon(df):
-    return (
-        df.toPandas()
-        .sort_values(["conv_id", "turn_idx"])
-        .reset_index(drop=True)
-        .fillna("__null__")
-        .astype(str)
-    )
-
-
-def test_chunked_equals_plain(tiny_transcripts):
-    plain = SK.plain_trailing(tiny_transcripts, "conv_id", "turn_idx", _specs())
-    chunked = SK.chunked_trailing(
-        tiny_transcripts, "conv_id", "turn_idx", _specs(), chunk_size=64
-    )
-    p, c = _canon(plain), _canon(chunked)
-    assert len(p) == len(c)
-    for col in ["prev_role", "user_last_10", "role_lag_25"]:
-        assert (p[col] == c[col]).all(), col
-
-
-def test_auto_routes_and_matches(tiny_transcripts):
-    plain = SK.plain_trailing(tiny_transcripts, "conv_id", "turn_idx", _specs())
-    auto = SK.auto_trailing(
-        tiny_transcripts, "conv_id", "turn_idx", _specs(),
-        giant_threshold=100, chunk_size=64,  # giant conv (300 turns) chunks
-    )
-    p, a = _canon(plain), _canon(auto)
-    assert len(p) == len(a)
-    for col in ["prev_role", "user_last_10", "role_lag_25"]:
-        assert (p[col] == a[col]).all(), col
-
-
-def test_chunked_increases_parallelism(tiny_transcripts):
-    """The giant conv (300 turns) must split into multiple chunks."""
-    giant = tiny_transcripts.groupBy("conv_id").count().where("count >= 300")
-    gid = giant.first()["conv_id"]
-    df = tiny_transcripts.where(F.col("conv_id") == gid)
-    chunked = SK.chunked_trailing(df, "conv_id", "turn_idx", _specs(), chunk_size=64)
-    # recompute the chunk column the same way to count distinct chunks
-    n_chunks = df.select(
-        (F.col("turn_idx") / 64).cast("long").alias("c")
-    ).distinct().count()
-    assert n_chunks >= 4
-    assert chunked.count() == df.count()
-
-
-def test_halo_too_small_rejected(tiny_transcripts):
-    with pytest.raises(ValueError):
-        SK.chunked_trailing(
-            tiny_transcripts, "conv_id", "turn_idx", _specs(), chunk_size=20
-        )  # reach 25 >= chunk 20
-
-
-def test_salted_agg_matches_groupby(tiny_transcripts):
-    direct = (
-        tiny_transcripts.groupBy("role")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.length("text")).alias("chars"),
-        )
-        .toPandas()
-        .sort_values("role")
-        .reset_index(drop=True)
-    )
-    salted = (
-        SK.salted_agg(
-            tiny_transcripts,
-            "role",
-            [
-                (F.count(F.lit(1)), "n"),
-                (F.sum(F.length("text")), "chars"),
-            ],
-            salt_n=8,
-        )
-        .toPandas()
-        .sort_values("role")
-        .reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(
-        direct, salted, check_dtype=False
-    )
-
-
-def test_salted_partials_deterministic_across_runs_and_layout(tiny_transcripts):
-    """The salt must hash stable row content: two runs and a
-    repartitioned input produce IDENTICAL partials per (key, salt) —
-    the property a monotonically_increasing_id salt violates under
-    task retries / layout changes."""
-    aggs = [(F.count(F.lit(1)), "n"), (F.sum(F.length("text")), "chars")]
-
-    def partials(df):
-        return (
-            SK.salted_partials(df, ["role"], aggs, salt_n=8)
-            .toPandas()
-            .sort_values(["role", "__salt"])
-            .reset_index(drop=True)
-        )
-
-    p1 = partials(tiny_transcripts)
-    p2 = partials(tiny_transcripts)
-    p3 = partials(tiny_transcripts.repartition(13))
-    pd.testing.assert_frame_equal(p1, p2)
-    pd.testing.assert_frame_equal(p1, p3)
-
-
-def test_auto_trailing_non_string_key(spark):
-    """giants passed as a plain sequence must work for non-string key
-    columns (schema derived from the input, not hardcoded string)."""
-    df = spark.range(200).select(
-        (F.col("id") % 3).alias("k"),  # long key
-        F.col("id").alias("ord"),
-        (F.col("id") % 7).cast("double").alias("v"),
-    )
-    # dense 0..n-1 order per key
-    from pyspark.sql.window import Window
-
-    df = df.withColumn(
-        "ord", F.row_number().over(Window.partitionBy("k").orderBy("ord")) - 1
-    )
-    specs = [
-        SK.TrailingSpec(
-            "v_sum_3",
-            lambda w: F.coalesce(F.sum("v").over(w.rowsBetween(-3, -1)), F.lit(0.0)),
-            reach=3,
-        )
-    ]
-    plain = SK.plain_trailing(df, "k", "ord", specs)
-    routed = SK.auto_trailing(
-        df, "k", "ord", specs, chunk_size=16, giants=[0, 2]
-    )
-    p = plain.toPandas().sort_values(["k", "ord"]).reset_index(drop=True)
-    a = routed.toPandas().sort_values(["k", "ord"]).reset_index(drop=True)
-    assert (p["v_sum_3"] == a["v_sum_3"]).all()
-
-
-def test_chunked_cumulative_equals_plain(tiny_transcripts):
-    specs = [
-        SK.CumulativeSpec("cum_turns", F.lit(1)),
-        SK.CumulativeSpec("cum_tools", (F.col("role") == "tool").cast("int")),
-        SK.CumulativeSpec(
-            "cum_chars_incl", F.length("text"), include_current=True
-        ),
-    ]
-    plain = SK.plain_cumulative(tiny_transcripts, "conv_id", "turn_idx", specs)
-    chunked = SK.chunked_cumulative(
-        tiny_transcripts, "conv_id", "turn_idx", specs, chunk_size=64
-    )
-    p, c = _canon(plain), _canon(chunked)
-    assert len(p) == len(c)
-    for col in ["cum_turns", "cum_tools", "cum_chars_incl"]:
-        assert (p[col] == c[col]).all(), col
 
 
 def test_key_skew_report_counts_and_plan(spark):
