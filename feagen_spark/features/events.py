@@ -31,9 +31,10 @@ def _w():
     return Window.partitionBy(KEY).orderBy(*ORDER)
 
 
-# The frame-sensitive features DELEGATE to functions/windowed.py — one
-# implementation of the leakage-critical frame arithmetic, profiled here
-# for (user_id, (ts, event_id)).
+# The frame-sensitive features DELEGATE to functions/windowed.py — the
+# one implementation of the leakage-critical frame arithmetic, profiled
+# here for (user_id, (ts, event_id)) as features/turns.py profiles it for
+# (conv_id, turn_idx).
 
 def add_prev_event_type(df: DataFrame) -> DataFrame:
     return df.withColumn("prev_event_type", F.lag("event_type", 1).over(_w()))
@@ -99,14 +100,11 @@ def make_last_value_template() -> FeatureTemplate:
         name = f"last_{etype}_value"
 
         def fn(df, _e=etype, _n=name):
-            w = _w().rowsBetween(Window.unboundedPreceding, -1)
-            return df.withColumn(
-                _n,
-                F.last(
-                    F.when(F.col("event_type") == _e, F.col("value")),
-                    ignorenulls=True,
-                ).over(w),
+            last = F.last(
+                F.when(F.col("event_type") == _e, F.col("value")),
+                ignorenulls=True,
             )
+            return W.add_cumulative(df, KEY, ORDER, last, _n)
 
         return FeatureNode(
             name=name,

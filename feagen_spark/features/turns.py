@@ -1,12 +1,25 @@
 """Per-conversation turn features (SURVEY.md §2.C C3-C8, C13-C14).
 
-All features are leakage-safe by construction: every trailing frame ends
-at row ``-1`` (row-count windows) or at ``current ts - 1 microsecond``
-(time-range windows), so no feature at ts reads the current or any later
-turn — the zero-temporal-leakage rule of BASELINE.json:6/14. The only
-current-row features are definitionally current-row (text_len,
-is_tool_turn). ``next_role`` (a lead) exists for label construction only
-and must never enter as-of snapshots (FIXTURES.md §5).
+The transcript profile of ``functions/windowed.py``: every frame-based
+feature DELEGATES to that module — the one implementation of the
+leakage-critical frame arithmetic (events.py is the other profile) —
+over the key ``conv_id`` ordered by ``turn_idx``:
+
+- ``ts_delta_prev`` → ``W.add_ts_delta``;
+- ``turns_so_far``, ``cum_tool_calls`` → ``W.add_cumulative``;
+- ``user_turns_last_10``, ``tool_calls_last_10`` → ``W.add_rolling``;
+- ``tool_calls_last_600s`` → ``W.add_rolling_time``;
+- ``session_id`` → ``W.add_session_id``.
+
+Every trailing frame there ends before the current row, so no feature
+at ts reads the current or any later turn — the zero-temporal-leakage
+rule of BASELINE.json:6/14. What stays here is transcript-specific: the
+canonical window, the lags/lead (no frame), the
+``turn_in_session``/``session_start_ts`` boundary carry, the dedup
+guard and the registry. The only current-row features are
+definitionally current-row (text_len, is_tool_turn). ``next_role`` (a
+lead) exists for label construction only and must never enter as-of
+snapshots (FIXTURES.md §5).
 
 Scale notes (100TB mindset):
 - Every window here shares ONE partitioning: partitionBy(conv_id)
@@ -29,7 +42,10 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
 from ..core.spec import FeatureNode, FeatureTemplate
+from ..functions import windowed as W
 
+KEY = "conv_id"
+ORDER = ("turn_idx",)
 SESSION_GAP_S = 1800
 
 
@@ -37,12 +53,16 @@ def _w_conv():
     """Canonical per-conversation window: stable total order (turn_idx is
     unique per conv — C3 stable ordering). Built lazily: pyspark 4 needs
     an active session to construct WindowSpecs."""
-    return Window.partitionBy("conv_id").orderBy("turn_idx")
+    return Window.partitionBy(KEY).orderBy(*ORDER)
 
 
-def _w_time():
-    """Time-ordered window over the same conv partitioning (range frames)."""
-    return Window.partitionBy("conv_id").orderBy(F.unix_micros(F.col("ts")))
+def _n_role(role: str):
+    return F.sum((F.col("role") == role).cast("int"))
+
+
+def _int0(df: DataFrame, out: str) -> DataFrame:
+    """Empty frame → 0, as int."""
+    return df.withColumn(out, F.coalesce(F.col(out), F.lit(0)).cast("int"))
 
 
 # -- C13: text scalars (current-row by definition) ---------------------------
@@ -70,11 +90,7 @@ def add_next_role(df: DataFrame) -> DataFrame:
 
 def add_ts_delta_prev(df: DataFrame) -> DataFrame:
     """Seconds since previous turn (null on first turn of conv)."""
-    prev_ts = F.lag("ts", 1).over(_w_conv())
-    return df.withColumn(
-        "ts_delta_prev",
-        ((F.unix_micros(F.col("ts")) - F.unix_micros(prev_ts)) / 1_000_000.0),
-    )
+    return W.add_ts_delta(df, KEY, ORDER, "ts", out="ts_delta_prev")
 
 
 def make_lag_template() -> FeatureTemplate:
@@ -94,76 +110,44 @@ def make_lag_template() -> FeatureTemplate:
     )
 
 
-# -- C6: cumulative (frame ends at -1: excludes current turn) -----------------
+# -- C6: cumulative (excludes the current turn) -------------------------------
 
 def add_turns_so_far(df: DataFrame) -> DataFrame:
-    w = _w_conv().rowsBetween(Window.unboundedPreceding, -1)
-    return df.withColumn(
-        "turns_so_far", F.count(F.lit(1)).over(w).cast("int")
-    )
+    df = W.add_cumulative(df, KEY, ORDER, F.count(F.lit(1)), "turns_so_far")
+    return df.withColumn("turns_so_far", F.col("turns_so_far").cast("int"))
 
 
 def add_cum_tool_calls(df: DataFrame) -> DataFrame:
-    w = _w_conv().rowsBetween(Window.unboundedPreceding, -1)
-    return df.withColumn(
-        "cum_tool_calls",
-        F.coalesce(
-            F.sum((F.col("role") == "tool").cast("int")).over(w), F.lit(0)
-        ).cast("int"),
-    )
+    df = W.add_cumulative(df, KEY, ORDER, _n_role("tool"), "cum_tool_calls")
+    return _int0(df, "cum_tool_calls")
 
 
 # -- C5: rolling counts ------------------------------------------------------
 
 def add_user_turns_last_10(df: DataFrame) -> DataFrame:
-    w = _w_conv().rowsBetween(-10, -1)
-    return df.withColumn(
-        "user_turns_last_10",
-        F.coalesce(
-            F.sum((F.col("role") == "user").cast("int")).over(w), F.lit(0)
-        ).cast("int"),
-    )
+    out = "user_turns_last_10"
+    return _int0(W.add_rolling(df, KEY, ORDER, _n_role("user"), out, 10), out)
 
 
 def add_tool_calls_last_10(df: DataFrame) -> DataFrame:
-    w = _w_conv().rowsBetween(-10, -1)
-    return df.withColumn(
-        "tool_calls_last_10",
-        F.coalesce(
-            F.sum((F.col("role") == "tool").cast("int")).over(w), F.lit(0)
-        ).cast("int"),
-    )
+    out = "tool_calls_last_10"
+    return _int0(W.add_rolling(df, KEY, ORDER, _n_role("tool"), out, 10), out)
 
 
 def add_tool_calls_last_600s(df: DataFrame) -> DataFrame:
     """Trailing 600s time window, strictly before current ts (equal-ts
     peers excluded: frame is [ts-600s, ts-1µs])."""
-    w = _w_time().rangeBetween(-600 * 1_000_000, -1)
-    return df.withColumn(
-        "tool_calls_last_600s",
-        F.coalesce(
-            F.sum((F.col("role") == "tool").cast("int")).over(w), F.lit(0)
-        ).cast("int"),
-    )
+    out = "tool_calls_last_600s"
+    df = W.add_rolling_time(df, KEY, "ts", _n_role("tool"), out, 600)
+    return _int0(df, out)
 
 
-# -- C7/C8: sessionization + session aggregates -------------------------------
+# -- C7: sessionization + in-session position ---------------------------------
 
 def add_session_id(df: DataFrame, gap_s: int = SESSION_GAP_S) -> DataFrame:
     """Gap sessionization: new session when ts - prev ts > gap_s.
     session_id is 0-based per conversation."""
-    prev_ts = F.lag("ts", 1).over(_w_conv())
-    is_new = F.when(
-        prev_ts.isNull(), F.lit(0)
-    ).when(
-        (F.unix_micros(F.col("ts")) - F.unix_micros(prev_ts))
-        > gap_s * 1_000_000,
-        F.lit(1),
-    ).otherwise(F.lit(0))
-    w_cum = _w_conv().rowsBetween(Window.unboundedPreceding, 0)
-    return df.withColumn(
-        "session_id", F.sum(is_new).over(w_cum).cast("int")
-    )
+    return W.add_session_id(df, KEY, ORDER, "ts", gap_s=gap_s)
 
 
 def _session_boundary():
@@ -197,22 +181,6 @@ def add_session_start_ts(df: DataFrame) -> DataFrame:
         "session_start_ts",
         F.last(F.when(_session_boundary(), F.col("ts")), ignorenulls=True).over(
             w_cum
-        ),
-    )
-
-
-def session_aggregates(df_with_sessions: DataFrame) -> DataFrame:
-    """Per-(conv, session) aggregates: turn count, duration, bounds (C8)."""
-    return df_with_sessions.groupBy("conv_id", "session_id").agg(
-        F.count(F.lit(1)).cast("int").alias("session_turns"),
-        F.min("ts").alias("session_start"),
-        F.max("ts").alias("session_end"),
-        (
-            (F.unix_micros(F.max("ts")) - F.unix_micros(F.min("ts")))
-            / 1_000_000.0
-        ).alias("session_duration_s"),
-        F.sum((F.col("role") == "tool").cast("int")).cast("int").alias(
-            "session_tool_calls"
         ),
     )
 

@@ -2,12 +2,14 @@
 parameterized by (key, ordering, ts) so the same operators serve the
 transcript table, the driver's `events` table, or any entity stream.
 
-features/turns.py is the transcript-specialized profile of these
-primitives; this module is the reusable core used by __spark_entry__
-queries and external callers.
+features/turns.py and features/events.py are the transcript and event
+profiles of these primitives; this module is the one implementation of
+the trailing-frame arithmetic, also used by __spark_entry__ queries and
+external callers.
 
-All trailing frames end before the current row (leakage-safe), matching
-features/turns semantics. Every function is a single window over
+All trailing frames end before the current row (leakage-safe): no
+function here takes an option that builds a frame reading the current
+row. Every function is a single window over
 partitionBy(key) — Catalyst collapses same-spec windows, so chaining
 several of these still costs one shuffle on the key.
 """
@@ -75,14 +77,10 @@ def add_rolling(
     agg: Column,
     out: str,
     last_n: int,
-    include_current: bool = False,
 ) -> DataFrame:
-    """Trailing row-frame aggregate over a frame of ``last_n`` rows:
-    the previous last_n rows (exclusive, the leakage-safe default) or
-    the previous last_n-1 plus the current row (include_current)."""
-    hi = 0 if include_current else -1
-    lo = -(last_n - 1) if include_current else -last_n
-    w = _w(key, order).rowsBetween(lo, hi)
+    """Trailing row-frame aggregate over the previous ``last_n`` rows
+    (the current row excluded)."""
+    w = _w(key, order).rowsBetween(-last_n, -1)
     return df.withColumn(out, agg.over(w))
 
 
@@ -93,16 +91,14 @@ def add_rolling_time(
     agg: Column,
     out: str,
     last_seconds: int,
-    include_current: bool = False,
 ) -> DataFrame:
-    """Trailing time-range aggregate over [ts - last_seconds, ts - 1µs]
-    (or ts inclusive). Equal-ts peers are excluded in the exclusive form."""
-    hi = 0 if include_current else -1
+    """Trailing time-range aggregate over [ts - last_seconds, ts - 1µs]:
+    equal-ts peers of the current row are excluded."""
     keys = [key] if isinstance(key, str) else list(key)
     w = (
         Window.partitionBy(*keys)
         .orderBy(_us(ts_col))
-        .rangeBetween(-last_seconds * 1_000_000, hi)
+        .rangeBetween(-last_seconds * 1_000_000, -1)
     )
     return df.withColumn(out, agg.over(w))
 
@@ -114,7 +110,6 @@ def add_rolling_distinct(
     col: str,
     out: str,
     last_n: int,
-    include_current: bool = False,
 ) -> DataFrame:
     """Trailing distinct-count feature (novelty/diversity signals: how
     many distinct event types / tools / pages in the recent window):
@@ -122,9 +117,7 @@ def add_rolling_distinct(
     rows. Same single key-partitioned window as every other trailing
     frame; the set state is bounded by the frame length. Empty frame →
     0 (never NULL/-1: ``size`` of a missing frame is normalized)."""
-    hi = 0 if include_current else -1
-    lo = -(last_n - 1) if include_current else -last_n
-    w = _w(key, order).rowsBetween(lo, hi)
+    w = _w(key, order).rowsBetween(-last_n, -1)
     return df.withColumn(
         out,
         F.coalesce(F.size(F.collect_set(col).over(w)), F.lit(0)).cast("int"),
@@ -251,10 +244,10 @@ def add_cumulative(
     order: Sequence[str],
     agg: Column,
     out: str,
-    include_current: bool = False,
 ) -> DataFrame:
-    hi = 0 if include_current else -1
-    w = _w(key, order).rowsBetween(Window.unboundedPreceding, hi)
+    """Running aggregate over every earlier row of the key (the current
+    row excluded)."""
+    w = _w(key, order).rowsBetween(Window.unboundedPreceding, -1)
     return df.withColumn(out, agg.over(w))
 
 

@@ -349,7 +349,6 @@ def asof_join_chunked(
     right_order: Sequence[str] = (),
     value_prefix: str = "",
     chunk_span_s: int = 3600,
-    chunk_span: int | None = None,
     tolerance_s: float | None = None,
     include_right_ts: str | None = None,
 ) -> DataFrame:
@@ -361,7 +360,7 @@ def asof_join_chunked(
     two passes:
 
     1. within-chunk: ``last(snap) ignorenulls`` over (keys, chunk) —
-       parallelism O(time-span / chunk_span) per key;
+       parallelism O(time-span / chunk_span_s) per key;
     2. cross-chunk: the latest right row per (keys, chunk) — ONE row per
        chunk via ``max_by`` — is prefix-carried over a tiny per-key
        window and joined back; a row's snapshot is its within-chunk
@@ -374,32 +373,24 @@ def asof_join_chunked(
     hot key has far more chunks than executor-cores-per-key; empty
     chunks cost nothing (no row, no task).
 
-    Units: for timestamp ordering columns the bucket width is
-    ``chunk_span_s`` seconds. For NUMERIC ordering columns pass
-    ``chunk_span`` — the width in the column's own units (epoch-seconds,
-    row index, ...); guessing would silently mis-size the buckets.
+    Units: the ordering column must be a timestamp (TIMESTAMP or
+    TIMESTAMP_NTZ) and the bucket width is ``chunk_span_s`` seconds. A
+    numeric ordering column raises ``ValueError``: its units are unknown,
+    so any bucket width would be a guess; :func:`asof_join` takes it.
     """
     au = _asof_union(
         left, right, on, left_ts, right_ts, values, strict, right_order,
         value_prefix,
     )
     ord_t = au.u.schema[_ORD].dataType
-    if isinstance(ord_t, (T.TimestampType, T.TimestampNTZType)):
-        # NTZ needs an explicit cast: unix_micros only accepts TIMESTAMP
-        ord_num = F.unix_micros(F.col(_ORD).cast("timestamp"))
-        span = (
-            int(chunk_span)
-            if chunk_span is not None
-            else int(chunk_span_s) * 1_000_000
+    if not isinstance(ord_t, (T.TimestampType, T.TimestampNTZType)):
+        raise ValueError(
+            f"asof_join_chunked needs a timestamp ordering column, got "
+            f"{ord_t.simpleString()}; use asof_join for numeric ordering"
         )
-    else:
-        if chunk_span is None:
-            raise ValueError(
-                "numeric ordering column: pass chunk_span in the column's "
-                "own units (chunk_span_s is only defined for timestamps)"
-            )
-        ord_num = F.col(_ORD).cast("long")
-        span = int(chunk_span)
+    # NTZ needs an explicit cast: unix_micros only accepts TIMESTAMP
+    ord_num = F.unix_micros(F.col(_ORD).cast("timestamp"))
+    span = int(chunk_span_s) * 1_000_000
     u = au.u.withColumn(_CHUNK, F.floor(ord_num / F.lit(span)))
 
     order = [F.col(_ORD).asc(), F.col(_SIDE).asc()] + [

@@ -13,7 +13,8 @@ Boundary semantics note: ``session_window(ts, gap)`` merges an event
 whose delta to the previous event is EXACTLY gap (window end is
 inclusive; verified empirically on Spark 4.1.2) — i.e. it splits at
 delta > gap, which is precisely the batch sessionizer's semantics
-(features/turns.add_session_id). Exact-gap parity is locked by
+(functions/windowed.add_session_id, which
+features/turns.add_session_id delegates to). Exact-gap parity is locked by
 tests/test_streaming.py::test_streaming_session_boundary_exact_gap.
 """
 

@@ -241,8 +241,9 @@ def test_chunked_asof_accepts_ntz_timestamps(spark, tmp_path):
 
 
 def test_chunked_asof_numeric_ord_requires_chunk_span(spark):
-    """Numeric ordering columns must pass chunk_span in their own units
-    (guessing would silently collapse the bucketing)."""
+    """A numeric ordering column is rejected: its units are unknown, so
+    any bucket width would be a guess. The error names asof_join, the
+    path for numeric ordering."""
     import pytest as _pytest
 
     from feagen_spark.operators.asof import asof_join_chunked
@@ -252,10 +253,8 @@ def test_chunked_asof_numeric_ord_requires_chunk_span(spark):
     )
     left = spark.createDataFrame([("k", 20)], "conv_id string, ts long")
     kw = dict(on=["conv_id"], values=["v"], right_order=("turn_idx",))
-    with _pytest.raises(ValueError):
+    with _pytest.raises(ValueError, match="use asof_join"):
         asof_join_chunked(left, right, **kw)
-    out = asof_join_chunked(left, right, chunk_span=5, **kw)
-    assert out.first()["v"] == 1.0
 
 
 def test_asof_tolerance_and_right_ts(spark):
@@ -361,8 +360,9 @@ if _HYP:
     def test_asof_property_matches_reference(
         spark, left, right, strict, tol, chunked
     ):
-        """asof_join and asof_join_chunked on random streams (numeric
-        ordering, duplicate timestamps, empty right sides, TTL on/off)
+        """asof_join (numeric ordering) and asof_join_chunked (the same
+        positions as epoch-second timestamps, 10 s chunks) on random
+        streams (duplicate timestamps, empty right sides, TTL on/off)
         must equal the loop reference exactly."""
         from feagen_spark.operators.asof import asof_join, asof_join_chunked
 
@@ -382,7 +382,9 @@ if _HYP:
         )
         fn = asof_join_chunked if chunked else asof_join
         if chunked:
-            kw["chunk_span"] = 10
+            ldf = ldf.withColumn("pos", F.timestamp_seconds("pos"))
+            rdf = rdf.withColumn("pos", F.timestamp_seconds("pos"))
+            kw["chunk_span_s"] = 10
         got = {
             r["lid"]: r["v"] for r in fn(ldf, rdf, **kw).collect()
         }

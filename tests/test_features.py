@@ -130,6 +130,21 @@ def test_feature_matches_oracle(feat_pdf, oracle_pdf, col):
         ).all(), f"{col} mismatch"
 
 
+def test_golden_features_accept_ntz_ts(tiny_transcripts):
+    """A TIMESTAMP_NTZ ``ts`` (driver parquet read without the ingest
+    cast) gives the same rows as TIMESTAMP: every ts-arithmetic feature
+    goes through windowed.py, which casts before unix_micros (a raw NTZ
+    there is a DATATYPE_MISMATCH)."""
+    want = featurize(tiny_transcripts)
+    ntz = featurize(tiny_transcripts.withColumn("ts", F.col("ts").cast("timestamp_ntz")))
+    assert ntz.schema["ts"].dataType.typeName() == "timestamp_ntz"
+    got = ntz.withColumn("ts", F.col("ts").cast("timestamp")).withColumn(
+        "session_start_ts", F.col("session_start_ts").cast("timestamp")
+    ).select(*want.columns)
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
+
+
 def test_text_exact_equality(feat_pdf, tiny_pdf):
     """Per-turn text equality under stable (conv_id, turn_idx) ordering —
     BASELINE.json:15 input_hint invariant."""
@@ -137,8 +152,15 @@ def test_text_exact_equality(feat_pdf, tiny_pdf):
 
 
 def test_session_aggregates(tiny_transcripts, tiny_pdf):
+    from feagen_spark.functions import windowed as W
+
+    tool_calls = F.sum((F.col("role") == "tool").cast("int")).cast("int")
     got = (
-        T.session_aggregates(T.add_session_id(tiny_transcripts))
+        W.session_aggregates(
+            T.add_session_id(tiny_transcripts),
+            "conv_id",
+            extra_aggs=[tool_calls.alias("session_tool_calls")],
+        )
         .toPandas()
         .sort_values(["conv_id", "session_id"])
         .reset_index(drop=True)
@@ -149,9 +171,11 @@ def test_session_aggregates(tiny_transcripts, tiny_pdf):
         .sort_values(["conv_id", "session_id"])
         .reset_index(drop=True)
     )
-    for c in ["session_turns", "session_tool_calls"]:
-        assert (got[c].to_numpy() == exp[c].to_numpy()).all()
-    assert np.allclose(got["session_duration_s"], exp["session_duration_s"])
+    assert (got["n_rows"].to_numpy() == exp["session_turns"].to_numpy()).all()
+    assert (
+        got["session_tool_calls"].to_numpy() == exp["session_tool_calls"].to_numpy()
+    ).all()
+    assert np.allclose(got["duration_s"], exp["session_duration_s"])
 
 
 def test_lag_template(tiny_transcripts, tiny_pdf):

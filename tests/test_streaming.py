@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from feagen_spark.streaming import incremental as INC
 from feagen_spark.features import turns as T
+from feagen_spark.functions import windowed as W
 
 
 @pytest.fixture(scope="module")
@@ -43,11 +44,11 @@ def test_streaming_session_aggs_match_batch(spark, tiny_transcripts, stream_dir,
         .sort_index()
     )
     exp = (
-        T.session_aggregates(T.add_session_id(tiny_transcripts))
+        W.session_aggregates(T.add_session_id(tiny_transcripts), "conv_id")
         .groupBy("conv_id")
         .agg(
             F.count(F.lit(1)).alias("n_sessions"),
-            F.sum("session_turns").alias("n_turns"),
+            F.sum("n_rows").alias("n_turns"),
         )
         .toPandas()
         .set_index("conv_id")
@@ -110,7 +111,7 @@ def test_streaming_session_boundary_exact_gap(spark, tmp_path):
     df.coalesce(1).write.mode("overwrite").parquet(d)
 
     batch = (
-        T.session_aggregates(T.add_session_id(df, gap_s=gap))
+        W.session_aggregates(T.add_session_id(df, gap_s=gap), "conv_id")
         .groupBy("conv_id")
         .agg(F.count(F.lit(1)).alias("n_sessions"))
         .toPandas()

@@ -8,19 +8,11 @@ from feagen_spark.functions import windowed as W
 
 
 def test_add_rolling_include_current_frame_is_last_n_rows(spark):
-    """include_current=True must yield a frame of exactly last_n rows
-    (last_n-1 preceding + current), not last_n+1."""
+    """The rolling frame is exactly the previous last_n rows: never the
+    current row, never last_n+1 rows."""
     df = spark.createDataFrame(
         [("k", i, float(i)) for i in range(1, 7)], "k string, o int, v double"
     )
-    out = (
-        W.add_rolling(df, "k", ("o",), F.sum("v"), "s", last_n=3, include_current=True)
-        .orderBy("o")
-        .toPandas()
-    )
-    # rows 1..6, window of 3 incl current: [1,3,6,9,12,15]
-    assert list(out["s"]) == [1.0, 3.0, 6.0, 9.0, 12.0, 15.0]
-
     excl = (
         W.add_rolling(df, "k", ("o",), F.sum("v"), "s", last_n=3)
         .orderBy("o")
