@@ -61,14 +61,13 @@ class Engine:
             fp = plan.fingerprints[node.name]
             if node.checkpoint and self.store is not None:
                 if self.store.exists(fp):
-                    cp = self.store.read(spark, fp)
-                    df = df.join(cp, on=list(self.keys), how="left")
                     report.skipped.append(node.name)
-                    continue
-                computed = node.fn(df)
-                out = computed.select(*self.keys, *node.outputs)
-                ts = self.ts_col if self.ts_col in out.columns else None
-                self.store.write(out, fp, node.name, ts_col=ts)
+                else:
+                    computed = node.fn(df)
+                    out = computed.select(*self.keys, *node.outputs)
+                    ts = self.ts_col if self.ts_col in out.columns else None
+                    self.store.write(out, fp, node.name, ts_col=ts)
+                    report.executed.append(node.name)
                 # JOIN THE MATERIALIZED TABLE BACK instead of keeping
                 # the node.fn lineage (code-review r6): the checkpoint
                 # must be a real barrier — otherwise the caller's final
@@ -76,11 +75,10 @@ class Engine:
                 # (2x per checkpoint), and a nondeterministic upstream
                 # would hand downstream features DIFFERENT values than
                 # the ones persisted, so a later resume silently
-                # diverges from the original run. Cold path now ends in
-                # the exact join the resume path uses.
+                # diverges from the original run. Cold and resume runs
+                # end in this one join.
                 cp = self.store.read(spark, fp)
                 df = df.join(cp, on=list(self.keys), how="left")
-                report.executed.append(node.name)
             else:
                 df = node.fn(df)
                 report.executed.append(node.name)

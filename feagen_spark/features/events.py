@@ -81,8 +81,8 @@ def add_rolling_frame_r5(df: DataFrame) -> DataFrame:
     as ONE fused node (VERDICT r5 #5): both features share the last-10
     frame, so the DAG pays a single collect_list materialization
     instead of a collect_set + a collect_list in the same Window
-    operator. Results are bit-identical to the standalone
-    add_rolling_distinct / add_rolling_decayed_sum."""
+    operator (W.add_rolling_frame_features states the NULL and
+    empty-frame contract)."""
     return W.add_rolling_frame_features(
         df, KEY, ORDER, "ts", "value",
         distinct_col="event_type", distinct_out="n_types_last_10",

@@ -5,7 +5,9 @@ transcript table, the driver's `events` table, or any entity stream.
 features/turns.py and features/events.py are the transcript and event
 profiles of these primitives; this module is the one implementation of
 the trailing-frame arithmetic, also used by __spark_entry__ queries and
-external callers.
+external callers. The trailing distinct count and the time-decayed sum
+have one implementation, ``add_rolling_frame_features``, which builds
+both from a single frame list.
 
 All trailing frames end before the current row (leakage-safe): no
 function here takes an option that builds a frame reading the current
@@ -103,80 +105,6 @@ def add_rolling_time(
     return df.withColumn(out, agg.over(w))
 
 
-def add_rolling_distinct(
-    df: DataFrame,
-    key: str | Sequence[str],
-    order: Sequence[str],
-    col: str,
-    out: str,
-    last_n: int,
-) -> DataFrame:
-    """Trailing distinct-count feature (novelty/diversity signals: how
-    many distinct event types / tools / pages in the recent window):
-    number of distinct ``col`` values among the previous ``last_n``
-    rows. Same single key-partitioned window as every other trailing
-    frame; the set state is bounded by the frame length. Empty frame →
-    0 (never NULL/-1: ``size`` of a missing frame is normalized)."""
-    w = _w(key, order).rowsBetween(-last_n, -1)
-    return df.withColumn(
-        out,
-        F.coalesce(F.size(F.collect_set(col).over(w)), F.lit(0)).cast("int"),
-    )
-
-
-def add_rolling_decayed_sum(
-    df: DataFrame,
-    key: str | Sequence[str],
-    order: Sequence[str],
-    ts_col: str,
-    value_col: str,
-    out: str,
-    half_life_s: float,
-    last_n: int = 100,
-) -> DataFrame:
-    """Exponentially time-decayed trailing sum (recency-weighted
-    engagement features): Σ vᵢ · 2^(−ageᵢ/half_life) over the previous
-    ``last_n`` rows, where ageᵢ = current ts − tsᵢ.
-
-    Exact over the bounded trailing frame via ONE collect_list window +
-    a JVM higher-order ``aggregate`` — every exponent is ≤ 0, so the
-    math never overflows at any time span. (The classic unbounded
-    factorization S = 2^(−t/h)·Σ vᵢ2^(tᵢ/h) overflows past ~1000
-    half-lives of span, which a year-long table at a 10-minute
-    half-life exceeds 50×; the bounded frame is also what keeps the
-    per-row state O(last_n) at 10¹²-row scale.) Frame ends at −1 —
-    leakage-safe per the repo contract. Empty frame → 0.0; NULL values
-    and NULL-``ts`` frame rows contribute 0 (SQL ``sum`` skips them —
-    either NULL in a raw fold would instead poison the accumulator); a
-    NULL ``ts`` on the CURRENT row yields NULL (no reference instant).
-    Ages clamp at 0, so a frame row ordered after the current row by a
-    non-``ts``-led ``order`` weighs at most 1 instead of overflowing
-    the exponent (code-review r5)."""
-    import math
-
-    w = _w(key, order).rowsBetween(-last_n, -1)
-    us = _us(ts_col)
-    pairs = F.collect_list(
-        F.struct(
-            us.alias("us"),
-            F.coalesce(F.col(value_col).cast("double"), F.lit(0.0)).alias("v"),
-        )
-    ).over(w)
-    lam = math.log(2.0) / (float(half_life_s) * 1e6)  # per-microsecond
-    age = lambda p: F.greatest(  # noqa: E731 — local weight helper
-        (us - p["us"]).cast("double"), F.lit(0.0)
-    )
-    decayed = F.aggregate(
-        pairs,
-        F.lit(0.0),
-        lambda acc, p: acc
-        + F.when(
-            p["us"].isNotNull(), p["v"] * F.exp((-lam) * age(p))
-        ).otherwise(F.lit(0.0)),
-    )
-    return df.withColumn(out, F.when(us.isNotNull(), decayed))
-
-
 def add_rolling_frame_features(
     df: DataFrame,
     key: str | Sequence[str],
@@ -189,17 +117,27 @@ def add_rolling_frame_features(
     half_life_s: float,
     last_n: int,
 ) -> DataFrame:
-    """Trailing distinct count AND exponentially decayed sum from ONE
-    shared frame list (VERDICT r5 #5): when both features use the same
-    (key, order, last_n) trailing frame, computing them separately pays
-    two per-row list materializations in the same Window operator
-    (collect_set + collect_list buffers). This fused variant collects a
-    single ``struct(us, v, tag)`` list and derives both columns with
-    JVM higher-order functions — one buffer, one pass, bit-identical
-    results to ``add_rolling_distinct`` + ``add_rolling_decayed_sum``
-    (NULL tags excluded from the distinct count; NULL values / NULL-ts
-    frame rows contribute 0 to the decay; NULL current-row ts → NULL
-    decay; empty frame → 0 / 0.0)."""
+    """Trailing distinct count and exponentially time-decayed sum over
+    the previous ``last_n`` rows, both read from ONE collected frame
+    list (VERDICT r5 #5: one ``struct(us, v, tag)`` buffer in the Window
+    operator instead of a collect_set plus a collect_list, then JVM
+    higher-order functions derive both columns in one pass).
+
+    - ``distinct_out``: number of distinct non-NULL ``distinct_col``
+      values in the frame (novelty/diversity signals); an empty frame
+      gives 0, never NULL or -1.
+    - ``decay_out``: Σ vᵢ · 2^(−ageᵢ/half_life_s) with ageᵢ = current
+      ts − tsᵢ (recency-weighted engagement). Ages clamp at 0, so every
+      exponent is ≤ 0 and the sum cannot overflow at any time span; a
+      frame row ordered after the current row by a non-``ts``-led
+      ``order`` weighs at most 1 (code-review r5). The classic unbounded
+      factorization S = 2^(−t/h)·Σ vᵢ2^(tᵢ/h) overflows past ~1000
+      half-lives of span; the bounded frame also keeps per-row state
+      O(last_n). NULL-value and NULL-``ts`` frame rows contribute 0 (as
+      SQL ``sum`` skips them); a NULL ``ts`` on the current row gives
+      NULL (no reference instant); an empty frame gives 0.0.
+
+    The frame ends at −1 — leakage-safe per the module contract."""
     import math
 
     w = _w(key, order).rowsBetween(-last_n, -1)

@@ -818,7 +818,6 @@ def write_minhash_index(
     seed: int = 42,
     hash_mode: str = "xxh64",
     fmt: str = "parquet",
-    write_mode: str = "overwrite",
     ingest_batch: int | None = None,
 ) -> None:
     """Materialize the banded MinHash index of a deduplicated corpus:
@@ -851,13 +850,7 @@ def write_minhash_index(
     if ingest_batch is not None:
         rows = rows.withColumn("ingest_batch", F.lit(int(ingest_batch)))
         part_by = ["ingest_batch", "band"]
-    write_table(
-        rows,
-        path,
-        fmt=fmt,
-        mode=write_mode,
-        partition_by=part_by,
-    )
+    write_table(rows, path, fmt=fmt, partition_by=part_by)
 
 
 def minhash_probe_increment(

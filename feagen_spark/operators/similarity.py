@@ -353,7 +353,7 @@ def _make_centroid_prober(centroids: np.ndarray, top: int):
     broken by the lower centroid id). Caveat: the two paths sum in
     different orders (BLAS blocked/SIMD vs the JVM's sequential fold),
     so two centroids whose dots differ by less than the summation
-    rounding error (~1 ulp) can rank differently between modes — for a
+    rounding error (~1 ulp) can rank differently between paths — for a
     trained quantizer (distinct centroids, margins ≫ ulp) the
     assignments agree, as the 256-centroid parity test pins on fixed
     seeds."""
@@ -369,31 +369,26 @@ def _make_centroid_prober(centroids: np.ndarray, top: int):
     return probe
 
 
-def _nearest_centroids(
-    vec_col, centroids: np.ndarray, top: int, mode: str = "auto"
-) -> F.Column:
-    """Ids of the `top` nearest centroids by cosine. Two physical
-    strategies behind one contract (identical output ordering):
+def _nearest_centroids(vec_col, centroids: np.ndarray, top: int) -> F.Column:
+    """Ids of the `top` nearest centroids by cosine. The quantizer size
+    picks one of two physical strategies behind one contract (identical
+    output ordering):
 
-    - ``jvm`` (small quantizers): the centroid matrix inlines as
-      literal arrays and the dot products stay inside whole-stage
-      codegen — no Python workers on the hot path.
-    - ``arrow`` (large quantizers, e.g. 256-4096 lists × 512-1024
-      dims): a realistic IVF matrix as plan literals is 10^5-10^6
-      expression nodes — analysis/codegen blowup — so the matrix rides
-      an Arrow pandas_udf instead (one matmul per batch).
-    - ``auto`` picks by n_centroids × dim vs ``_IVF_JVM_MAX_LITERALS``.
+    - n_centroids × dim ≤ ``_IVF_JVM_MAX_LITERALS`` (small quantizers):
+      the centroid matrix inlines as literal arrays and the dot products
+      stay inside whole-stage codegen — no Python workers on the hot
+      path.
+    - above it (large quantizers, e.g. 256-4096 lists × 512-1024 dims):
+      a realistic IVF matrix as plan literals is 10^5-10^6 expression
+      nodes — analysis/codegen blowup — so the matrix rides an Arrow
+      pandas_udf instead (one matmul per batch).
 
     Ranking by raw dot equals ranking by cosine because centroids are
     normalized and the vector's own norm is constant across centroids.
     Ties break on the lower centroid id (deterministic)."""
-    if mode == "auto":
-        mode = "jvm" if centroids.size <= _IVF_JVM_MAX_LITERALS else "arrow"
-    if mode == "arrow":
+    if centroids.size > _IVF_JVM_MAX_LITERALS:
         c = F.col(vec_col) if isinstance(vec_col, str) else vec_col
         return _make_centroid_prober(centroids, top)(c)
-    if mode != "jvm":
-        raise ValueError(f"unknown assign mode {mode!r}")
     dots = [
         F.aggregate(
             F.zip_with(
@@ -423,7 +418,6 @@ def ivf_assign(
     corpus: DataFrame,
     centroids: np.ndarray,
     vec_col: str = "embedding",
-    mode: str = "auto",
 ) -> DataFrame:
     """Index build: append the nearest-centroid id (the IVF list each
     vector belongs to). One map stage (JVM for small quantizers, Arrow
@@ -432,7 +426,7 @@ def ivf_assign(
     return corpus.withColumn(
         "centroid_id",
         F.element_at(
-            _nearest_centroids(F.col(vec_col), centroids, 1, mode=mode), 1
+            _nearest_centroids(F.col(vec_col), centroids, 1), 1
         ),
     )
 
@@ -447,7 +441,6 @@ def ivf_topk(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
-    mode: str = "auto",
 ) -> DataFrame:
     """IVF ANN top-k: each query probes its ``nprobe`` nearest inverted
     lists; candidates = corpus rows in those lists (hash join on
@@ -455,16 +448,17 @@ def ivf_topk(
     candidate set. nprobe == n_centroids degenerates to exact brute
     force (the oracle-checkable configuration); recall/cost tunes with
     nprobe. At 100TB the corpus is stored partitioned by centroid_id so
-    a probe reads only its lists; the quantizer auto-switches from
-    inlined literals to an Arrow matmul above ``_IVF_JVM_MAX_LITERALS``
-    so a 4096-list × 1024-dim index never hits plan-size limits."""
-    assigned = ivf_assign(corpus, centroids, vec_col=vec_col, mode=mode)
+    a probe reads only its lists; the quantizer runs as inlined
+    literals up to ``_IVF_JVM_MAX_LITERALS`` and as an Arrow matmul
+    above it (``_nearest_centroids``), so a 4096-list × 1024-dim index
+    never hits plan-size limits."""
+    assigned = ivf_assign(corpus, centroids, vec_col=vec_col)
     q = queries.select(
         query_id_col,
         query_vec_col,
         _norm2(F.col(query_vec_col)).alias("__nb"),
         F.explode(
-            _nearest_centroids(F.col(query_vec_col), centroids, nprobe, mode=mode)
+            _nearest_centroids(F.col(query_vec_col), centroids, nprobe)
         ).alias("centroid_id"),
     )
     cands = assigned.withColumn("__na", _norm2(F.col(vec_col))).join(
@@ -481,9 +475,7 @@ def write_ivf_index(
     centroids: np.ndarray,
     path: str,
     vec_col: str = "embedding",
-    mode: str = "auto",
     fmt: str = "parquet",
-    write_mode: str = "overwrite",
     ingest_batch: int | None = None,
 ) -> None:
     """Materialize the IVF index in its scale layout (VERDICT r4 #4):
@@ -500,16 +492,14 @@ def write_ivf_index(
     the MinHash index; partition depth must be uniform per root."""
     from ..sources.tables import write_table
 
-    assigned = ivf_assign(corpus, centroids, vec_col=vec_col, mode=mode)
+    assigned = ivf_assign(corpus, centroids, vec_col=vec_col)
     part_by: list[str] | str = "centroid_id"
     if ingest_batch is not None:
         assigned = assigned.withColumn(
             "ingest_batch", F.lit(int(ingest_batch))
         )
         part_by = ["ingest_batch", "centroid_id"]
-    write_table(
-        assigned, path, fmt=fmt, mode=write_mode, partition_by=part_by
-    )
+    write_table(assigned, path, fmt=fmt, partition_by=part_by)
 
 
 def append_ivf_index(
@@ -518,7 +508,6 @@ def append_ivf_index(
     path: str,
     ingest_batch: int,
     vec_col: str = "embedding",
-    mode: str = "auto",
     fmt: str = "parquet",
 ) -> None:
     """Grow an incremental IVF index (:func:`write_ivf_index` with
@@ -535,9 +524,9 @@ def append_ivf_index(
     :func:`write_ivf_index` rebuild (standard IVF practice)."""
     from .incremental import _dynamic_overwrite
 
-    assigned = ivf_assign(
-        increment, centroids, vec_col=vec_col, mode=mode
-    ).withColumn("ingest_batch", F.lit(int(ingest_batch)))
+    assigned = ivf_assign(increment, centroids, vec_col=vec_col).withColumn(
+        "ingest_batch", F.lit(int(ingest_batch))
+    )
     _dynamic_overwrite(
         assigned, path, ["ingest_batch", "centroid_id"], fmt=fmt
     )
@@ -554,7 +543,6 @@ def ivf_topk_indexed(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
-    mode: str = "auto",
 ) -> DataFrame:
     """IVF top-k against a :func:`write_ivf_index` layout — identical
     semantics to :func:`ivf_topk` (same quantizer ⇒ same lists ⇒ same
@@ -574,7 +562,7 @@ def ivf_topk_indexed(
         query_vec_col,
         _norm2(F.col(query_vec_col)).alias("__nb"),
         F.explode(
-            _nearest_centroids(F.col(query_vec_col), centroids, nprobe, mode=mode)
+            _nearest_centroids(F.col(query_vec_col), centroids, nprobe)
         ).alias("centroid_id"),
     )
     probe_ids = sorted(
@@ -776,7 +764,6 @@ def semantic_dedup(
     threshold: float = 0.95,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    mode: str = "auto",
 ) -> DataFrame:
     """Semantic deduplication (the SemDeDup recipe, Abbas et al. 2023,
     arXiv:2303.09540): cluster the embedding space, compare pairs ONLY
@@ -810,7 +797,7 @@ def semantic_dedup(
         "centroid_id int, cent_vec array<double>",
     )
     assigned = (
-        ivf_assign(corpus, centroids, vec_col=vec_col, mode=mode)
+        ivf_assign(corpus, centroids, vec_col=vec_col)
         .join(F.broadcast(cent_df), "centroid_id")
         .select(
             "centroid_id",

@@ -4,8 +4,10 @@ with a parquet fallback for this sandbox.
 No Iceberg runtime jar ships with this install (verified — SURVEY.md
 §1.2), so `format="iceberg"` only activates when the runtime is present
 (real cluster: `spark-submit --packages org.apache.iceberg:...` +
-catalog conf). Everything else in the engine talks to this module, so
-swapping storage is a one-line config change.
+catalog conf). In the engine only the MinHash/IVF index writers
+(``write_table``) and the MinHash index rebaseline (``rewrite_table``)
+go through this module; the checkpoint store, the refresh and
+streaming sinks and the jobs read and write their tables directly.
 
 Layout guidance encoded here (the 100TB defaults):
 - transcripts partitioned by bucket(conv_id) — co-locates each
@@ -79,23 +81,15 @@ def write_table(
     df: DataFrame,
     location: str,
     fmt: str = "parquet",
-    mode: str = "overwrite",
-    bucket_by: tuple[int, str] | None = None,
     partition_by: str | list[str] | None = None,
 ) -> None:
-    """Write a table with the scale-default layout. bucket_by requires a
-    saveAsTable-capable catalog (Iceberg/HMS); plain parquet paths fall
-    back to repartition-by-key so files are still conversation-clustered."""
+    """Overwrite a path-backed table, optionally ``partitionBy`` —
+    the index writers' layout (``write_minhash_index`` by band,
+    ``write_ivf_index`` by centroid_id). ``iceberg`` falls back to
+    parquet when no Iceberg runtime is present."""
     if fmt == "iceberg" and not iceberg_available(df.sparkSession):
         fmt = "parquet"
-    w = df.write.mode(mode)
-    if bucket_by is not None:
-        n, col = bucket_by
-        if fmt == "parquet":
-            df = df.repartition(n, col)
-            w = df.write.mode(mode)
-        else:
-            w = w.bucketBy(n, col)
+    w = df.write.mode("overwrite")
     if partition_by:
         w = w.partitionBy(partition_by)
     w.format(fmt).save(location)

@@ -331,8 +331,9 @@ def streaming_decayed_sum(
     out: str = "value_decay",
 ) -> DataFrame:
     """O(1)-state exponential time decay per key — the streaming twin
-    of ``windowed.add_rolling_decayed_sum`` WITHOUT the frame cap
-    (unbounded history): every arriving row is emitted with
+    of the decayed sum of ``windowed.add_rolling_frame_features``
+    WITHOUT the frame cap (unbounded history): every arriving row is
+    emitted with
     S = Σ_{prior} vᵢ·2^(−(t−tᵢ)/half_life), maintained by the closed-
     form recurrence S ← S·2^(−Δt/half_life) + v_prev — two doubles of
     state per key regardless of history length, the classic real-time

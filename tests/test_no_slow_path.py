@@ -61,11 +61,12 @@ def test_collect_only_in_allowed_places():
 def test_features_build_no_trailing_frame():
     """functions/windowed.py is the one module that builds a trailing
     frame (the zero-leakage arithmetic): feature profiles under
-    features/ delegate to it and never spell a range frame or a row
-    frame ending at -1 themselves."""
+    features/ and the queries in __spark_entry__.py delegate to it and
+    never spell a range frame or a row frame ending at -1 themselves."""
     rx = re.compile(r"\brangeBetween\s*\(|\browsBetween\s*\([^()]*,\s*-\s*1\s*\)")
     offenders = []
-    for py in (PKG / "features").rglob("*.py"):
+    sources = [*(PKG / "features").rglob("*.py"), PKG.parent / "__spark_entry__.py"]
+    for py in sources:
         text = py.read_text()
         for m in rx.finditer(text):
             line = text[: m.start()].count("\n") + 1

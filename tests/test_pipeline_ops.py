@@ -770,12 +770,13 @@ def test_dup_ngram_ratio(spark):
     assert got[4] == (0.0, 0)
 
 
-def test_ivf_assign_jvm_equals_arrow_at_256_centroids(spark, vectors):
+def test_ivf_assign_jvm_equals_arrow_at_256_centroids(spark, vectors, monkeypatch):
     """The two quantizer strategies are one contract (VERDICT r2 #3):
-    forced-JVM and forced-Arrow assignment must agree row for row at
-    n_centroids=256 (above the auto threshold for dim 8 the literal
-    path would still work; realistic 512-1024 dims would not), and
-    'auto' must pick the Arrow path there."""
+    JVM and Arrow assignment must agree row for row at n_centroids=256
+    (at dim 8 the literal path still works; realistic 512-1024 dims
+    would not). Each path is forced by moving the
+    ``_IVF_JVM_MAX_LITERALS`` threshold the quantizer size is compared
+    against, and the size alone must pick the Arrow path above it."""
     import numpy as np
 
     from feagen_spark.operators import similarity as S
@@ -784,35 +785,33 @@ def test_ivf_assign_jvm_equals_arrow_at_256_centroids(spark, vectors):
     rng = np.random.RandomState(11)
     cent = rng.normal(size=(256, 8))
     cent /= np.linalg.norm(cent, axis=1, keepdims=True)
-
-    jvm = (
-        S.ivf_assign(df, cent, mode="jvm")
-        .orderBy("vec_id")
-        .select("vec_id", "centroid_id")
-        .toPandas()
-    )
-    arrow = (
-        S.ivf_assign(df, cent, mode="arrow")
-        .orderBy("vec_id")
-        .select("vec_id", "centroid_id")
-        .toPandas()
-    )
-    assert (jvm["centroid_id"] == arrow["centroid_id"]).all()
-
-    # nprobe top-lists agree too (ordering incl. tie-breaks)
     q = df.limit(3).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    tj = S.ivf_topk(df, q, cent, k=5, nprobe=4, mode="jvm").orderBy(
-        "query_id", "rank"
-    ).toPandas()
-    ta = S.ivf_topk(df, q, cent, k=5, nprobe=4, mode="arrow").orderBy(
-        "query_id", "rank"
-    ).toPandas()
+
+    def run(max_literals):
+        # the threshold is read when the plan is built, not at execution
+        with monkeypatch.context() as m:
+            m.setattr(S, "_IVF_JVM_MAX_LITERALS", max_literals)
+            assigned = S.ivf_assign(df, cent)
+            top = S.ivf_topk(df, q, cent, k=5, nprobe=4)
+        plan = assigned._jdf.queryExecution().analyzed().toString()
+        return (
+            assigned.orderBy("vec_id").select("vec_id", "centroid_id").toPandas(),
+            top.orderBy("query_id", "rank").toPandas(),
+            "probe(" in plan,  # the Arrow prober pandas_udf
+        )
+
+    jvm, tj, jvm_udf = run(cent.size)
+    arrow, ta, arrow_udf = run(cent.size - 1)
+    assert not jvm_udf and arrow_udf
+    assert (jvm["centroid_id"] == arrow["centroid_id"]).all()
+
+    # nprobe top-lists agree too (ordering incl. tie-breaks)
     assert (tj["vec_id"].to_numpy() == ta["vec_id"].to_numpy()).all()
 
-    # auto dispatch: 256*8 = 2048 <= threshold -> jvm; force a matrix
-    # above the threshold -> arrow (no plan literals)
+    # default threshold: 256*8 = 2048 <= 4096 -> jvm; a matrix above
+    # it -> arrow (no plan literals)
     big = rng.normal(size=(256, 32))
     big /= np.linalg.norm(big, axis=1, keepdims=True)
     plan = S.ivf_assign(df.withColumn(

@@ -571,8 +571,8 @@ def test_json_props_extraction_stays_jvm(spark):
 def test_rolling_family_single_exchange(spark, tmp_path_factory):
     """The full ev_rolling feature family (row frame, time frame,
     trailing distinct, decayed sum) must share ONE hash exchange on the
-    key — the collect_set/collect_list windows ride the same
-    partitioning as the plain aggregates."""
+    key — the shared frame-list window rides the same partitioning as
+    the plain aggregates."""
     from feagen_spark.functions import windowed as W
 
     p = str(tmp_path_factory.mktemp("roll") / "ev")
@@ -587,6 +587,9 @@ def test_rolling_family_single_exchange(spark, tmp_path_factory):
     order = ("ts", "rid")
     df = W.add_rolling(df, "k", order, F.sum("v"), "roll", last_n=10)
     df = W.add_rolling_time(df, "k", "ts", F.count(F.lit(1)), "troll", last_seconds=600)
-    df = W.add_rolling_distinct(df, "k", order, "etype", "ntypes", last_n=10)
-    df = W.add_rolling_decayed_sum(df, "k", order, "ts", "v", "decay", half_life_s=600, last_n=10)
+    df = W.add_rolling_frame_features(
+        df, "k", order, "ts", "v",
+        distinct_col="etype", distinct_out="ntypes", decay_out="decay",
+        half_life_s=600, last_n=10,
+    )
     assert len(_exchanges(_plan(df))) == 1, _plan(df)

@@ -1,5 +1,4 @@
-"""Source/sink layer (C1/C2): NTZ normalization, iceberg fallback,
-bucket-style clustered writes."""
+"""Source/sink layer (C1/C2): NTZ normalization, iceberg fallback."""
 
 from __future__ import annotations
 
@@ -27,24 +26,6 @@ def test_read_normalizes_ntz(spark):
         "select min(epoch_us(ts)) from read_parquet('/root/testdata/sf0.001/events.parquet')"
     ).fetchone()[0]
     assert got == exp
-
-
-def test_bucketed_parquet_write_clusters_keys(spark, tiny_transcripts, tmp_path):
-    out = str(tmp_path / "clustered")
-    SRC.write_table(
-        tiny_transcripts, out, fmt="parquet", bucket_by=(4, "conv_id")
-    )
-    back = spark.read.parquet(out)
-    assert back.count() == tiny_transcripts.count()
-    # each conv's rows land in exactly one file (conversation locality)
-    per_conv_files = (
-        back.select("conv_id", F.input_file_name().alias("f"))
-        .groupBy("conv_id")
-        .agg(F.countDistinct("f").alias("nf"))
-        .agg(F.max("nf").alias("m"))
-        .first()["m"]
-    )
-    assert per_conv_files == 1
 
 
 def test_iceberg_roundtrip_when_runtime_present(spark, tmp_path):

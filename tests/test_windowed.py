@@ -149,13 +149,63 @@ if _HYP:
         assert got == want
 
 
-def test_rolling_distinct_and_decayed_sum_match_reference(spark):
-    """add_rolling_distinct / add_rolling_decayed_sum (r5) vs loop
-    references: distinct counts over the trailing frame (empty frame →
-    0, never NULL), decayed sum exact to double precision with NULLs
-    contributing 0."""
+def _frame_features_reference(rows, last_n, half_life_s):
+    """Pure-Python loop oracle for add_rolling_frame_features over rows
+    (rid, key, sec, value, tag), ordered by (sec, rid) per key with NULL
+    sec first (Spark's ascending default): distinct non-NULL tags of the
+    previous ``last_n`` rows, and Σ v·2^(−age/half_life) with NULL
+    values / NULL-sec frame rows weighing 0 and a NULL current sec
+    giving NULL."""
     import math
 
+    lam = math.log(2.0) / half_life_s
+    by_key: dict = {}
+    for rid, k, s, v, e in rows:
+        by_key.setdefault(k, []).append((s is not None, s or 0, rid, v, e))
+    want = {}
+    for seq in by_key.values():
+        seq.sort()
+        for pos, (has_s, s, rid, _v, _e) in enumerate(seq):
+            prior = seq[max(0, pos - last_n):pos]
+            n_types = len({x[4] for x in prior if x[4] is not None})
+            decay = (
+                sum(
+                    (x[3] or 0.0) * math.exp(-lam * max(s - x[1], 0))
+                    for x in prior
+                    if x[0]
+                )
+                if has_s
+                else None
+            )
+            want[rid] = (n_types, decay)
+    return want
+
+
+def _frame_features_df(spark, rows):
+    return spark.createDataFrame(
+        [(i, k, s, v, e) for i, k, s, v, e in rows],
+        "rid long, k string, sec long, v double, etype string",
+    ).select(
+        "rid", "k", "v", "etype",
+        F.timestamp_micros(F.col("sec") * 1_000_000).alias("ts"),
+    )
+
+
+def _assert_matches_reference(got, want):
+    assert got.keys() == want.keys()
+    for rid, (wn, wd) in want.items():
+        gn, gd = got[rid]
+        assert gn == wn, (rid, gn, wn)
+        if wd is None:
+            assert gd is None, (rid, gd)
+        else:
+            assert abs(gd - wd) < 1e-9, (rid, gd, wd)
+
+
+def test_rolling_distinct_and_decayed_sum_match_reference(spark):
+    """add_rolling_frame_features vs the loop reference: distinct counts
+    over the trailing frame (empty frame → 0, never NULL), decayed sum
+    exact to double precision with NULL values contributing 0."""
     rows = [
         # (rid, key, sec, value, etype)
         (0, "a", 0, 1.0, "x"),
@@ -165,46 +215,23 @@ def test_rolling_distinct_and_decayed_sum_match_reference(spark):
         (4, "a", 5000, 5.0, "x"),
         (5, "b", 0, 7.0, "x"),
     ]
-    df = spark.createDataFrame(
-        [(i, k, s, v, e) for i, k, s, v, e in rows],
-        "rid long, k string, sec long, v double, etype string",
-    ).select(
-        "rid", "k", "v", "etype",
-        F.timestamp_micros(F.col("sec") * 1_000_000).alias("ts"),
-    )
-    out = W.add_rolling_distinct(
-        df, "k", ("ts", "rid"), "etype", "n_types", last_n=3
-    )
-    out = W.add_rolling_decayed_sum(
-        out, "k", ("ts", "rid"), "ts", "v", "decay",
+    out = W.add_rolling_frame_features(
+        _frame_features_df(spark, rows), "k", ("ts", "rid"), "ts", "v",
+        distinct_col="etype", distinct_out="n_types", decay_out="decay",
         half_life_s=600, last_n=3,
     )
     got = {r["rid"]: (r["n_types"], r["decay"]) for r in out.collect()}
-
-    lam = math.log(2.0) / (600 * 1e6)
-    by_key: dict = {}
-    for rid, k, s, v, e in rows:
-        by_key.setdefault(k, []).append((s, rid, v, e))
-    for k, seq in by_key.items():
-        seq.sort()
-        for pos, (s, rid, v, e) in enumerate(seq):
-            prior = seq[max(0, pos - 3):pos]
-            n_types = len({x[3] for x in prior})
-            decay = sum(
-                (x[2] or 0.0) * math.exp(-lam * (s - x[0]) * 1e6)
-                for x in prior
-            )
-            gn, gd = got[rid]
-            assert gn == n_types, (rid, gn, n_types)
-            assert abs(gd - decay) < 1e-9, (rid, gd, decay)
+    _assert_matches_reference(got, _frame_features_reference(rows, 3, 600))
     # empty frame: first row of each key
     assert got[0] == (0, 0.0) and got[5] == (0, 0.0)
 
 
 def test_rolling_frame_features_fused_parity(spark):
-    """add_rolling_frame_features (r6 fusion, VERDICT r5 #5) must be
-    bit-identical to the standalone distinct + decayed-sum pair on the
-    same frame, including NULL tag / NULL value / NULL ts corners."""
+    """add_rolling_frame_features (r6 fusion, VERDICT r5 #5) against the
+    independent loop reference on the NULL corners: a NULL tag is left
+    out of the distinct count, a NULL value and a NULL-ts frame row add
+    0 to the decay, a NULL current-row ts gives a NULL decay. The plan
+    builds both columns from one frame list."""
     rows = [
         (0, "a", 0, 1.0, "x"),
         (1, "a", 100, 2.0, None),   # NULL tag: excluded from distinct
@@ -213,28 +240,14 @@ def test_rolling_frame_features_fused_parity(spark):
         (4, "a", None, 5.0, "y"),   # NULL ts: NULL decay, no weight
         (5, "b", 0, 7.0, "x"),
     ]
-    df = spark.createDataFrame(
-        [(i, k, s, v, e) for i, k, s, v, e in rows],
-        "rid long, k string, sec long, v double, etype string",
-    ).select(
-        "rid", "k", "v", "etype",
-        F.timestamp_micros(F.col("sec") * 1_000_000).alias("ts"),
-    )
-    sep = W.add_rolling_distinct(
-        df, "k", ("ts", "rid"), "etype", "n_types", last_n=3
-    )
-    sep = W.add_rolling_decayed_sum(
-        sep, "k", ("ts", "rid"), "ts", "v", "decay",
-        half_life_s=600, last_n=3,
-    )
     fused = W.add_rolling_frame_features(
-        df, "k", ("ts", "rid"), "ts", "v",
+        _frame_features_df(spark, rows), "k", ("ts", "rid"), "ts", "v",
         distinct_col="etype", distinct_out="n_types", decay_out="decay",
         half_life_s=600, last_n=3,
     )
-    a = {r["rid"]: (r["n_types"], r["decay"]) for r in sep.collect()}
-    b = {r["rid"]: (r["n_types"], r["decay"]) for r in fused.collect()}
-    assert a == b
+    got = {r["rid"]: (r["n_types"], r["decay"]) for r in fused.collect()}
+    _assert_matches_reference(got, _frame_features_reference(rows, 3, 600))
+    assert got[4] == (0, None)  # NULL ts sorts first: empty frame too
     # the fused plan carries ONE collect_list and NO collect_set
     # (AQE's toString repeats the plan under "== Initial Plan ==" —
     # count only the final section)
@@ -264,13 +277,17 @@ def test_windowed_accepts_timestamp_ntz_frames(spark):
     out = W.add_rolling_time(
         out, "user_id", "ts", F.count(F.lit(1)), "n_last_20m", 1200
     )
-    out = W.add_rolling_decayed_sum(
-        out, "user_id", ["ts"], "ts", "value", "decay", half_life_s=600
+    out = W.add_rolling_frame_features(
+        out, "user_id", ["ts"], "ts", "value",
+        distinct_col="n", distinct_out="n_prior", decay_out="decay",
+        half_life_s=600, last_n=100,
     )
     out = W.add_session_id(out, "user_id", ["ts"], ts_col="ts", gap_s=1800)
     rows = {r["n"]: r for r in out.collect()}
     assert rows[1]["ts_delta_prev_s"] == 600.0
     assert rows[2]["n_last_20m"] == 2
+    assert rows[2]["n_prior"] == 2
+    assert abs(rows[2]["decay"] - 0.5) < 1e-12  # 0·2^-2 + 1·2^-1
     assert rows[0]["session_id"] == 0
 
     aggs = W.session_aggregates(
