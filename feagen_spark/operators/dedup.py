@@ -332,18 +332,21 @@ def _filtered_shingles(
     return sh.join(F.broadcast(hot), on="shingle", how="left_anti")
 
 
+def _jaccard_col() -> F.Column:
+    """The JVM ``round(inter/(sz_a+sz_b−inter), 6)`` over exact integer
+    (inter, sz_a, sz_b) counts — the ONE bit-exact Jaccard value every
+    n-gram Jaccard plan compares with its threshold."""
+    return F.round(
+        F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")), 6
+    )
+
+
 def _jaccard_at_least(cand: DataFrame, threshold: float) -> DataFrame:
-    """Adds the JVM ``jaccard = round(inter/(sz_a+sz_b−inter), 6)`` to
-    (id_a, id_b, inter, sz_a, sz_b) counts and keeps rows with
-    ``jaccard >= threshold`` — the ONE bit-exact decision every n-gram
-    Jaccard plan applies to its exact integer counts."""
-    return cand.withColumn(
-        "jaccard",
-        F.round(
-            F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")),
-            6,
-        ),
-    ).where(F.col("jaccard") >= threshold)
+    """Adds ``jaccard`` (``_jaccard_col``) to (id_a, id_b, inter, sz_a,
+    sz_b) counts and keeps rows with ``jaccard >= threshold``."""
+    return cand.withColumn("jaccard", _jaccard_col()).where(
+        F.col("jaccard") >= threshold
+    )
 
 
 # dense-matmul cutoff for the in-task intersection counter: above this
@@ -609,17 +612,20 @@ def ngram_jaccard_cluster_edges(
     ``round(inter/(sz_a+sz_b−inter), 6) >= threshold`` filter the pair
     list applies — so the resulting components are provably identical
     (see ``_blocked_pair_counts``). Returns (id_a, id_b) rows: stars ∪
-    JVM-passed boundary pairs."""
+    JVM-passed boundary pairs.
+
+    One filter over the pair-kernel output: a union of a star branch
+    and a boundary branch would read that shared input once per branch,
+    running the blocked pair kernel (and every Python crossing upstream
+    of it) twice."""
     sh = _filtered_shingles(df, n, id_col, text_col, max_df)
     mixed = _blocked_pair_counts(
         sh, id_col=id_col, threshold=threshold, n_blocks=n_blocks,
         cluster_edges=True,
     )
-    stars = mixed.where(F.col("inter").isNull()).select("id_a", "id_b")
-    boundary = _jaccard_at_least(
-        mixed.where(F.col("inter").isNotNull()), threshold
+    return mixed.where(
+        F.col("inter").isNull() | (_jaccard_col() >= threshold)
     ).select("id_a", "id_b")
-    return stars.unionByName(boundary)
 
 
 # -- MinHash + LSH ---------------------------------------------------------------
@@ -1211,7 +1217,8 @@ def connected_components(
     ``(id, cluster_id)`` row per vertex, ``cluster_id`` = min id in the
     component (the canonical survivor a dedup pass keeps).
 
-    Distributed min-label propagation: symmetrize the edges once, then
+    Distributed min-label propagation: symmetrize the edges in one read
+    of the input (each edge row emits both directions), then
     iterate ``label(v) ← min(label(v), min over neighbors' labels)``
     until a fixpoint. Each iteration is one hash join + one groupBy (two
     shuffles) over the PAIR graph — which is orders of magnitude smaller
@@ -1226,17 +1233,17 @@ def connected_components(
     stays the default because dedup-shaped graphs converge faster under
     it and ``max_iter`` guards the pathological case loudly.
 
-    Convergence is detected via the label-sum invariant: labels only
-    ever decrease, so the decimal(38,0) sum (overflow-proof under ANSI
-    at any scale) is strictly decreasing until the fixpoint — one cheap
-    aggregate action per round. ``localCheckpoint`` cuts the iterative
+    Convergence: labels only ever decrease, so a hop whose observed
+    count of ``nmin < label`` rows is 0 has reached the fixpoint — the
+    count rides the round's own job as an ``Observation``, with no
+    extra action. ``localCheckpoint`` cuts the iterative
     lineage so the plan does not double each round (a real cluster
     deployment would use a reliable checkpoint dir instead).
 
     ``target_partitions``: bounds the task count of the ONE-TIME edge
-    symmetrize+distinct materialization (input partitions double through
-    the union before the distinct scans them) — on a sketch-sized pair
-    graph that fixed cost dominates, and capping it measured ~1.35× on
+    symmetrize+distinct materialization (every input partition feeds
+    its map stage) — on a sketch-sized pair graph that fixed cost
+    dominates, and capping it measured ~1.35× on
     the sf0.1 dedup query. It is NOT a per-round lever: AQE already
     coalesces the tiny per-round shuffles, with or without the knob
     (measured — code-review r5 corrected an earlier claim here). Leave
@@ -1260,12 +1267,23 @@ def connected_components(
         pairs = pairs.repartition(int(target_partitions))
     from pyspark.sql import Observation
 
-    e = pairs.select(F.col(id_a).alias("s"), F.col(id_b).alias("d"))
+    # symmetrize in ONE read of the reduced edges: each row emits both
+    # of its directions, so `_forest_reduce` and everything upstream of
+    # it (the pair kernel's Python crossings) run once — a union of the
+    # edges with their mirror would read that input once per branch.
     # LAZY checkpoints (VERDICT r5 #6): round 1 materializes both in
     # its own job — same compute, two fewer driver-side actions than
     # the eager init the loop used to pay before any propagation ran
     edges = (
-        e.union(e.select(F.col("d").alias("s"), F.col("s").alias("d")))
+        pairs.select(
+            F.explode(
+                F.array(
+                    F.struct(F.col(id_a).alias("s"), F.col(id_b).alias("d")),
+                    F.struct(F.col(id_b).alias("s"), F.col(id_a).alias("d")),
+                )
+            ).alias("e")
+        )
+        .select("e.s", "e.d")
         .distinct()
         .localCheckpoint(eager=False)
     )
@@ -1353,11 +1371,7 @@ def _cc_star(
     # every vertex the pair list mentions — self-loop-only vertices have
     # no (hi > lo) edge but must still come back as their own singleton
     # cluster, exactly like min_label (code-review r4 finding)
-    verts = (
-        e0.select(F.col("s").alias("id"))
-        .union(e0.select(F.col("d").alias("id")))
-        .distinct()
-    )
+    verts = e0.select(F.explode(F.array("s", "d")).alias("id")).distinct()
     from pyspark.sql import Observation
 
     # ONE definition of the order-independent edge-set signature,

@@ -7,7 +7,7 @@
   over the corpus + a k-row-per-query reduce.
 - ``lsh_topk``: the scale path — random-hyperplane LSH. Deterministic
   planes from a seeded numpy generator are broadcast inside an
-  Arrow-vectorized pandas UDF (one matmul per batch); candidates =
+  Arrow UDF (one matmul per batch); candidates =
   corpus rows sharing ≥1 signature band with the query, then exact
   cosine re-rank within candidates. Recall/cost tunable via
   (n_planes, bands).
@@ -15,19 +15,24 @@
   ≥ τ) via the same banded signatures, corpus×corpus.
 - ``ivf_topk``: the other standard scale path — inverted-file ANN.
   Deterministic k-means centroids fit driver-side on a bounded sample,
-  corpus assigned to lists in one PURE-JVM map stage (the small centroid
-  matrix inlines as literals — no Python workers), queries probe their
+  corpus assigned to lists in one map stage (an Arrow UDF, one matmul
+  per batch against the centroid matrix it carries), queries probe their
   nprobe nearest lists, exact re-rank inside candidates. nprobe ==
   n_centroids degenerates to exact brute force (oracle-checkable).
+
+Every vector crossing into Python (signer, quantizer, semantic-dedup
+candidates) reads its Arrow ``list<float|double>`` column through one
+zero-copy list→matrix helper, ``_vec_matrix``.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 from pyspark.sql.window import Window
 
 
@@ -166,19 +171,50 @@ def cosine_topk(
     )
 
 
+def _vec_matrix(vecs: pa.Array, dim: int) -> tuple[np.ndarray, np.ndarray]:
+    """The ONE list→matrix conversion of every vector crossing: an Arrow
+    ``list<float|double>`` array → (its non-NULL rows as an (m, dim)
+    float64 matrix, the (n,) validity mask). ``flatten()`` skips NULL
+    rows and honours the slice offset, and ``to_numpy`` is zero-copy
+    for a NULL-free double child — no per-row Python objects.
+
+    A vector of the wrong length, or one holding a NULL element, raises
+    ``ValueError`` naming the expected and the actual dimension."""
+    valid = vecs.is_valid().to_numpy(zero_copy_only=False)
+    lens = pc.fill_null(pc.list_value_length(vecs), dim).to_numpy()
+    flat = vecs.flatten()
+    bad = np.flatnonzero(lens != dim)
+    if len(bad):
+        raise ValueError(
+            f"embedding dimension mismatch: expected dimension {dim}, got "
+            f"a vector of dimension {int(lens[bad[0]])}"
+        )
+    if flat.null_count:
+        nulls = flat.is_null().to_numpy(zero_copy_only=False)
+        row_start = int(np.flatnonzero(nulls)[0]) // dim * dim
+        have = dim - int(nulls[row_start:row_start + dim].sum())
+        raise ValueError(
+            f"embedding dimension mismatch: expected dimension {dim}, got "
+            f"a vector with {have} non-NULL elements"
+        )
+    m = flat.to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
+    return m.reshape(-1, dim), valid
+
+
 def _make_signer(dim: int, n_planes: int, seed: int):
     planes = np.random.RandomState(seed).normal(size=(dim, n_planes))
+    weights = 1 << np.arange(n_planes, dtype=np.uint64)
 
-    @pandas_udf("long")
-    def sign_bits(vecs: pd.Series) -> pd.Series:
-        m = np.vstack(vecs.to_numpy())  # (batch, dim)
-        bits = (m @ planes) > 0  # (batch, n_planes)
-        weights = (1 << np.arange(n_planes, dtype=np.uint64))
+    @arrow_udf("long")
+    def sign_bits(vecs: pa.Array) -> pa.Array:
+        m, valid = _vec_matrix(vecs, dim)
+        bits = (m @ planes) > 0  # (rows, n_planes)
+        sig = np.zeros(len(valid), dtype=np.int64)
         # .view, not .astype: at n_planes=64 the top bit can be set and
         # uint64→int64 must be a two's-complement reinterpret, which
         # .view guarantees (astype overflow is technically undefined)
-        sig = (bits.astype(np.uint64) * weights).sum(axis=1).view(np.int64)
-        return pd.Series(sig)
+        sig[valid] = (bits.astype(np.uint64) * weights).sum(axis=1).view(np.int64)
+        return pa.array(sig, mask=~valid)  # NULL vector → NULL signature
 
     return sign_bits
 
@@ -337,81 +373,36 @@ def train_ivf_centroids(
     return cent
 
 
-# Above this many inlined plan literals (n_centroids × dim) the JVM
-# quantizer path stops being a win: 10^5-10^6 expression nodes blow up
-# analysis/codegen long before data size matters (VERDICT r2 #3).
-_IVF_JVM_MAX_LITERALS = 4096
-
-
-def _make_centroid_prober(centroids: np.ndarray, top: int):
-    """Arrow-batched centroid assignment for LARGE quantizers: the
-    centroid matrix ships once per task inside the UDF closure (a
-    broadcast ndarray, like ``_make_signer``'s planes) and each batch
-    costs ONE numpy matmul — plan size stays O(1) regardless of
-    n_centroids × dim. Stable argsort on the negated dots applies the
-    same ordering contract as the JVM path (descending dot, EXACT ties
-    broken by the lower centroid id). Caveat: the two paths sum in
-    different orders (BLAS blocked/SIMD vs the JVM's sequential fold),
-    so two centroids whose dots differ by less than the summation
-    rounding error (~1 ulp) can rank differently between paths — for a
-    trained quantizer (distinct centroids, margins ≫ ulp) the
-    assignments agree, as the 256-centroid parity test pins on fixed
-    seeds."""
-    cent = centroids.astype(np.float64)
-
-    @pandas_udf("array<int>")
-    def probe(vecs: pd.Series) -> pd.Series:
-        m = np.vstack(vecs.to_numpy()).astype(np.float64)
-        dots = m @ cent.T                       # (batch, n_centroids)
-        order = np.argsort(-dots, axis=1, kind="stable")[:, :top]
-        return pd.Series([r.tolist() for r in order.astype(np.int32)])
-
-    return probe
-
-
 def _nearest_centroids(vec_col, centroids: np.ndarray, top: int) -> F.Column:
-    """Ids of the `top` nearest centroids by cosine. The quantizer size
-    picks one of two physical strategies behind one contract (identical
-    output ordering):
-
-    - n_centroids × dim ≤ ``_IVF_JVM_MAX_LITERALS`` (small quantizers):
-      the centroid matrix inlines as literal arrays and the dot products
-      stay inside whole-stage codegen — no Python workers on the hot
-      path.
-    - above it (large quantizers, e.g. 256-4096 lists × 512-1024 dims):
-      a realistic IVF matrix as plan literals is 10^5-10^6 expression
-      nodes — analysis/codegen blowup — so the matrix rides an Arrow
-      pandas_udf instead (one matmul per batch).
+    """Ids of the ``top`` nearest centroids by cosine, as an
+    ``array<int>`` column: an Arrow UDF whose closure carries the
+    centroid matrix (shipped once per task, like ``_make_signer``'s
+    planes), so the plan stays O(1) whatever n_centroids × dim, and
+    each batch costs ONE numpy matmul over the zero-copy vector matrix
+    (``_vec_matrix``).
 
     Ranking by raw dot equals ranking by cosine because centroids are
-    normalized and the vector's own norm is constant across centroids.
-    Ties break on the lower centroid id (deterministic)."""
-    if centroids.size > _IVF_JVM_MAX_LITERALS:
-        c = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-        return _make_centroid_prober(centroids, top)(c)
-    dots = [
-        F.aggregate(
-            F.zip_with(
-                vec_col,
-                F.array(*[F.lit(float(x)) for x in c]),
-                lambda a, b: a.cast("double") * b,
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
+    normalized and the vector's own norm is constant across centroids;
+    the stable argsort of the negated dots breaks EXACT ties on the
+    lower centroid id. A NULL vector gets a NULL list — no centroid, so
+    it never becomes a probe or a candidate; a vector of the wrong
+    length or with a NULL element fails the job (``_vec_matrix``)."""
+    cent = centroids.astype(np.float64)
+    dim = cent.shape[1]
+
+    @arrow_udf("array<int>")
+    def probe(vecs: pa.Array) -> pa.Array:
+        m, valid = _vec_matrix(vecs, dim)
+        order = np.argsort(-(m @ cent.T), axis=1, kind="stable")[:, :top]
+        offsets = np.zeros(len(valid) + 1, dtype=np.int32)
+        offsets[1:] = np.cumsum(valid) * order.shape[1]
+        return pa.ListArray.from_arrays(
+            pa.array(offsets),
+            pa.array(order.astype(np.int32).ravel()),
+            mask=pa.array(~valid),
         )
-        for c in centroids
-    ]
-    ranked = F.array_sort(
-        F.array(
-            *[
-                F.struct((-d).alias("nd"), F.lit(i).alias("i"))
-                for i, d in enumerate(dots)
-            ]
-        )
-    )
-    return F.transform(
-        F.slice(ranked, 1, top), lambda s: s["i"].cast("int")
-    )
+
+    return probe(vec_col)
 
 
 def ivf_assign(
@@ -420,8 +411,8 @@ def ivf_assign(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Index build: append the nearest-centroid id (the IVF list each
-    vector belongs to). One map stage (JVM for small quantizers, Arrow
-    matmul for large — see ``_nearest_centroids``); at scale, write the
+    vector belongs to; NULL for a NULL vector). One map stage, an Arrow
+    matmul per batch (``_nearest_centroids``); at scale, write the
     result partitioned by centroid_id so probes prune at the scan."""
     return corpus.withColumn(
         "centroid_id",
@@ -448,10 +439,10 @@ def ivf_topk(
     candidate set. nprobe == n_centroids degenerates to exact brute
     force (the oracle-checkable configuration); recall/cost tunes with
     nprobe. At 100TB the corpus is stored partitioned by centroid_id so
-    a probe reads only its lists; the quantizer runs as inlined
-    literals up to ``_IVF_JVM_MAX_LITERALS`` and as an Arrow matmul
-    above it (``_nearest_centroids``), so a 4096-list × 1024-dim index
-    never hits plan-size limits."""
+    a probe reads only its lists; the quantizer is one Arrow matmul per
+    batch whose plan size does not grow with the centroid matrix
+    (``_nearest_centroids``), so a 4096-list × 1024-dim index never hits
+    plan-size limits. A NULL query vector probes no list."""
     assigned = ivf_assign(corpus, centroids, vec_col=vec_col)
     q = queries.select(
         query_id_col,
@@ -605,7 +596,7 @@ def cosine_near_dup_pairs(
     r = n_planes // bands
     mask = (1 << r) - 1
     # pin (r7): the a/b self-join would otherwise run the signer
-    # pandas_udf and the norm fold once PER SIDE
+    # Arrow UDF and the norm fold once PER SIDE
     sig = sig.localCheckpoint(eager=False)
     bands_df = sig.select(
         id_col,
@@ -770,14 +761,15 @@ def semantic_dedup(
     within a cluster, and of every pair with cosine >= ``threshold``
     drop the member CLOSER to its centroid — keeping the far/diverse
     representative. Returns one row per input vector:
-    ``(id, centroid_id, cent_sim, keep)``.
+    ``(id, centroid_id, cent_sim, keep)``; a NULL vector has NULL
+    centroid_id and cent_sim, meets no pair and is kept.
 
     Scale story (the reason SemDeDup exists): the quadratic pair blowup
     is bounded per cluster — with k clusters over n vectors the pair
     count is ~n²/k, tuned by k, and the only shuffle is the
     centroid_id-keyed self-join, which co-locates exactly the rows that
     must meet. Assignment is the same quantizer as IVF
-    (:func:`ivf_assign` — JVM literals small / Arrow matmul large), so
+    (:func:`ivf_assign`, one Arrow matmul per batch), so
     a corpus already written in :func:`write_ivf_index` layout is
     pre-clustered and the self-join starts from a pruned, co-located
     scan. Pair cosine is scored and thresholded IMMEDIATELY after the
@@ -798,7 +790,8 @@ def semantic_dedup(
     )
     assigned = (
         ivf_assign(corpus, centroids, vec_col=vec_col)
-        .join(F.broadcast(cent_df), "centroid_id")
+        # left: a NULL vector has no centroid and still gets its row
+        .join(F.broadcast(cent_df), "centroid_id", "left")
         .select(
             "centroid_id",
             id_col,
@@ -828,43 +821,40 @@ def semantic_dedup(
     # plan's `pair_cos >= threshold` filter rejects NULL anyway).
     idt = assigned.schema[id_col].dataType.simpleString()
     tau = float(threshold) - 2e-6
+    dim = centroids.shape[1]
 
-    def _cands(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
+    def _cands(tbl: pa.Table) -> pa.Table:
+        vecs = tbl.column(vec_col).combine_chunks()
+        X, valid = _vec_matrix(vecs, dim)  # NULL vectors dropped
+        ids_col = tbl.column(id_col).combine_chunks()
+        ids = ids_col.filter(pa.array(valid)).to_numpy(zero_copy_only=False)
+        out_a, out_b = [ids[:0]], [ids[:0]]
+        m = len(ids)
+        if m >= 2:
+            nrm = np.sqrt((X * X).sum(axis=1))
+            nrm[nrm == 0] = np.inf  # zero vectors: sim 0 everywhere
+            Xn = X / nrm[:, None]
+            step = max(1, (1 << 24) // m)  # ≤ ~128 MB per sim slab
+            for lo in range(0, m, step):
+                hi = min(lo + step, m)
+                sims = Xn[lo:hi] @ Xn.T
+                ii, jj = np.nonzero(sims >= tau)
+                ii = ii + lo
+                keep = ids[ii] < ids[jj]
+                out_a.append(ids[ii][keep])
+                out_b.append(ids[jj][keep])
+        t = ids_col.type
+        return pa.table(
             {
-                "__id_a": pd.Series(dtype=pdf[id_col].dtype),
-                "__id_b": pd.Series(dtype=pdf[id_col].dtype),
+                "__id_a": pa.array(np.concatenate(out_a), type=t),
+                "__id_b": pa.array(np.concatenate(out_b), type=t),
             }
-        )
-        pdf = pdf[pdf[vec_col].notna()]
-        m = len(pdf)
-        if m < 2:
-            return empty
-        ids = pdf[id_col].to_numpy()
-        X = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-        nrm = np.sqrt((X * X).sum(axis=1))
-        nrm[nrm == 0] = np.inf  # zero vectors: sim 0 everywhere
-        Xn = X / nrm[:, None]
-        out_a, out_b = [], []
-        step = max(1, (1 << 24) // max(m, 1))  # ≤ ~128 MB per sim slab
-        for lo in range(0, m, step):
-            hi = min(lo + step, m)
-            sims = Xn[lo:hi] @ Xn.T
-            ii, jj = np.nonzero(sims >= tau)
-            ii = ii + lo
-            keep = ids[ii] < ids[jj]
-            out_a.append(ids[ii][keep])
-            out_b.append(ids[jj][keep])
-        if not out_a:
-            return empty
-        return pd.DataFrame(
-            {"__id_a": np.concatenate(out_a), "__id_b": np.concatenate(out_b)}
         )
 
     cands = (
         assigned.select("centroid_id", id_col, vec_col)
         .groupBy("centroid_id")
-        .applyInPandas(_cands, f"__id_a {idt}, __id_b {idt}")
+        .applyInArrow(_cands, f"__id_a {idt}, __id_b {idt}")
     )
     a = assigned.select(
         F.col(id_col).alias("__id_a"),

@@ -286,6 +286,44 @@ def test_ngram_cluster_edges_same_components(spark, docs):
             assert got == ref, (tau, len(got), len(ref))
 
 
+def test_ngram_cluster_edges_runs_pair_kernel_once(spark):
+    """The star rows and the boundary pairs come out of ONE filter over
+    the blocked pair kernel's output: the executed plan holds exactly
+    one FlatMapGroupsInPandas (a union of two branches over the kernel
+    would run it twice)."""
+    rows = [(i, f"repeat repeat repeat block {i % 4} tail {i % 7}")
+            for i in range(40)]
+    src = spark.createDataFrame(rows, "doc_id long, text string")
+    edges = D.ngram_jaccard_cluster_edges(src, n=3, threshold=0.5)
+    edges.collect()
+    plan = edges._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("FlatMapGroupsInPandas") == 1, plan
+
+
+def test_connected_components_reads_input_once(spark):
+    """connected_components evaluates its input once: pairs that pass
+    through a Python UDF counting its rows in an accumulator leave the
+    accumulator at the row count after the call (symmetrizing by a
+    union with the mirrored edges would read the input twice)."""
+    from pyspark.sql.functions import pandas_udf
+
+    acc = spark.sparkContext.accumulator(0)
+
+    @pandas_udf("long")
+    def counted(s: pd.Series) -> pd.Series:
+        acc.add(len(s))
+        return s
+
+    edges = [(i, i + 1) for i in range(0, 60, 2)] + [(5, 7), (9, 9)]
+    pairs = spark.createDataFrame(edges, "id_a long, id_b long").select(
+        counted("id_a").alias("id_a"), "id_b"
+    )
+    out = D.connected_components(pairs).collect()
+    assert len(out) == 60
+    assert acc.value == len(edges)
+
+
 def test_minhash_lsh_finds_near_dups(docs):
     got = {
         (r["id_a"], r["id_b"])
@@ -770,54 +808,111 @@ def test_dup_ngram_ratio(spark):
     assert got[4] == (0.0, 0)
 
 
-def test_ivf_assign_jvm_equals_arrow_at_256_centroids(spark, vectors, monkeypatch):
-    """The two quantizer strategies are one contract (VERDICT r2 #3):
-    JVM and Arrow assignment must agree row for row at n_centroids=256
-    (at dim 8 the literal path still works; realistic 512-1024 dims
-    would not). Each path is forced by moving the
-    ``_IVF_JVM_MAX_LITERALS`` threshold the quantizer size is compared
-    against, and the size alone must pick the Arrow path above it."""
-    import numpy as np
-
-    from feagen_spark.operators import similarity as S
-
-    df, _ = vectors
+def test_ivf_assign_and_topk_match_numpy_at_256_centroids(spark, vectors):
+    """The quantizer has one plan at every size: ``ivf_assign`` and
+    ``ivf_topk(nprobe=4)`` at 256 × 8 equal a numpy reference (stable
+    argsort of the negated dots, lower centroid id on ties), and no
+    ``ivf_assign`` plan, small or large, inlines the centroid matrix as
+    a literal fold."""
+    df, base = vectors
     rng = np.random.RandomState(11)
     cent = rng.normal(size=(256, 8))
     cent /= np.linalg.norm(cent, axis=1, keepdims=True)
-    q = df.limit(3).select(
+    X = base.astype(np.float64)
+    order = np.argsort(-(X @ cent.T), axis=1, kind="stable")
+
+    got = S.ivf_assign(df, cent).orderBy("vec_id").toPandas()
+    assert got["centroid_id"].tolist() == order[:, 0].tolist()
+
+    qids = [0, 2, 13]
+    q = df.where(F.col("vec_id").isin(qids)).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
+    top = S.ivf_topk(df, q, cent, k=5, nprobe=4).toPandas()
+    Xn = X / np.linalg.norm(X, axis=1, keepdims=True)
+    for qid in qids:
+        cand = np.flatnonzero(np.isin(order[:, 0], order[qid, :4]))
+        cos = np.round(Xn[cand] @ Xn[qid], 6)
+        want = cand[np.lexsort((cand, -cos))][:5]
+        sub = top[top["query_id"] == qid].sort_values("rank")
+        assert sub["vec_id"].tolist() == want.tolist(), qid
 
-    def run(max_literals):
-        # the threshold is read when the plan is built, not at execution
-        with monkeypatch.context() as m:
-            m.setattr(S, "_IVF_JVM_MAX_LITERALS", max_literals)
-            assigned = S.ivf_assign(df, cent)
-            top = S.ivf_topk(df, q, cent, k=5, nprobe=4)
-        plan = assigned._jdf.queryExecution().analyzed().toString()
-        return (
-            assigned.orderBy("vec_id").select("vec_id", "centroid_id").toPandas(),
-            top.orderBy("query_id", "rank").toPandas(),
-            "probe(" in plan,  # the Arrow prober pandas_udf
+    for n_cent, dim in ((4, 8), (256, 8), (256, 32)):
+        c = rng.normal(size=(n_cent, dim))
+        c /= np.linalg.norm(c, axis=1, keepdims=True)
+        emb = F.expr(f"flatten(array_repeat(embedding, {dim // 8}))")
+        plan = S.ivf_assign(
+            df.withColumn("embedding", emb), c
+        )._jdf.queryExecution().analyzed().toString()
+        assert "probe(" in plan, plan[:500]
+        for fold in ("array_sort", "zip_with", "aggregate("):
+            assert fold not in plan, (n_cent, dim, fold)
+
+
+def test_ivf_assign_vector_input_contract(spark, vectors):
+    """A NULL vector gets a NULL centroid_id (it never probes or becomes
+    a candidate); array<float> and array<double> give the same
+    assignment; a ragged vector, or one with a NULL element, fails with
+    a message naming the expected and the actual dimension."""
+    df, base = vectors
+    cent = S.seed_centroids(df, n_centroids=4)
+    want = {
+        r["vec_id"]: r["centroid_id"] for r in S.ivf_assign(df, cent).collect()
+    }
+    as_double = df.withColumn("embedding", F.col("embedding").cast("array<double>"))
+    assert {
+        r["vec_id"]: r["centroid_id"]
+        for r in S.ivf_assign(as_double, cent).collect()
+    } == want
+
+    with_null = df.unionByName(
+        spark.createDataFrame([(99, None)], "vec_id long, embedding array<float>")
+    )
+    got = {
+        r["vec_id"]: r["centroid_id"]
+        for r in S.ivf_assign(with_null, cent).collect()
+    }
+    assert got.pop(99) is None and got == want
+    q = with_null.where("vec_id IN (2, 99)").select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+    top = S.ivf_topk(with_null, q, cent, k=5, nprobe=4).toPandas()
+    assert set(top["query_id"]) == {2} and 99 not in set(top["vec_id"])
+
+    for bad, actual in (
+        ([0.5] * 7, "dimension 7"),
+        ([0.5] * 7 + [None], "7 non-NULL"),
+    ):
+        ragged = df.unionByName(
+            spark.createDataFrame(
+                [(98, bad)], "vec_id long, embedding array<float>"
+            )
         )
+        with pytest.raises(Exception) as ei:
+            S.ivf_assign(ragged, cent).collect()
+        msg = str(ei.value)
+        assert "expected dimension 8" in msg and actual in msg, msg[:2000]
 
-    jvm, tj, jvm_udf = run(cent.size)
-    arrow, ta, arrow_udf = run(cent.size - 1)
-    assert not jvm_udf and arrow_udf
-    assert (jvm["centroid_id"] == arrow["centroid_id"]).all()
 
-    # nprobe top-lists agree too (ordering incl. tie-breaks)
-    assert (tj["vec_id"].to_numpy() == ta["vec_id"].to_numpy()).all()
-
-    # default threshold: 256*8 = 2048 <= 4096 -> jvm; a matrix above
-    # it -> arrow (no plan literals)
-    big = rng.normal(size=(256, 32))
-    big /= np.linalg.norm(big, axis=1, keepdims=True)
-    plan = S.ivf_assign(df.withColumn(
-        "embedding", F.expr("flatten(array_repeat(embedding, 4))")
-    ), big)._jdf.queryExecution().analyzed().toString()
-    assert "probe" in plan or "pythonUDF" in plan.lower(), plan[:500]
+def test_semantic_dedup_keeps_null_vector_row(spark, vectors):
+    """One output row per input row: a NULL vector comes back with NULL
+    centroid_id and cent_sim and keep = true; every other row is what
+    the corpus without it gives."""
+    df, base = vectors
+    cent = S.seed_centroids(df, n_centroids=4)
+    want = {
+        r["vec_id"]: tuple(r)
+        for r in S.semantic_dedup(df, cent, threshold=0.95).collect()
+    }
+    with_null = df.unionByName(
+        spark.createDataFrame([(99, None)], "vec_id long, embedding array<float>")
+    )
+    got = {
+        r["vec_id"]: tuple(r)
+        for r in S.semantic_dedup(with_null, cent, threshold=0.95).collect()
+    }
+    assert got.pop(99) == (99, None, None, True)
+    assert got == want
 
 
 def test_video_real_path_auto_upgrade_with_mocked_pyav(monkeypatch):
