@@ -53,26 +53,35 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _spread(df: DataFrame, col: str, per_core: int = 2) -> DataFrame:
+    """Hash-split a testdata table over ``per_core`` partitions per
+    session core. Every testdata table is ONE parquet row-group, and
+    parquet cannot split inside a row-group, so a CPU-heavy map stage
+    (shingling, regex profiling, hashing, JSON extraction) would
+    otherwise run on a single core. The up-front shuffle is a few MB
+    here; a real many-file corpus provides input splits for free and
+    wouldn't need this. The count follows the session, so the same
+    query spreads over N or 4N executors."""
+    n = per_core * df.sparkSession.sparkContext.defaultParallelism
+    return df.repartition(n, col)
+
+
 def _docs(spark: SparkSession, sf_dir: str, where=None) -> DataFrame:
-    """documents with an explicit split: the testdata table is ONE
-    parquet row-group, and parquet cannot split inside a row-group, so
-    every CPU-heavy map stage (shingling, regex profiling, hashing)
-    would otherwise run on a single core. The up-front shuffle is a few
-    MB here; a real many-file corpus provides input splits for free and
-    wouldn't need this. Measured 2.4x on doc_minhash_pairs at sf0.1.
-    ``where`` filters BEFORE the repartition so subset queries never
-    shuffle rows they are about to drop."""
+    """documents spread for their CPU-heavy map stages (``_spread``;
+    measured 2.4x on doc_minhash_pairs at sf0.1). ``where`` filters
+    BEFORE the repartition so subset queries never shuffle rows they
+    are about to drop."""
     d = _t(spark, sf_dir, "documents")
     if where is not None:
         d = d.where(where)
-    return d.repartition(64, "doc_id")
+    return _spread(d, "doc_id")
 
 
 def _embs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """embeddings with an explicit split (same single-row-group issue as
-    _docs): the higher-order-function cosine math runs interpreted, so
-    a one-partition scan pins ~15k per-row folds to one core."""
-    return _t(spark, sf_dir, "embeddings").repartition(32, "vec_id")
+    """embeddings spread one partition per core (``_spread``): the
+    higher-order-function cosine math runs interpreted, so a
+    one-partition scan pins ~15k per-row folds to one core."""
+    return _spread(_t(spark, sf_dir, "embeddings"), "vec_id", per_core=1)
 
 
 def _us(col) -> F.Column:
@@ -432,14 +441,13 @@ def q_ev_type_stats(spark, sf_dir):
     two-groupBy + inner-join stitch scanned events twice, added a join
     exchange, and would null-reject an event_type=NULL group that the
     single-GROUP-BY oracle keeps)."""
-    # repartition (r7): events.parquet is ONE row-group, and this
-    # query's map side (JSON extraction + exact-percentile partials)
-    # otherwise runs inside the single scan task — the same _docs()
-    # rationale. The window queries don't need it (their first exchange
+    # spread (r7, ``_spread``): this query's map side (JSON extraction
+    # + exact-percentile partials) otherwise runs inside the single
+    # scan task. The window queries don't need it (their first exchange
     # is the user_id partitioning; the scan task only decodes), but
     # here the partial aggregation IS the CPU. Measured 3.9 → ~1.3 s at
     # sf1.0.
-    ev = _events(spark, sf_dir).repartition(64, "event_id")
+    ev = _spread(_events(spark, sf_dir), "event_id")
     k = F.get_json_object(F.col("props"), "$.k").cast("long")
     return (
         ev.withColumn("k", k)
@@ -864,9 +872,7 @@ def _doc_clusters(spark, sf_dir):
     # band still passes through the bit-exact JVM jaccard filter.
     # Components provably equal ngram_jaccard_pairs' (parity-tested).
     edges = D.ngram_jaccard_cluster_edges(docs, n=3, threshold=0.5)
-    # sketch-sized pair graph: small fixed parallelism cuts the
-    # per-round task-scheduling overhead (1.35x measured at sf0.1)
-    clusters = D.connected_components(edges, target_partitions=4).select(
+    clusters = D.connected_components(edges).select(
         F.col("id").alias("doc_id"), "cluster_id"
     )
     return docs, clusters
@@ -1171,6 +1177,41 @@ def q_doc_lsh_recall(spark, sf_dir):
     )
 
 
+def _event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The events parquet as a streaming file source (ts cast as in
+    ``_events``). The file source needs a directory or glob; the [p]
+    glob matches only events.parquet without making the path a literal
+    file."""
+    return (
+        spark.readStream.schema(_t(spark, sf_dir, "events").schema)
+        .parquet(f"{sf_dir}/events.[p]arquet")
+        .withColumn("ts", F.col("ts").cast("timestamp"))
+    )
+
+
+def _drain(spark, stream_df, prefix, output_mode, finish) -> DataFrame:
+    """Drain ``stream_df`` (availableNow) into a uuid-named memory sink,
+    shape the drained table with ``finish`` and pin the result eagerly.
+    The sink view and the temp checkpoint dir are released in a
+    ``finally``: without it every call pins the drained result in
+    driver memory for the life of the session, and a failed drain or
+    select leaks both into the session every other query shares."""
+    import shutil
+    import tempfile
+    import uuid
+
+    from feagen_spark.streaming.incremental import run_available_now
+
+    name = f"{prefix}_{uuid.uuid4().hex[:8]}"
+    ckpt = tempfile.mkdtemp(prefix="ckpt_stream_")
+    try:
+        run_available_now(stream_df, name, ckpt, output_mode=output_mode)
+        return finish(spark.table(name)).localCheckpoint(eager=True)
+    finally:
+        spark.catalog.dropTempView(name)
+        shutil.rmtree(ckpt, ignore_errors=True)
+
+
 def q_ev_session_aggs_streaming(spark, sf_dir):
     """Structured-Streaming twin of ev_session_aggs with the SAME DuckDB
     oracle (VERDICT r2 #6): the events parquet is drained through a real
@@ -1180,54 +1221,31 @@ def q_ev_session_aggs_streaming(spark, sf_dir):
     no per-key ordinal concept). Window-end inclusivity (split at delta >
     gap) matches the batch sessionizer on Spark 4, so the drained result
     is row-identical to the batch oracle."""
-    import tempfile
-    import uuid
+    from feagen_spark.streaming.incremental import streaming_session_value_aggs
 
-    from feagen_spark.streaming.incremental import (
-        run_available_now,
-        streaming_session_value_aggs,
-    )
-
-    static = _t(spark, sf_dir, "events")
-    stream = (
-        spark.readStream.schema(static.schema)
-        # file source needs a directory/glob; the [p] glob matches only
-        # events.parquet without making the path a literal file
-        .parquet(f"{sf_dir}/events.[p]arquet")
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-    )
+    stream = _event_stream(spark, sf_dir)
     aggs = streaming_session_value_aggs(
         stream, key="user_id", ts_col="ts", value_col="value",
         gap_s=SESSION_GAP_S,
     )
-    name = f"ev_sess_stream_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="ckpt_stream_")
-    run_available_now(aggs, name, ckpt, output_mode="complete")
-    res = spark.table(name)
-    w = Window.partitionBy("user_id").orderBy("session_start")
-    out = res.select(
-        "user_id",
-        (F.row_number().over(w) - 1).cast("int").alias("session_id"),
-        F.col("n_rows").cast("long").alias("n_rows"),
-        _us(F.col("session_start")).alias("session_start_us"),
-        _us(F.col("session_end")).alias("session_end_us"),
-        F.round(
-            (_us(F.col("session_end")) - _us(F.col("session_start")))
-            / F.lit(1_000_000.0),
-            6,
-        ).alias("duration_s"),
-        F.round("session_value", 6).alias("session_value"),
-    )
-    # materialize, then release the per-call resources: without this,
-    # every invocation pins the full drained result in driver memory
-    # (memory-sink table) and leaks a /tmp checkpoint dir for the life
-    # of the session (code-review r3 finding)
-    import shutil
 
-    out = out.localCheckpoint(eager=True)
-    spark.catalog.dropTempView(name)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return out
+    def finish(res):
+        w = Window.partitionBy("user_id").orderBy("session_start")
+        return res.select(
+            "user_id",
+            (F.row_number().over(w) - 1).cast("int").alias("session_id"),
+            F.col("n_rows").cast("long").alias("n_rows"),
+            _us(F.col("session_start")).alias("session_start_us"),
+            _us(F.col("session_end")).alias("session_end_us"),
+            F.round(
+                (_us(F.col("session_end")) - _us(F.col("session_start")))
+                / F.lit(1_000_000.0),
+                6,
+            ).alias("duration_s"),
+            F.round("session_value", 6).alias("session_value"),
+        )
+
+    return _drain(spark, aggs, "ev_sess_stream", "complete", finish)
 
 
 def q_ev_stream_attribution(spark, sf_dir):
@@ -1239,41 +1257,25 @@ def q_ev_stream_attribution(spark, sf_dir):
     (row_number over session_start) and the id lists exploded — the
     result must be row-identical to the batch interval-attribution
     oracle."""
-    import shutil
-    import tempfile
-    import uuid
+    from feagen_spark.streaming.incremental import streaming_session_attribution
 
-    from feagen_spark.streaming.incremental import (
-        run_available_now,
-        streaming_session_attribution,
-    )
-
-    static = _t(spark, sf_dir, "events")
-    stream = (
-        spark.readStream.schema(static.schema)
-        .parquet(f"{sf_dir}/events.[p]arquet")
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-    )
+    stream = _event_stream(spark, sf_dir)
     attrib = streaming_session_attribution(
         stream, key="user_id", ts_col="ts", gap_s=SESSION_GAP_S,
         target_type="purchase",
     )
-    name = f"ev_stream_attr_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="ckpt_stream_attr_")
-    run_available_now(attrib, name, ckpt, output_mode="complete")
-    res = spark.table(name)
-    w = Window.partitionBy("user_id").orderBy("session_start")
-    out = res.select(
-        "user_id",
-        (F.row_number().over(w) - 1).cast("int").alias("session_id"),
-        "target_ids",
-    ).select(
-        F.explode("target_ids").alias("event_id"), "user_id", "session_id"
-    )
-    out = out.localCheckpoint(eager=True)
-    spark.catalog.dropTempView(name)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return out
+
+    def finish(res):
+        w = Window.partitionBy("user_id").orderBy("session_start")
+        return res.select(
+            "user_id",
+            (F.row_number().over(w) - 1).cast("int").alias("session_id"),
+            "target_ids",
+        ).select(
+            F.explode("target_ids").alias("event_id"), "user_id", "session_id"
+        )
+
+    return _drain(spark, attrib, "ev_stream_attr", "complete", finish)
 
 
 def q_doc_quality_quota(spark, sf_dir):
@@ -1379,13 +1381,12 @@ def q_doc_negatives(spark, sf_dir):
 
     docs = _t(spark, sf_dir, "documents")
     anchors = docs.where(F.col("doc_id") % 10 == 0).select("doc_id")
-    # repartition the candidate side (r7): the testdata parquet is ONE
-    # row-group, so the probe join + per-candidate ranking hash would
-    # run single-task (measured 354 s at sf1.0 — the md5 over
-    # |anchors|·k·|corpus|/n_buckets joined rows is the whole cost and
-    # it parallelizes embarrassingly; 50k skinny shuffle rows buy 32
-    # cores). Same _docs() rationale.
-    corpus = docs.select("doc_id").repartition(64, "doc_id")
+    # spread the candidate side (r7, ``_spread``): the probe join +
+    # per-candidate ranking hash would otherwise run single-task
+    # (measured 354 s at sf1.0 — the md5 over |anchors|·k·|corpus|
+    # /n_buckets joined rows is the whole cost and it parallelizes
+    # embarrassingly; 50k skinny shuffle rows buy every core).
+    corpus = _spread(docs.select("doc_id"), "doc_id")
     out = deterministic_negatives(
         anchors, corpus, "doc_id", "doc_id",
         k=4, n_buckets=32, method="md5",
@@ -1404,46 +1405,22 @@ def q_ev_stream_decay(spark, sf_dir):
     associate floating point differently (~1e-11 worst-case drift on
     these chains), so 6 dp would flake roughly once per driver run
     while 4 dp has ~1e-2 collision odds per full sf0.01 drain."""
-    import shutil
-    import tempfile
-    import uuid
+    from feagen_spark.streaming.incremental import streaming_decayed_sum
 
-    from feagen_spark.streaming.incremental import (
-        run_available_now,
-        streaming_decayed_sum,
-    )
-
-    static = _t(spark, sf_dir, "events")
-    stream = (
-        spark.readStream.schema(static.schema)
-        .parquet(f"{sf_dir}/events.[p]arquet")
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-    )
+    stream = _event_stream(spark, sf_dir)
     dec = streaming_decayed_sum(
         stream, key="user_id", ts_col="ts", value_col="value",
         half_life_s=600.0,
     )
-    name = f"ev_stream_decay_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="ckpt_stream_decay_")
-    try:
-        # finally-cleanup (code-review r6): a failed drain/select must
-        # not leak the checkpoint dir or the uuid temp view into the
-        # session shared by every other query
-        run_available_now(dec, name, ckpt, output_mode="update")
-        res = spark.table(name)
-        out = res.select(
+
+    def finish(res):
+        return res.select(
             "user_id",
             _us(F.col("ts")).alias("ts_us"),
             (F.round("value_decay", 4) + 0.0).alias("value_decay"),
         )
-        out = out.localCheckpoint(eager=True)
-    finally:
-        try:
-            spark.catalog.dropTempView(name)
-        except Exception:
-            pass
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return out
+
+    return _drain(spark, dec, "ev_stream_decay", "update", finish)
 
 
 def q_doc_mixture_report(spark, sf_dir):
@@ -1605,7 +1582,9 @@ def q_mm_image_features(spark, sf_dir):
     DuckDB from the same synthetic asset derivation, so mean_intensity
     and phash carry a full value oracle (VERDICT r3 #3). The decode
     itself (binary → Arrow batch → mapInPandas) is the real plumbing."""
-    assets = MM.synthetic_assets(spark, n=64).repartition(8, "asset_id")
+    assets = MM.synthetic_assets(spark, n=64).repartition(
+        8, "asset_id"  # partition-count-ok: a fixed 64-row fixture
+    )
     out = MM.decode_image_features(assets, fake=True)
     return out.select(
         "asset_id", "width", "height", "n_bytes",
@@ -1618,7 +1597,9 @@ def q_mm_audio_features(spark, sf_dir):
     """REAL codec path, not a stub: genuine 16-bit PCM WAV payloads
     decoded by the stdlib wave module inside mapInPandas (sample rate,
     duration and RMS come from the actual container/samples)."""
-    assets = MM.synthetic_wav_assets(spark, n=48).repartition(8, "asset_id")
+    assets = MM.synthetic_wav_assets(spark, n=48).repartition(
+        8, "asset_id"  # partition-count-ok: a fixed 48-row fixture
+    )
     out = MM.decode_audio_features(assets, fake=False)
     return out.select(
         "asset_id", "sample_rate", "duration_ms", "n_bytes",

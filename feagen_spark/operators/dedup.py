@@ -823,7 +823,6 @@ def write_minhash_index(
     text_col: str = "text",
     seed: int = 42,
     hash_mode: str = "xxh64",
-    fmt: str = "parquet",
     ingest_batch: int | None = None,
 ) -> None:
     """Materialize the banded MinHash index of a deduplicated corpus:
@@ -843,8 +842,6 @@ def write_minhash_index(
     appends per-micro-batch partitions into — partition depth must be
     uniform under one table root, so a streamed index must be
     bootstrapped with this parameter set."""
-    from ..sources.tables import write_table
-
     if k % bands != 0:
         raise ValueError("k must be divisible by bands")
     sig = minhash_signatures(
@@ -856,7 +853,7 @@ def write_minhash_index(
     if ingest_batch is not None:
         rows = rows.withColumn("ingest_batch", F.lit(int(ingest_batch)))
         part_by = ["ingest_batch", "band"]
-    write_table(rows, path, fmt=fmt, partition_by=part_by)
+    rows.write.mode("overwrite").partitionBy(part_by).parquet(path)
 
 
 def minhash_probe_increment(
@@ -874,7 +871,6 @@ def minhash_probe_increment(
     hash_mode: str = "xxh64",
     tag_kind: bool = False,
     index_where: F.Column | None = None,
-    fmt: str = "parquet",
 ) -> DataFrame:
     """Incremental near-dup detection: pairs (id_a, id_b, est_jaccard)
     touching at least one INCREMENT doc, against a corpus indexed by
@@ -924,7 +920,7 @@ def minhash_probe_increment(
     return probe_band_rows(
         spark, index_path, inc_bands, k=k, threshold=threshold,
         id_col=id_col, max_bucket=max_bucket, tag_kind=tag_kind,
-        index_where=index_where, fmt=fmt,
+        index_where=index_where,
     )
 
 
@@ -938,7 +934,6 @@ def probe_band_rows(
     max_bucket: int | None = 500,
     tag_kind: bool = False,
     index_where: F.Column | None = None,
-    fmt: str = "parquet",
 ) -> DataFrame:
     """The band-rows-level half of :func:`minhash_probe_increment`, for
     callers that already hold the increment's banded signatures (the
@@ -948,7 +943,7 @@ def probe_band_rows(
     code-review r6). ``inc_bands`` must carry (id, signature, band,
     bucket) produced by the same (k, bands, n, seed, hash_mode) as the
     index, ideally pinned (localCheckpoint) by the caller."""
-    idx = spark.read.format(fmt).load(index_path)
+    idx = spark.read.parquet(index_path)
     if index_where is not None:
         idx = idx.where(index_where)
     if max_bucket is not None:
@@ -1029,7 +1024,6 @@ def band_rows_self_pairs(
 def rebaseline_minhash_index(
     spark: SparkSession,
     index_path: str,
-    fmt: str = "parquet",
 ) -> dict:
     """Fold every ``ingest_batch=N`` partition of a STREAMED MinHash
     index (:func:`write_minhash_index` with ``ingest_batch`` +
@@ -1051,7 +1045,7 @@ def rebaseline_minhash_index(
     Returns ``{"batches_folded", "rows"}``."""
     from ..sources.tables import rewrite_table
 
-    idx = spark.read.format(fmt).load(index_path)
+    idx = spark.read.parquet(index_path)
     if "ingest_batch" not in idx.columns:
         raise ValueError(
             f"{index_path} is not a streamed index (no ingest_batch "
@@ -1070,7 +1064,7 @@ def rebaseline_minhash_index(
     )
     rewrite_table(
         spark, index_path, folded,
-        partition_by=["ingest_batch", "band"], fmt=fmt,
+        partition_by=["ingest_batch", "band"],
     )
     return {
         "batches_folded": sorted(int(b) for b in batches if b != -1),
@@ -1211,7 +1205,6 @@ def connected_components(
     id_b: str = "id_b",
     max_iter: int = 25,
     method: str = "min_label",
-    target_partitions: int | None = None,
 ) -> DataFrame:
     """Connected components over a near-duplicate pair graph → one
     ``(id, cluster_id)`` row per vertex, ``cluster_id`` = min id in the
@@ -1238,16 +1231,7 @@ def connected_components(
     count rides the round's own job as an ``Observation``, with no
     extra action. ``localCheckpoint`` cuts the iterative
     lineage so the plan does not double each round (a real cluster
-    deployment would use a reliable checkpoint dir instead).
-
-    ``target_partitions``: bounds the task count of the ONE-TIME edge
-    symmetrize+distinct materialization (every input partition feeds
-    its map stage) — on a sketch-sized pair graph that fixed cost
-    dominates, and capping it measured ~1.35× on
-    the sf0.1 dedup query. It is NOT a per-round lever: AQE already
-    coalesces the tiny per-round shuffles, with or without the knob
-    (measured — code-review r5 corrected an earlier claim here). Leave
-    None when the pair graph may be large."""
+    deployment would use a reliable checkpoint dir instead)."""
     if method == "star":
         return _cc_star(pairs, id_a, id_b, max_iter)
     if method != "min_label":
@@ -1263,8 +1247,6 @@ def connected_components(
     # edges on the sf1.0 dup-cluster graph — and the propagation
     # fixpoint arrives in ~1 round.
     pairs = _forest_reduce(pairs, id_a, id_b)
-    if target_partitions is not None:
-        pairs = pairs.repartition(int(target_partitions))
     from pyspark.sql import Observation
 
     # symmetrize in ONE read of the reduced edges: each row emits both

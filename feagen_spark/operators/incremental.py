@@ -46,7 +46,6 @@ def _dynamic_overwrite(
     df: DataFrame,
     path: str,
     partition_by: list[str] | str,
-    fmt: str = "parquet",
 ) -> None:
     """Dynamic partition overwrite: only the partitions PRESENT in `df`
     are rewritten — the idempotent-append primitive shared by the
@@ -62,8 +61,7 @@ def _dynamic_overwrite(
         df.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy(*cols)
-        .format(fmt)
-        .save(path)
+        .parquet(path)
     )
 
 
@@ -71,11 +69,10 @@ def write_refresh(
     refreshed: DataFrame,
     snapshot_path: str,
     key: str = "conv_id",
-    fmt: str = "parquet",
 ) -> None:
     """Dynamic partition overwrite of the refreshed conversations into a
     key-partitioned snapshot table (only touched partitions rewritten)."""
-    _dynamic_overwrite(refreshed, snapshot_path, key, fmt=fmt)
+    _dynamic_overwrite(refreshed, snapshot_path, key)
 
 
 def corpus_diff(

@@ -308,8 +308,9 @@ def unigram_logprob(
     p(t) = corpus occurrences of t / total corpus tokens.
 
     Scale shape: (doc,term) tf groupBy (map-side combinable), corpus
-    term totals as a term-sized broadcast aggregate over the token
-    stream (r7 — no window over the Zipf-hot term partitioning), total
+    term totals as a term-sized aggregate over the token stream (r7 —
+    no window over the Zipf-hot term partitioning) joined back by the
+    planner's choice of strategy, total
     token count as a broadcast 1-row sum of that tiny frame, final
     per-doc groupBy. Docs with no tokens are kept with NULL score (a
     filter decision, not a 0)."""
@@ -318,14 +319,16 @@ def unigram_logprob(
     )
     tf = toks.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
     # corpus term totals as a term-sized aggregate over the token
-    # stream, broadcast back (r7, guide §2.4/§2.5 — replaces a SUM
+    # stream, joined back (r7, guide §2.4/§2.5 — replaces a SUM
     # WINDOW over the term partitioning of tf): a natural-language term
     # domain is small and Zipf-skewed, so the window's exchange hashed
     # every tf row into a handful of hot term groups and sorted them;
     # the count-per-term aggregate is map-side combinable (same
     # integers: Σ_d tf(d,t) == corpus occurrences of t), and the corpus
     # total is the 1-row sum of that tiny frame instead of a second
-    # full tf pass.
+    # full tf pass. No broadcast hint on the term join: the vocabulary
+    # grows with the corpus, so AQE broadcasts it only while its
+    # runtime size is under the threshold and shuffle-joins it beyond.
     term_totals = toks.groupBy("term").agg(
         F.count(F.lit(1)).alias("term_total")
     )
@@ -333,7 +336,7 @@ def unigram_logprob(
         F.sum("term_total").cast("double").alias("total_tokens")
     )
     scored = (
-        tf.join(F.broadcast(term_totals), on="term")
+        tf.join(term_totals, on="term")
         .crossJoin(F.broadcast(total))
         .groupBy(id_col)
         .agg(

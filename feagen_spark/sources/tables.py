@@ -1,15 +1,16 @@
-"""Source/sink layer (SURVEY.md §2.C C1-C2): Iceberg-first table access
-with a parquet fallback for this sandbox.
+"""Source/sink layer (SURVEY.md §2.C C1-C2): an Iceberg-first input
+read with a parquet fallback, and parquet layout maintenance.
 
 No Iceberg runtime jar ships with this install (verified — SURVEY.md
-§1.2), so `format="iceberg"` only activates when the runtime is present
-(real cluster: `spark-submit --packages org.apache.iceberg:...` +
-catalog conf). In the engine only the MinHash/IVF index writers
-(``write_table``) and the MinHash index rebaseline (``rewrite_table``)
-go through this module; the checkpoint store, the refresh and
-streaming sinks and the jobs read and write their tables directly.
+§1.2), so ``read_table(fmt="iceberg")`` only activates when the runtime
+is present (real cluster: `spark-submit --packages
+org.apache.iceberg:...` + catalog conf). The checkpoint store, the
+MinHash/IVF index writers and the refresh and streaming sinks write
+parquet directly, and the jobs write their configured output format;
+only the MinHash index rebaseline goes through this module
+(``rewrite_table``, the crash-safe swap ``compact_table`` shares).
 
-Layout guidance encoded here (the 100TB defaults):
+Layout guidance for the writers (the 100TB defaults):
 - transcripts partitioned by bucket(conv_id) — co-locates each
   conversation for the window suite and bounds file counts;
   `days(ts)`-style partitioning is the alternative when retention
@@ -55,51 +56,10 @@ def read_table(
     return df
 
 
-def write_bucketed_table(
-    df: DataFrame,
-    table: str,
-    bucket_by: tuple[int, str] = (8, "conv_id"),
-    sort_by: tuple[str, ...] | None = None,
-    fmt: str = "parquet",
-    mode: str = "overwrite",
-) -> None:
-    """Catalog-managed BUCKETED table (Spark-native bucketing — works
-    with the built-in session catalog, no Iceberg required): two tables
-    bucketed on the same key with the same bucket count JOIN WITH NO
-    EXCHANGE on either side — the co-located-join layout for the 100 TB
-    deployment's repeated feature/label joins (asserted shuffle-free in
-    tests/test_plans.py). ``sort_by`` additionally pre-sorts within
-    buckets so window suites over the key start sort-free."""
-    n, col = bucket_by
-    w = df.write.mode(mode).format(fmt).bucketBy(n, col)
-    if sort_by:
-        w = w.sortBy(*sort_by)
-    w.saveAsTable(table)
-
-
-def write_table(
-    df: DataFrame,
-    location: str,
-    fmt: str = "parquet",
-    partition_by: str | list[str] | None = None,
-) -> None:
-    """Overwrite a path-backed table, optionally ``partitionBy`` —
-    the index writers' layout (``write_minhash_index`` by band,
-    ``write_ivf_index`` by centroid_id). ``iceberg`` falls back to
-    parquet when no Iceberg runtime is present."""
-    if fmt == "iceberg" and not iceberg_available(df.sparkSession):
-        fmt = "parquet"
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(partition_by)
-    w.format(fmt).save(location)
-
-
 def compact_table(
     spark: SparkSession,
     location: str,
     target_file_bytes: int = 128 << 20,
-    fmt: str = "parquet",
     sort_cols: tuple[str, ...] | None = None,
     min_files_saved: int = 2,
 ) -> dict:
@@ -209,7 +169,7 @@ def compact_table(
     }
     if files_before - n_files < min_files_saved:
         return report
-    df = spark.read.format(fmt).load(location)
+    df = spark.read.parquet(location)
     if part_cols:
         # hash-partition on the partition columns: every value lands in
         # exactly one task, so partitionBy emits one file per value and
@@ -227,7 +187,7 @@ def compact_table(
         ).sortWithinPartitions(*sort_cols)
     else:
         out = df.coalesce(n_files)
-    rewrite_table(spark, location, out, partition_by=part_cols, fmt=fmt)
+    rewrite_table(spark, location, out, partition_by=part_cols)
     report["files_after"] = _data_stats(live)[1]
     report["partition_cols"] = part_cols
     report["rewritten"] = True
@@ -239,7 +199,6 @@ def rewrite_table(
     location: str,
     out: DataFrame,
     partition_by: list[str] | None = None,
-    fmt: str = "parquet",
 ) -> None:
     """Crash-safe in-place table rewrite: write ``out`` (which may be
     derived from reading ``location`` — it is fully materialized into a
@@ -260,10 +219,10 @@ def rewrite_table(
     staging = jvm.org.apache.hadoop.fs.Path(f"{location}.compact-{token}")
     aside = jvm.org.apache.hadoop.fs.Path(f"{location}.old-{token}")
     try:
-        w = out.write.mode("overwrite").format(fmt)
+        w = out.write.mode("overwrite")
         if partition_by:
             w = w.partitionBy(*partition_by)
-        w.save(str(staging))
+        w.parquet(str(staging))
         if not fs.rename(live, aside):
             raise IOError(f"rewrite_table: cannot move {location} aside")
         try:

@@ -59,7 +59,7 @@ def main() -> None:
     args = ap.parse_args()
     cfg = load_config(args.config)
 
-    from pyspark.sql import SparkSession, functions as F
+    from pyspark.sql import Observation, SparkSession, functions as F
 
     from feagen_spark.operators import dedup as D
     from feagen_spark.operators.cleaning import (
@@ -96,8 +96,11 @@ def main() -> None:
     funnel: dict[str, int] = {}
 
     def checkpointed(df, stage: str):
-        pinned = df.localCheckpoint()
-        funnel[stage] = pinned.count()
+        # the row count rides the pinning job as an Observation: one
+        # Spark job per funnel stage, not a pin plus a count
+        obs = Observation()
+        pinned = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint()
+        funnel[stage] = int(obs.get["n"])
         return pinned
 
     docs = checkpointed(docs, "input")

@@ -290,6 +290,47 @@ def test_curate_corpus_funnel(spark, tmp_path, monkeypatch, capsys):
     assert total == n_tokens
 
 
+def test_curate_corpus_one_job_per_stage(spark, tmp_path, monkeypatch, capsys):
+    """Each funnel stage pins its frame and counts it in the same Spark
+    job (the count is an Observation on the pinning job, not a separate
+    ``count()``, which costs a map-stage job plus a result job under
+    AQE): a drive with only exact_dedup enabled launches exactly JOBS
+    jobs."""
+    JOBS = 9
+    texts = ["one doc about joins", "one doc about joins", "another doc"]
+    inp = str(tmp_path / "docs")
+    spark.createDataFrame(
+        list(enumerate(texts)), "doc_id long, text string"
+    ).coalesce(1).write.parquet(inp)
+    cfg = tmp_path / "curate.yml"
+    cfg.write_text(
+        "\n".join(
+            [
+                "app_name: curate_jobs_test",
+                f"input_path: {inp}",
+                "exact_dedup: true",
+                f"output_path: {tmp_path / 'curated'}",
+            ]
+        )
+    )
+    job = _load_job("curate_corpus")
+    monkeypatch.setattr(sys, "argv", ["curate_corpus", "--config", str(cfg)])
+    tracker = spark.sparkContext.statusTracker()
+
+    def job_ids():
+        # job-start events reach the status tracker through the async
+        # listener bus; drain it before reading the job ids
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        return set(tracker.getJobIdsForGroup(None))
+
+    before = job_ids()
+    job.main()
+    launched = job_ids() - before
+    summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert summary["funnel"] == {"input": 3, "exact_dedup": 2, "output": 2}
+    assert len(launched) == JOBS, sorted(launched)
+
+
 def test_curate_corpus_dsir_stage(spark, tmp_path, monkeypatch, capsys):
     """The dsir: stage keeps exactly k docs, preferring target-like
     content, and records the funnel leg + audit column."""

@@ -72,3 +72,29 @@ def test_features_build_no_trailing_frame():
             line = text[: m.start()].count("\n") + 1
             offenders.append(f"{py.relative_to(PKG.parent)}:{line}")
     assert not offenders, offenders
+
+
+def test_no_literal_partition_counts():
+    """Every partition count follows the session (defaultParallelism,
+    AQE) so throughput scales from N to 4N executors: no integer
+    literal opens ``repartition(``, ``repartitionByRange(`` or
+    ``coalesce(``, and no operator takes a ``target_partitions`` knob.
+    Comment lines are skipped; a ``# partition-count-ok: <why>`` pragma
+    on the literal's line marks an audited exemption (a fixed-size
+    fixture, not a corpus)."""
+    rx = re.compile(
+        r"\b(?:repartition|repartitionByRange|coalesce)\(\s*\d+\b[^\n]*"
+        r"|\btarget_partitions\b"
+    )
+    offenders = []
+    for py in [*PKG.rglob("*.py"), PKG.parent / "__spark_entry__.py"]:
+        text = "\n".join(
+            "" if line.lstrip().startswith("#") else line
+            for line in py.read_text().splitlines()
+        )
+        for m in rx.finditer(text):
+            if "partition-count-ok" in m.group(0):
+                continue
+            line = text[: m.start()].count("\n") + 1
+            offenders.append(f"{py.relative_to(PKG.parent)}:{line}")
+    assert not offenders, offenders

@@ -216,6 +216,36 @@ def test_unigram_logprob_shuffle_shape(spark):
     assert "BroadcastExchange" in plan, plan
 
 
+def test_unigram_logprob_term_join_follows_threshold(spark):
+    """The vocabulary-sized term-total join carries no broadcast hint:
+    with broadcast joins switched off (static and adaptive), the
+    executed plan has no BroadcastHashJoin, so a vocabulary that
+    outgrows the threshold is shuffle-joined, not broadcast."""
+    from feagen_spark.operators.textstats import unigram_logprob
+
+    keys = (
+        "spark.sql.autoBroadcastJoinThreshold",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold",
+    )
+    old = {k: spark.conf.get(k, None) for k in keys}
+    docs = spark.createDataFrame(
+        [(i, "a b c a") for i in range(10)], "doc_id long, text string"
+    )
+    try:
+        for k in keys:
+            spark.conf.set(k, "-1")
+        out = unigram_logprob(docs)
+        out.collect()  # finalize the adaptive plan
+        plan = _plan(out)
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    assert "BroadcastHashJoin" not in plan, plan
+
+
 def test_exact_dedup_shuffles_digests_not_text(spark):
     """exact_dedup's keep-set aggregation must shuffle (id, digest)
     rows, never the raw text — the property that makes it a
@@ -312,19 +342,17 @@ def test_ivf_index_probe_prunes_partitions(spark, tmp_path_factory):
 
 def test_bucketed_tables_join_without_exchange(spark, tmp_path_factory):
     """Two tables bucketed on the same key/count must join with ZERO
-    hash exchanges (the co-located join layout write_bucketed_table
-    exists for). Broadcast disabled so the join would otherwise shuffle
-    both sides."""
-    from feagen_spark.sources.tables import write_bucketed_table
-
+    hash exchanges (the co-located join layout a bucketed checkpoint
+    store relies on). Broadcast disabled so the join would otherwise
+    shuffle both sides."""
     left = spark.range(200).select(
         F.col("id").alias("k"), (F.col("id") * 2).alias("a")
     )
     right = spark.range(200).select(
         F.col("id").alias("k"), (F.col("id") * 3).alias("b")
     )
-    write_bucketed_table(left, "bkt_left", bucket_by=(4, "k"), sort_by=("k",))
-    write_bucketed_table(right, "bkt_right", bucket_by=(4, "k"), sort_by=("k",))
+    for df, name in ((left, "bkt_left"), (right, "bkt_right")):
+        df.write.mode("overwrite").bucketBy(4, "k").sortBy("k").saveAsTable(name)
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

@@ -687,3 +687,50 @@ def test_streaming_ingest_monitor_summaries(spark, tmp_path):
     # the dropped doc's tokens never entered the monitor: 'corpus'
     # appears 2x in the DROPPED text but 0x among survivors
     assert "corpus" not in dict(got)
+
+
+def test_entry_stream_drains_release_on_failure(spark, tmp_path, monkeypatch):
+    """The three streaming queries of __spark_entry__.py share one
+    drain: when it fails after registering its memory sink, each query
+    still drops the sink view and removes its checkpoint dir, so
+    nothing leaks into the session the other queries share."""
+    import tempfile
+    from pathlib import Path
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as E
+
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array([1, 2], pa.int64()),
+            "ts": pa.array([0, 60_000_000], pa.timestamp("us")),
+            "user_id": pa.array([7, 7], pa.int64()),
+            "event_type": ["view", "purchase"],
+            "value": [1.0, 2.0],
+            "props": ["{}", "{}"],
+        }),
+        tmp_path / "events.parquet",
+    )
+
+    def failing_drain(query_df, name, checkpoint, output_mode="update"):
+        spark.range(1).createOrReplaceTempView(name)
+        raise RuntimeError("drain failed")
+
+    monkeypatch.setattr(INC, "run_available_now", failing_drain)
+    tmp = Path(tempfile.gettempdir())
+
+    def temp_views():
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    for q in (
+        E.q_ev_session_aggs_streaming,
+        E.q_ev_stream_attribution,
+        E.q_ev_stream_decay,
+    ):
+        ckpts, views = set(tmp.glob("ckpt_stream*")), temp_views()
+        with pytest.raises(RuntimeError, match="drain failed"):
+            q(spark, str(tmp_path))
+        assert set(tmp.glob("ckpt_stream*")) - ckpts == set(), q.__name__
+        assert temp_views() == views, q.__name__
