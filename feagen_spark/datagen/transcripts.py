@@ -154,28 +154,3 @@ def labels(spark: SparkSession, transcripts_df: DataFrame) -> DataFrame:
         "conv_id", (F.col("mx") + F.expr("INTERVAL 1 HOUR")).alias("ts")
     )
     return exact.unionByName(plus1).unionByName(before).unionByName(after)
-
-
-def with_duplicates(transcripts_df: DataFrame, every_nth: int = 50) -> DataFrame:
-    """Dedup-audit fixture: re-inject every Nth row with a later ts
-    (never used in the main table — FIXTURES.md §1 edge rows)."""
-    dups = transcripts_df.where(
-        F.pmod(F.xxhash64(F.lit("dup"), F.col("conv_id"), F.col("turn_idx")), F.lit(every_nth))
-        == 0
-    ).withColumn("ts", F.col("ts") + F.expr("INTERVAL 2 SECOND"))
-    return transcripts_df.unionByName(dups)
-
-
-def lifetime(spark: SparkSession) -> DataFrame:
-    """feagen README parity fixture (FIXTURES.md §3)."""
-    rows = [
-        (1, 68.0, 60.5, 165.0, 0),
-        (2, 59.0, 78.0, 178.0, 0),
-        (3, 81.0, 55.2, 152.0, 1),
-        (4, 72.0, 91.3, 183.0, 0),
-        (5, 77.0, 67.8, 170.0, 1),
-        (6, 63.0, 72.1, 175.0, 0),
-    ]
-    return spark.createDataFrame(
-        rows, "id int, lifetime double, weight double, height double, is_in_test_set int"
-    )

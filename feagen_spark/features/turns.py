@@ -185,28 +185,6 @@ def add_session_start_ts(df: DataFrame) -> DataFrame:
     )
 
 
-# -- C14: dedup / exactness guard ---------------------------------------------
-
-def dedup_turns(df: DataFrame) -> DataFrame:
-    """Enforce unique (conv_id, turn_idx); deterministic tie-break keeps
-    the earliest ts (audit-grade, not silent: pair with audit_duplicates)."""
-    w = Window.partitionBy("conv_id", "turn_idx").orderBy("ts")
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-
-
-def audit_duplicates(df: DataFrame) -> DataFrame:
-    """Rows-per-key audit for the manifest (count of duplicated keys)."""
-    return (
-        df.groupBy("conv_id", "turn_idx")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .where(F.col("n") > 1)
-    )
-
-
 # -- DAG registry -------------------------------------------------------------
 
 def transcript_nodes() -> list[FeatureNode]:

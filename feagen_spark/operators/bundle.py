@@ -87,9 +87,6 @@ def bundle(
 
 # -- sparse blocks (feagen h5sparse analogue) ----------------------------------
 
-SPARSE_STRUCT = "struct<size:int, indices:array<int>, values:array<double>>"
-
-
 def to_sparse(dense: Column) -> Column:
     """array<double> → CSR-row struct (size, indices, values), dropping
     zeros. Pure JVM (transform with element index + filter): no UDF, no
@@ -108,17 +105,6 @@ def to_sparse(dense: Column) -> Column:
         F.size(dense).cast("int").alias("size"),
         F.transform(pairs, lambda p: p["i"]).alias("indices"),
         F.transform(pairs, lambda p: p["v"]).alias("values"),
-    )
-
-
-def to_dense(sparse: Column) -> Column:
-    """CSR-row struct → array<double> (zeros restored); inverse of
-    :func:`to_sparse` for consumers that need the dense block back."""
-    m = F.map_from_arrays(sparse["indices"], sparse["values"])
-    idx = F.sequence(F.lit(0), sparse["size"] - 1)
-    return F.transform(
-        idx,
-        lambda i: F.coalesce(F.element_at(m, i.cast("int")), F.lit(0.0)),
     )
 
 

@@ -19,10 +19,9 @@ Scale design (the point of each choice):
   join so candidate generation never compares all pairs; candidates are
   then verified by signature-estimated Jaccard. This is the 100TB path:
   cost is linear in corpus + bucket collisions.
-- ``simhash64``: 64-bit SimHash over whitespace tokens, Arrow-vectorized
-  (numpy bit matrix per batch); near-dup = small Hamming distance,
-  bucketed by 16-bit chunks (pigeonhole: dups within distance 3 share
-  at least one of 4 chunks).
+- ``add_simhash``: 64-bit SimHash over whitespace tokens,
+  Arrow-vectorized (numpy bit matrix per batch); near-dups are
+  signatures at a small Hamming distance.
 
 All joins key on fixed-width hashes, never raw text; all Python is
 Arrow-batched (no per-row Python — BASELINE.json:15).
@@ -35,7 +34,6 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.window import Window
 
 
 def _norm(text_col: str) -> F.Column:
@@ -66,21 +64,6 @@ def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
         .select(id_col)
     )
     return df.join(keep, on=id_col, how="left_semi")
-
-
-def exact_dup_groups(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Audit view: (canonical_id, dup_id) pairs for exact duplicates."""
-    with_d = df.select(F.col(id_col), _digest(text_col).alias("__d"))
-    w = (
-        Window.partitionBy("__d")
-        .orderBy(id_col)
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    )
-    return (
-        with_d.withColumn("canonical_id", F.min(id_col).over(w))
-        .where(F.col(id_col) != F.col("canonical_id"))
-        .select("canonical_id", F.col(id_col).alias("dup_id"))
-    )
 
 
 def paragraph_dedup(
@@ -831,9 +814,8 @@ def write_minhash_index(
     dedup — the corpus text is shingled and hashed exactly once, at
     index-build time; every later ingest batch probes this table
     (:func:`minhash_probe_increment`) instead of re-scanning 100 TB of
-    text. The layout mirrors ``write_ivf_index``: band partitioning
-    bounds file sizes and lets a band-restricted probe prune at the
-    scan.
+    text. Band partitioning bounds file sizes and lets a
+    band-restricted probe prune at the scan.
 
     ``ingest_batch`` switches to the STREAMING layout: a leading
     ``ingest_batch=<n>`` partition level (this base build uses the
@@ -1019,57 +1001,6 @@ def band_rows_self_pairs(
             ),
         )
     )
-
-
-def rebaseline_minhash_index(
-    spark: SparkSession,
-    index_path: str,
-) -> dict:
-    """Fold every ``ingest_batch=N`` partition of a STREAMED MinHash
-    index (:func:`write_minhash_index` with ``ingest_batch`` +
-    :func:`...streaming_ingest_dedup` appends) back into the base
-    ``ingest_batch=-1`` partition set — the periodic maintenance that
-    keeps the partition count bounded: a long-running ingest stream
-    otherwise accretes one partition per micro-batch, and at some point
-    partition DISCOVERY (listing thousands of tiny dirs) costs more
-    than the probe scan itself. One file per band after the fold.
-
-    Quiesce the stream first (same offline contract as
-    ``compact_table``). Replay interaction is safe by construction: if
-    a folded batch N later REPLAYS, its dynamic-overwrite re-creates
-    ``ingest_batch=N`` with band rows that now ALSO exist under -1 —
-    duplicate index rows only ever produce duplicate candidate pairs,
-    which the probe's ``dropDuplicates`` collapses, and the next
-    rebaseline folds the redundant partition away again.
-
-    Returns ``{"batches_folded", "rows"}``."""
-    from ..sources.tables import rewrite_table
-
-    idx = spark.read.parquet(index_path)
-    if "ingest_batch" not in idx.columns:
-        raise ValueError(
-            f"{index_path} is not a streamed index (no ingest_batch "
-            "partition level) — nothing to rebaseline"
-        )
-    batches = [
-        r["ingest_batch"]
-        for r in idx.select("ingest_batch").distinct().collect()
-    ]  # slow-path-ok: one row per micro-batch partition, the very set
-    # being bounded here
-    n_rows = idx.count()
-    folded = (
-        idx.withColumn("ingest_batch", F.lit(-1))
-        .repartition(F.col("band"))
-        .sortWithinPartitions("ingest_batch", "band", "bucket")
-    )
-    rewrite_table(
-        spark, index_path, folded,
-        partition_by=["ingest_batch", "band"],
-    )
-    return {
-        "batches_folded": sorted(int(b) for b in batches if b != -1),
-        "rows": n_rows,
-    }
 
 
 # -- cross-set contamination (benchmark decontamination) -------------------------
@@ -1501,49 +1432,3 @@ def _simhash_series(texts: pd.Series) -> pd.Series:
 
 def add_simhash(df: DataFrame, text_col: str = "text") -> DataFrame:
     return df.withColumn("simhash", _simhash64_udf()(F.col(text_col)))
-
-
-def simhash_near_dup_pairs(
-    df: DataFrame,
-    max_hamming: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Pigeonhole-bucketed SimHash near-dups: split the 64-bit hash into
-    4 chunks of 16; any pair within Hamming distance 3 shares ≥1 exact
-    chunk → join per chunk, verify with bit_count(xor)."""
-    h = add_simhash(df.select(id_col, text_col), text_col=text_col).select(
-        id_col, "simhash"
-    )
-    chunks = h.select(
-        id_col,
-        "simhash",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftrightunsigned(F.col("simhash"), 16 * i).bitwiseAND(
-                        F.lit(0xFFFF)
-                    )
-                    for i in range(4)
-                ]
-            )
-        ).alias("chunk_idx", "chunk"),
-    )
-    a = chunks.alias("a")
-    b = chunks.alias("b")
-    return (
-        a.join(b, on=["chunk_idx", "chunk"])
-        .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.bit_count(
-                F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-            ).alias("hamming"),
-        )
-        # filter BEFORE the cross-chunk dedup: hamming is deterministic
-        # per pair, so chunk-duplicates agree and far candidates never
-        # enter the distinct shuffle at all
-        .where(F.col("hamming") <= max_hamming)
-        .distinct()
-    )

@@ -1,4 +1,4 @@
-"""Multimodal column plumbing (task brief): image/audio/video as opaque
+"""Multimodal column plumbing (task brief): image and audio as opaque
 ``binary`` columns with typed metadata.
 
 The Spark-side plumbing — schema, partitioning, UDF signatures, Arrow
@@ -8,8 +8,7 @@ batch shape — is real and tested. Codec policy, per modality:
   container → falls back to raising unless ``fake=True``);
 - audio: REAL decode for WAV payloads via the stdlib ``wave`` module
   (no external dependency — tested in-sandbox); other containers need
-  soundfile/librosa;
-- video: STUBBED (no stdlib codec; real path needs PyAV/opencv).
+  soundfile/librosa.
 
 ``fake=True`` always selects a clearly-marked deterministic fake that
 derives "decoded" properties from the payload bytes (stable across
@@ -17,9 +16,8 @@ runs, good enough to exercise batching/partitioning/schema end-to-end).
 
 Pattern: ``mapInPandas`` — per-partition Arrow batch iterator, the right
 shape for byte-heavy decode at scale (no per-row Python, payloads never
-leave the executor, output can explode rows per asset e.g. video
-frames). Partition by asset bucket so decode parallelism is independent
-of upstream layout: ``df.repartition(N, "asset_id")``.
+leave the executor). Partition by asset bucket so decode parallelism
+is independent of upstream layout: ``df.repartition(N, "asset_id")``.
 """
 
 from __future__ import annotations
@@ -45,9 +43,6 @@ IMAGE_FEATURES_SCHEMA = (
 AUDIO_FEATURES_SCHEMA = (
     "asset_id long, sample_rate int, duration_ms int, n_bytes int, rms double"
 )
-
-FRAME_SAMPLE_SCHEMA = "asset_id long, frame_idx int, frame_ts_ms int, frame_phash long"
-
 
 def synthetic_assets(spark, n: int = 64, kind: str = "image") -> DataFrame:
     """Deterministic fake binary assets (payload = seeded bytes) to test
@@ -78,20 +73,6 @@ def _pil():
         from PIL import Image
 
         return Image
-    except ImportError:
-        return None
-
-
-def _pyav():
-    """Optional-import video codec: returns the ``av`` (PyAV) module or
-    None — same auto-upgrade pattern as ``_pil``. Executors resolve this
-    per-batch, so a cluster image with PyAV installed decodes real
-    containers with no code change; this sandbox has no video codec, so
-    in-sandbox the real path stays a declared stub."""
-    try:
-        import av
-
-        return av
     except ImportError:
         return None
 
@@ -296,139 +277,3 @@ def decode_audio_features(df: DataFrame, fake: bool = False) -> DataFrame:
             ])
 
     return df.mapInPandas(run, schema=AUDIO_FEATURES_SCHEMA)
-
-
-RESIZED_SCHEMA = (
-    "asset_id long, kind string, payload binary, "
-    "meta_width int, meta_height int, meta_sample_rate int, meta_duration_ms int"
-)
-
-
-def resize_images(
-    df: DataFrame, width: int = 64, height: int = 64, fake: bool = False
-) -> DataFrame:
-    """Resize: payload in → payload out with new dims (1→1 mapInPandas,
-    output schema == asset schema so resize composes with decode/frame
-    ops). Real path auto-upgrades via optional-import PIL (PNG
-    re-encode); the fake path re-derives a deterministic payload of the
-    target pixel count."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-
-        Image = None if fake else _pil()
-        for pdf in batches:
-            if not fake and Image is None:
-                raise NotImplementedError(
-                    "image codec not available in this environment "
-                    "(optional dependency PIL not importable); "
-                    "pass fake=True for the deterministic stub resizer"
-                )
-            out = pdf.copy()
-            if fake:
-                out["payload"] = [
-                    _fake_decode_bytes(bytes(p), width * height).tobytes()
-                    for p in pdf["payload"]
-                ]
-            else:
-                resized = []
-                for p in pdf["payload"]:
-                    img = Image.open(io.BytesIO(bytes(p))).resize((width, height))
-                    buf = io.BytesIO()
-                    img.save(buf, format="PNG")
-                    resized.append(buf.getvalue())
-                out["payload"] = resized
-            out["meta_width"] = width
-            out["meta_height"] = height
-            yield out[[
-                "asset_id", "kind", "payload", "meta_width", "meta_height",
-                "meta_sample_rate", "meta_duration_ms",
-            ]]
-
-    return df.mapInPandas(run, schema=RESIZED_SCHEMA)
-
-
-def _real_frame_rows(av, asset_id: int, payload: bytes, every_ms: int) -> list[dict]:
-    """Real-codec frame sampling for ONE asset (unit-testable without an
-    executor): decode the container with PyAV, keep the first frame at or
-    past each every_ms tick, reformat to the 9x8 grayscale dHash grid in
-    the codec (no PIL dependency), emit (frame_idx, frame_ts_ms,
-    frame_phash) rows."""
-    import io
-
-    rows = []
-    container = av.open(io.BytesIO(payload))
-    stream = container.streams.video[0]
-    next_ts, fi = 0.0, 0
-    for frame in container.decode(stream):
-        t_ms = float(frame.time or 0.0) * 1000.0
-        if t_ms + 1e-6 < next_ts:
-            continue
-        grid = np.asarray(
-            frame.reformat(width=9, height=8, format="gray").to_ndarray(),
-            dtype=np.int16,
-        )
-        rows.append(
-            {
-                "asset_id": int(asset_id),
-                "frame_idx": fi,
-                "frame_ts_ms": int(round(t_ms)),
-                "frame_phash": _dhash64(grid),
-            }
-        )
-        fi += 1
-        # CATCH UP past every tick this frame covers: after a decode gap
-        # (VFR, dropped frames), advancing by one period would re-take
-        # the next few frames against stale ticks and over-sample
-        next_ts = (t_ms // every_ms + 1) * every_ms
-    return rows
-
-
-def sample_video_frames(
-    df: DataFrame, every_ms: int = 250, fake: bool = False
-) -> DataFrame:
-    """Frame sampling: EXPLODES rows (one output row per sampled frame) —
-    demonstrates the 1→N mapInPandas batch shape used for video. The
-    real path auto-upgrades via optional-import PyAV (``_pyav``, same
-    pattern as PIL images); without a codec it raises
-    NotImplementedError unless fake=True."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        av = None if fake else _pyav()
-        for pdf in batches:
-            if not fake and av is None:
-                raise NotImplementedError(
-                    "video codec not available in this environment "
-                    "(optional dependency PyAV not importable); "
-                    "pass fake=True for the deterministic stub decoder"
-                )
-            if not fake:
-                rows = []
-                for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                    rows.extend(
-                        _real_frame_rows(av, int(aid), bytes(payload), every_ms)
-                    )
-                yield pd.DataFrame(rows, columns=[
-                    "asset_id", "frame_idx", "frame_ts_ms", "frame_phash",
-                ])
-                continue
-            rows = []
-            for aid, payload, dur in zip(
-                pdf["asset_id"], pdf["payload"], pdf["meta_duration_ms"]
-            ):
-                for fi, ts in enumerate(range(0, int(dur), every_ms)):
-                    rows.append(
-                        {
-                            "asset_id": int(aid),
-                            "frame_idx": fi,
-                            "frame_ts_ms": ts,
-                            "frame_phash": _fake_phash64(
-                                bytes(payload) + b"|" + str(fi).encode("ascii")
-                            ),
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=[
-                "asset_id", "frame_idx", "frame_ts_ms", "frame_phash",
-            ])
-
-    return df.mapInPandas(run, schema=FRAME_SAMPLE_SCHEMA)

@@ -1,100 +1,29 @@
-"""Mergeable sketch aggregates for corpus-scale monitoring.
+"""Mergeable Misra-Gries heavy-hitter summaries for corpus-scale
+monitoring: exact frequent items ("top tokens / domains /
+fingerprints") without shuffling the full value domain.
 
-The 100 TB pattern these enable: maintain a small SKETCH TABLE
-incrementally — one HLL sketch per (source, day) partition, appended as
-data lands — and answer "distinct fingerprints per source / overall"
-by UNIONING sketches, never by re-scanning the corpus. A sketch is a
-few KB regardless of input size, the union is associative and
-commutative (layout/arrival-order independent), and a year of
-per-source-per-day rollups fits on the driver.
+The 100 TB pattern: maintain a small SUMMARY TABLE incrementally — one
+``hh_summary`` per ingest batch, appended as data lands — and answer
+"items occurring at least t times" with
+``heavy_hitters_from_summaries``, which merges any set of summaries by
+plain UNION and verifies the candidates against the corpus. History is
+never re-summarized. ``jobs/ingest_dedup.py`` and
+``streaming_ingest_dedup(monitor_path=)`` write the summaries.
 
-Built on Spark's native Apache DataSketches bindings
-(``hll_sketch_agg`` / ``hll_union_agg`` / ``hll_sketch_estimate`` —
-JVM-side, no Python in the aggregation path) and the GK quantile
-aggregate (``percentile_approx``). Properties pinned by
-tests/test_sketches.py:
-
-- exactness in sparse mode: below ~0.75·2^lg_k distinct values the
-  DataSketches HLL stores exact coupons, so small-cardinality
-  estimates are EXACT, not approximate;
-- mergeability: union of per-group sketches == one sketch over the
-  whole input (same estimate);
-- bounded error at scale (relative standard error ≈ 1.04/√2^lg_k,
-  ~1.6 % at the default lg_k=12);
-- layout invariance: estimates identical under repartition.
-
-No DuckDB twin exists for the DataSketches binary format, so these
-carry pytest evidence rather than a driver oracle (the exact
-distinct-count operators — groupBy/countDistinct/window count(DISTINCT)
-— are the oracle-checked relatives).
+Properties pinned by tests/test_sketches.py: exact parity with
+``groupBy(item).count()`` above the threshold, under every layout and
+across batch boundaries; NULL items ignored; and loud errors, never a
+silently incomplete answer, when the merged error bound reaches the
+threshold, when a corpus key group has no summary rows, or when a key
+is NULL. No DuckDB twin exists for the summary format, so these carry
+pytest evidence rather than an oracle-backed query.
 """
 
 from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import Column, DataFrame, functions as F
-
-DEFAULT_LG_K = 12  # RSE ≈ 1.04 / sqrt(2^12) ≈ 1.6%
-
-
-def distinct_sketch(
-    df: DataFrame,
-    keys: Sequence[str],
-    col: str,
-    out: str = "sketch",
-    lg_k: int = DEFAULT_LG_K,
-    extra_aggs: Sequence[Column] = (),
-) -> DataFrame:
-    """One HLL sketch of ``col``'s distinct values per ``keys`` group —
-    the incremental build step (run per partition/batch and append).
-    Map-side combinable like any aggregate: the shuffle carries
-    sketches, not values."""
-    return df.groupBy(*keys).agg(
-        F.hll_sketch_agg(col, F.lit(int(lg_k))).alias(out), *extra_aggs
-    )
-
-
-def distinct_rollup(
-    sketch_df: DataFrame,
-    keys: Sequence[str],
-    sketch_col: str = "sketch",
-    out: str | None = None,
-) -> DataFrame:
-    """Roll sketches up to a coarser key set by sketch UNION (e.g.
-    (source, day) → source, or → grand total with ``keys=[]``) —
-    touches only the sketch table, never the corpus."""
-    return sketch_df.groupBy(*keys).agg(
-        F.hll_union_agg(sketch_col).alias(out or sketch_col)
-    )
-
-
-def distinct_estimate(
-    sketch_df: DataFrame,
-    sketch_col: str = "sketch",
-    out: str = "n_distinct",
-) -> DataFrame:
-    """Materialize the distinct-count estimate column (bigint)."""
-    return sketch_df.withColumn(out, F.hll_sketch_estimate(sketch_col))
-
-
-def approx_quantiles_by(
-    df: DataFrame,
-    keys: Sequence[str],
-    col: str,
-    probs: Sequence[float],
-    accuracy: int = 10_000,
-    out: str = "quantiles",
-) -> DataFrame:
-    """Per-group approximate quantiles (GK aggregate): the length/score
-    distribution monitor for curation dashboards. ``accuracy`` trades
-    memory for error (ε ≈ 1/accuracy of rank). For oracle-exact
-    percentiles see the `percentile` path (ev_value_median)."""
-    return df.groupBy(*keys).agg(
-        F.percentile_approx(
-            col, F.array(*[F.lit(float(p)) for p in probs]), F.lit(int(accuracy))
-        ).alias(out)
-    )
+from pyspark.sql import DataFrame, functions as F
 
 
 def _guard_null_keys(df: DataFrame, keys: list, op_name: str) -> DataFrame:
@@ -122,27 +51,6 @@ def _guard_null_keys(df: DataFrame, keys: list, op_name: str) -> DataFrame:
     )
 
 
-def _hh_verify(
-    df: DataFrame,
-    cands: DataFrame,
-    col: str,
-    threshold: int,
-    keys: list,
-    item_col: str,
-    count_col: str,
-) -> DataFrame:
-    """Pass 2, shared by both query paths: exact counts over corpus
-    rows semi-joined to the broadcast candidate set."""
-    joined = df.select(*keys, F.col(col).alias(item_col)).join(
-        F.broadcast(cands), on=[*keys, item_col]
-    )
-    return (
-        joined.groupBy(*keys, item_col)
-        .agg(F.count(F.lit(1)).alias(count_col))
-        .where(F.col(count_col) >= threshold)
-    )
-
-
 def hh_summary(
     df: DataFrame,
     col: str,
@@ -150,10 +58,10 @@ def hh_summary(
     capacity: int = 4096,
     item_col: str = "item",
 ) -> DataFrame:
-    """Misra-Gries heavy-hitter SUMMARY — the mergeable/incremental
-    half of ``heavy_hitters``, following the module's sketch-table
-    pattern: run per ingest batch (or per day) and APPEND the output
-    (≤ capacity × partitions + partitions rows per run); answer "items
+    """Misra-Gries heavy-hitter SUMMARY, the mergeable half of the
+    module's summary-table pattern: run per ingest batch (or per day)
+    and APPEND the output (≤ capacity × partitions + partitions rows
+    per run); answer "items
     over threshold" later by merging any set of summaries with
     ``heavy_hitters_from_summaries`` — the already-ingested corpus is
     never re-scanned for the summary side.
@@ -233,45 +141,38 @@ def hh_summary(
 
 def _hh_candidates(
     summary: DataFrame,
+    corpus: DataFrame,
     threshold: int,
     keys: list,
     item_col: str,
-    op_name: str,
-    coverage_from: DataFrame | None = None,
 ) -> DataFrame:
-    """Candidate set from (merged) MG summaries, with the loud error
-    bound: per key group, D = Σ mg_dec must stay below ``threshold``
-    or a qualifying item could be missing — raise, never under-report.
-    ``coverage_from`` (the corpus, incremental path only): every key
-    group present in the corpus must have summary rows — a group with
-    no error row means its batches were never summarized (or the
-    summary table is empty/wrong), which would otherwise yield a
-    silently empty answer for that group (code-review r6)."""
+    """Candidate set from (merged) MG summaries, with two loud guards.
+    Error bound: per key group, D = Σ mg_dec must stay below
+    ``threshold`` or a qualifying item could be missing — raise, never
+    under-report. Coverage: every key group present in ``corpus`` must
+    have summary rows — a group with no error row means its batches
+    were never summarized (or the summary table is empty/wrong), which
+    would otherwise yield a silently empty answer for that group
+    (code-review r6). An empty corpus has no group to cover, so its
+    answer is legitimately empty."""
     errs = summary.groupBy(*keys).agg(F.sum("mg_dec").alias("__d"))
-    if coverage_from is not None and keys:
-        # corpus groups LEFT-join the summary groups: a group with no
-        # summary rows surfaces as __d NULL for the guard below.
-        # keys=() needs no join — the global aggregate always returns
-        # exactly one row whose __d is NULL iff the summaries are empty
-        groups = coverage_from.select(*keys).distinct()
-        errs = groups.join(errs, on=keys, how="left")
-    if coverage_from is None:
-        # one-shot path (heavy_hitters over its own summary): an empty
-        # or all-structural input simply has no summaries — D is 0 and
-        # the answer is legitimately empty, matching the exact-mode
-        # no-op (code-review r6). The loud NULL-D guard below is for
-        # the INCREMENTAL path, where a missing summary table is a
-        # misconfiguration, never a benign empty input.
-        errs = errs.withColumn("__d", F.coalesce("__d", F.lit(0)))
+    # corpus groups LEFT-join the summary groups: a group with no
+    # summary rows surfaces as __d NULL for the guard below. Keyless,
+    # the corpus is one group if it has a row, and the global aggregate
+    # is one row whose __d is NULL iff the summaries are empty
+    if keys:
+        errs = corpus.select(*keys).distinct().join(errs, on=keys, how="left")
+    else:
+        errs = corpus.limit(1).select().crossJoin(errs)
     guarded = errs.withColumn(
         "__d",
         F.when(
             F.col("__d").isNull(),
             F.raise_error(
                 F.lit(
-                    f"{op_name}: a key group has no summary rows — "
-                    "empty or incomplete summary table (was every "
-                    "ingest batch summarized?)"
+                    "heavy_hitters_from_summaries: a key group has no "
+                    "summary rows — empty or incomplete summary table "
+                    "(was every ingest batch summarized?)"
                 )
             ).cast("long"),
         )
@@ -279,7 +180,7 @@ def _hh_candidates(
             F.col("__d") >= F.lit(int(threshold)),
             F.raise_error(
                 F.concat(
-                    F.lit(f"{op_name}: MG error bound D="),
+                    F.lit("heavy_hitters_from_summaries: MG error bound D="),
                     F.col("__d").cast("string"),
                     F.lit(
                         f" >= threshold={threshold} — an item could be "
@@ -319,14 +220,22 @@ def heavy_hitters_from_summaries(
     frequent-item answer over ``df`` (the stored corpus those batches
     ingested). The summary side never re-scans history; the verify
     pass reads the corpus once, pruned to candidate rows before its
-    aggregate. Same exactness contract and loud D-bound guard as
-    ``heavy_hitters``, plus a coverage guard: a corpus key group with
-    no summary rows (a batch that was never summarized, or an
-    empty/wrong summary table) raises instead of yielding a silently
-    empty answer for that group. The corpus side's NULL keys are
-    rejected loudly too (the one-shot operator gets that for free from
-    its own summary pass; here the corpus and the summaries are
-    different frames — code-review r6).
+    aggregate.
+
+    MG guarantees an item absent from every merged summary has true
+    count <= D = Σ mg_dec, so if ``threshold`` <= D the candidate set
+    can miss a qualifying item and the operator RAISES (raise the
+    summaries' ``capacity`` or ``threshold``). Within that contract
+    the result is exact, deterministic and layout-invariant:
+    ``df.groupBy(col).count().where(count >= threshold)`` with the
+    full-domain shuffle replaced by a bounded one. D is checked per
+    key group when ``keys`` are given. A coverage guard raises too: a
+    corpus key group with no summary rows (a batch that was never
+    summarized, or an empty/wrong summary table) would otherwise
+    yield a silently empty answer for that group. NULL items are
+    ignored; NULL key values in the corpus are rejected loudly (the
+    candidate and verify joins are null-unsafe — code-review r6).
+    Counts are BIGINT.
 
     KEYLESS LIMITATION: with ``keys=()`` there is no group key to
     join coverage on, so only a fully EMPTY summary table is
@@ -343,66 +252,13 @@ def heavy_hitters_from_summaries(
     # candidate branch read one materialization (a LIVE summary union
     # would otherwise re-run every batch's mapInPandas per branch)
     summaries = summaries.localCheckpoint(eager=False)
-    cands = _hh_candidates(
-        summaries,
-        threshold,
-        keys,
-        item_col,
-        "heavy_hitters_from_summaries",
-        coverage_from=df,
+    cands = _hh_candidates(summaries, df, threshold, keys, item_col)
+    # verify: exact counts over corpus rows semi-joined to the
+    # broadcast candidate set
+    return (
+        df.select(*keys, F.col(col).alias(item_col))
+        .join(F.broadcast(cands), on=[*keys, item_col])
+        .groupBy(*keys, item_col)
+        .agg(F.count(F.lit(1)).alias(count_col))
+        .where(F.col(count_col) >= threshold)
     )
-    return _hh_verify(df, cands, col, threshold, keys, item_col, count_col)
-
-
-def heavy_hitters(
-    df: DataFrame,
-    col: str,
-    threshold: int,
-    keys: Sequence[str] = (),
-    capacity: int = 4096,
-    item_col: str = "item",
-    count_col: str = "n",
-) -> DataFrame:
-    """EXACT frequent items above ``threshold`` without shuffling the
-    full value domain — the corpus-scale "top domains / tokens /
-    fingerprints" question. Two passes:
-
-    1. Candidate pruning: ``hh_summary`` — one Misra-Gries summary
-       (``capacity`` counters) per (task partition × key group) via
-       mapInPandas. MG guarantees any item a partition undercounts is
-       off by at most that partition's decrement total, so an item
-       absent from EVERY summary has true count <= D = Σ mg_dec. The
-       summaries (≤ capacity × partitions rows) are the only thing
-       shuffled.
-    2. Verify: semi-join the corpus to the broadcast candidate set and
-       count exactly — map-side combinable over candidate rows only.
-
-    If ``threshold`` <= D the candidate set can miss a qualifying item;
-    the operator RAISES then (raise ``capacity`` or ``threshold``) —
-    never a silently incomplete answer. Within that contract the
-    result is exact, deterministic and layout-invariant:
-    ``heavy_hitters(df, c, t)`` == ``df.groupBy(c).count().where(count
-    >= t)`` with the full-domain shuffle replaced by a bounded one
-    (pinned by tests). D is checked per key group when ``keys`` are
-    given. NULL items are ignored (they are not a value); NULL KEY
-    values are rejected loudly (code-review r6: the candidate and
-    verify joins are null-unsafe, so a NULL-key group would silently
-    vanish from the result instead of erroring). ``col`` may be any
-    scalar type; counts are BIGINT.
-
-    100 TB shape: the corpus is read twice (pass 2 prunes to candidate
-    rows before its aggregate); state is O(capacity) per task; the
-    candidate broadcast is ≤ capacity × shuffle-partitions rows. For
-    an incremental corpus, persist ``hh_summary`` per ingest batch and
-    query with ``heavy_hitters_from_summaries`` instead — history is
-    never re-summarized."""
-    if threshold < 1:
-        raise ValueError(f"threshold must be >= 1: {threshold}")
-    keys = list(keys)
-    # summaries are sketch-sized but cost a corpus scan — pin so the
-    # error check and the candidate set read one materialization
-    summary = hh_summary(
-        df, col, keys=keys, capacity=capacity, item_col=item_col
-    ).localCheckpoint(eager=False)
-    cands = _hh_candidates(summary, threshold, keys, item_col, "heavy_hitters")
-    return _hh_verify(df, cands, col, threshold, keys, item_col, count_col)

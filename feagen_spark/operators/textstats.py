@@ -1,10 +1,9 @@
 """Text analysis for training-data pipelines (task brief: language-ID,
 quality scoring, token counting, document fingerprinting).
 
-All hot-path computation is JVM-side ``pyspark.sql.functions`` (stays in
-whole-stage codegen); the only Python crossing is the rolling-hash
-fingerprint, which is an Arrow-vectorized pandas UDF. Every operator is
-a plain ``DataFrame -> DataFrame`` transform over a table with a ``text``
+All computation is JVM-side ``pyspark.sql.functions`` (stays in
+whole-stage codegen; no Python crossing). Every operator is a plain
+``DataFrame -> DataFrame`` transform over a table with a ``text``
 column (the driver `documents` table or transcript turns).
 
 Each JVM-side operator has an exact ANSI-SQL twin in __spark_entry__.py
@@ -13,10 +12,7 @@ so DuckDB can act as a value-level oracle.
 
 from __future__ import annotations
 
-import pandas as pd
-
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.window import Window
 
 # Tiny deterministic stopword lists for the heuristic scorers. These are
@@ -188,31 +184,6 @@ def add_fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
     (lowercased, whitespace-collapsed). Exact SQL twin exists."""
     norm = F.regexp_replace(F.lower(F.trim(F.col(text_col))), WS_SPLIT, " ")
     return df.withColumn("fingerprint", F.md5(norm))
-
-
-def _rolling_hash64_udf():
-    """Arrow-vectorized polynomial rolling hash (base 131, mod 2^61-1).
-    The slow-path example: per-row math but batched through Arrow.
-    Built lazily — pandas_udf needs an active session in pyspark 4."""
-
-    @pandas_udf("long")
-    def _rolling_hash64(texts: pd.Series) -> pd.Series:
-        MOD = (1 << 61) - 1
-        BASE = 131
-
-        def h(s: str) -> int:
-            acc = 0
-            for ch in s.encode("utf-8", "ignore"):
-                acc = (acc * BASE + ch) % MOD
-            return acc - (MOD if acc > (MOD >> 1) else 0)
-
-        return texts.fillna("").map(h).astype("int64")
-
-    return _rolling_hash64
-
-
-def add_rolling_fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
-    return df.withColumn("rolling_fp", _rolling_hash64_udf()(F.col(text_col)))
 
 
 def add_dup_ngram_ratio(

@@ -1,78 +1,27 @@
 """Structured Streaming upgrade path (SURVEY.md §2 disposition note):
-incremental feature refresh over a transcript stream.
+incremental features over a live event stream.
 
 The north rule's workload is batch backfill; this module is the
-streaming counterpart for keeping feature snapshots fresh as new turns
-land: watermarked gap-sessionization via ``session_window`` (Spark's
-native analogue of our batch ts-gap sessionizer), sliding-window rolling
-counts, and an ``applyInPandasWithState`` custom stateful operator for
-running per-conversation counters (the streaming twin of the cumulative
-features).
+streaming counterpart that the three streaming queries of
+``__spark_entry__.py`` drain: watermarked gap-sessionization via
+``session_window`` (Spark's native analogue of the batch ts-gap
+sessionizer) with per-session aggregates and purchase attribution, an
+``applyInPandasWithState`` exponential-decay sum, and the
+continuous-ingest near-dup dedup that ``jobs/ingest_dedup.py`` runs.
 
 Boundary semantics note: ``session_window(ts, gap)`` merges an event
 whose delta to the previous event is EXACTLY gap (window end is
 inclusive; verified empirically on Spark 4.1.2) — i.e. it splits at
 delta > gap, which is precisely the batch sessionizer's semantics
 (functions/windowed.add_session_id, which
-features/turns.add_session_id delegates to). Exact-gap parity is locked by
+features/turns.add_session_id delegates to). Exact-gap parity of
+``streaming_session_value_aggs`` is locked by
 tests/test_streaming.py::test_streaming_session_boundary_exact_gap.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql import types as T
-
-TRANSCRIPT_SCHEMA = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType()),
-        T.StructField("turn_idx", T.IntegerType()),
-        T.StructField("role", T.StringType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("tool", T.StringType()),
-        T.StructField("ts", T.TimestampType()),
-    ]
-)
-
-
-def stream_transcripts(
-    spark: SparkSession, path: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
-    """File-source transcript stream (each new parquet file = new turns);
-    on a real deployment this is the Iceberg/Kafka source instead."""
-    reader = spark.readStream.schema(TRANSCRIPT_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(path)
-
-
-def streaming_session_aggs(
-    stream: DataFrame, gap_s: int = 1800, watermark: str = "2 hours"
-) -> DataFrame:
-    """Per-(conv, session) aggregates over a late-data-tolerant stream:
-    watermark bounds state; session_window merges turns with inter-turn
-    gaps <= gap_s — exactly the batch sessionizer's split-at->gap
-    boundary (C7/C8 streaming twin)."""
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy(
-            F.col("conv_id"),
-            F.session_window("ts", f"{gap_s} seconds").alias("session"),
-        )
-        .agg(
-            F.count(F.lit(1)).cast("int").alias("session_turns"),
-            F.sum((F.col("role") == "tool").cast("int")).cast("int").alias(
-                "session_tool_calls"
-            ),
-        )
-        .select(
-            "conv_id",
-            F.col("session.start").alias("session_start"),
-            F.col("session.end").alias("session_end"),
-            "session_turns",
-            "session_tool_calls",
-        )
-    )
+from pyspark.sql import DataFrame, functions as F
 
 
 def streaming_session_value_aggs(
@@ -153,172 +102,6 @@ def streaming_session_attribution(
             F.min(ts_col).alias("session_start"),
         )
         .select(key, "session_start", "target_ids")
-    )
-
-
-def streaming_rolling_role_counts(
-    stream: DataFrame,
-    window: str = "10 minutes",
-    slide: str = "5 minutes",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Sliding-window role counts per conversation (C5 streaming twin)."""
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy(
-            "conv_id",
-            F.window("ts", window, slide).alias("w"),
-            "role",
-        )
-        .agg(F.count(F.lit(1)).cast("int").alias("n"))
-        .select(
-            "conv_id",
-            F.col("w.start").alias("window_start"),
-            "role",
-            "n",
-        )
-    )
-
-
-def streaming_dedup_turns(
-    stream: DataFrame, watermark: str = "2 hours"
-) -> DataFrame:
-    """Streaming twin of features/turns.dedup_turns (C14): emit each
-    (conv_id, turn_idx) exactly once. dropDuplicatesWithinWatermark
-    bounds the dedup state — a duplicate arriving later than the
-    watermark horizon ages out of state instead of growing it forever
-    (the 100TB-stream requirement; plain dropDuplicates keys state
-    unboundedly)."""
-    return stream.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
-        ["conv_id", "turn_idx"]
-    )
-
-
-def streaming_running_counters(stream: DataFrame) -> DataFrame:
-    """Custom stateful operator via applyInPandasWithState: running
-    per-conversation turn/tool counters emitted on every micro-batch
-    (the streaming twin of the cumulative C6 features).
-
-    NoTimeout: state is bounded by the conversation universe; a
-    production deployment that needs state eviction should switch to
-    EventTimeTimeout + a watermark (ProcessingTimeTimeout schedules
-    wall-clock timers that keep an availableNow drain alive — it never
-    terminates)."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    out_schema = "conv_id string, turns long, tool_calls long"
-    state_schema = "turns long, tool_calls long"
-
-    def update(key, pdfs, state: GroupState):
-        turns, tools = (state.get if state.exists else (0, 0))
-        for pdf in pdfs:
-            turns += len(pdf)
-            tools += int((pdf["role"] == "tool").sum())
-        state.update((turns, tools))
-        yield pd.DataFrame(
-            [{"conv_id": key[0], "turns": turns, "tool_calls": tools}]
-        )
-
-    return stream.groupBy("conv_id").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def streaming_asof_state(
-    stream: DataFrame, ttl_s: float | None = None
-) -> DataFrame:
-    """Streaming twin of the C10 as-of backfill: every arriving turn is
-    emitted enriched with the STRICTLY-PRIOR conversation state
-    (previous role, last tool used) — the state each row would see in a
-    leakage-safe batch backfill.
-
-    ``ttl_s`` is the streaming twin of the batch as-of ``tolerance_s``
-    (feature-store staleness TTL): each state field carries its own
-    last-update event time, and a field older than ``ttl_s`` relative
-    to the arriving row is emitted as NULL — expired, exactly as if it
-    had never been observed. (Semantic TTL only: state entries
-    themselves live for the conversation; evicting idle keys for memory
-    is the watermark/timeout knob, orthogonal to freshness.)
-
-    Custom stateful operator via applyInPandasWithState: per
-    conversation, rows of each micro-batch are processed in (ts,
-    turn_idx) order and each row observes the state BEFORE itself, then
-    updates it. Within a micro-batch (and for in-order arrival across
-    batches) this matches the batch operator exactly; out-of-order
-    arrivals see the state as of processing time — the standard
-    append-mode streaming caveat (exact late-data semantics need the
-    batch backfill, which is what incremental refresh is for)."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    out_schema = (
-        "conv_id string, turn_idx int, prev_role string, last_tool string"
-    )
-    state_schema = (
-        "last_role string, last_tool string, role_us long, tool_us long"
-    )
-    lim = None if ttl_s is None else int(ttl_s * 1_000_000)
-
-    def update(key, pdfs, state: GroupState):
-        if state.exists:
-            last_role, last_tool, role_us, tool_us = state.get
-        else:
-            last_role, last_tool, role_us, tool_us = None, None, None, None
-        frames = [pdf for pdf in pdfs]
-        rows = []
-        if frames:
-            batch = pd.concat(frames).sort_values(["ts", "turn_idx"])
-            for r in batch.itertuples():
-                if pd.isna(r.ts):
-                    # NaT.value is iNaT (~-9.2e18): one null-ts row
-                    # would set the clocks to ~-9.2e15 µs and every
-                    # later row would read its state as expired forever.
-                    # Emit NULLs (no reference instant to age against)
-                    # and don't advance the state — same contract as
-                    # streaming_decayed_sum (code-review r6).
-                    rows.append(
-                        {
-                            "conv_id": key[0],
-                            "turn_idx": int(r.turn_idx),
-                            "prev_role": None,
-                            "last_tool": None,
-                        }
-                    )
-                    continue
-                cur_us = r.ts.value // 1000  # pandas ns → event-time us
-                pr, lt = last_role, last_tool
-                if lim is not None:
-                    if role_us is None or cur_us - role_us > lim:
-                        pr = None
-                    if tool_us is None or cur_us - tool_us > lim:
-                        lt = None
-                rows.append(
-                    {
-                        "conv_id": key[0],
-                        "turn_idx": int(r.turn_idx),
-                        "prev_role": pr,
-                        "last_tool": lt,
-                    }
-                )
-                last_role, role_us = r.role, cur_us
-                if r.role == "tool" and r.tool:
-                    last_tool, tool_us = r.tool, cur_us
-        state.update((last_role, last_tool, role_us, tool_us))
-        yield pd.DataFrame(
-            rows, columns=["conv_id", "turn_idx", "prev_role", "last_tool"]
-        )
-
-    return stream.groupBy("conv_id").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 
@@ -542,7 +325,8 @@ def run_available_now(
     query_df: DataFrame, name: str, checkpoint: str, output_mode: str = "update"
 ):
     """Drain everything currently available into an in-memory table and
-    stop — the batch-parity harness used by tests. session_window
+    stop — the drain the streaming queries of ``__spark_entry__.py``
+    and the batch-parity tests share. session_window
     aggregations need output_mode='complete' (append withholds
     non-finalized sessions); applyInPandasWithState needs 'update'."""
     q = (

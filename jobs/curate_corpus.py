@@ -103,6 +103,15 @@ def main() -> None:
         funnel[stage] = int(obs.get["n"])
         return pinned
 
+    def written(df, path: str, stage: str, mode: str = "overwrite") -> None:
+        # the count rides the write job as an Observation: a read-back
+        # count of the written table would cost three more jobs
+        obs = Observation()
+        df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(mode).parquet(
+            path
+        )
+        funnel[stage] = int(obs.get["n"])
+
     docs = checkpointed(docs, "input")
 
     if cfg.get("exact_dedup"):
@@ -382,9 +391,8 @@ def main() -> None:
                 ),
                 rank_col="shuffle_rank" if od.get("rank") else None,
             ).drop("shuffle_key")
-        shuffled.write.mode("overwrite").parquet(od["output_path"])
+        written(shuffled, od["output_path"], "order")
         docs = spark.read.parquet(od["output_path"])
-        funnel["order"] = docs.count()
 
     pk = cfg.get("pack")
     if pk:
@@ -409,14 +417,10 @@ def main() -> None:
             payload_col="payload",
             max_len=int(pk.get("max_len", 2048)),
         )
-        packed.write.mode("overwrite").parquet(pk["output_path"])
-        funnel["packed_sequences"] = spark.read.parquet(
-            pk["output_path"]
-        ).count()
+        written(packed, pk["output_path"], "packed_sequences")
 
     out_path = cfg["output_path"]
-    docs.write.mode(cfg.get("output_mode", "overwrite")).parquet(out_path)
-    funnel["output"] = spark.read.parquet(out_path).count()
+    written(docs, out_path, "output", cfg.get("output_mode", "overwrite"))
 
     print(json.dumps({"status": "ok", "funnel": funnel, "output": out_path}))
 

@@ -93,6 +93,7 @@ def main() -> None:
     from feagen_spark.core.dag import FeatureDAG
     from feagen_spark.core.engine import Engine
     from feagen_spark.features.turns import transcript_nodes, transcript_templates
+    from feagen_spark.sources.tables import read_table
     from feagen_spark.store.checkpoint import CheckpointStore
 
     # under spark-submit the session already carries cluster config
@@ -102,8 +103,7 @@ def main() -> None:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
     input_path = cfg["input_path"]
-    fmt = cfg.get("input_format", "parquet")
-    df = spark.read.format(fmt).load(input_path)
+    df = read_table(spark, input_path, cfg.get("input_format", "parquet"))
     if "repartition_key" in cfg:
         df = df.repartition(
             int(cfg.get("repartition_n", spark.sparkContext.defaultParallelism * 2)),

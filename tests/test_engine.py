@@ -12,9 +12,24 @@ from feagen_spark.core.spec import FeatureNode
 from feagen_spark.features import turns as T
 from feagen_spark.operators.bundle import bundle, get_data_keys_from_structure
 from feagen_spark.store.checkpoint import CheckpointStore
-from feagen_spark.datagen.transcripts import lifetime
 
 INPUT_COLS = ("conv_id", "turn_idx", "role", "text", "tool", "ts")
+
+
+def lifetime(spark):
+    """feagen README parity fixture (FIXTURES.md §3)."""
+    rows = [
+        (1, 68.0, 60.5, 165.0, 0),
+        (2, 59.0, 78.0, 178.0, 0),
+        (3, 81.0, 55.2, 152.0, 1),
+        (4, 72.0, 91.3, 183.0, 0),
+        (5, 77.0, 67.8, 170.0, 1),
+        (6, 63.0, 72.1, 175.0, 0),
+    ]
+    return spark.createDataFrame(
+        rows, "id int, lifetime double, weight double, height double, is_in_test_set int"
+    )
+
 
 # the two checkpoint layouts share one swap; the swap tests run both
 LAYOUTS = pytest.mark.parametrize(
@@ -273,13 +288,9 @@ def test_checkpoint_audit_nan_false_skips_nan_aggs(spark, tmp_path):
 
 def test_bundle_sparse_roundtrip_and_nnz(spark):
     """Sparse blocks (feagen h5sparse analogue): LIST values become
-    (size, indices, values) structs with zeros dropped; to_dense
-    restores the exact dense bundle."""
-    from pyspark.sql import functions as F
-
-    from feagen_spark.operators.bundle import (
-        bundle, bundle_sparse, one_hot, to_dense,
-    )
+    (size, indices, values) structs with zeros dropped, from which the
+    exact dense bundle is restored."""
+    from feagen_spark.operators.bundle import bundle, bundle_sparse, one_hot
 
     df = spark.createDataFrame(
         [(1, "a", 3.0), (2, "b", 0.0), (3, "zz", 5.0)],
@@ -299,10 +310,12 @@ def test_bundle_sparse_roundtrip_and_nnz(spark):
     assert rows[1]["size"] == 4 and rows[1]["indices"] == [0, 3]
     assert rows[2]["indices"] == [1]          # x=0.0 dropped
     assert rows[3]["indices"] == [3]          # OOV one-hot all zero
-    restored = {
-        r["id"]: r["d"]
-        for r in sp.select("id", to_dense(F.col("feats")).alias("d")).collect()
-    }
+    restored = {}
+    for i, v in rows.items():
+        d = [0.0] * v["size"]
+        for j, x in zip(v["indices"], v["values"]):
+            d[j] = x
+        restored[i] = d
     assert restored == dense
 
 

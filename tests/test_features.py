@@ -198,23 +198,6 @@ def test_lag_template(tiny_transcripts, tiny_pdf):
     assert ((g == exp) | (pd.isna(g) & pd.isna(exp))).all()
 
 
-# -- dedup audit (C14) ---------------------------------------------------------
-
-def test_dedup_and_audit(spark, tiny_transcripts):
-    from feagen_spark.datagen.transcripts import with_duplicates
-
-    dup = with_duplicates(tiny_transcripts, every_nth=25)
-    n_dups = T.audit_duplicates(dup).count()
-    assert n_dups > 0
-    deduped = T.dedup_turns(dup)
-    assert T.audit_duplicates(deduped).count() == 0
-    assert deduped.count() == tiny_transcripts.count()
-    # deterministic tie-break keeps the EARLIEST ts (the original row)
-    orig = tiny_transcripts.select("conv_id", "turn_idx", "ts")
-    joined = deduped.select("conv_id", "turn_idx", "ts").exceptAll(orig)
-    assert joined.count() == 0
-
-
 # -- leakage (SURVEY.md §5.3) ---------------------------------------------------
 
 def test_zero_temporal_leakage(spark, tiny_transcripts, feat_pdf):

@@ -83,60 +83,3 @@ def test_write_refresh_touches_only_affected_partitions(
         after.where(F.col("conv_id") != "conv00000003").count()
         == before - tiny_transcripts.where(F.col("conv_id") == "conv00000003").count()
     )
-
-
-def test_corpus_diff_classifies_and_ships_digests_only(spark):
-    from feagen_spark.operators.incremental import corpus_diff
-
-    old = spark.createDataFrame(
-        [(i, f"text {i}", f"h{i}") for i in range(1, 11)],
-        "doc_id long, text string, fingerprint string",
-    )
-    new_rows = [
-        (i, f"text {i}", f"h{i}") for i in range(1, 11) if i != 3
-    ]
-    new_rows = [
-        (i, t, ("h5x" if i == 5 else h)) for i, t, h in new_rows
-    ] + [(11, "text 11", "h11")]
-    new = spark.createDataFrame(
-        new_rows, "doc_id long, text string, fingerprint string"
-    )
-
-    out = corpus_diff(old, new)
-    got = {r["doc_id"]: r["status"] for r in out.collect()}
-    assert got == {3: "removed", 5: "changed", 11: "added"}
-    row5 = {r["doc_id"]: r for r in out.collect()}[5]
-    assert row5["old_fingerprint"] == "h5" and row5["new_fingerprint"] == "h5x"
-
-    full = corpus_diff(old, new, include_unchanged=True)
-    assert full.count() == 11
-    assert full.where(F.col("status") == "unchanged").count() == 8
-
-    # the diff join must shuffle digests, never the text payload
-    import re
-
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    final = plan.split("== Initial Plan ==")[0]
-    for m in re.finditer(r"Exchange hashpartitioning\(([^)]*)\)", final):
-        assert "text" not in m.group(1), final
-
-
-def test_corpus_diff_null_fingerprints_classify_by_presence(spark):
-    """Presence flags, not fingerprint nullness, decide added/removed:
-    a doc present in both snapshots with a NULL fingerprint on one
-    side is CHANGED; NULL on both sides is unchanged (code-review r6)."""
-    from feagen_spark.operators.incremental import corpus_diff
-
-    old = spark.createDataFrame(
-        [(1, None), (2, "h2"), (3, None)],
-        "doc_id long, fingerprint string",
-    )
-    new = spark.createDataFrame(
-        [(1, "h1x"), (2, None), (3, None)],
-        "doc_id long, fingerprint string",
-    )
-    got = {
-        r["doc_id"]: r["status"]
-        for r in corpus_diff(old, new, include_unchanged=True).collect()
-    }
-    assert got == {1: "changed", 2: "changed", 3: "unchanged"}

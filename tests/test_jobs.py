@@ -291,12 +291,13 @@ def test_curate_corpus_funnel(spark, tmp_path, monkeypatch, capsys):
 
 
 def test_curate_corpus_one_job_per_stage(spark, tmp_path, monkeypatch, capsys):
-    """Each funnel stage pins its frame and counts it in the same Spark
-    job (the count is an Observation on the pinning job, not a separate
-    ``count()``, which costs a map-stage job plus a result job under
-    AQE): a drive with only exact_dedup enabled launches exactly JOBS
-    jobs."""
-    JOBS = 9
+    """Each funnel stage pins or writes its frame and counts it in the
+    same Spark job (the count is an Observation on the pinning or
+    writing job, not a separate ``count()``, which costs a map-stage
+    job plus a result job under AQE, nor a read-back of the written
+    table, which adds a schema job to those two): a drive with only
+    exact_dedup enabled launches exactly JOBS jobs."""
+    JOBS = 6
     texts = ["one doc about joins", "one doc about joins", "another doc"]
     inp = str(tmp_path / "docs")
     spark.createDataFrame(

@@ -5,6 +5,7 @@ mapInPandas / applyInPandasWithState are the only allowed crossings."""
 
 from __future__ import annotations
 
+import ast
 import re
 from pathlib import Path
 
@@ -98,3 +99,38 @@ def test_no_literal_partition_counts():
             line = text[: m.start()].count("\n") + 1
             offenders.append(f"{py.relative_to(PKG.parent)}:{line}")
     assert not offenders, offenders
+
+
+def test_every_library_definition_has_a_caller():
+    """Every top-level def and class in feagen_spark/ is named by code
+    outside tests/: a query, a job, perfbench, a tool or another
+    library module. Only real references count (AST ``Name`` ids,
+    ``Attribute`` attrs and import aliases), so a docstring or comment
+    that mentions a name is not a caller. A definition that only tests
+    call is an alternative the library keeps for no workload: delete
+    it with its tests. An ``allowed`` entry must say which query, job
+    or north-rule clause needs the definition."""
+    allowed: dict[str, str] = {}
+    root = PKG.parent
+    named = set()
+    for py in root.rglob("*.py"):
+        rel = py.relative_to(root).parts
+        if rel[0] == "tests" or any(p.startswith(".") for p in rel):
+            continue
+        for node in ast.walk(ast.parse(py.read_text(), str(py))):
+            if isinstance(node, ast.Name):
+                if not isinstance(node.ctx, ast.Store):
+                    named.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                named.add(node.attr)
+            elif isinstance(node, ast.alias):
+                named.add(node.name.rpartition(".")[2])
+    uncalled = [
+        f"{py.relative_to(root)}:{node.lineno} {node.name}"
+        for py in sorted(PKG.rglob("*.py"))
+        for node in ast.parse(py.read_text()).body
+        if isinstance(node, (ast.FunctionDef, ast.ClassDef))
+        and node.name not in named
+        and node.name not in allowed
+    ]
+    assert not uncalled, uncalled

@@ -1,5 +1,5 @@
-"""Mergeable-sketch properties (operators/sketches.py): sparse-mode
-exactness, union==whole, bounded error at scale, layout invariance."""
+"""Misra-Gries heavy hitters (operators/sketches.py): exact parity
+under every layout and across batches, and the loud guards."""
 
 from __future__ import annotations
 
@@ -7,93 +7,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from feagen_spark.operators import sketches as SK
-
-
-@pytest.fixture(scope="module")
-def events_like(spark):
-    # 40_000 rows, 9 sources, global distinct users = 3000 (pmod keeps
-    # the remainder non-negative — a plain % would double the range),
-    # heavily overlapping across sources
-    return spark.range(40_000).select(
-        (F.col("id") % 9).alias("source"),
-        F.pmod(F.xxhash64("id"), F.lit(3000)).alias("user"),
-        (F.col("id") % 97).cast("double").alias("value"),
-    ).cache()
-
-
-def test_sparse_mode_is_exact(spark):
-    """Below the coupon threshold the DataSketches HLL is exact — the
-    estimate equals count(DISTINCT) exactly, not approximately."""
-    df = spark.range(10_000).select(
-        F.lit(1).alias("g"), (F.col("id") % 200).alias("u")
-    )
-    est = SK.distinct_estimate(SK.distinct_sketch(df, ["g"], "u")).first()
-    assert est["n_distinct"] == 200
-
-
-def test_union_of_group_sketches_equals_whole(events_like):
-    """Mergeability — the 100TB property: per-source sketches unioned
-    give the SAME estimate as one sketch over everything."""
-    per_source = SK.distinct_sketch(events_like, ["source"], "user")
-    merged = SK.distinct_estimate(
-        SK.distinct_rollup(per_source, [], "sketch")
-    ).first()["n_distinct"]
-    whole = SK.distinct_estimate(
-        SK.distinct_sketch(events_like.select(F.lit(1).alias("g"), "user"), ["g"], "user")
-    ).first()["n_distinct"]
-    assert merged == whole
-
-
-def test_error_bound_at_scale(spark):
-    """At 100k distinct values (far past sparse mode) the estimate must
-    land within ~5x the theoretical RSE (1.6% at lg_k=12)."""
-    df = spark.range(300_000).select(
-        F.lit(1).alias("g"), (F.xxhash64("id") % 100_000).alias("u")
-    )
-    exact = df.select("u").distinct().count()
-    est = SK.distinct_estimate(SK.distinct_sketch(df, ["g"], "u")).first()[
-        "n_distinct"
-    ]
-    assert abs(est - exact) / exact < 0.08, (est, exact)
-
-
-def test_estimate_invariant_under_repartition(events_like):
-    """HLL insertion is order/layout independent: the same data through
-    a different partitioning must give the identical estimate."""
-    a = SK.distinct_estimate(
-        SK.distinct_rollup(
-            SK.distinct_sketch(events_like, ["source"], "user"), []
-        )
-    ).first()["n_distinct"]
-    b = SK.distinct_estimate(
-        SK.distinct_rollup(
-            SK.distinct_sketch(
-                events_like.repartition(17, "user"), ["source"], "user"
-            ),
-            [],
-        )
-    ).first()["n_distinct"]
-    assert a == b
-
-
-def test_approx_quantiles_bounded_rank_error(events_like):
-    """GK quantiles: each returned value's true rank must sit within
-    eps=1/accuracy of the requested prob."""
-    probs = [0.1, 0.5, 0.9]
-    got = SK.approx_quantiles_by(
-        events_like, [], "value", probs, accuracy=1000
-    ).first()["quantiles"]
-    n = events_like.count()
-    vals = sorted(r["value"] for r in events_like.select("value").collect())
-    for p, q in zip(probs, got):
-        import bisect
-
-        lo = bisect.bisect_left(vals, q) / n
-        hi = bisect.bisect_right(vals, q) / n
-        assert lo - 0.002 <= p <= hi + 0.002, (p, q, lo, hi)
-
-
-# ---------------------------------------------------------- heavy hitters
 
 
 @pytest.fixture(scope="module")
@@ -105,6 +18,14 @@ def zipfish(spark):
         F.pmod(F.xxhash64("id"), F.lit(1) + F.pmod("id", F.lit(37)))
         .cast("string")
         .alias("tok"),
+    )
+
+
+def _hh(df, threshold, keys=(), capacity=4096):
+    """One summary over ``df`` merged back against ``df`` itself."""
+    summ = SK.hh_summary(df, "tok", keys=keys, capacity=capacity)
+    return SK.heavy_hitters_from_summaries(
+        summ, df, "tok", threshold=threshold, keys=keys
     )
 
 
@@ -121,12 +42,7 @@ def _exact(df, threshold, keys=()):
 def test_heavy_hitters_exact_parity_and_layout_invariance(zipfish):
     exp = _exact(zipfish, 300)
     for layout in (zipfish, zipfish.repartition(1), zipfish.repartition(13)):
-        got = {
-            tuple(r)
-            for r in SK.heavy_hitters(
-                layout, "tok", threshold=300, capacity=256
-            ).collect()
-        }
+        got = {tuple(r) for r in _hh(layout, 300, capacity=256).collect()}
         assert got == exp and got  # exact under every layout
 
 
@@ -134,9 +50,7 @@ def test_heavy_hitters_per_key_groups(zipfish):
     exp = _exact(zipfish, 120, keys=("src",))
     got = {
         tuple(r)
-        for r in SK.heavy_hitters(
-            zipfish, "tok", threshold=120, keys=["src"], capacity=256
-        ).collect()
+        for r in _hh(zipfish, 120, keys=["src"], capacity=256).collect()
     }
     assert got == exp and got
 
@@ -145,12 +59,7 @@ def test_heavy_hitters_zero_error_when_capacity_covers_domain(spark):
     df = spark.range(2_000).select(
         F.pmod("id", F.lit(50)).cast("string").alias("tok")
     )
-    got = {
-        tuple(r)
-        for r in SK.heavy_hitters(
-            df, "tok", threshold=1, capacity=64
-        ).collect()
-    }
+    got = {tuple(r) for r in _hh(df, 1, capacity=64).collect()}
     # capacity >= distinct: D == 0, so even threshold=1 is exact
     exp = {tuple(r) for r in df.groupBy("tok").count().collect()}
     assert got == exp and len(got) == 50
@@ -170,7 +79,7 @@ def test_heavy_hitters_guard_fires_when_threshold_within_error(spark):
         F.pmod("id", F.lit(500)).cast("string").alias("tok")
     )
     with pytest.raises(PySparkException, match="heavy_hitters"):
-        SK.heavy_hitters(df, "tok", threshold=5, capacity=8).collect()
+        _hh(df, threshold=5, capacity=8).collect()
 
 
 def test_heavy_hitters_ignores_null_items(spark):
@@ -178,7 +87,7 @@ def test_heavy_hitters_ignores_null_items(spark):
         [("a",), ("a",), ("a",), (None,), (None,), (None,), (None,)],
         "tok string",
     )
-    got = SK.heavy_hitters(df, "tok", threshold=2, capacity=16).collect()
+    got = _hh(df, threshold=2, capacity=16).collect()
     assert [(r["item"], r["n"]) for r in got] == [("a", 3)]
 
 
@@ -189,15 +98,13 @@ def test_heavy_hitters_null_key_rejected(spark):
         [("a", "x"), (None, "x"), ("a", "y")], "src string, tok string"
     )
     with pytest.raises(PySparkException, match="NULL key"):
-        SK.heavy_hitters(
-            df, "tok", threshold=1, keys=["src"], capacity=8
-        ).collect()
+        _hh(df, threshold=1, keys=["src"], capacity=8).collect()
 
 
 def test_hh_summaries_merge_across_batches(spark):
     """The incremental path: per-batch hh_summary outputs UNIONed (the
-    appended summary table) answer exactly like the one-shot operator
-    over the whole corpus — history is never re-summarized."""
+    appended summary table) answer exactly like one summary over
+    the whole corpus — history is never re-summarized."""
     base = spark.range(12_000).select(
         F.col("id").alias("rid"),
         F.pmod(F.xxhash64("id"), F.lit(1) + F.pmod("id", F.lit(37)))
@@ -226,13 +133,8 @@ def test_hh_summaries_merge_across_batches(spark):
         .collect()
     }
     assert got == exp and got
-    # and identical to the one-shot operator
-    one = {
-        tuple(r)
-        for r in SK.heavy_hitters(
-            base, "tok", threshold=300, capacity=256
-        ).collect()
-    }
+    # and identical to one summary over the whole corpus
+    one = {tuple(r) for r in _hh(base, 300, capacity=256).collect()}
     assert got == one
 
 
@@ -308,10 +210,10 @@ def test_hh_from_summaries_d_positive_and_guards(spark):
 
 
 def test_heavy_hitters_empty_input_is_empty_not_an_error(spark):
-    """One-shot path: zero rows (or zero eligible items) means D=0 and
-    a legitimately empty answer — NOT the incremental path's loud
-    missing-summary error (code-review r6)."""
+    """Zero rows (or zero eligible items) means D=0 and a legitimately
+    empty answer — NOT the loud missing-summary error, which is for a
+    corpus the summaries do not cover (code-review r6)."""
     empty = spark.createDataFrame([], "tok string")
-    assert SK.heavy_hitters(empty, "tok", threshold=2, capacity=8).count() == 0
+    assert _hh(empty, threshold=2, capacity=8).count() == 0
     nulls = spark.createDataFrame([(None,), (None,)], "tok string")
-    assert SK.heavy_hitters(nulls, "tok", threshold=2, capacity=8).count() == 0
+    assert _hh(nulls, threshold=2, capacity=8).count() == 0

@@ -1,5 +1,7 @@
-"""Structured Streaming parity: streaming sessionization / rolling /
-stateful counters must agree with their batch twins on a drained stream."""
+"""Structured Streaming parity: streaming sessionization, session
+attribution and the stateful decayed sum must agree with their batch
+twins on a drained stream; the continuous-ingest dedup keeps its
+exactly-once contract."""
 
 from __future__ import annotations
 
@@ -24,10 +26,22 @@ def stream_dir(spark, tiny_transcripts, tmp_path_factory):
     return str(d / "batch1")
 
 
+def _stream(spark, schema, path):
+    return spark.readStream.schema(schema).parquet(path)
+
+
+def _session_aggs(stream, gap_s):
+    """The session aggregate q_ev_session_aggs_streaming runs, keyed
+    by conversation."""
+    return INC.streaming_session_value_aggs(
+        stream, key="conv_id", value_col="turn_idx", gap_s=gap_s
+    )
+
+
 def test_streaming_session_aggs_match_batch(spark, tiny_transcripts, stream_dir, tmp_path):
-    stream = INC.stream_transcripts(spark, stream_dir)
-    q = INC.run_available_now(
-        INC.streaming_session_aggs(stream, gap_s=1800),
+    stream = _stream(spark, tiny_transcripts.schema, stream_dir)
+    INC.run_available_now(
+        _session_aggs(stream, gap_s=1800),
         "sess_aggs",
         str(tmp_path / "ck1"),
         output_mode="complete",
@@ -37,7 +51,7 @@ def test_streaming_session_aggs_match_batch(spark, tiny_transcripts, stream_dir,
         .groupBy("conv_id")
         .agg(
             F.count(F.lit(1)).alias("n_sessions"),
-            F.sum("session_turns").alias("n_turns"),
+            F.sum("n_rows").alias("n_turns"),
         )
         .toPandas()
         .set_index("conv_id")
@@ -59,17 +73,26 @@ def test_streaming_session_aggs_match_batch(spark, tiny_transcripts, stream_dir,
 
 
 def test_streaming_running_counters_match_batch(spark, tiny_transcripts, stream_dir, tmp_path):
-    stream = INC.stream_transcripts(spark, stream_dir)
+    """Per-conversation turn and tool-call counters, summed over the
+    drained session aggregates, equal the batch counts."""
+    stream = _stream(spark, tiny_transcripts.schema, stream_dir).withColumn(
+        "is_tool", (F.col("role") == "tool").cast("long")
+    )
     INC.run_available_now(
-        INC.streaming_running_counters(stream),
+        INC.streaming_session_value_aggs(
+            stream, key="conv_id", value_col="is_tool", gap_s=1800
+        ),
         "run_counters",
         str(tmp_path / "ck2"),
+        output_mode="complete",
     )
-    # final state per conv = last emitted row per conv (max turns)
     got = (
         spark.table("run_counters")
         .groupBy("conv_id")
-        .agg(F.max("turns").alias("turns"), F.max("tool_calls").alias("tool_calls"))
+        .agg(
+            F.sum("n_rows").alias("turns"),
+            F.sum("session_value").alias("tool_calls"),
+        )
         .toPandas()
         .set_index("conv_id")
         .sort_index()
@@ -84,8 +107,10 @@ def test_streaming_running_counters_match_batch(spark, tiny_transcripts, stream_
         .set_index("conv_id")
         .sort_index()
     )
+    assert list(got.index) == list(exp.index)
     assert (got["turns"] == exp["turns"]).all()
     assert (got["tool_calls"] == exp["tool_calls"]).all()
+    assert exp["tool_calls"].sum() > 0
 
 
 def test_streaming_session_boundary_exact_gap(spark, tmp_path):
@@ -106,7 +131,11 @@ def test_streaming_session_boundary_exact_gap(spark, tmp_path):
         ("B", 0, "user", "x", None, t0),
         ("B", 1, "user", "x", None, t0 + dt.timedelta(seconds=gap, microseconds=1)),
     ]
-    df = spark.createDataFrame(rows, schema=INC.TRANSCRIPT_SCHEMA)
+    df = spark.createDataFrame(
+        rows,
+        "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts timestamp",
+    )
     d = str(tmp_path / "exact_gap_in")
     df.coalesce(1).write.mode("overwrite").parquet(d)
 
@@ -120,9 +149,8 @@ def test_streaming_session_boundary_exact_gap(spark, tmp_path):
     )
     assert batch["A"] == 1 and batch["B"] == 2
 
-    stream = INC.stream_transcripts(spark, d)
     INC.run_available_now(
-        INC.streaming_session_aggs(stream, gap_s=gap),
+        _session_aggs(_stream(spark, df.schema, d), gap_s=gap),
         "exact_gap_sessions",
         str(tmp_path / "ck_gap"),
         output_mode="complete",
@@ -138,172 +166,6 @@ def test_streaming_session_boundary_exact_gap(spark, tmp_path):
     assert (got == batch).all()
 
 
-def test_streaming_rolling_counts_runs(spark, stream_dir, tmp_path):
-    stream = INC.stream_transcripts(spark, stream_dir)
-    INC.run_available_now(
-        INC.streaming_rolling_role_counts(stream),
-        "roll_counts",
-        str(tmp_path / "ck3"),
-        output_mode="complete",
-    )
-    out = spark.table("roll_counts")
-    assert out.count() > 0
-    assert set(out.columns) == {"conv_id", "window_start", "role", "n"}
-
-
-def test_streaming_dedup_matches_batch(spark, tiny_transcripts, tmp_path):
-    """Duplicate turns injected into the stream must be emitted exactly
-    once — same row set as the batch dedup guard."""
-    from feagen_spark.datagen.transcripts import with_duplicates
-    from feagen_spark.features.turns import dedup_turns
-
-    dup_df = with_duplicates(tiny_transcripts, every_nth=10)
-    assert dup_df.count() > tiny_transcripts.count()
-    d = str(tmp_path / "dup_stream_in")
-    dup_df.coalesce(2).write.mode("overwrite").parquet(d)
-
-    stream = INC.stream_transcripts(spark, d)
-    INC.run_available_now(
-        INC.streaming_dedup_turns(stream),
-        "dedup_stream",
-        str(tmp_path / "ck_dedup"),
-        output_mode="append",
-    )
-    got = spark.table("dedup_stream")
-    exp = dedup_turns(dup_df)
-    assert got.count() == exp.count() == tiny_transcripts.count()
-    # exactly one row per key
-    assert (
-        got.groupBy("conv_id", "turn_idx").count().where("count > 1").count() == 0
-    )
-
-
-def test_streaming_asof_state_matches_batch(spark, tiny_transcripts, tmp_path):
-    """Single-batch drain in arrival order must equal the leakage-safe
-    batch as-of state (prev_role lag + last strictly-prior tool)."""
-    from pyspark.sql.window import Window
-
-    d = str(tmp_path / "asof_state_in")
-    tiny_transcripts.coalesce(1).write.mode("overwrite").parquet(d)
-
-    stream = INC.stream_transcripts(spark, d)
-    INC.run_available_now(
-        INC.streaming_asof_state(stream),
-        "asof_state",
-        str(tmp_path / "ck_asof"),
-        output_mode="update",
-    )
-    got = (
-        spark.table("asof_state")
-        .toPandas()
-        .sort_values(["conv_id", "turn_idx"])
-        .reset_index(drop=True)
-    )
-
-    w = Window.partitionBy("conv_id").orderBy("ts", "turn_idx")
-    w_prior = w.rowsBetween(Window.unboundedPreceding, -1)
-    exp = (
-        tiny_transcripts.select(
-            "conv_id",
-            "turn_idx",
-            F.lag("role", 1).over(w).alias("prev_role"),
-            F.last(
-                F.when(
-                    (F.col("role") == "tool") & (F.col("tool") != ""),
-                    F.col("tool"),
-                ),
-                ignorenulls=True,
-            ).over(w_prior).alias("last_tool"),
-        )
-        .toPandas()
-        .sort_values(["conv_id", "turn_idx"])
-        .reset_index(drop=True)
-    )
-    assert len(got) == len(exp)
-    for c in ["prev_role", "last_tool"]:
-        assert (
-            got[c].fillna("__n__") == exp[c].fillna("__n__")
-        ).all(), c
-
-
-def test_streaming_asof_state_ttl_matches_batch(spark, tiny_transcripts, tmp_path):
-    """ttl_s (streaming twin of batch tolerance_s): state fields older
-    than the TTL at the arriving row's event time come back NULL —
-    checked against the windowed batch formula carrying per-field
-    update timestamps. Non-vacuity asserted: the TTL must actually
-    expire something on this input."""
-    from pyspark.sql.window import Window
-
-    TTL = 300.0
-    d = str(tmp_path / "asof_ttl_in")
-    tiny_transcripts.coalesce(1).write.mode("overwrite").parquet(d)
-
-    stream = INC.stream_transcripts(spark, d)
-    INC.run_available_now(
-        INC.streaming_asof_state(stream, ttl_s=TTL),
-        "asof_state_ttl",
-        str(tmp_path / "ck_asof_ttl"),
-        output_mode="update",
-    )
-    got = (
-        spark.table("asof_state_ttl")
-        .toPandas()
-        .sort_values(["conv_id", "turn_idx"])
-        .reset_index(drop=True)
-    )
-
-    w = Window.partitionBy("conv_id").orderBy("ts", "turn_idx")
-    w_prior = w.rowsBetween(Window.unboundedPreceding, -1)
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
-    lim = int(TTL * 1_000_000)
-    tool_val = F.when(
-        (F.col("role") == "tool") & (F.col("tool") != ""), F.col("tool")
-    )
-    tool_us = F.when(
-        (F.col("role") == "tool") & (F.col("tool") != ""), us
-    )
-    exp = (
-        tiny_transcripts.select(
-            "conv_id",
-            "turn_idx",
-            F.when(
-                us - F.lag(us, 1).over(w) <= lim, F.lag("role", 1).over(w)
-            ).alias("prev_role"),
-            F.when(
-                us - F.last(tool_us, ignorenulls=True).over(w_prior) <= lim,
-                F.last(tool_val, ignorenulls=True).over(w_prior),
-            ).alias("last_tool"),
-        )
-        .toPandas()
-        .sort_values(["conv_id", "turn_idx"])
-        .reset_index(drop=True)
-    )
-    assert len(got) == len(exp)
-    for c in ("prev_role", "last_tool"):
-        assert (
-            got[c].fillna("~") == exp[c].fillna("~")
-        ).all(), c
-
-    # non-vacuous: the no-TTL run must disagree somewhere (something
-    # actually expired under the TTL)
-    INC.run_available_now(
-        INC.streaming_asof_state(INC.stream_transcripts(spark, d)),
-        "asof_state_nottl",
-        str(tmp_path / "ck_asof_nottl"),
-        output_mode="update",
-    )
-    raw = (
-        spark.table("asof_state_nottl")
-        .toPandas()
-        .sort_values(["conv_id", "turn_idx"])
-        .reset_index(drop=True)
-    )
-    assert (
-        (got["prev_role"].fillna("~") != raw["prev_role"].fillna("~")).any()
-        or (got["last_tool"].fillna("~") != raw["last_tool"].fillna("~")).any()
-    )
-
-
 def test_streaming_session_attribution_matches_batch(
     spark, tiny_transcripts, stream_dir, tmp_path
 ):
@@ -314,7 +176,7 @@ def test_streaming_session_attribution_matches_batch(
     no-target sessions must still occupy an ordinal."""
     from pyspark.sql.window import Window
 
-    stream = INC.stream_transcripts(spark, stream_dir)
+    stream = _stream(spark, tiny_transcripts.schema, stream_dir)
     attrib = INC.streaming_session_attribution(
         stream, key="conv_id", ts_col="ts", gap_s=1800,
         event_type_col="role", event_id_col="turn_idx",
@@ -408,50 +270,6 @@ def test_streaming_decayed_sum_matches_reference(spark, tmp_path):
     assert set(got) == set(want)
     for key_ in want:
         assert abs(got[key_] - want[key_]) < 1e-9, key_
-
-
-def test_streaming_asof_state_null_ts_does_not_poison_state(spark, tmp_path):
-    """Code-review r6: TRANSCRIPT_SCHEMA permits ts NULL; NaT.value is
-    iNaT, so one null-ts row used to set the TTL clocks to ~-9.2e15 µs
-    and every later row read its state as expired forever. The null-ts
-    row must emit NULLs (no reference instant) and leave the state
-    clocks untouched."""
-    import pandas as pd
-
-    rows = [
-        ("c1", 0, "user", "hi", "", "2024-01-01 10:00:00"),
-        ("c1", 1, "tool", "r", "search", "2024-01-01 10:00:10"),
-        ("c1", 2, "user", "??", "", None),                      # null ts
-        ("c1", 3, "assistant", "ok", "", "2024-01-01 10:00:30"),
-    ]
-    df = spark.createDataFrame(
-        rows, "conv_id string, turn_idx int, role string, text string, "
-        "tool string, ts string"
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-    d = str(tmp_path / "nat_in")
-    df.coalesce(1).write.mode("overwrite").parquet(d)
-
-    INC.run_available_now(
-        INC.streaming_asof_state(
-            INC.stream_transcripts(spark, d), ttl_s=3600.0
-        ),
-        "asof_state_nat",
-        str(tmp_path / "ck_nat"),
-        output_mode="update",
-    )
-    got = (
-        spark.table("asof_state_nat")
-        .toPandas()
-        .set_index("turn_idx")
-        .sort_index()
-    )
-    assert len(got) == 4
-    # null-ts row: no reference instant → NULL state fields
-    assert pd.isna(got.loc[2, "prev_role"])
-    assert pd.isna(got.loc[2, "last_tool"])
-    # the row AFTER the null ts still sees fresh, unexpired state
-    assert got.loc[3, "prev_role"] == "tool"
-    assert got.loc[3, "last_tool"] == "search"
 
 
 # -- streaming continuous-ingest dedup ---------------------------------------
@@ -562,22 +380,66 @@ def test_streaming_ingest_dedup_cold_start(spark, tmp_path):
     assert kept == {11, 13, 22}
 
 
+def test_streaming_dedup_matches_batch(spark, tmp_path):
+    """Duplicates injected into the stream, within and across
+    micro-batches, are emitted exactly once: the drained corpus is the
+    row set the batch ``exact_dedup`` keeps."""
+    from feagen_spark.operators import dedup as D
+
+    texts = [
+        "spark shuffles sort the map output before the reduce side reads it",
+        "a watermark bounds how long streaming state waits for late events",
+        "parquet stores each column chunk with its own min and max stats",
+        "minhash signatures estimate the jaccard similarity of shingle sets",
+        "broadcast joins ship the small side to every executor once only",
+        "the catalyst optimizer rewrites logical plans before planning them",
+    ]
+    # batch 1 repeats its first two texts; batch 2 repeats four batch-1
+    # texts and brings the last two
+    b1 = [(i, texts[i % 4]) for i in range(6)]
+    b2 = [(100 + i, texts[(i + 2) % 6]) for i in range(6)]
+    schema = "doc_id long, text string"
+    src = str(tmp_path / "dup_stream_in")
+    spark.createDataFrame(b1, schema).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(src)
+    spark.createDataFrame(b2, schema).coalesce(1).write.mode(
+        "append"
+    ).parquet(src)
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+    out = str(tmp_path / "corpus_out")
+    _drain_ingest_dedup(
+        spark, stream, str(tmp_path / "idx"), out, str(tmp_path / "ck"),
+        k=16, bands=4, threshold=0.7,
+    )
+    got = spark.read.parquet(out)
+    want = D.exact_dedup(spark.createDataFrame(b1 + b2, schema))
+    assert got.count() == len(texts)
+    assert {r["doc_id"] for r in got.collect()} == {
+        r["doc_id"] for r in want.collect()
+    }
+
+
 def test_rebaseline_minhash_index_preserves_probe(spark, tmp_path):
-    """Folding micro-batch partitions into the base must leave probe
-    answers identical and collapse the partition set to -1."""
+    """Rebuilding a streamed index as one base partition over the
+    drained corpus (the offline rebaseline) must leave probe answers
+    identical to those of the index the stream grew batch by batch."""
     import os
 
     from feagen_spark.operators import dedup as D
 
+    schema = "doc_id long, text string"
     corpus = spark.createDataFrame(
-        [(1, "the base corpus document about joins and windows")],
-        "doc_id long, text string",
+        [(1, "the base corpus document about joins and windows")], schema
     )
     idx = str(tmp_path / "idx")
     out = str(tmp_path / "corpus_out")
     D.write_minhash_index(corpus, idx, k=16, bands=4, ingest_batch=-1)
 
-    schema = "doc_id long, text string"
     src = str(tmp_path / "stream")
     spark.createDataFrame(
         [(10, "a first streamed document with original content")], schema
@@ -597,30 +459,32 @@ def test_rebaseline_minhash_index_preserves_probe(spark, tmp_path):
     parts = {p for p in os.listdir(idx) if p.startswith("ingest_batch=")}
     assert parts == {"ingest_batch=-1", "ingest_batch=0", "ingest_batch=1"}
 
+    rebased = str(tmp_path / "idx_rebased")
+    D.write_minhash_index(
+        corpus.unionByName(spark.read.parquet(out).select("doc_id", "text")),
+        rebased, k=16, bands=4, ingest_batch=-1,
+    )
+    parts = {p for p in os.listdir(rebased) if p.startswith("ingest_batch=")}
+    assert parts == {"ingest_batch=-1"}
+    assert (
+        spark.read.parquet(rebased).count() == spark.read.parquet(idx).count()
+    )
+
     probe_inc = spark.createDataFrame(
         [(99, "a first streamed document with original content")], schema
     )
-    before = {
-        (r["id_a"], r["id_b"]): r["est_jaccard"]
-        for r in D.minhash_probe_increment(
-            spark, idx, probe_inc, k=16, bands=4, threshold=0.7
-        ).collect()
-    }
-    assert before, "fixture must produce a cross pair"
-    n_rows = spark.read.parquet(idx).count()
 
-    rep = D.rebaseline_minhash_index(spark, idx)
-    assert rep["batches_folded"] == [0, 1]
-    parts = {p for p in os.listdir(idx) if p.startswith("ingest_batch=")}
-    assert parts == {"ingest_batch=-1"}
-    assert spark.read.parquet(idx).count() == n_rows
-    after = {
-        (r["id_a"], r["id_b"]): r["est_jaccard"]
-        for r in D.minhash_probe_increment(
-            spark, idx, probe_inc, k=16, bands=4, threshold=0.7
-        ).collect()
-    }
-    assert after == before
+    def probe(path):
+        return {
+            (r["id_a"], r["id_b"]): r["est_jaccard"]
+            for r in D.minhash_probe_increment(
+                spark, path, probe_inc, k=16, bands=4, threshold=0.7
+            ).collect()
+        }
+
+    before = probe(idx)
+    assert before, "fixture must produce a cross pair"
+    assert probe(rebased) == before
 
 
 def test_streaming_ingest_monitor_summaries(spark, tmp_path):
