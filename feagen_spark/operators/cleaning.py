@@ -15,12 +15,21 @@ applyInPandas group pass, never an all-pairs or global-sort shape:
 - ``chunk_text``: split documents into fixed-size character chunks with
   overlap (context-window prep). 1→N via sequence+explode, no Python;
   emits (doc_id, chunk_idx, chunk) with deterministic indices.
+
+Every content-hash operator takes ``method=``: 'md5' is the
+engine-portable oracle bridge of ``functions/hashing.py``, 'xxhash64'
+the faster JVM-only path; the samplers' keep/fold rule is
+``hashing.hash_bucket`` under both. On a NULL id, md5 gives a NULL
+bucket (no fold, row dropped) and xxhash64 the bucket of the seed
+alone. The ordering operators reject a NULL key (``_reject_nulls``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
+
+from ..functions.hashing import hash_bucket, md5_hex
 
 EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 # \s spelled out as RE2's class [ \t\n\f\r] (Java \s adds \v; the
@@ -48,24 +57,6 @@ def scrub_pii(
     return df.withColumn(out, t)
 
 
-def _hash_bucket(id_col: str, method: str, seed: int, mod: int) -> F.Column:
-    """Shared hash→bucket expression for hash_split and
-    stratified_sample (one definition so the DuckDB oracle bridge can
-    never drift between them): method='md5' is engine-portable (first 8
-    hex chars → uint32, seed ignored — portability means a fixed
-    function); method='xxhash64' is the faster JVM-only path."""
-    if method == "xxhash64":
-        return F.pmod(F.xxhash64(F.lit(seed), F.col(id_col)), F.lit(mod))
-    if method == "md5":
-        return F.pmod(
-            F.conv(
-                F.substring(F.md5(F.col(id_col).cast("string")), 1, 8), 16, 10
-            ).cast("long"),
-            F.lit(mod),
-        )
-    raise ValueError(f"unknown method {method!r}")
-
-
 def hash_split(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -83,11 +74,12 @@ def hash_split(
     method='xxhash64' (default) is the fast JVM path; method='md5' is
     engine-portable — any system with md5 (DuckDB, Postgres, Python)
     reproduces the identical assignment, at slightly higher hash cost.
-    md5 ignores ``seed`` (portability means a fixed function)."""
+    md5 ignores ``seed`` (portability means a fixed function) and
+    leaves a NULL id without a fold; xxhash64 gives it the seed's fold."""
     weights = weights or {"train": 90, "val": 5, "test": 5}
     if sum(weights.values()) != 100:
         raise ValueError(f"weights must sum to 100: {weights}")
-    bucket = _hash_bucket(id_col, method, seed, 100)
+    bucket = hash_bucket([F.col(id_col)], method, seed, 100)
     expr = None
     acc = 0
     for name, w in weights.items():
@@ -158,12 +150,13 @@ def stratified_sample(
     (one filter, no shuffle).
 
     method='md5' is engine-portable (first 8 hex chars of md5 →
-    uint32 — the repo's standard oracle bridge; ignores ``seed``);
-    method='xxhash64' is the faster JVM-only path."""
+    uint32 — the repo's standard oracle bridge; ignores ``seed``; a
+    NULL id is dropped); method='xxhash64' is the faster JVM-only path
+    (a NULL id hashes as the seed alone)."""
     bad = {k: v for k, v in fractions.items() if not 0.0 <= v <= 1.0}
     if bad:
         raise ValueError(f"fractions must be in [0, 1]: {bad}")
-    h = _hash_bucket(id_col, method, seed, 1_000_000)
+    h = hash_bucket([F.col(id_col)], method, seed, 1_000_000)
     thresholds = [
         (k, int(round(v * 1_000_000))) for k, v in sorted(fractions.items())
     ]
@@ -173,21 +166,24 @@ def stratified_sample(
     return df.where(h < thr)
 
 
-def _hash_bucket_multi(cols: list[F.Column], method: str, seed: int, mod: int) -> F.Column:
-    """Multi-column variant of ``_hash_bucket`` (same two methods, same
-    portability contract): method='md5' hashes the ':'-joined string
-    casts — any engine with md5 (DuckDB, Postgres, Python) reproduces
-    the identical bucket, which is what lets deterministic_negatives
-    carry a full value oracle; method='xxhash64' is the faster JVM path."""
-    if method == "xxhash64":
-        return F.pmod(F.xxhash64(F.lit(seed), *cols), F.lit(mod))
-    if method == "md5":
-        joined = F.concat_ws(":", *[c.cast("string") for c in cols])
-        return F.pmod(
-            F.conv(F.substring(F.md5(joined), 1, 8), 16, 10).cast("long"),
-            F.lit(mod),
+def _stratum_budgets(
+    df: DataFrame, strata_col: str, token_col: str, budgets: dict[str, int]
+) -> tuple[DataFrame, Column]:
+    """Shared head of the token-budget samplers: per-stratum token
+    totals (``__total``, one row per stratum) and the budget lookup
+    over them, a literal when-chain that is NULL for a stratum absent
+    from ``budgets``."""
+    if any(b < 0 for b in budgets.values()):
+        raise ValueError(f"budgets must be >= 0: {budgets}")
+    totals = df.groupBy(strata_col).agg(
+        F.sum(F.col(token_col).cast("double")).alias("__total")
+    )
+    bud = F.lit(None).cast("double")
+    for name, v in sorted(budgets.items()):
+        bud = F.when(F.col(strata_col) == F.lit(name), F.lit(float(v))).otherwise(
+            bud
         )
-    raise ValueError(f"unknown method {method!r}")
+    return totals, bud
 
 
 def sample_to_token_budget(
@@ -213,8 +209,8 @@ def sample_to_token_budget(
     ``stratified_sample`` — code-review r6), and the fraction join is
     a BROADCAST of it onto the corpus, followed by
     the same content-hash keep rule every sampler in this module uses
-    (``_hash_bucket``): bit-stable across runs, layouts, cluster sizes
-    and retries; adding rows to one stratum never resamples another.
+    (``hashing.hash_bucket``): bit-stable across runs, layouts,
+    cluster sizes and retries; adding rows to one stratum never resamples another.
 
     The budget is met in expectation over the hash draw (docs are kept
     whole); per-stratum realized tokens concentrate tightly for any
@@ -222,16 +218,7 @@ def sample_to_token_budget(
     ``keep_fraction`` audit column. The UPSAMPLING half of the mixture
     step (duplicating under-budget strata for multiple epochs) is
     ``repeat_to_token_budget``."""
-    if any(b < 0 for b in budgets.values()):
-        raise ValueError(f"budgets must be >= 0: {budgets}")
-    totals = df.groupBy(strata_col).agg(
-        F.sum(F.col(token_col).cast("double")).alias("__total")
-    )
-    bud = F.lit(None).cast("double")
-    for name, v in sorted(budgets.items()):
-        bud = F.when(F.col(strata_col) == F.lit(name), F.lit(float(v))).otherwise(
-            bud
-        )
+    totals, bud = _stratum_budgets(df, strata_col, token_col, budgets)
     frac = (
         totals.withColumn("__budget", bud)
         .where(F.col("__budget").isNotNull())  # absent stratum -> drop
@@ -246,7 +233,7 @@ def sample_to_token_budget(
             .alias("keep_fraction"),
         )
     )
-    h = _hash_bucket(id_col, method, seed, 1_000_000)
+    h = hash_bucket([F.col(id_col)], method, seed, 1_000_000)
     return (
         df.join(F.broadcast(frac), on=strata_col)
         .where(h < F.round(F.col("keep_fraction") * 1_000_000))
@@ -284,7 +271,7 @@ def repeat_to_token_budget(
     ``concat(id, '#', epoch)`` to ``pack_sequences``/
     ``deterministic_shuffle`` so copies land in different packed
     sequences and shuffle positions. The extra-copy decision is the
-    module's standard content-hash rule (``_hash_bucket``): bit-stable
+    module's standard content-hash rule (``hashing.hash_bucket``): bit-stable
     across runs, layouts, cluster sizes and retries; adding docs to a
     stratum only re-scales that stratum. ``max_epochs`` bounds the
     blow-up loudly (a budget 1000x a tiny stratum is almost always a
@@ -304,18 +291,9 @@ def repeat_to_token_budget(
     repeat factors, then a pure-JVM ``explode(sequence(0, n_copies-1))``
     — no Python, no driver collect, no skew added (copies of a doc
     stay in its partition until the next shuffle)."""
-    if any(b < 0 for b in budgets.values()):
-        raise ValueError(f"budgets must be >= 0: {budgets}")
+    totals, bud = _stratum_budgets(df, strata_col, token_col, budgets)
     if max_epochs < 1:
         raise ValueError("max_epochs must be >= 1")
-    totals = df.groupBy(strata_col).agg(
-        F.sum(F.col(token_col).cast("double")).alias("__total")
-    )
-    bud = F.lit(None).cast("double")
-    for name, v in sorted(budgets.items()):
-        bud = F.when(F.col(strata_col) == F.lit(name), F.lit(float(v))).otherwise(
-            bud
-        )
     factors = totals.select(
         strata_col,
         # repeat factor r >= 1.0: pass-through for absent budgets,
@@ -342,7 +320,7 @@ def repeat_to_token_budget(
             ).cast("double"),
         ).otherwise(F.col("__r")),
     )
-    h = _hash_bucket(id_col, method, seed, 1_000_000)
+    h = hash_bucket([F.col(id_col)], method, seed, 1_000_000)
     base = F.floor("__r").cast("int")
     frac = F.col("__r") - F.floor("__r")
     n_copies = base + (h < F.round(frac * 1_000_000)).cast("int")
@@ -401,10 +379,10 @@ def deterministic_negatives(
 
     ``method='md5'`` swaps every hash (bucket assignment both sides and
     the per-draw ranking) for the repo's engine-portable md5 bridge
-    (first 8 hex chars → uint32 for buckets; raw hex-string order for
-    ranking) — bit-identical in any engine with md5, which is what the
-    DuckDB value oracle runs on. 'xxhash64' (default) is the faster
-    JVM-only path.
+    (``hashing.hash_bucket`` for buckets; the raw ``md5_hex`` string
+    order of (anchor, draw, candidate) for ranking) — bit-identical in
+    any engine with md5, which is what the DuckDB value oracle runs
+    on. 'xxhash64' (default) is the faster JVM-only path.
     """
     if k < 1 or n_buckets < 1:
         raise ValueError("k and n_buckets must be >= 1")
@@ -412,9 +390,9 @@ def deterministic_negatives(
         raise ValueError(f"unknown method {method!r}")
     cand = corpus.where(F.col(corpus_id).isNotNull()).select(
         F.col(corpus_id).alias("neg_id"),
-        _hash_bucket_multi(
-            [F.col(corpus_id)], method, seed, n_buckets
-        ).alias("__bkt"),
+        hash_bucket([F.col(corpus_id)], method, seed, n_buckets).alias(
+            "__bkt"
+        ),
     )
     probes = (
         anchors.where(F.col(anchor_id).isNotNull())
@@ -425,7 +403,7 @@ def deterministic_negatives(
         )
         .withColumn(
             "__bkt",
-            _hash_bucket_multi(
+            hash_bucket(
                 [F.col("__anchor"), F.col("draw")], method, seed + 1, n_buckets
             ),
         )
@@ -434,14 +412,7 @@ def deterministic_negatives(
     if exclude_self:
         joined = joined.where(F.col("neg_id") != F.col("__anchor"))
     if method == "md5":
-        rank_h = F.md5(
-            F.concat_ws(
-                ":",
-                F.col("__anchor").cast("string"),
-                F.col("draw").cast("string"),
-                F.col("neg_id").cast("string"),
-            )
-        )
+        rank_h = md5_hex([F.col("__anchor"), F.col("draw"), F.col("neg_id")])
     else:
         rank_h = F.xxhash64(F.lit(seed + 2), "__anchor", "draw", "neg_id")
     # top-1 per (anchor, draw) via min(struct) — NOT a row_number window
@@ -700,6 +671,28 @@ def materialize_packed_sequences(
     return out
 
 
+def _reject_nulls(df: DataFrame, col: str, message: str, *also: str) -> Column:
+    """``col``, or a loud ``raise_error(message)`` where it or any
+    column in ``also`` is NULL — the key guard of the operators whose
+    order or join-back a NULL key would silently break."""
+    is_null = F.col(col).isNull()
+    for name in also:
+        is_null = is_null | F.col(name).isNull()
+    return F.when(
+        is_null, F.raise_error(F.lit(message)).cast(df.schema[col].dataType)
+    ).otherwise(F.col(col))
+
+
+def _order_key(guarded: Column, method: str, seed: int) -> Column:
+    """Sort key hash(seed, id) of the ordering operators: the md5 hex
+    of '{seed}:{id}' (the portable bridge) or xxhash64(seed, id)."""
+    if method == "md5":
+        return md5_hex([F.lit(seed), guarded])
+    if method == "xxhash64":
+        return F.xxhash64(F.lit(seed), guarded)
+    raise ValueError(f"unknown method {method!r}")
+
+
 def gumbel_topk(
     df: DataFrame,
     score_col: str,
@@ -739,13 +732,8 @@ def gumbel_topk(
     if k is not None and k < 1:
         raise ValueError("k must be >= 1")
     cid = F.col(id_col)
-    guarded = F.when(
-        cid.isNull(),
-        F.raise_error(F.lit("gumbel_topk: NULL id")).cast(
-            df.schema[id_col].dataType
-        ),
-    ).otherwise(cid)
-    h = _hash_bucket_multi([F.lit(seed), guarded], method, seed, 1_000_000)
+    guarded = _reject_nulls(df, id_col, "gumbel_topk: NULL id")
+    h = hash_bucket([F.lit(seed), guarded], method, seed, 1_000_000)
     u = (h.cast("double") + F.lit(0.5)) / F.lit(1_000_000.0)
     g = -F.log(-F.log(u))
     out = df.where(F.col(score_col).isNotNull()).withColumn(
@@ -793,8 +781,9 @@ def deterministic_shuffle(
     consumes the order directly (``df.write`` preserves per-file
     order; file names enumerate the partition order).
 
-    method='md5' is the engine-portable bridge (key =
-    md5('{seed}:{id}') hex — any engine reproduces the permutation);
+    method='md5' is the engine-portable bridge (key = the
+    ``hashing.md5_hex`` digest of '{seed}:{id}' — any engine reproduces
+    the permutation);
     'xxhash64' is the faster JVM-only default. NULL ids are rejected
     (they would sort together arbitrarily and break the contract).
 
@@ -803,18 +792,9 @@ def deterministic_shuffle(
     ``hash_split``, which is per-row stable). Pin the corpus snapshot
     first, then shuffle."""
     cid = F.col(id_col)
-    guarded = F.when(
-        cid.isNull(),
-        F.raise_error(F.lit("deterministic_shuffle: NULL id")).cast(
-            df.schema[id_col].dataType
-        ),
-    ).otherwise(cid)
-    if method == "md5":
-        key = F.md5(F.concat(F.lit(f"{seed}:"), guarded.cast("string")))
-    elif method == "xxhash64":
-        key = F.xxhash64(F.lit(seed), guarded)
-    else:
-        raise ValueError(f"unknown method {method!r}")
+    key = _order_key(
+        _reject_nulls(df, id_col, "deterministic_shuffle: NULL id"), method, seed
+    )
     keyed = df.withColumn(key_col, key)
     # Explicit partition count (REPARTITION_BY_NUM): ranks are
     # layout-invariant (the checkpoint pins one numbering and rank =
@@ -852,23 +832,23 @@ def _numbered(sorted_df: DataFrame) -> DataFrame:
     )
 
 
-def _guard_33bit(counts: DataFrame, op_name: str) -> DataFrame:
+def _guard_33bit(counts: DataFrame, col: str, op_name: str) -> DataFrame:
     """Mono-id ordinals live in 33 bits: a partition at >= 2^33 rows
     would overflow into the pid bits and SILENTLY corrupt ranks — the
-    already-computed counts branch detects that for free and fails
+    already-computed row count ``col`` detects that for free and fails
     loudly instead (code-review r6; the first overflowing partition
     always surfaces as an exact-2^33 count)."""
     return counts.withColumn(
-        "__n",
+        col,
         F.when(
-            F.col("__n") >= F.lit(2**33),
+            F.col(col) >= F.lit(2**33),
             F.raise_error(
                 F.lit(
                     f"{op_name}: a range partition holds >= 2^33 "
                     "rows — raise n_partitions"
                 )
             ).cast("long"),
-        ).otherwise(F.col("__n")),
+        ).otherwise(F.col(col)),
     )
 
 
@@ -882,6 +862,7 @@ def _contiguous_rank(
     ranked = _numbered(sorted_df)
     counts = _guard_33bit(
         ranked.groupBy("__pid").agg(F.count(F.lit(1)).alias("__n")),
+        "__n",
         op_name,
     )
     # the offsets window runs over n_partitions rows — single tiny task
@@ -948,18 +929,10 @@ def interleave_strata(
     property of the WHOLE corpus — adding rows to a stratum re-spaces
     that stratum. Pin the corpus snapshot first."""
     cid = F.col(id_col)
-    null_guard = F.when(
-        cid.isNull() | F.col(strata_col).isNull(),
-        F.raise_error(
-            F.lit(f"interleave_strata: NULL {id_col}/{strata_col}")
-        ).cast(df.schema[id_col].dataType),
-    ).otherwise(cid)
-    if method == "md5":
-        key = F.md5(F.concat(F.lit(f"{seed}:"), null_guard.cast("string")))
-    elif method == "xxhash64":
-        key = F.xxhash64(F.lit(seed), null_guard)
-    else:
-        raise ValueError(f"unknown method {method!r}")
+    null_guard = _reject_nulls(
+        df, id_col, f"interleave_strata: NULL {id_col}/{strata_col}", strata_col
+    )
+    key = _order_key(null_guard, method, seed)
     if not n_partitions:
         n_partitions = int(
             df.sparkSession.conf.get("spark.sql.shuffle.partitions")
@@ -968,12 +941,7 @@ def interleave_strata(
     if order_col is not None:
         keyed = keyed.withColumn(
             order_col,
-            F.when(
-                F.col(order_col).isNull(),
-                F.raise_error(
-                    F.lit(f"interleave_strata: NULL {order_col}")
-                ).cast(df.schema[order_col].dataType),
-            ).otherwise(F.col(order_col)),
+            _reject_nulls(df, order_col, f"interleave_strata: NULL {order_col}"),
         )
     strata = F.col(strata_col)
     # within-stratum sort: content hash (epoch shuffle) or the
@@ -999,6 +967,7 @@ def interleave_strata(
             # from the stratum's FIRST ordinal there
             F.min("__local_rank").alias("__minl"),
         ),
+        "__n",
         "interleave_strata",
     )
     # the per-(pid, stratum) guard above cannot catch a >=2^33-row
@@ -1007,18 +976,10 @@ def interleave_strata(
     # where() keeps the guard column alive through optimization
     w_pid = Window.partitionBy("__pid")
     side = (
-        side.withColumn("__ptot", F.sum("__n").over(w_pid))
-        .withColumn(
+        _guard_33bit(
+            side.withColumn("__ptot", F.sum("__n").over(w_pid)),
             "__ptot",
-            F.when(
-                F.col("__ptot") >= F.lit(2**33),
-                F.raise_error(
-                    F.lit(
-                        "interleave_strata: a range partition holds >= "
-                        "2^33 rows — raise n_partitions"
-                    )
-                ).cast("long"),
-            ).otherwise(F.col("__ptot")),
+            "interleave_strata",
         )
         .where(F.col("__ptot") >= 0)
         .drop("__ptot")
@@ -1090,12 +1051,9 @@ def temperature_budgets(
         raise ValueError(f"temperature must be > 0: {temperature}")
     if total_budget < 0:
         raise ValueError(f"total_budget must be >= 0: {total_budget}")
-    guarded = F.when(
-        F.col(strata_col).isNull(),
-        F.raise_error(
-            F.lit(f"temperature_budgets: NULL {strata_col}")
-        ).cast(df.schema[strata_col].dataType),
-    ).otherwise(F.col(strata_col))
+    guarded = _reject_nulls(
+        df, strata_col, f"temperature_budgets: NULL {strata_col}"
+    )
     totals = (
         df.select(guarded.alias(strata_col), token_col)
         .groupBy(strata_col)

@@ -15,10 +15,14 @@ Scale design (the point of each choice):
   filtering in SpGFF/ANN literature). Ground truth for the
   probabilistic variants below.
 - ``minhash_lsh_pairs``: MinHash signatures (k Kirsch-Mitzenmacher mins
-  from ONE xxhash64 per shingle, computed in ONE groupBy), banded LSH bucket
-  join so candidate generation never compares all pairs; candidates are
-  then verified by signature-estimated Jaccard. This is the 100TB path:
-  cost is linear in corpus + bucket collisions.
+  from ONE xxhash64 — or, with ``hash_mode='md5'``, one md5 read by the
+  ``functions/hashing.py`` bridge — per shingle, computed in ONE
+  groupBy), banded LSH bucket join so candidate generation never
+  compares all pairs; candidates are then verified by
+  signature-estimated Jaccard. This is the 100TB path: cost is linear
+  in corpus + bucket collisions. The pair join, the persisted index,
+  the increment probe and the streaming loop all band through
+  ``minhash_band_rows``.
 - ``add_simhash``: 64-bit SimHash over whitespace tokens,
   Arrow-vectorized (numpy bit matrix per batch); near-dups are
   signatures at a small Hamming distance.
@@ -34,6 +38,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.functions import pandas_udf
+
+from ..functions.hashing import hex_u32
 
 
 def _norm(text_col: str) -> F.Column:
@@ -641,8 +647,9 @@ def minhash_signatures(
 
     ``hash_mode``: ``"xxh64"`` (default, fastest JVM hash) or ``"md5"``
     — engine-portable: h1/h2 are the first/second 8 hex chars of
-    md5(seed || shingle), so an external engine (the DuckDB oracle, a
-    Trino/Flink consumer) can reproduce signatures bit-for-bit.
+    md5(seed || shingle) read by the bridge's ``hashing.hex_u32``, so
+    an external engine (the DuckDB oracle, a Trino/Flink consumer) can
+    reproduce signatures bit-for-bit.
 
     Every shingle OCCURRENCE is hashed: hashing the distinct shingle
     domain once and broadcast-joining (h1, h2) back lost its A/B in r6
@@ -651,9 +658,10 @@ def minhash_signatures(
     broadcast probe costs what hashing 3-char strings saves."""
     sh = shingles(df, n=n, id_col=id_col, text_col=text_col)
     if hash_mode == "md5":
+        # seed || shingle with no separator: the oracle's md5('42' || shingle)
         hx = F.md5(F.concat(F.lit(str(seed)), F.col("shingle")))
-        h1 = F.conv(F.substring(hx, 1, 8), 16, 10).cast("long")
-        h2 = F.conv(F.substring(hx, 9, 8), 16, 10).cast("long")
+        h1 = hex_u32(hx)
+        h2 = hex_u32(hx, 9)
     elif hash_mode == "xxh64":
         base = F.xxhash64(F.lit(seed), F.col("shingle"))
         h1 = F.shiftrightunsigned(base, 32)
@@ -704,13 +712,6 @@ def minhash_lsh_pairs(
     capping is the standard LSH-at-scale guard (same role as max_df in
     ngram_jaccard_pairs). Pass None to disable.
     """
-    if k % bands != 0:
-        raise ValueError("k must be divisible by bands")
-    sig = minhash_signatures(
-        df, k=k, n=n, id_col=id_col, text_col=text_col, seed=seed,
-        hash_mode=hash_mode,
-    )
-
     # carry the signature THROUGH the band explode: the candidate join then
     # yields (sig_a, sig_b) directly — no join-back to the signature frame.
     # Shuffle payload grows by k longs per band row; for k=32/bands=8
@@ -722,18 +723,14 @@ def minhash_lsh_pairs(
     # computation). Lazy, so plan construction stays action-free; the
     # pinned frame is (rows × bands) signature rows, the same order of
     # bytes the self-join shuffles anyway.
-    band_rows = _band_rows(sig, k, bands, id_col).localCheckpoint(
-        eager=False
-    )
+    band_rows = minhash_band_rows(
+        df, k=k, bands=bands, n=n, id_col=id_col, text_col=text_col,
+        seed=seed, hash_mode=hash_mode,
+    ).localCheckpoint(eager=False)
     if max_bucket is not None:
-        hot = (
-            band_rows.groupBy("band", "bucket")
-            .agg(F.count(F.lit(1)).alias("bn"))
-            .where(F.col("bn") > max_bucket)
-            .select("band", "bucket")
-        )
         band_rows = band_rows.join(
-            F.broadcast(hot), on=["band", "bucket"], how="left_anti"
+            _hot_buckets(band_rows, max_bucket), on=["band", "bucket"],
+            how="left_anti",
         )
     a = band_rows.alias("a")
     b = band_rows.alias("b")
@@ -758,11 +755,28 @@ def minhash_lsh_pairs(
     return est
 
 
-def _band_rows(sig: DataFrame, k: int, bands: int, id_col: str) -> DataFrame:
-    """Band-key explode shared by the one-shot pair join and the
-    persisted-index path: bucket = xxhash64(band_idx, signature slice).
-    ONE definition, so an index written yesterday and an increment
-    banded today can never disagree on bucket keys."""
+def minhash_band_rows(
+    df: DataFrame,
+    k: int = 32,
+    bands: int = 8,
+    n: int = 3,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    seed: int = 42,
+    hash_mode: str = "xxh64",
+) -> DataFrame:
+    """One (id, signature, band, bucket) row per (doc, band) of
+    ``df``, bucket = xxhash64(band_idx, signature slice of k/bands
+    positions). ONE definition for every MinHash consumer, so an index
+    written yesterday and an increment banded today can never disagree
+    on bucket keys. Raises ``ValueError`` unless ``bands`` divides
+    ``k``."""
+    if k % bands != 0:
+        raise ValueError("k must be divisible by bands")
+    sig = minhash_signatures(
+        df, k=k, n=n, id_col=id_col, text_col=text_col, seed=seed,
+        hash_mode=hash_mode,
+    )
     r = k // bands
     return sig.select(
         id_col,
@@ -777,6 +791,18 @@ def _band_rows(sig: DataFrame, k: int, bands: int, id_col: str) -> DataFrame:
                 ]
             )
         ).alias("band", "bucket"),
+    )
+
+
+def _hot_buckets(band_keys: DataFrame, max_bucket: int) -> DataFrame:
+    """Broadcast (band, bucket) keys with more than ``max_bucket`` rows
+    in ``band_keys`` — the hot-bucket cap (B members yield B²
+    candidates); callers left-anti-join it away."""
+    return F.broadcast(
+        band_keys.groupBy("band", "bucket")
+        .agg(F.count(F.lit(1)).alias("bn"))
+        .where(F.col("bn") > max_bucket)
+        .select("band", "bucket")
     )
 
 
@@ -824,13 +850,10 @@ def write_minhash_index(
     appends per-micro-batch partitions into — partition depth must be
     uniform under one table root, so a streamed index must be
     bootstrapped with this parameter set."""
-    if k % bands != 0:
-        raise ValueError("k must be divisible by bands")
-    sig = minhash_signatures(
-        df, k=k, n=n, id_col=id_col, text_col=text_col, seed=seed,
-        hash_mode=hash_mode,
+    rows = minhash_band_rows(
+        df, k=k, bands=bands, n=n, id_col=id_col, text_col=text_col,
+        seed=seed, hash_mode=hash_mode,
     )
-    rows = _band_rows(sig, k, bands, id_col)
     part_by: list[str] | str = "band"
     if ingest_batch is not None:
         rows = rows.withColumn("ingest_batch", F.lit(int(ingest_batch)))
@@ -851,8 +874,6 @@ def minhash_probe_increment(
     seed: int = 42,
     max_bucket: int | None = 500,
     hash_mode: str = "xxh64",
-    tag_kind: bool = False,
-    index_where: F.Column | None = None,
 ) -> DataFrame:
     """Incremental near-dup detection: pairs (id_a, id_b, est_jaccard)
     touching at least one INCREMENT doc, against a corpus indexed by
@@ -876,33 +897,20 @@ def minhash_probe_increment(
 
     Contract: increment ids must be disjoint from corpus ids (same
     single-id-space rule as ``deterministic_negatives``); a shared id
-    would silently self-pair and be dropped by the a<b guard.
-
-    ``tag_kind=True`` adds a ``pair_kind`` column ('cross' = one member
-    indexed, 'intra' = both in the increment) — the keep-policy input
-    for :func:`feagen_spark.streaming.incremental.streaming_ingest_dedup`.
-    ``index_where`` filters the index scan (e.g. on a partition column
-    such as ``ingest_batch`` — replay safety for streaming appenders);
-    partition pruning makes it free."""
-    if k % bands != 0:
-        raise ValueError("k must be divisible by bands")
-    inc_sig = minhash_signatures(
-        increment, k=k, n=n, id_col=id_col, text_col=text_col, seed=seed,
-        hash_mode=hash_mode,
-    )
+    would silently self-pair and be dropped by the a<b guard."""
     # pin the increment's banded signatures: FOUR consumers below (the
     # cross-join probe, both sides of the self-join, the hot-bucket
     # count) would otherwise re-run the shingle→signature aggregate
     # wherever Catalyst fails to reuse the exchange. The increment is
     # bounded by contract (it gets broadcast), so the checkpoint is a
     # few MB; lazy, so plan-building stays action-free.
-    inc_bands = _band_rows(inc_sig, k, bands, id_col).localCheckpoint(
-        eager=False
-    )
+    inc_bands = minhash_band_rows(
+        increment, k=k, bands=bands, n=n, id_col=id_col, text_col=text_col,
+        seed=seed, hash_mode=hash_mode,
+    ).localCheckpoint(eager=False)
     return probe_band_rows(
         spark, index_path, inc_bands, k=k, threshold=threshold,
-        id_col=id_col, max_bucket=max_bucket, tag_kind=tag_kind,
-        index_where=index_where,
+        id_col=id_col, max_bucket=max_bucket,
     )
 
 
@@ -924,20 +932,25 @@ def probe_band_rows(
     batch twice per trigger was the cost the split removes,
     code-review r6). ``inc_bands`` must carry (id, signature, band,
     bucket) produced by the same (k, bands, n, seed, hash_mode) as the
-    index, ideally pinned (localCheckpoint) by the caller."""
+    index (``minhash_band_rows``), ideally pinned (localCheckpoint) by
+    the caller.
+
+    ``tag_kind=True`` adds a ``pair_kind`` column ('cross' = one member
+    indexed, 'intra' = both in the increment) — the keep-policy input
+    for :func:`feagen_spark.streaming.incremental.streaming_ingest_dedup`.
+    ``index_where`` filters the index scan (e.g. on a partition column
+    such as ``ingest_batch`` — replay safety for streaming appenders);
+    partition pruning makes it free."""
     idx = spark.read.parquet(index_path)
     if index_where is not None:
         idx = idx.where(index_where)
     if max_bucket is not None:
-        counts = (
-            idx.select("band", "bucket")
-            .unionByName(inc_bands.select("band", "bucket"))
-            .groupBy("band", "bucket")
-            .agg(F.count(F.lit(1)).alias("bn"))
-            .where(F.col("bn") > max_bucket)
-            .select("band", "bucket")
+        hot = _hot_buckets(
+            idx.select("band", "bucket").unionByName(
+                inc_bands.select("band", "bucket")
+            ),
+            max_bucket,
         )
-        hot = F.broadcast(counts)
         idx = idx.join(hot, on=["band", "bucket"], how="left_anti")
         inc_bands = inc_bands.join(hot, on=["band", "bucket"], how="left_anti")
     probe = F.broadcast(

@@ -2,9 +2,9 @@
 
 - ``cosine_topk``: brute-force exact baseline. The query set is small by
   assumption → ``broadcast`` crossJoin (no shuffle of the big side); the
-  dot product runs JVM-side via ``zip_with``+``aggregate`` in doubles;
-  top-k via one window per query. At 100TB this is a single map stage
-  over the corpus + a k-row-per-query reduce.
+  dot product runs JVM-side via ``_dot`` (``zip_with``+``aggregate`` in
+  doubles); top-k via one window per query. At 100TB this is a single
+  map stage over the corpus + a k-row-per-query reduce.
 - ``lsh_topk``: the scale path — random-hyperplane LSH. Deterministic
   planes from a seeded numpy generator are broadcast inside an
   Arrow UDF (one matmul per batch); candidates =
@@ -23,6 +23,10 @@
 Every vector crossing into Python (signer, quantizer, semantic-dedup
 candidates) reads its Arrow ``list<float|double>`` column through one
 zero-copy list→matrix helper, ``_vec_matrix``.
+
+Scoring is written once: ``_dot``, ``_norm2`` and ``_cos_of`` (the
+zero-norm-guarded ratio) build ``_cos``, ``_score`` and the near-dup
+pair cosine; ``_hyperplane_band`` is the one LSH band key.
 """
 
 from __future__ import annotations
@@ -35,37 +39,39 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.functions import arrow_udf
 from pyspark.sql.window import Window
 
+from ..functions.hashing import md5_hex
 
-def _cos(a, b) -> F.Column:
-    """Exact cosine similarity between two array columns, JVM-side, all
-    math in double (deterministic left-fold sum order)."""
-    dot = F.aggregate(
+
+def _dot(a, b) -> F.Column:
+    """Dot product of two array columns, JVM-side, all math in double
+    (deterministic left-fold sum order)."""
+    return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),
         lambda acc, v: acc + v,
     )
-    na = F.sqrt(
-        F.aggregate(
-            a, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double")
-        )
-    )
-    nb = F.sqrt(
-        F.aggregate(
-            b, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double")
-        )
-    )
-    return F.when((na == 0) | (nb == 0), F.lit(0.0)).otherwise(dot / (na * nb))
 
 
 def _norm2(col) -> F.Column:
-    """L2 norm of an array column — the exact fold `_cos` runs per side,
-    exposed so callers can precompute it ONCE per row instead of once
-    per candidate pair (r7)."""
+    """L2 norm of an array column (double left fold) — the fold `_cos`
+    runs per side, exposed so callers can precompute it ONCE per row
+    instead of once per candidate pair (r7)."""
     return F.sqrt(
         F.aggregate(
             col, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double")
         )
     )
+
+
+def _cos_of(dot, na, nb) -> F.Column:
+    """Cosine from a dot product and the two L2 norms; 0.0 when either
+    norm is zero."""
+    return F.when((na == 0) | (nb == 0), F.lit(0.0)).otherwise(dot / (na * nb))
+
+
+def _cos(a, b) -> F.Column:
+    """Exact cosine similarity between two array columns, JVM-side."""
+    return _cos_of(_dot(a, b), _norm2(a), _norm2(b))
 
 
 def _score(
@@ -74,36 +80,19 @@ def _score(
     vec_col,
     query_id_col,
     query_vec_col,
-    na_col: str | None = None,
-    nb_col: str | None = None,
+    na_col: str,
+    nb_col: str,
 ):
     """Exact cosine per candidate, rounded to 6dp (oracle alignment).
     ONE definition so the scoring conventions cannot drift between the
-    brute-force / LSH / IVF paths. When the caller precomputed the two
-    L2 norms (``na_col``/``nb_col``, via ``_norm2`` — r7: a candidate
-    set repeats each row ~|queries| times, and the interpreted
-    higher-order fold was 2/3 of the per-pair cost), only the dot fold
-    runs per pair; the arithmetic — same fold values, same
-    dot/(na·nb), same zero-norm guard — is bit-identical to `_cos`."""
-    if na_col is None or nb_col is None:
-        return cands.select(
-            query_id_col,
-            id_col,
-            F.round(_cos(F.col(vec_col), F.col(query_vec_col)), 6).alias(
-                "cosine"
-            ),
-        )
-    dot = F.aggregate(
-        F.zip_with(
-            F.col(vec_col),
-            F.col(query_vec_col),
-            lambda x, y: x.cast("double") * y.cast("double"),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
+    brute-force / LSH / IVF paths. The caller precomputes the two L2
+    norms (``na_col``/``nb_col``, via ``_norm2`` — r7: a candidate set
+    repeats each row ~|queries| times, and the interpreted higher-order
+    fold was 2/3 of the per-pair cost), so only the dot fold runs per
+    pair; the arithmetic is `_cos`'s."""
+    cos = _cos_of(
+        _dot(F.col(vec_col), F.col(query_vec_col)), F.col(na_col), F.col(nb_col)
     )
-    na, nb = F.col(na_col), F.col(nb_col)
-    cos = F.when((na == 0) | (nb == 0), F.lit(0.0)).otherwise(dot / (na * nb))
     return cands.select(
         query_id_col, id_col, F.round(cos, 6).alias("cosine")
     )
@@ -129,8 +118,8 @@ def _topk_rerank(
     vec_col: str,
     query_id_col: str,
     query_vec_col: str,
-    na_col: str | None = None,
-    nb_col: str | None = None,
+    na_col: str,
+    nb_col: str,
 ) -> DataFrame:
     """Score + rank in one step (brute-force / IVF paths, whose
     candidate sets are already pair-distinct)."""
@@ -219,6 +208,24 @@ def _make_signer(dim: int, n_planes: int, seed: int):
     return sign_bits
 
 
+def _hyperplane_band(sig, n_planes: int, bands: int) -> F.Column:
+    """(band, bucket) posexplode of a hyperplane signature: band b's
+    bucket is bits [b·r, (b+1)·r), r = n_planes / bands. Raises
+    ``ValueError`` unless ``bands`` divides ``n_planes``."""
+    if n_planes % bands != 0:
+        raise ValueError("n_planes must be divisible by bands")
+    r = n_planes // bands
+    mask = (1 << r) - 1
+    return F.posexplode(
+        F.array(
+            *[
+                F.shiftrightunsigned(sig, b * r).bitwiseAND(F.lit(mask))
+                for b in range(bands)
+            ]
+        )
+    ).alias("band", "bucket")
+
+
 def lsh_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -238,8 +245,8 @@ def lsh_topk(
 
     Pass ``dim`` (the embedding length) to keep plan construction
     action-free; omitting it falls back to a 1-row sniff job."""
-    if n_planes % bands != 0:
-        raise ValueError("n_planes must be divisible by bands")
+    c_band = _hyperplane_band(F.col("sig"), n_planes, bands)
+    q_band = _hyperplane_band(F.col("qsig"), n_planes, bands)
     if dim is None:
         dim = len(corpus.select(vec_col).first()[0])
     signer = _make_signer(dim, n_planes, seed)
@@ -256,34 +263,8 @@ def lsh_topk(
         _norm2(F.col(query_vec_col)).alias("__nb"),
         signer(F.col(query_vec_col)).alias("qsig"),
     )
-    r = n_planes // bands
-    mask = (1 << r) - 1
-    c_bands = c_sig.select(
-        id_col,
-        vec_col,
-        "__na",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftrightunsigned(F.col("sig"), b * r).bitwiseAND(F.lit(mask))
-                    for b in range(bands)
-                ]
-            )
-        ).alias("band", "bucket"),
-    )
-    q_bands = q_sig.select(
-        query_id_col,
-        query_vec_col,
-        "__nb",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftrightunsigned(F.col("qsig"), b * r).bitwiseAND(F.lit(mask))
-                    for b in range(bands)
-                ]
-            )
-        ).alias("band", "bucket"),
-    )
+    c_bands = c_sig.select(id_col, vec_col, "__na", c_band)
+    q_bands = q_sig.select(query_id_col, query_vec_col, "__nb", q_band)
     # SCORE, then distinct: cosine is deterministic per (query, cand)
     # pair (same left-fold order every time), so a pair colliding in
     # several bands re-scores redundantly map-side but the distinct
@@ -473,7 +454,9 @@ def cosine_near_dup_pairs(
 ) -> DataFrame:
     """Embedding near-duplicate pairs (id_a < id_b, cosine >= threshold)
     via banded hyperplane-LSH candidates + exact verify. Pass ``dim`` to
-    avoid the 1-row dimension-sniff job at plan-build time."""
+    avoid the 1-row dimension-sniff job at plan-build time. ``bands``
+    must divide ``n_planes``."""
+    band = _hyperplane_band(F.col("sig"), n_planes, bands)
     if dim is None:
         dim = len(corpus.select(vec_col).first()[0])
     signer = _make_signer(dim, n_planes, seed)
@@ -483,24 +466,10 @@ def cosine_near_dup_pairs(
         _norm2(F.col(vec_col)).alias("__n"),
         signer(F.col(vec_col)).alias("sig"),
     )
-    r = n_planes // bands
-    mask = (1 << r) - 1
     # pin (r7): the a/b self-join would otherwise run the signer
     # Arrow UDF and the norm fold once PER SIDE
     sig = sig.localCheckpoint(eager=False)
-    bands_df = sig.select(
-        id_col,
-        vec_col,
-        "__n",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftrightunsigned(F.col("sig"), b * r).bitwiseAND(F.lit(mask))
-                    for b in range(bands)
-                ]
-            )
-        ).alias("band", "bucket"),
-    )
+    bands_df = sig.select(id_col, vec_col, "__n", band)
     a, b = bands_df.alias("a"), bands_df.alias("b")
     # Score AND threshold BEFORE the cross-band distinct (the MinHash
     # pattern, dedup.py score-then-dedup; VERDICT r3 #1): cosine is
@@ -510,18 +479,10 @@ def cosine_near_dup_pairs(
     # multiple bands is map-side CPU, which is the cheap currency.
     # precomputed norms (r7, same values as the _cos folds): only the
     # dot fold runs per candidate pair
-    dot = F.aggregate(
-        F.zip_with(
-            F.col(f"a.{vec_col}"),
-            F.col(f"b.{vec_col}"),
-            lambda x, y: x.cast("double") * y.cast("double"),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    na, nb = F.col("a.__n"), F.col("b.__n")
-    pair_cos = F.when((na == 0) | (nb == 0), F.lit(0.0)).otherwise(
-        dot / (na * nb)
+    pair_cos = _cos_of(
+        _dot(F.col(f"a.{vec_col}"), F.col(f"b.{vec_col}")),
+        F.col("a.__n"),
+        F.col("b.__n"),
     )
     return (
         a.join(b, on=["band", "bucket"])
@@ -597,8 +558,8 @@ def seed_centroids(
     vec_col: str = "embedding",
 ) -> np.ndarray:
     """Deterministic, engine-portable centroid init: the ``n_centroids``
-    vectors whose ``md5(id)`` hashes sort first (ties by id), L2
-    normalized, in that hash order — so centroid j is a pure function of
+    vectors whose ``md5(id)`` hashes (the bridge's ``hashing.md5_hex``)
+    sort first (ties by id), L2 normalized, in that hash order — so centroid j is a pure function of
     the corpus ids. A zero-iteration "clustering" seeded this way is
     exactly recomputable in ANSI SQL (row_number over md5 order), which
     is the oracle bridge :func:`semantic_dedup`'s driver entry uses; for
@@ -607,7 +568,7 @@ def seed_centroids(
     same class as the k-means sample."""
     rows = (
         corpus.select(id_col, vec_col)
-        .orderBy(F.md5(F.col(id_col).cast("string")), F.col(id_col))
+        .orderBy(md5_hex([F.col(id_col)]), F.col(id_col))
         .limit(n_centroids)
         .collect()
     )  # slow-path-ok: bounded by .limit(n_centroids) above

@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from ..functions.hashing import hash_bucket, hex_u32, md5_hex
+
 # Tiny deterministic stopword lists for the heuristic scorers. These are
 # fixed vocabulary, not a linguistic claim — the oracle uses the same sets.
 STOPWORDS_EN = ("the", "and", "of", "to", "a", "in", "is", "it", "that", "for")
@@ -339,12 +341,10 @@ def _hashed_grams(
 ) -> DataFrame:
     """(id, bucket) feature stream for dsir_logweight: whitespace
     unigrams (the shared ``_ws_tokens`` definition) plus optional word
-    bigrams, each hashed into ``n_buckets`` via the repo's standard
-    md5/xxhash64 bridge. One map-only projection + one explode — no
-    shuffle; gram strings never leave the map stage (only the hashed
-    bucket id is emitted)."""
-    from .cleaning import _hash_bucket_multi
-
+    bigrams, each hashed into ``n_buckets`` by the repo's standard
+    md5/xxhash64 bucket rule (``hashing.hash_bucket``). One map-only
+    projection + one explode — no shuffle; gram strings never leave
+    the map stage (only the hashed bucket id is emitted)."""
     toks = _ws_tokens(F.col(text_col))
     grams = toks
     if use_bigrams:
@@ -364,9 +364,7 @@ def _hashed_grams(
     out = df.select(F.col(id_col), F.explode(grams).alias("__gram"))
     return out.select(
         id_col,
-        _hash_bucket_multi(
-            [F.col("__gram")], method, seed, n_buckets
-        ).alias("__bkt"),
+        hash_bucket([F.col("__gram")], method, seed, n_buckets).alias("__bkt"),
     )
 
 
@@ -526,24 +524,24 @@ def hash_tokenize(
     Python workers, no shuffle, whole-stage codegen). Tokenization is
     the shared ``_ws_tokens`` definition (lower/trim/RE2-whitespace),
     so counts line up with ``add_token_count`` family. method='md5' is
-    the engine-portable bridge (first 8 hex chars → uint32 mod vocab,
+    the engine-portable bridge (``hashing.hex_u32(md5_hex(token))`` —
+    the first 8 hex chars of md5(token) as a uint32 — mod vocab,
     reproducible in any SQL engine); 'xxhash64' is the faster JVM
-    default. Ids are non-negative; NULL text yields NULL."""
+    default (the unseeded ``xxhash64(token)`` mod vocab). Ids are
+    non-negative; NULL text yields NULL."""
     if vocab_size < 2 or vocab_size > 2**31 - 1:
         raise ValueError(f"vocab_size out of range: {vocab_size}")
     toks = _ws_tokens(F.col(text_col))
     if method == "md5":
-        tid = lambda t: F.pmod(  # noqa: E731
-            F.conv(F.substring(F.md5(t), 1, 8), 16, 10).cast("long"),
-            F.lit(vocab_size),
-        ).cast("int")
+        h = lambda t: hex_u32(md5_hex([t]))  # noqa: E731
     elif method == "xxhash64":
-        tid = lambda t: F.pmod(  # noqa: E731
-            F.xxhash64(t), F.lit(vocab_size)
-        ).cast("int")
+        h = F.xxhash64
     else:
         raise ValueError(f"unknown method {method!r}")
-    return df.withColumn(out_col, F.transform(toks, tid))
+    return df.withColumn(
+        out_col,
+        F.transform(toks, lambda t: F.pmod(h(t), F.lit(vocab_size)).cast("int")),
+    )
 
 
 def add_gopher_flags(

@@ -221,6 +221,9 @@ def streaming_ingest_dedup(
 
     Contract: ``id_col`` must be one non-null id space across corpus
     and all batches (shared ids would self-pair and silently vanish).
+    The MinHash config is checked when the writer is built: ``bands``
+    must divide ``k`` (``ValueError`` otherwise), the same rule
+    ``dedup.write_minhash_index`` applies to the bootstrap index.
 
     Monitoring (``monitor_path``): each batch also appends a
     Misra-Gries token summary of its SURVIVORS
@@ -235,6 +238,14 @@ def streaming_ingest_dedup(
     unlike the dedup sinks, whose replays are bit-exact."""
     from ..operators import dedup as D
     from ..operators.incremental import _dynamic_overwrite
+
+    # band the stream itself once, lazily: a (k, bands) that
+    # minhash_band_rows rejects, or a missing id/text column, fails
+    # here rather than in the first trigger
+    D.minhash_band_rows(
+        stream, k=k, bands=bands, n=n, id_col=id_col, text_col=text_col,
+        seed=seed, hash_mode=hash_mode,
+    )
 
     def _index_has_data(spark, path: str) -> bool:
         jvm = spark._jvm
@@ -255,13 +266,10 @@ def streaming_ingest_dedup(
         # band rows feed the probe (or cold-start self-pairs) AND the
         # index append below (code-review r6 — the first cut hashed the
         # batch text twice per trigger)
-        sig = D.minhash_signatures(
-            batch, k=k, n=n, id_col=id_col, text_col=text_col, seed=seed,
-            hash_mode=hash_mode,
-        )
-        inc_bands = D._band_rows(sig, k, bands, id_col).localCheckpoint(
-            eager=False
-        )
+        inc_bands = D.minhash_band_rows(
+            batch, k=k, bands=bands, n=n, id_col=id_col, text_col=text_col,
+            seed=seed, hash_mode=hash_mode,
+        ).localCheckpoint(eager=False)
         if _index_has_data(spark, index_path):
             pairs = D.probe_band_rows(
                 spark, index_path, inc_bands, k=k, threshold=threshold,

@@ -51,6 +51,7 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from run_features import load_config  # noqa: E402 (same config dialect)
+from run_features import written as written_rows  # noqa: E402
 
 
 def main() -> None:
@@ -104,13 +105,7 @@ def main() -> None:
         return pinned
 
     def written(df, path: str, stage: str, mode: str = "overwrite") -> None:
-        # the count rides the write job as an Observation: a read-back
-        # count of the written table would cost three more jobs
-        obs = Observation()
-        df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(mode).parquet(
-            path
-        )
-        funnel[stage] = int(obs.get["n"])
+        funnel[stage] = written_rows(df, path, mode)
 
     docs = checkpointed(docs, "input")
 

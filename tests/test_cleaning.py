@@ -37,6 +37,16 @@ def test_hash_split_deterministic_and_proportional(spark):
     a = C.hash_split(df).orderBy("doc_id").toPandas()["split"]
     b = C.hash_split(df).orderBy("doc_id").toPandas()["split"]
     assert (a == b).all()
+    # a NULL id: md5 gives it no fold; xxhash64 hashes the seed alone
+    # (xxhash64(42) mod 100 = 36 -> train)
+    with_null = df.limit(3).unionByName(
+        spark.createDataFrame([(None,)], "doc_id long")
+    )
+    for method, want in (("md5", None), ("xxhash64", "train")):
+        got = C.hash_split(with_null, method=method).where(
+            F.col("doc_id").isNull()
+        ).collect()
+        assert [r["split"] for r in got] == [want], method
 
 
 def test_chunk_text_coverage_and_overlap(spark):
@@ -104,6 +114,16 @@ def test_stratified_sample_deterministic_and_exact(spark):
     assert abs(by_lang["de"] / (2000 / 3) - 0.1) < 0.06
 
     import pytest as _pytest
+
+    # a NULL id: md5 has no bucket for it, so even a fraction of 1.0
+    # drops the row; xxhash64 buckets the seed alone and keeps it
+    with_null = df.unionByName(
+        spark.createDataFrame([(None, "en")], "doc_id long, lang string")
+    )
+    for method, kept in (("md5", False), ("xxhash64", True)):
+        got = stratified_sample(with_null, "lang", {"en": 1.0}, method=method)
+        assert got.where(F.col("doc_id").isNull()).count() == int(kept), method
+        assert got.count() == len([i for i in range(2000) if i % 3 == 0]) + kept
 
     with _pytest.raises(ValueError, match="fractions"):
         stratified_sample(df, "lang", {"en": 1.5})

@@ -147,6 +147,53 @@ def test_run_features_order_stage(spark, tmp_path, monkeypatch, capsys):
     assert all(want[r["__order_id"]] == r["shuffle_rank"] for r in rows)
 
 
+def test_run_features_counts_writes_in_the_write_job(
+    spark, tmp_path, monkeypatch, capsys
+):
+    """The order stage and the final output count their rows with an
+    ``Observation`` on the write job, not by reading the written table
+    back (a footer-schema job, a map stage and a result job per
+    read-back): a features → order drive launches exactly JOBS jobs."""
+    JOBS = 6
+    from feagen_spark.datagen.transcripts import transcripts
+
+    inp = str(tmp_path / "transcripts")
+    transcripts(spark, n_conv=8).write.parquet(inp)
+    n_turns = spark.read.parquet(inp).count()
+    ordered = tmp_path / "ordered"
+    cfg = tmp_path / "run.yml"
+    cfg.write_text(
+        "\n".join(
+            [
+                "app_name: run_jobs_test",
+                f"input_path: {inp}",
+                'keys: ["conv_id", "turn_idx"]',
+                'features: ["text_len"]',
+                'order: {"id_col": ["conv_id", "turn_idx"], "seed": 3, '
+                '"method": "md5", "n_partitions": 4, '
+                f'"output_path": "{ordered}"}}',
+                f"output_path: {tmp_path / 'out'}",
+            ]
+        )
+    )
+    runner = _load_runner()
+    monkeypatch.setattr(sys, "argv", ["run_features", "--config", str(cfg)])
+    tracker = spark.sparkContext.statusTracker()
+
+    def job_ids():
+        # job-start events reach the status tracker through the async
+        # listener bus; drain it before reading the job ids
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        return set(tracker.getJobIdsForGroup(None))
+
+    before = job_ids()
+    runner.main()
+    launched = job_ids() - before
+    summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert summary["ordered_rows"] == summary["rows"] == n_turns
+    assert len(launched) == JOBS, sorted(launched)
+
+
 def test_run_features_pack_tokenize_vocab(spark, tmp_path, monkeypatch, capsys):
     """tokenize_vocab packs BY TOKEN BUDGET with hash-token-id payloads
     derived in-stage — no len_col/payload_col in the config."""

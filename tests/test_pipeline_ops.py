@@ -495,6 +495,12 @@ def test_cosine_near_dup_pairs(vectors):
         (r["id_a"], r["id_b"]) for r in S.cosine_near_dup_pairs(df, 0.95).collect()
     }
     assert (2, 13) in got
+    # like lsh_topk, a band count that does not divide n_planes is
+    # rejected before any job runs (not banded from 15 of 16 planes)
+    import pytest
+
+    with pytest.raises(ValueError, match="divisible by bands"):
+        S.cosine_near_dup_pairs(df, 0.95, n_planes=16, bands=3)
 
 
 def _semantic_dedup_ref(vecs: dict, n_cent: int, threshold: float):

@@ -380,6 +380,28 @@ def test_streaming_ingest_dedup_cold_start(spark, tmp_path):
     assert kept == {11, 13, 22}
 
 
+def test_streaming_ingest_dedup_rejects_k_not_divisible_by_bands(
+    spark, tmp_path
+):
+    """A cold-start stream (no bootstrap index) with a (k, bands) that
+    ``write_minhash_index`` rejects fails when the writer is built, not
+    by banding 28 of 30 signature positions in every trigger."""
+    import pytest
+
+    from feagen_spark.streaming.incremental import streaming_ingest_dedup
+
+    src = tmp_path / "stream"
+    src.mkdir()
+    stream = spark.readStream.schema("doc_id long, text string").parquet(
+        str(src)
+    )
+    with pytest.raises(ValueError, match="divisible by bands"):
+        streaming_ingest_dedup(
+            stream, str(tmp_path / "idx"), str(tmp_path / "out"),
+            k=30, bands=4,
+        )
+
+
 def test_streaming_dedup_matches_batch(spark, tmp_path):
     """Duplicates injected into the stream, within and across
     micro-batches, are emitted exactly once: the drained corpus is the
