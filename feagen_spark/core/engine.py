@@ -8,11 +8,15 @@ fingerprint is already in the store manifest (resume-from-checkpoint,
 BASELINE.json:14).
 
 Execution model (Spark-first): non-checkpoint nodes are pure
-``DataFrame → DataFrame`` transforms — Catalyst fuses the entire chain,
-collapses same-spec windows into one Window exec, and the whole golden
-feature suite costs ONE shuffle on conv_id. Checkpoint nodes are
-materialization barriers: outputs (+ key columns) are written to the
-store, and on resume are read back and hash-joined onto the flow by key.
+``DataFrame → DataFrame`` transforms that Catalyst plans as one query.
+Without checkpoints the golden feature suite costs ONE shuffle on
+conv_id, with 9 Window operators over 3 intra-partition Sorts after it
+(same-spec windows merge only when their inputs sit in one Project).
+Checkpoint nodes are materialization barriers: outputs (+ key columns)
+are written to the store, then read back and joined onto the flow by
+key, cold and on resume. With the ``conf/run.yml`` checkpoint nodes
+the cold golden plan has 7 Window operators over 3 Sorts on the one
+Exchange, plus 2 BroadcastExchanges for the join-backs.
 """
 
 from __future__ import annotations

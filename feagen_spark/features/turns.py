@@ -22,11 +22,20 @@ lead) exists for label construction only and must never enter as-of
 snapshots (FIXTURES.md §5).
 
 Scale notes (100TB mindset):
-- Every window here shares ONE partitioning: partitionBy(conv_id)
-  orderBy(turn_idx). Catalyst collapses same-spec windows into a single
-  Window exec → the whole suite costs one shuffle on conv_id.
+- Every window here partitions by conv_id, so without checkpoints the
+  whole golden suite costs ONE shuffle, a hash Exchange on conv_id
+  (``tests/test_plans.py::test_feature_suite_single_shuffle``). It is
+  not one Window operator: Catalyst merges same-spec windows only when
+  their inputs sit in one Project, so that plan holds 9 Window
+  operators over 3 intra-partition Sorts.
 - Time-range windows re-sort by unix_micros(ts) within the same
   conv_id partitioning — an intra-partition sort, not a second shuffle.
+- With the ``conf/run.yml`` checkpoint nodes (session_id,
+  tool_calls_last_10) the cold plan that perfbench runs has 7 Window
+  operators over 3 Sorts on the one Exchange, plus 2 BroadcastExchanges
+  that join the checkpoint tables back by key. ``turn_in_session`` and
+  ``session_start_ts`` each evaluate the same ``lag(session_id)`` pair
+  (``_session_boundary``) in Windows of their own.
 - Skew (giant conversations): nothing here or in the engine splits a
   giant conversation — its window runs in one task. Splitting one
   would belong in the engine, per node; these functions stay

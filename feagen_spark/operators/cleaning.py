@@ -382,7 +382,9 @@ def deterministic_negatives(
     (``hashing.hash_bucket`` for buckets; the raw ``md5_hex`` string
     order of (anchor, draw, candidate) for ranking) — bit-identical in
     any engine with md5, which is what the DuckDB value oracle runs
-    on. 'xxhash64' (default) is the faster JVM-only path.
+    on. md5 ignores ``seed`` (portability means a fixed function): a
+    new seed returns the very same negatives. 'xxhash64' (default) is
+    the faster JVM-only path, and each seed is a fresh draw.
     """
     if k < 1 or n_buckets < 1:
         raise ValueError("k and n_buckets must be >= 1")

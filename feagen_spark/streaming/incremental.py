@@ -147,8 +147,10 @@ def streaming_decayed_sum(
         frames = [pdf for pdf in pdfs]
         if frames:
             batch = pd.concat(frames).sort_values([ts_col, value_col])
-            for r in batch.itertuples():
-                ts = getattr(r, ts_col)
+            # the two columns by position, not itertuples+getattr: pandas
+            # renames tuple fields that start with '_' or are not
+            # identifiers, and getattr would raise in the worker
+            for ts, v in zip(batch[ts_col], batch[value_col].to_numpy()):
                 if pd.isna(ts):
                     rows.append({key: k[0], ts_col: ts, out: None})
                     continue
@@ -156,7 +158,6 @@ def streaming_decayed_sum(
                 if last_us is not None:
                     s = s * math.exp(-lam * max(0, cur_us - last_us))
                 rows.append({key: k[0], ts_col: ts, out: s})
-                v = getattr(r, value_col)
                 s += 0.0 if pd.isna(v) else float(v)
                 last_us = cur_us
         state.update((float(s), last_us))

@@ -27,6 +27,21 @@ def spark(tmp_path_factory):
 
 
 @pytest.fixture(scope="session")
+def job_ids(spark):
+    """A callable giving the ids of every Spark job launched so far; the
+    difference of two calls is the jobs launched in between."""
+    tracker = spark.sparkContext.statusTracker()
+
+    def ids() -> set[int]:
+        # job-start events reach the status tracker through the async
+        # listener bus; drain it before reading the job ids
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        return set(tracker.getJobIdsForGroup(None))
+
+    return ids
+
+
+@pytest.fixture(scope="session")
 def tiny_transcripts(spark):
     """Small deterministic transcript fixture shared across tests."""
     from feagen_spark.datagen.transcripts import transcripts

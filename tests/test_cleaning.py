@@ -437,8 +437,8 @@ def test_sample_to_token_budget_int_strata(spark):
 
 
 def test_deterministic_negatives_md5_and_id_contract(spark):
-    """r6: method='md5' (the oracle bridge) is deterministic and obeys
-    the same invariants; NULL ids are rejected up front; and
+    """r6: method='md5' (the oracle bridge) is deterministic, ignores
+    the seed and obeys the same invariants; NULL ids are rejected up front; and
     exclude_self=False admits id-coincident pairs for disjoint entity
     spaces (ADVICE r5)."""
     from feagen_spark.operators.cleaning import deterministic_negatives
@@ -459,6 +459,20 @@ def test_deterministic_negatives_md5_and_id_contract(spark):
         ).collect()
     }
     assert rows2 == rows
+
+    # md5 ignores the seed (a fixed, portable function); xxhash64 draws
+    # afresh per seed
+    def pairs(method, seed):
+        return {
+            (r["doc_id"], r["draw"], r["neg_id"])
+            for r in deterministic_negatives(
+                anchors, corpus, "doc_id", "doc_id", k=3, n_buckets=16,
+                seed=seed, method=method,
+            ).collect()
+        }
+
+    assert pairs("md5", 1) == pairs("md5", 7)
+    assert pairs("xxhash64", 1) != pairs("xxhash64", 7)
 
     # NULL ids on either side are dropped up front, not silently eaten
     # by the self-pair comparison

@@ -148,7 +148,7 @@ def test_run_features_order_stage(spark, tmp_path, monkeypatch, capsys):
 
 
 def test_run_features_counts_writes_in_the_write_job(
-    spark, tmp_path, monkeypatch, capsys
+    spark, job_ids, tmp_path, monkeypatch, capsys
 ):
     """The order stage and the final output count their rows with an
     ``Observation`` on the write job, not by reading the written table
@@ -178,20 +178,69 @@ def test_run_features_counts_writes_in_the_write_job(
     )
     runner = _load_runner()
     monkeypatch.setattr(sys, "argv", ["run_features", "--config", str(cfg)])
-    tracker = spark.sparkContext.statusTracker()
-
-    def job_ids():
-        # job-start events reach the status tracker through the async
-        # listener bus; drain it before reading the job ids
-        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-        return set(tracker.getJobIdsForGroup(None))
-
     before = job_ids()
     runner.main()
     launched = job_ids() - before
     summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert summary["ordered_rows"] == summary["rows"] == n_turns
     assert len(launched) == JOBS, sorted(launched)
+
+
+def test_repeated_pit_op_compiles_no_classes(spark, tiny_transcripts, tmp_path):
+    """A JVM that runs the same plans again compiles each generated class
+    once: a second pit-shaped op (cold bucketed-store generate + write,
+    resume + write, refresh + write_refresh) adds nothing to Spark's
+    Janino compilation count. At Spark's default codegen cache of 100
+    classes the op's own working set evicts itself and the repeat
+    recompiles every class."""
+    import dataclasses
+
+    from bench import GOLDEN_FEATURES
+    from feagen_spark.core.dag import FeatureDAG
+    from feagen_spark.core.engine import Engine
+    from feagen_spark.features.turns import transcript_nodes, transcript_templates
+    from feagen_spark.operators.incremental import refresh_conversations, write_refresh
+    from feagen_spark.store.checkpoint import CheckpointStore
+
+    keys = ("conv_id", "turn_idx")
+    # the conf/run.yml checkpoint nodes
+    nodes = [
+        dataclasses.replace(n, checkpoint=n.name in ("session_id", "tool_calls_last_10"))
+        for n in transcript_nodes()
+    ]
+    cols = ["conv_id", "turn_idx", "ts", *GOLDEN_FEATURES]
+    df = tiny_transcripts
+    # one new turn after the first turn of two conversations
+    new = (
+        df.where(F.col("turn_idx") == 0)
+        .orderBy("conv_id")
+        .limit(2)
+        .withColumn("turn_idx", F.col("turn_idx") + 10_000)
+        .withColumn("ts", F.col("ts") + F.expr("INTERVAL 1 DAY"))
+        .localCheckpoint()
+    )
+    full = df.unionByName(new)
+
+    def engine(frame, store):
+        dag = FeatureDAG(
+            nodes=nodes, templates=transcript_templates(), input_columns=tuple(frame.columns)
+        )
+        return Engine(dag, store=store, keys=keys, input_token="codegen")
+
+    def op(d):
+        store = CheckpointStore(str(d / "ckpt"), bucket_by=(8, keys))
+        for out in ("features", "resumed"):  # cold, then resumed from the store
+            engine(df, store).generate(df, GOLDEN_FEATURES).select(*cols).write.parquet(
+                str(d / out)
+            )
+        refreshed = refresh_conversations(engine(full, None), full, new, GOLDEN_FEATURES)
+        write_refresh(refreshed.select(*cols), str(d / "refreshed"))
+
+    compiles = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    op(tmp_path / "op1")
+    before = compiles.METRIC_COMPILATION_TIME().getCount()
+    op(tmp_path / "op2")
+    assert compiles.METRIC_COMPILATION_TIME().getCount() == before
 
 
 def test_run_features_pack_tokenize_vocab(spark, tmp_path, monkeypatch, capsys):
@@ -337,7 +386,9 @@ def test_curate_corpus_funnel(spark, tmp_path, monkeypatch, capsys):
     assert total == n_tokens
 
 
-def test_curate_corpus_one_job_per_stage(spark, tmp_path, monkeypatch, capsys):
+def test_curate_corpus_one_job_per_stage(
+    spark, job_ids, tmp_path, monkeypatch, capsys
+):
     """Each funnel stage pins or writes its frame and counts it in the
     same Spark job (the count is an Observation on the pinning or
     writing job, not a separate ``count()``, which costs a map-stage
@@ -363,14 +414,6 @@ def test_curate_corpus_one_job_per_stage(spark, tmp_path, monkeypatch, capsys):
     )
     job = _load_job("curate_corpus")
     monkeypatch.setattr(sys, "argv", ["curate_corpus", "--config", str(cfg)])
-    tracker = spark.sparkContext.statusTracker()
-
-    def job_ids():
-        # job-start events reach the status tracker through the async
-        # listener bus; drain it before reading the job ids
-        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-        return set(tracker.getJobIdsForGroup(None))
-
     before = job_ids()
     job.main()
     launched = job_ids() - before

@@ -329,6 +329,33 @@ def test_connected_components_reads_input_once(spark):
     assert acc.value == len(edges)
 
 
+def test_connected_components_job_count(spark, job_ids):
+    """connected_components on a materialized graph that converges in
+    one round launches exactly JOBS Spark jobs: one pins the symmetrized
+    edges, one pins the labels, and the rest run the round of two
+    propagation hops. AQE's runtime switch of a sort-merge join to a
+    broadcast join adds one or two jobs depending on which join side
+    finishes first (11 or 12 jobs over ten calls on a local[4]
+    session), so the test turns that switch off to pin the plan's own
+    jobs."""
+    JOBS = 9
+    # 8 stars of 5 vertices, each hub its component's min id: in any
+    # partitioning every edge touches the hub, so the first hop labels
+    # every vertex and the second changes nothing
+    edges = [(h, h + i) for h in range(0, 80, 10) for i in range(1, 5)]
+    pairs = spark.createDataFrame(edges, "id_a long, id_b long").localCheckpoint()
+    key = "spark.sql.adaptive.autoBroadcastJoinThreshold"
+    spark.conf.set(key, "-1")
+    try:
+        before = job_ids()
+        labels = D.connected_components(pairs)
+        launched = job_ids() - before
+    finally:
+        spark.conf.unset(key)
+    assert labels.count() == 40
+    assert len(launched) == JOBS, sorted(launched)
+
+
 def test_minhash_lsh_finds_near_dups(docs):
     got = {
         (r["id_a"], r["id_b"])

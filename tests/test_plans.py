@@ -507,7 +507,7 @@ def test_minhash_probe_increment_index_never_shuffles(spark, tmp_path):
         assert "__sig" not in b["input"], b
 
 
-def test_lsh_plan_construction_is_action_free(spark):
+def test_lsh_plan_construction_is_action_free(spark, job_ids):
     """With dim= passed, building the LSH plans must run ZERO Spark jobs
     (VERDICT r3 #2: the 1-row dimension-sniff job exists only as the
     dim=None fallback)."""
@@ -518,12 +518,10 @@ def test_lsh_plan_construction_is_action_free(spark):
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("query_vec"),
     )
-    tracker = spark.sparkContext.statusTracker()
-    before = list(tracker.getJobIdsForGroup(None))
+    before = job_ids()
     S.lsh_topk(df, q, k=3, n_planes=16, bands=4, dim=8)
     S.cosine_near_dup_pairs(df, 0.9, n_planes=16, bands=4, dim=8)
-    after = list(tracker.getJobIdsForGroup(None))
-    assert after == before, set(after) - set(before)
+    assert job_ids() == before, job_ids() - before
 
 
 def test_stratified_sample_map_only(spark):

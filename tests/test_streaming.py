@@ -211,11 +211,10 @@ def test_streaming_session_attribution_matches_batch(
 def test_streaming_decayed_sum_matches_reference(spark, tmp_path):
     """streaming_decayed_sum (O(1)-state recurrence) drained over a
     2-file stream == the unbounded loop reference, strictly-prior
-    semantics included."""
+    semantics included; a value column whose name starts with '_' (a
+    name pandas renames in itertuples) gives the same values."""
     import datetime as dt
     import math
-
-    import pandas as pd
 
     t0 = dt.datetime(2026, 1, 1)
     rows = []
@@ -231,27 +230,6 @@ def test_streaming_decayed_sum_matches_reference(spark, tmp_path):
             rng_vals[i % len(rng_vals)] if i % 7 else None,
             i,
         ))
-    df = spark.createDataFrame(rows, "k string, ts timestamp, v double, i long")
-    src = str(tmp_path / "decay_stream")
-    df.where(F.col("i") < 20).coalesce(1).write.mode("overwrite").parquet(src)
-    df.where(F.col("i") >= 20).coalesce(1).write.mode("append").parquet(src)
-
-    # maxFilesPerTrigger=1 forces TWO micro-batches, so the second one
-    # exercises the state-restore branch (state.exists == True) —
-    # code-review r5: one availableNow batch never restored state
-    stream = (
-        spark.readStream.schema(df.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    out = INC.streaming_decayed_sum(
-        stream, key="k", ts_col="ts", value_col="v", half_life_s=600
-    )
-    INC.run_available_now(out, "decay_out", str(tmp_path / "ck_decay"))
-    got = {
-        (r["k"], r["ts"]): r["value_decay"]
-        for r in spark.table("decay_out").collect()
-    }
 
     lam = math.log(2.0) / (600 * 1e6)
     by_key = {}
@@ -267,9 +245,32 @@ def test_streaming_decayed_sum_matches_reference(spark, tmp_path):
                 for pts, pv in seq[:pos]
             )
             want[(k, ts)] = s
-    assert set(got) == set(want)
-    for key_ in want:
-        assert abs(got[key_] - want[key_]) < 1e-9, key_
+
+    for n, value_col in enumerate(("v", "_v")):
+        df = spark.createDataFrame(rows, f"k string, ts timestamp, {value_col} double, i long")
+        src = str(tmp_path / f"decay_stream{n}")
+        df.where(F.col("i") < 20).coalesce(1).write.mode("overwrite").parquet(src)
+        df.where(F.col("i") >= 20).coalesce(1).write.mode("append").parquet(src)
+
+        # maxFilesPerTrigger=1 forces TWO micro-batches, so the second one
+        # exercises the state-restore branch (state.exists == True) —
+        # code-review r5: one availableNow batch never restored state
+        stream = (
+            spark.readStream.schema(df.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+        out = INC.streaming_decayed_sum(
+            stream, key="k", ts_col="ts", value_col=value_col, half_life_s=600
+        )
+        INC.run_available_now(out, f"decay_out{n}", str(tmp_path / f"ck_decay{n}"))
+        got = {
+            (r["k"], r["ts"]): r["value_decay"]
+            for r in spark.table(f"decay_out{n}").collect()
+        }
+        assert set(got) == set(want), value_col
+        for key_ in want:
+            assert abs(got[key_] - want[key_]) < 1e-9, (value_col, key_)
 
 
 # -- streaming continuous-ingest dedup ---------------------------------------
