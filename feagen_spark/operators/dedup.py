@@ -6,14 +6,12 @@ Scale design (the point of each choice):
 - ``exact_dedup``: hash-groupBy on the normalized text — one shuffle on
   the text hash, min-id winner, AQE handles skewed duplicates.
 - ``ngram_jaccard_pairs``: exact Jaccard via blocked pair counting —
-  docs hash into blocks, each block pair is one task that counts shared
-  shingles with a dense 0/1 matmul, and the JVM re-derives the exact
-  jaccard from the integer counts. Never materializes the Σ df(s)²
-  rows of a shingle self-join (that plan is kept only as the test
-  oracle, ``tests/oracles.py``); ``max_df`` drops shingles that occur
-  in more than N docs (stopword-shingles — same trick as common-token
-  filtering in SpGFF/ANN literature). Ground truth for the
-  probabilistic variants below.
+  docs hash into blocks, each block pair is one task that receives one
+  shingle array per doc and counts shared shingles with a dense 0/1
+  matmul, and the JVM re-derives the exact jaccard from the integer
+  counts. Never materializes the Σ df(s)² rows of a shingle self-join
+  (that plan is kept only as the test oracle, ``tests/oracles.py``).
+  Ground truth for the probabilistic variants below.
 - ``minhash_lsh_pairs``: MinHash signatures (k Kirsch-Mitzenmacher mins
   from ONE xxhash64 — or, with ``hash_mode='md5'``, one md5 read by the
   ``functions/hashing.py`` bridge — per shingle, computed in ONE
@@ -239,11 +237,14 @@ def boilerplate_scrub(
 
 # -- shingling -----------------------------------------------------------------
 
-def shingles(
-    df: DataFrame, n: int = 3, id_col: str = "doc_id", text_col: str = "text"
+def _shingle_arrays(
+    df: DataFrame, n: int, id_col: str, text_col: str
 ) -> DataFrame:
-    """Distinct character n-gram shingles per doc, JVM-side: sequence →
-    transform → array_distinct → explode. One map stage, no Python."""
+    """(id, ``__sh``): each doc's distinct character n-gram shingles as
+    ONE ``array<string>`` row, JVM-side: sequence → transform →
+    array_distinct → filter(length == n). A text shorter than ``n`` (or
+    NULL) gets an empty array. The one shingle expression every n-gram
+    plan shares."""
     # materialize the normalized text ONCE per row: a lambda that
     # captures the regexp_replace expression re-evaluates it per array
     # element (measured 16s → 1s on 5k docs / 700k shingles)
@@ -255,8 +256,19 @@ def shingles(
         F.transform(idxs, lambda i: F.col("__norm").substr(i, F.lit(n)))
     )
     return base.select(
-        F.col(id_col), F.explode(grams).alias("shingle")
-    ).where(F.length("shingle") == n)
+        F.col(id_col),
+        F.filter(grams, lambda s: F.length(s) == n).alias("__sh"),
+    )
+
+
+def shingles(
+    df: DataFrame, n: int = 3, id_col: str = "doc_id", text_col: str = "text"
+) -> DataFrame:
+    """Distinct character n-gram shingles per doc, one (id, shingle) row
+    each: the explode of ``_shingle_arrays``. One map stage, no Python."""
+    return _shingle_arrays(df, n, id_col, text_col).select(
+        F.col(id_col), F.explode("__sh").alias("shingle")
+    )
 
 
 def ngram_jaccard_pairs(
@@ -265,7 +277,6 @@ def ngram_jaccard_pairs(
     threshold: float = 0.8,
     id_col: str = "doc_id",
     text_col: str = "text",
-    max_df: int | None = None,
     n_blocks: int = 8,
 ) -> DataFrame:
     """Exact n-gram Jaccard similarity pairs (a<b) with sim >= threshold.
@@ -276,49 +287,34 @@ def ngram_jaccard_pairs(
     shingle is hot, and the join materializes BILLIONS of rows (8.9B at
     sf1.0, 162 s). Instead the pair space itself is partitioned: docs
     hash into ``n_blocks`` blocks, every unordered block pair (i ≤ j) is
-    one task, and each task receives exactly its two blocks' shingle
-    rows (each row replicated n_blocks times — shuffle is n·B *shingle*
-    rows, never pair rows). Inside a task the intersection counts come
-    from one dense 0/1 matmul over the locally factorized vocabulary
-    (exact: 0/1 products, counts ≤ 2²⁴ in float32) when the local vocab
-    is small, else a vectorized pandas merge+groupby (the join
-    algorithm, local). Candidates pass a τ−1e-6 prefilter in float64
-    (the same IEEE division the JVM performs — the margin only guards
-    the HALF_EVEN/HALF_UP rounding difference); the returned jaccard is
-    re-derived in the JVM from the exact integer (inter, sz_a, sz_b),
-    so emitted values are bit-identical to the self-join plan, which
-    the tests keep as the parity oracle. Measured on the sf1.0 cluster
-    subset (10k docs, 18.9M qualifying pairs): ~230 s (isolated join
-    plan, dominated by the blowup) → 3.8 s warm for the full pair list.
+    one task, and each task receives exactly its two blocks' docs, each
+    as ONE row holding its shingle array (every doc is replicated
+    n_blocks times — the shuffle is B shingle arrays per doc, never
+    shingle rows or pair rows). Inside a task the shingle strings are
+    dictionary-encoded (exact string equality) and the intersection
+    counts come from one dense 0/1 matmul over the local vocabulary
+    (exact: 0/1 products, counts ≤ 2²⁴ in float32) when it is small,
+    else a vectorized pandas merge+groupby over the integer codes (the
+    join algorithm, local). Candidates pass a τ−1e-6 prefilter in
+    float64 (the same IEEE division the JVM performs — the margin only
+    guards the HALF_EVEN/HALF_UP rounding difference); the returned
+    jaccard is re-derived in the JVM from the exact integer (inter,
+    sz_a, sz_b), so emitted values are bit-identical to the self-join
+    plan, which the tests keep as the parity oracle. Measured on the
+    sf1.0 cluster subset (10k docs, 18.9M qualifying pairs): ~230 s
+    (isolated join plan, dominated by the blowup) → 3.8 s warm for the
+    full pair list.
 
     At 100 TB: exact all-pairs Jaccard is inherently O(pairs) work;
     ``n_blocks`` spreads the B(B+1)/2 block-pair tasks across the
-    cluster (size it so one block's shingle rows fit a task), and the
+    cluster (size it so one block's shingle arrays fit a task), and the
     subquadratic escape hatch stays ``minhash_lsh_pairs``.
     """
-    sh = _filtered_shingles(df, n, id_col, text_col, max_df)
     cand = _blocked_pair_counts(
-        sh, id_col=id_col, threshold=threshold, n_blocks=n_blocks
+        _shingle_arrays(df, n, id_col, text_col),
+        id_col=id_col, threshold=threshold, n_blocks=n_blocks,
     )
     return _jaccard_at_least(cand, threshold).select("id_a", "id_b", "jaccard")
-
-
-def _filtered_shingles(
-    df: DataFrame, n: int, id_col: str, text_col: str, max_df: int | None
-) -> DataFrame:
-    """``shingles`` minus every shingle occurring in more than ``max_df``
-    docs (None keeps all): the stopword-shingle cut shared by every
-    n-gram Jaccard plan — a broadcast anti-join against the hot set."""
-    sh = shingles(df, n=n, id_col=id_col, text_col=text_col)
-    if max_df is None:
-        return sh
-    hot = (
-        sh.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .where(F.col("df") > max_df)
-        .select("shingle")
-    )
-    return sh.join(F.broadcast(hot), on="shingle", how="left_anti")
 
 
 def _jaccard_col() -> F.Column:
@@ -386,9 +382,16 @@ def _blocked_pair_counts(
 ) -> DataFrame:
     """Exact per-pair intersection counts + set sizes for every doc pair
     whose raw Jaccard clears ``threshold − 1e-6``, computed block-pair-
-    wise (see ``ngram_jaccard_pairs``). Emits
-    (id_a, id_b, inter, sz_a, sz_b) with id_a < id_b; the caller owns
-    the final (JVM, bit-exact) jaccard arithmetic and threshold.
+    wise (see ``ngram_jaccard_pairs``) over ``_shingle_arrays`` rows.
+    Emits (id_a, id_b, inter, sz_a, sz_b) with id_a < id_b; the caller
+    owns the final (JVM, bit-exact) jaccard arithmetic and threshold.
+
+    Kernel input shape: ONE row per (doc, block pair) — the doc's id,
+    block and whole shingle array — so the shuffle and the Python
+    crossing carry B rows per doc (B shingle arrays), not one row per
+    (doc, shingle, block pair). In-task the arrays are flattened and
+    ``dictionary_encode``d in Arrow: exact string equality, no pandas
+    string objects, no hashing. Set sizes are the list lengths.
 
     ``cluster_edges`` (r7, for ``ngram_jaccard_cluster_edges``): pairs
     whose float64 ratio — the IDENTICAL IEEE division the JVM would run
@@ -404,6 +407,8 @@ def _blocked_pair_counts(
     Python→JVM→Python round trip into ~40k star + ~356k boundary rows."""
     import numpy as np
     import pandas as pd
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
     if n_blocks < 1:
         raise ValueError("n_blocks must be >= 1")
@@ -417,57 +422,83 @@ def _blocked_pair_counts(
 
     _cc_labels = _make_np_cc()  # by-value for worker closures
     # NULL ids can never appear in an (id_a < id_b) pair of the join
-    # plan — drop them before they reach numpy comparisons
+    # plan — drop them before they reach numpy comparisons. No filter
+    # touches the array: Catalyst would push it into the scan and inline
+    # the normalized text into the shingle lambda (one regexp_replace
+    # per element); an empty array reaches the kernel, sizes 0 and
+    # meets no pair.
     rows = sh.where(F.col(id_col).isNotNull()).select(
         F.col(id_col).alias("__id"),
-        "shingle",
+        "__sh",
         F.pmod(F.xxhash64(F.col(id_col)), b_lit).cast("int").alias("__blk"),
     ).select(
         "__id",
-        "shingle",
+        "__sh",
         "__blk",
         F.explode(F.sequence(F.lit(0), b_lit - 1)).alias("__p"),
     ).select(
         "__id",
-        "shingle",
+        "__sh",
         "__blk",
         F.least("__blk", "__p").alias("__bi"),
         F.greatest("__blk", "__p").alias("__bj"),
     )
 
-    def _pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "id_a": pd.Series(dtype=pdf["__id"].dtype),
-                "id_b": pd.Series(dtype=pdf["__id"].dtype),
-                "inter": pd.Series(dtype="int64"),
-                "sz_a": pd.Series(dtype="int64"),
-                "sz_b": pd.Series(dtype="int64"),
+    def _pairs(tbl: pa.Table) -> pa.Table:
+        id_pa = tbl.schema.field("__id").type
+
+        def _out(id_a, id_b, inter, sz_a, sz_b, n_stars=0):
+            # the first ``n_stars`` rows are stars: NULL counts
+            counts = {
+                k: pa.concat_arrays(
+                    [pa.nulls(n_stars, pa.int64()), pa.array(c, pa.int64())]
+                )
+                for k, c in (("inter", inter), ("sz_a", sz_a), ("sz_b", sz_b))
             }
-        )
-        if not len(pdf):
-            return empty
-        bi = int(pdf["__bi"].iloc[0])
-        bj = int(pdf["__bj"].iloc[0])
-        codes, uniq = pd.factorize(pdf["shingle"])
-        v = len(uniq)
-        blk = pdf["__blk"].to_numpy()
-
-        def _side(mask):
-            ids_u, doc_codes = np.unique(
-                pdf["__id"].to_numpy()[mask], return_inverse=True
+            return pa.table(
+                {
+                    "id_a": pa.array(id_a, id_pa),
+                    "id_b": pa.array(id_b, id_pa),
+                    **counts,
+                }
             )
-            return ids_u, doc_codes, codes[mask]
 
-        ids_a, dc_a, sc_a = _side(blk == bi)
+        ids = tbl.column("__id").to_numpy()
+        none = np.zeros(0, "int64")
+        empty = _out(ids[:0], ids[:0], none, none, none)
+        if not tbl.num_rows:
+            return empty
+        bi = tbl.column("__bi")[0].as_py()
+        bj = tbl.column("__bj")[0].as_py()
+        lists = tbl.column("__sh").combine_chunks()
+        enc = pc.dictionary_encode(pc.list_flatten(lists))
+        codes = enc.indices.to_numpy()
+        v = len(enc.dictionary)
+        parent = pc.list_parent_indices(lists).to_numpy()
+        lens = pc.fill_null(pc.list_value_length(lists), 0).to_numpy()
+        blk = tbl.column("__blk").to_numpy()
+
+        def _side(b):
+            # doc codes over the side's distinct ids (a duplicated id
+            # pools its rows, as one doc), per-doc set sizes, and the
+            # (doc code, shingle code) of every shingle on that side
+            rmask = blk == b
+            ids_u, inv = np.unique(ids[rmask], return_inverse=True)
+            row_doc = np.full(len(ids), -1, dtype=np.int64)
+            row_doc[rmask] = inv
+            sz = np.bincount(
+                inv, weights=lens[rmask], minlength=len(ids_u)
+            ).astype("int64")
+            smask = rmask[parent]
+            return ids_u, sz, row_doc[parent[smask]], codes[smask]
+
+        ids_a, sz_a, dc_a, sc_a = _side(bi)
         if bi == bj:
-            ids_b, dc_b, sc_b = ids_a, dc_a, sc_a
+            ids_b, sz_b, dc_b, sc_b = ids_a, sz_a, dc_a, sc_a
         else:
-            ids_b, dc_b, sc_b = _side(blk == bj)
+            ids_b, sz_b, dc_b, sc_b = _side(bj)
         if not len(ids_a) or not len(ids_b):
             return empty
-        sz_a = np.bincount(dc_a, minlength=len(ids_a)).astype("int64")
-        sz_b = np.bincount(dc_b, minlength=len(ids_b)).astype("int64")
         if v <= _BLOCKED_DENSE_VOCAB_MAX:
             # dense 0/1 matmul: exact integer counts in float32
             mb = np.zeros((len(ids_b), v), dtype=np.float32)
@@ -541,14 +572,8 @@ def _blocked_pair_counts(
         sel = it >= 1
         sel &= j_raw >= tau
         if not cluster_edges:
-            return pd.DataFrame(
-                {
-                    "id_a": lo_id[sel],
-                    "id_b": hi_id[sel],
-                    "inter": it[sel],
-                    "sz_a": lo_sz[sel],
-                    "sz_b": hi_sz[sel],
-                }
+            return _out(
+                lo_id[sel], hi_id[sel], it[sel], lo_sz[sel], hi_sz[sel]
             )
         certain = sel & (j_raw >= float(threshold) + 1e-6)
         bound = sel & ~certain
@@ -559,27 +584,16 @@ def _blocked_pair_counts(
             np.searchsorted(verts, cb),
             len(verts),
         )
-        stars = pd.DataFrame(
-            {
-                "id_a": verts[lab],
-                "id_b": verts,
-                "inter": pd.array([None] * len(verts), dtype="Int64"),
-                "sz_a": pd.array([None] * len(verts), dtype="Int64"),
-                "sz_b": pd.array([None] * len(verts), dtype="Int64"),
-            }
+        return _out(
+            np.concatenate([verts[lab], lo_id[bound]]),
+            np.concatenate([verts, hi_id[bound]]),
+            it[bound],
+            lo_sz[bound],
+            hi_sz[bound],
+            n_stars=len(verts),
         )
-        bnd = pd.DataFrame(
-            {
-                "id_a": lo_id[bound],
-                "id_b": hi_id[bound],
-                "inter": it[bound],
-                "sz_a": lo_sz[bound],
-                "sz_b": hi_sz[bound],
-            }
-        )
-        return pd.concat([stars, bnd], ignore_index=True)
 
-    return rows.groupBy("__bi", "__bj").applyInPandas(_pairs, out_schema)
+    return rows.groupBy("__bi", "__bj").applyInArrow(_pairs, out_schema)
 
 
 def ngram_jaccard_cluster_edges(
@@ -588,7 +602,6 @@ def ngram_jaccard_cluster_edges(
     threshold: float = 0.8,
     id_col: str = "doc_id",
     text_col: str = "text",
-    max_df: int | None = None,
     n_blocks: int = 8,
 ) -> DataFrame:
     """Edge set whose connected components EQUAL those of
@@ -607,9 +620,9 @@ def ngram_jaccard_cluster_edges(
     and a boundary branch would read that shared input once per branch,
     running the blocked pair kernel (and every Python crossing upstream
     of it) twice."""
-    sh = _filtered_shingles(df, n, id_col, text_col, max_df)
     mixed = _blocked_pair_counts(
-        sh, id_col=id_col, threshold=threshold, n_blocks=n_blocks,
+        _shingle_arrays(df, n, id_col, text_col),
+        id_col=id_col, threshold=threshold, n_blocks=n_blocks,
         cluster_edges=True,
     )
     return mixed.where(
@@ -709,8 +722,7 @@ def minhash_lsh_pairs(
     bucket with B members yields B² pair candidates, so one giant
     exact-dup cluster turns the join quadratic. Such clusters are
     exact/near-identical text and are handled by exact_dedup upstream;
-    capping is the standard LSH-at-scale guard (same role as max_df in
-    ngram_jaccard_pairs). Pass None to disable.
+    capping is the standard LSH-at-scale guard. Pass None to disable.
     """
     # carry the signature THROUGH the band explode: the candidate join then
     # yields (sig_a, sig_b) directly — no join-back to the signature frame.

@@ -32,6 +32,7 @@ pair cosine; ``_hyperplane_band`` is the one LSH band key.
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 
@@ -612,8 +613,15 @@ def semantic_dedup(
     (the driver oracle replays it in DuckDB); ties on rounded cent_sim
     drop the higher id."""
     spark = corpus.sparkSession
+    # from a pandas frame through Arrow: a Python-list createDataFrame is
+    # a Python RDD, whose broadcast runs a Python worker for k rows
     cent_df = spark.createDataFrame(
-        [(int(j), [float(x) for x in centroids[j]]) for j in range(len(centroids))],
+        pd.DataFrame(
+            {
+                "centroid_id": np.arange(len(centroids), dtype=np.int32),
+                "cent_vec": list(np.asarray(centroids, dtype=np.float64)),
+            }
+        ),
         "centroid_id int, cent_vec array<double>",
     )
     assigned = (

@@ -6,7 +6,9 @@ vectorized), UTC session timezone (timestamp determinism vs oracles).
 On a real cluster the same settings apply; only master/memory change.
 The codegen class cache is sized to the engine's working set, so a JVM
 that runs the same plans again (a resume, a refresh, the next batch)
-compiles each generated class once.
+compiles each generated class once. Tungsten pages are the smallest the
+driver heap allows, so a task that aggregates or sorts a few rows does
+not take a 64 MiB array for them.
 """
 
 from __future__ import annotations
@@ -26,6 +28,31 @@ from pyspark.sql import SparkSession
 # spark-submit must pass it to the session it builds.
 CODEGEN_CACHE_ENTRIES = 2048
 
+# Tungsten page (spark.buffer.pageSize). Spark derives it from the execution
+# pool: 64 MiB at an 8g local[2] driver, so every hash-aggregate, sort or
+# shuffle-sort task takes at least one 64 MiB long[] (a G1 humongous object)
+# however few rows it holds. Spark pools freed pages under weak references,
+# so whether the next task reuses one or allocates a new one depends on
+# whether a concurrent G1 cycle ran in between: on a 4-core VM a perfbench
+# corpus_dedup op (local[2]) allocated 1 284-1 534 MB of heap by that race,
+# two modes 136 MB (two pages) apart; with 1 MiB pages, seeds 11-18 all gave
+# 1 141-1 178 MB. The floor is what one task's page table must span: it holds
+# 8192 pages (TaskMemoryManager.PAGE_TABLE_SIZE), so the page is the smallest
+# power of two >= 1 MiB with 8192 pages >= the driver heap (1 MiB at 8g).
+PAGE_TABLE_SIZE = 8192
+_MEM_UNITS = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
+
+
+def page_bytes(driver_memory: str) -> int:
+    """Tungsten page size for a driver heap given as a Spark memory string
+    (``"8g"``; a bare number is MiB, as for ``spark.driver.memory``)."""
+    s = driver_memory.strip().lower().removesuffix("b")
+    heap = int(s[:-1]) * _MEM_UNITS[s[-1]] if s[-1] in _MEM_UNITS else int(s) << 20
+    page = 1 << 20
+    while page * PAGE_TABLE_SIZE < heap:
+        page *= 2
+    return page
+
 
 def get_spark(
     app_name: str = "feagen_spark",
@@ -42,6 +69,9 @@ def get_spark(
     if shuffle_partitions is None:
         # local mode: ~2x cores keeps all threads busy without tiny tasks
         shuffle_partitions = max(8, 2 * n_cores)
+    driver_memory = (extra_conf or {}).get(
+        "spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g")
+    )
     b = (
         SparkSession.builder.master(master)
         .appName(app_name)
@@ -51,11 +81,12 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
+        .config("spark.driver.memory", driver_memory)
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.buffer.pageSize", str(page_bytes(driver_memory)))
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

@@ -125,15 +125,15 @@ def oracle_session_aggs(pdf_with_sessions: pd.DataFrame) -> pd.DataFrame:
 
 
 def ngram_jaccard_pairs_join(
-    df, n=3, threshold=0.8, id_col="doc_id", text_col="text", max_df=None
+    df, n=3, threshold=0.8, id_col="doc_id", text_col="text"
 ):
     """Reference plan for ``dedup.ngram_jaccard_pairs``: the shingle-
     explode self-join — every shared shingle is one joined row, counted
     per (id_a < id_b) pair, then joined to both set sizes. Σ df(s)² rows,
-    so test-sized inputs only. Shares the library's shingle + ``max_df``
-    prefilter and its JVM jaccard expression, so the emitted doubles are
-    comparable bit for bit."""
-    sh = D._filtered_shingles(df, n, id_col, text_col, max_df)
+    so test-sized inputs only. Shares the library's shingles and its JVM
+    jaccard expression, so the emitted doubles are comparable bit for
+    bit."""
+    sh = D.shingles(df, n, id_col, text_col)
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
     a, b = sh.alias("a"), sh.alias("b")
     inter = (

@@ -243,6 +243,21 @@ def test_repeated_pit_op_compiles_no_classes(spark, tiny_transcripts, tmp_path):
     assert compiles.METRIC_COMPILATION_TIME().getCount() == before
 
 
+def test_session_page_spans_driver_heap(spark):
+    """Tungsten pages are the smallest power of two >= 1 MiB whose
+    8192-entry page table still spans the driver heap, and the session's
+    memory manager uses that size (Spark's own choice at an 8g local
+    driver is 64 MiB)."""
+    from feagen_spark.session import PAGE_TABLE_SIZE, page_bytes
+
+    assert page_bytes("8g") == page_bytes("512m") == page_bytes("512") == 1 << 20
+    assert page_bytes("48g") == 8 << 20
+    assert page_bytes("9g") == 2 << 20 and 2 * PAGE_TABLE_SIZE >= 9 << 10
+    conf = spark.sparkContext.getConf()
+    env = spark.sparkContext._jvm.org.apache.spark.SparkEnv.get()
+    assert env.memoryManager().pageSizeBytes() == page_bytes(conf.get("spark.driver.memory"))
+
+
 def test_run_features_pack_tokenize_vocab(spark, tmp_path, monkeypatch, capsys):
     """tokenize_vocab packs BY TOKEN BUDGET with hash-token-id payloads
     derived in-stage — no len_col/payload_col in the config."""

@@ -17,6 +17,7 @@ FORBIDDEN = [
     (re.compile(r"\.rdd\b"), "RDD access"),
     (re.compile(r"\bflatMap\s*\("), "RDD flatMap"),
     (re.compile(r"\bsc\.parallelize\b"), "sc.parallelize"),
+    (re.compile(r"createDataFrame\(\s*\["), "Python-list createDataFrame: a Python RDD job"),
     (re.compile(r"\.collect\(\)\s*\)?[^\n]*$\n?.*for\s", re.M), "driver-side loop over collect()"),
 ]
 

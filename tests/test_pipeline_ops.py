@@ -160,26 +160,101 @@ def test_ngram_jaccard_pairs_match_oracle(docs, docs_pdf):
 
 def test_ngram_jaccard_blocked_equals_join(docs):
     """r7: the blocked matmul plan must emit BIT-IDENTICAL rows to the
-    original shingle-self-join plan — pair set, jaccard doubles, and
-    under max_df / every n_blocks (1 ⇒ a single in-task matmul; 3 ⇒
-    docs split across real block pairs)."""
+    original shingle-self-join plan — pair set and jaccard doubles,
+    under every n_blocks (1 ⇒ a single in-task matmul; 3 ⇒ docs split
+    across real block pairs)."""
     from oracles import ngram_jaccard_pairs_join
 
-    for kw in ({}, {"max_df": 5}):
-        ref = {
+    ref = {
+        (r["id_a"], r["id_b"]): r["jaccard"]
+        for r in ngram_jaccard_pairs_join(docs, n=3, threshold=0.3).collect()
+    }
+    for nb in (1, 3):
+        got = {
             (r["id_a"], r["id_b"]): r["jaccard"]
-            for r in ngram_jaccard_pairs_join(
-                docs, n=3, threshold=0.3, **kw
+            for r in D.ngram_jaccard_pairs(
+                docs, n=3, threshold=0.3, n_blocks=nb
             ).collect()
         }
-        for nb in (1, 3):
-            got = {
-                (r["id_a"], r["id_b"]): r["jaccard"]
-                for r in D.ngram_jaccard_pairs(
-                    docs, n=3, threshold=0.3, n_blocks=nb, **kw
-                ).collect()
-            }
-            assert got == ref, (kw, nb)
+        assert got == ref, nb
+
+
+def _component_roots(pairs):
+    """Union-find over an edge list: {vertex: its component's root}."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[rb] = ra
+    return {v: find(v) for v in parent}
+
+
+def _components(pairs):
+    """Connected components of an edge list, as sorted vertex lists."""
+    groups = {}
+    for v, root in _component_roots(pairs).items():
+        groups.setdefault(root, set()).add(v)
+    return sorted(map(sorted, groups.values()))
+
+
+def test_ngram_jaccard_kernel_edge_inputs(spark):
+    """The blocked pair kernel matches the self-join oracle bit for bit
+    on inputs the fixtures never hold: a block pair whose local
+    vocabulary exceeds ``_BLOCKED_DENSE_VOCAB_MAX`` (the sparse merge
+    branch), NULL, empty and shorter-than-n texts, non-BMP characters,
+    and NULL ids next to ids above 2**53 (distinct in int64, one value
+    in float64). The cluster edges keep the pairs' components."""
+    import random
+
+    from oracles import ngram_jaccard_pairs_join
+
+    rng = random.Random(11)
+    alphabet = [chr(c) for c in range(0x4E00, 0x4E00 + 3000)]
+    rows = []
+    for i in range(30):  # ~1k distinct 3-grams each, a near copy apiece
+        text = [rng.choice(alphabet) for _ in range(1000)]
+        rows.append((2 * i, "".join(text)))
+        for k in rng.sample(range(len(text)), 30):
+            text[k] = rng.choice(alphabet)
+        rows.append((2 * i + 1, "".join(text)))
+    big = 2**60
+    emoji = "party 🎉🎉 time 😀😁😂 over 🚀 the moon"
+    fox = "the quick brown fox jumps over the dog"
+    rows += [
+        (100, None), (101, ""), (102, "ab"), (103, "  a  "),
+        (104, emoji), (105, emoji.replace("🚀", "🛸")), (big + 3, emoji + "!"),
+        (big + 1, fox), (big + 2, fox.replace("jumps", "jumped")),
+        (None, fox),
+    ]
+    src = spark.createDataFrame(rows, "doc_id long, text string")
+    n_vocab = D.shingles(src).select("shingle").distinct().count()
+    assert n_vocab > D._BLOCKED_DENSE_VOCAB_MAX
+    ref = {
+        (r["id_a"], r["id_b"]): r["jaccard"]
+        for r in ngram_jaccard_pairs_join(src, n=3, threshold=0.5).collect()
+    }
+    assert (big + 1, big + 2) in ref and (104, 105) in ref
+    assert sum(a < 100 for a, _ in ref) == 30
+    for nb in (1, 3):
+        got = {
+            (r["id_a"], r["id_b"]): r["jaccard"]
+            for r in D.ngram_jaccard_pairs(
+                src, n=3, threshold=0.5, n_blocks=nb
+            ).collect()
+        }
+        assert got == ref, nb
+        edges = D.ngram_jaccard_cluster_edges(
+            src, n=3, threshold=0.5, n_blocks=nb
+        ).collect()
+        assert _components(edges) == _components(ref), nb
 
 
 def test_forest_reduce_preserves_components(spark):
@@ -204,32 +279,9 @@ def test_forest_reduce_preserves_components(spark):
     red_pairs = [(r["id_a"], r["id_b"]) for r in red]
     # star rows connect only vertices a real input edge connected: both
     # endpoints of every reduced row must share an input component
-    def comps(pairs):
-        parent = {}
-
-        def find(x):
-            parent.setdefault(x, x)
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in pairs:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[rb] = ra
-        return {v: find(v) for v in parent}
-
-    ref, got = comps(edges), comps(red_pairs)
+    ref, got = _component_roots(edges), _component_roots(red_pairs)
     assert set(ref) == set(got)  # vertex set incl. self-loop-only 5000
-    ref_groups = {}
-    got_groups = {}
-    for v in ref:
-        ref_groups.setdefault(ref[v], set()).add(v)
-        got_groups.setdefault(got[v], set()).add(v)
-    assert sorted(map(sorted, ref_groups.values())) == sorted(
-        map(sorted, got_groups.values())
-    )
+    assert _components(edges) == _components(red_pairs)
     # every reduced row stays WITHIN one input component (no spurious
     # merges smuggled in by the star emission)
     for a, b in red_pairs:
@@ -291,19 +343,44 @@ def test_ngram_cluster_edges_same_components(spark, docs):
             assert got == ref, (tau, len(got), len(ref))
 
 
+def _plan_nodes(node):
+    """Every node of an executed physical plan, descending into AQE query
+    stages (a stage hides its plan from ``children``)."""
+    yield node
+    kids = node.children()
+    for i in range(kids.size()):
+        yield from _plan_nodes(kids.apply(i))
+    if node.getClass().getSimpleName().endswith("QueryStageExec"):
+        yield from _plan_nodes(node.plan())
+
+
 def test_ngram_cluster_edges_runs_pair_kernel_once(spark):
     """The star rows and the boundary pairs come out of ONE filter over
     the blocked pair kernel's output: the executed plan holds exactly
-    one FlatMapGroupsInPandas (a union of two branches over the kernel
-    would run it twice)."""
+    one FlatMapGroupsInArrow (a union of two branches over the kernel
+    would run it twice). The kernel's input exchange carries one row per
+    (doc with a non-NULL id, block): B shingle arrays per doc, never a
+    row per shingle."""
     rows = [(i, f"repeat repeat repeat block {i % 4} tail {i % 7}")
             for i in range(40)]
+    rows += [(None, "repeat repeat repeat"), (40, None), (41, ""), (42, "ab")]
     src = spark.createDataFrame(rows, "doc_id long, text string")
-    edges = D.ngram_jaccard_cluster_edges(src, n=3, threshold=0.5)
+    n_blocks = 3
+    edges = D.ngram_jaccard_cluster_edges(
+        src, n=3, threshold=0.5, n_blocks=n_blocks
+    )
     edges.collect()
-    plan = edges._jdf.queryExecution().executedPlan().toString()
+    root = edges._jdf.queryExecution().executedPlan()
+    plan = root.toString()
     final = plan.split("== Initial Plan ==")[0]
-    assert final.count("FlatMapGroupsInPandas") == 1, plan
+    assert final.count("FlatMapGroupsInArrow") == 1, plan
+    kernel = next(
+        n for n in _plan_nodes(root.executedPlan())
+        if n.nodeName() == "FlatMapGroupsInArrow"
+    )
+    exchange = next(n for n in _plan_nodes(kernel) if n.nodeName() == "Exchange")
+    written = exchange.metrics().apply("shuffleRecordsWritten").value()
+    assert written == (len(rows) - 1) * n_blocks, plan
 
 
 def test_connected_components_reads_input_once(spark):
