@@ -90,16 +90,6 @@ class Engine:
         self.last_run = report
         return df
 
-    def draw_involved_dag(self, requested: list[str], path: str | None = None) -> str:
-        """DOT text of the involved subgraph for ``requested`` (feagen
-        DataGenerator.draw_involved_dag analogue, §2.A A10 — text-only,
-        no graphviz dependency; pipe to `dot -Tpng` if installed)."""
-        dot = self.dag.plan(requested, input_token=self.input_token).to_dot()
-        if path:
-            with open(path, "w") as f:
-                f.write(dot)
-        return dot
-
     def bundle(
         self,
         df: DataFrame,

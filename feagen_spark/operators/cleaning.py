@@ -134,8 +134,6 @@ def stratified_sample(
     strata_col: str,
     fractions: dict[str, float],
     id_col: str = "doc_id",
-    method: str = "md5",
-    seed: int = 42,
 ) -> DataFrame:
     """Deterministic per-stratum sampling: keep a row iff
     hash(id) mod 10^6 < fraction(stratum) * 10^6 — the curation step
@@ -149,14 +147,13 @@ def stratified_sample(
     from ``fractions`` are dropped (fraction 0). Map-only at any scale
     (one filter, no shuffle).
 
-    method='md5' is engine-portable (first 8 hex chars of md5 →
-    uint32 — the repo's standard oracle bridge; ignores ``seed``; a
-    NULL id is dropped); method='xxhash64' is the faster JVM-only path
-    (a NULL id hashes as the seed alone)."""
+    The hash is md5, engine-portable (first 8 hex chars of md5 →
+    uint32 — the repo's standard oracle bridge); a NULL id has no
+    bucket and is dropped."""
     bad = {k: v for k, v in fractions.items() if not 0.0 <= v <= 1.0}
     if bad:
         raise ValueError(f"fractions must be in [0, 1]: {bad}")
-    h = hash_bucket([F.col(id_col)], method, seed, 1_000_000)
+    h = hash_bucket([F.col(id_col)], "md5", 0, 1_000_000)  # md5 ignores the seed
     thresholds = [
         (k, int(round(v * 1_000_000))) for k, v in sorted(fractions.items())
     ]
@@ -192,8 +189,6 @@ def sample_to_token_budget(
     token_col: str,
     budgets: dict[str, int],
     id_col: str = "doc_id",
-    method: str = "md5",
-    seed: int = 42,
 ) -> DataFrame:
     """Downsample each stratum to a TOKEN budget (the curation step
     between the mixture report and training: "200B tokens of web, 50B
@@ -208,8 +203,8 @@ def sample_to_token_budget(
     frame (works for any equatable strata type, same as
     ``stratified_sample`` — code-review r6), and the fraction join is
     a BROADCAST of it onto the corpus, followed by
-    the same content-hash keep rule every sampler in this module uses
-    (``hashing.hash_bucket``): bit-stable across runs, layouts,
+    the same md5 content-hash keep rule as ``stratified_sample``:
+    bit-stable across runs, layouts,
     cluster sizes and retries; adding rows to one stratum never resamples another.
 
     The budget is met in expectation over the hash draw (docs are kept
@@ -233,7 +228,7 @@ def sample_to_token_budget(
             .alias("keep_fraction"),
         )
     )
-    h = hash_bucket([F.col(id_col)], method, seed, 1_000_000)
+    h = hash_bucket([F.col(id_col)], "md5", 0, 1_000_000)  # md5 ignores the seed
     return (
         df.join(F.broadcast(frac), on=strata_col)
         .where(h < F.round(F.col("keep_fraction") * 1_000_000))
@@ -346,7 +341,6 @@ def deterministic_negatives(
     n_buckets: int = 1024,
     seed: int = 42,
     method: str = "xxhash64",
-    exclude_self: bool = True,
 ) -> DataFrame:
     """``k`` pseudo-random NEGATIVE examples per anchor (contrastive /
     retrieval training pairs), deterministic across runs, layouts and
@@ -368,14 +362,13 @@ def deterministic_negatives(
     (lowest draw wins), so an anchor gets UP TO ``k`` distinct
     negatives, never a silently duplicated training pair (code-review
     r5). Output: (anchor_id, draw, neg_id), distinct per anchor.
-    Id contract (ADVICE r5): ``exclude_self`` compares anchor and
-    corpus ids DIRECTLY, so it only makes sense when the two columns
-    share one id space (the usual in-corpus case) — pass
-    ``exclude_self=False`` when anchors and corpus are different entity
-    spaces that merely overlap on an id domain, or a valid negative
-    whose id coincidentally equals the anchor's is wrongly dropped.
-    NULL ids are rejected up front on both sides (a NULL-id row would
-    otherwise vanish silently inside the null-rejecting comparison).
+    Id contract (ADVICE r5): the self-pair exclusion compares anchor
+    and corpus ids DIRECTLY, so the two columns must share one id space
+    (the in-corpus case every caller has); for entity spaces that
+    merely overlap on an id domain, a valid negative whose id
+    coincidentally equals the anchor's would be dropped. NULL ids are
+    rejected up front on both sides (a NULL-id row would otherwise
+    vanish silently inside the null-rejecting comparison).
 
     ``method='md5'`` swaps every hash (bucket assignment both sides and
     the per-draw ranking) for the repo's engine-portable md5 bridge
@@ -410,9 +403,9 @@ def deterministic_negatives(
             ),
         )
     )
-    joined = probes.join(cand, on="__bkt")
-    if exclude_self:
-        joined = joined.where(F.col("neg_id") != F.col("__anchor"))
+    joined = probes.join(cand, on="__bkt").where(
+        F.col("neg_id") != F.col("__anchor")
+    )
     if method == "md5":
         rank_h = md5_hex([F.col("__anchor"), F.col("draw"), F.col("neg_id")])
     else:

@@ -12,6 +12,11 @@ explode each interval to every chunk it overlaps, equi-join events on
 lives in exactly ONE chunk, so a matching (event, interval) pair meets
 exactly once — no dedup pass needed.
 
+The join is inner and end-inclusive, the semantics of the one caller,
+``q_ev_session_attribution`` (purchase → containing session): the
+sessionizer's bounds are end-inclusive too, and an event outside every
+interval is dropped.
+
 Cost model: interval duplication = ceil(length / chunk_span) rows per
 interval; candidate fan-in per event = intervals overlapping its chunk.
 Pick ``chunk_span_s`` near the median interval length — shorter spans
@@ -36,29 +41,13 @@ def interval_join(
     start_col: str = "start",
     end_col: str = "end",
     chunk_span_s: int = 3600,
-    end_inclusive: bool = True,
-    how: str = "inner",
-    event_id: str | Sequence[str] | None = None,
 ) -> DataFrame:
     """Join each event row to the interval rows (same ``on`` key) whose
-    [start, end] contains its timestamp (end-inclusive by default; the
-    sessionizer's bounds are end-inclusive too).
-
-    ``how='inner'`` keeps matched events; ``'left'`` keeps unmatched
-    events with NULL interval columns (attribution reports need both).
-    Overlapping intervals produce one output row per containing
-    interval — containment, not as-of, semantics.
-
-    ``event_id`` (required for ``how='left'`` — VERDICT r4 #8 / ADVICE
-    r4): column(s) that uniquely identify an event row. The
-    unmatched-events anti-join keys on these ids only, so (a) wide
-    payload columns never ride the anti-join shuffles, and (b) NULLs in
-    payload columns cannot break the join (a full-row '=' anti-join is
-    null-rejecting: a matched row with any NULL column would be
-    re-emitted as a spurious null-padded duplicate).
+    [start, end] contains its timestamp, end-inclusive. Events that no
+    interval contains are dropped. Overlapping intervals produce one
+    output row per containing interval — containment, not as-of,
+    semantics. Intervals with start > end are dropped.
     """
-    if how not in ("inner", "left"):
-        raise ValueError(f"how must be 'inner' or 'left', got {how!r}")
     on = list(on)
     # non-key name collisions would make the joined output ambiguous
     overlap = (set(events.columns) & set(intervals.columns)) - set(on)
@@ -81,32 +70,5 @@ def interval_join(
         ),
     )
 
-    upper = (
-        ev_us <= F.unix_micros(F.col(end_col).cast("timestamp"))
-        if end_inclusive
-        else ev_us < F.unix_micros(F.col(end_col).cast("timestamp"))
-    )
-    contained = (F.unix_micros(F.col(start_col).cast("timestamp")) <= ev_us) & upper
-
-    if how == "inner":
-        return e.join(iv, on=[*on, _CHUNK]).where(contained).drop(_CHUNK)
-    # left: join candidates, keep containment matches, then re-attach
-    # events that matched nothing — anti-join keyed on the declared
-    # event ids (ids only ride the extra shuffles, never the payload)
-    if event_id is None:
-        raise ValueError(
-            "interval_join(how='left') needs event_id: the column(s) "
-            "uniquely identifying an event row (the unmatched anti-join "
-            "keys on them)"
-        )
-    ids = [event_id] if isinstance(event_id, str) else list(event_id)
-    missing = [c for c in ids if c not in events.columns]
-    if missing:
-        raise ValueError(f"event_id columns {missing} not in events")
-    matched = e.join(iv, on=[*on, _CHUNK]).where(contained).drop(_CHUNK)
-    unmatched = events.join(
-        matched.select(*ids).dropDuplicates(ids),
-        on=ids,
-        how="left_anti",
-    )
-    return matched.unionByName(unmatched, allowMissingColumns=True)
+    contained = (s_us <= ev_us) & (ev_us <= e_us)
+    return e.join(iv, on=[*on, _CHUNK]).where(contained).drop(_CHUNK)

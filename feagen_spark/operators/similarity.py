@@ -501,16 +501,15 @@ def cosine_near_dup_pairs(
 def quantize_embeddings(
     df: DataFrame,
     vec_col: str = "embedding",
-    bits: int = 8,
     out_col: str = "q_vec",
     scale_col: str = "q_scale",
 ) -> DataFrame:
-    """Symmetric per-vector integer quantization for embedding storage:
+    """Symmetric per-vector int8 quantization for embedding storage:
     q_i = round(v_i / scale * qmax) with scale = max_i |v_i| and
-    qmax = 2^(bits-1) - 1 (127 for int8). At 100 TB the embedding
-    column IS the storage bill — int8 cuts a float32 corpus 4x (float64
-    8x) while keeping cosine recall high; the reconstruction error is
-    bounded per element by scale / (2*qmax).
+    qmax = 127. At 100 TB the embedding column IS the storage bill —
+    int8 cuts a float32 corpus 4x (float64 8x) while keeping cosine
+    recall high; the reconstruction error is bounded per element by
+    scale / (2*qmax).
 
     Pure JVM map-only (array_max / transform higher-order functions —
     no Python workers, no shuffle); engine-portable arithmetic, so an
@@ -522,14 +521,10 @@ def quantize_embeddings(
     with a named error (code-review r6): NaN passes a bare `scale > 0`
     gate in Spark's ordering, the codes would all become NaN, and the
     ANSI int cast would kill the job with a cryptic CAST_INVALID_INPUT
-    instead. Codes are sized to the narrowest integer type that holds
-    qmax (tinyint for int8 — the advertised 4x storage win is real at
-    the schema level, not just numerically). A reader dequantizes as
+    instead. Codes are tinyint — the advertised 4x storage win is real
+    at the schema level, not just numerically. A reader dequantizes as
     v̂_i = q_i · scale / qmax."""
-    if not 2 <= bits <= 32:
-        raise ValueError(f"bits must be in [2, 32]: {bits}")
-    qmax = 2 ** (bits - 1) - 1
-    code_t = "tinyint" if bits <= 8 else ("smallint" if bits <= 16 else "int")
+    qmax = 127
     v = F.col(vec_col)
     scale = F.array_max(F.transform(v, lambda x: F.abs(x.cast("double"))))
     scale = F.coalesce(scale, F.lit(0.0))  # empty array -> 0.0
@@ -544,9 +539,9 @@ def quantize_embeddings(
         F.transform(
             v,
             lambda x: F.round(x.cast("double") / F.col(scale_col) * qmax)
-            .cast(code_t),
+            .cast("tinyint"),
         ),
-    ).otherwise(F.transform(v, lambda x: F.lit(0).cast(code_t)))
+    ).otherwise(F.transform(v, lambda x: F.lit(0).cast("tinyint")))
     return df.withColumn(
         scale_col, F.when(v.isNotNull(), scale)
     ).withColumn(out_col, codes)

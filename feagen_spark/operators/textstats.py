@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
-from ..functions.hashing import hash_bucket, hex_u32, md5_hex
+from ..functions.hashing import hash_bucket
 
 # Tiny deterministic stopword lists for the heuristic scorers. These are
 # fixed vocabulary, not a linguistic claim — the oracle uses the same sets.
@@ -213,14 +213,11 @@ def tfidf_terms(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    top_k: int | None = None,
 ) -> DataFrame:
     """Per-(doc, term) TF-IDF over whitespace tokens, all JVM-side:
     explode → two groupBys (term frequency per doc; document frequency
     per term) → broadcast of the 1-row corpus size → smooth idf
-    ``ln((N+1)/(df+1)) + 1`` (sklearn's smoothing, public). ``top_k``
-    keeps the k highest-scoring terms per doc (ties broken by term for
-    determinism).
+    ``ln((N+1)/(df+1)) + 1`` (sklearn's smoothing, public).
 
     Scale shape: tf is a (doc,term) groupBy (map-side combinable);
     document frequency is a COUNT WINDOW over the term partitioning of
@@ -237,7 +234,7 @@ def tfidf_terms(
         Window.unboundedPreceding, Window.unboundedFollowing
     )
     n_docs = df.agg(F.count(F.lit(1)).alias("n_docs"))
-    scored = (
+    return (
         tf.withColumn("dfreq", F.count(F.lit(1)).over(w_term))
         .crossJoin(F.broadcast(n_docs))
         .select(
@@ -255,16 +252,6 @@ def tfidf_terms(
             ).alias("tfidf"),
         )
     )
-    if top_k is not None:
-        w = Window.partitionBy(id_col).orderBy(
-            F.col("tfidf").desc(), F.col("term").asc()
-        )
-        scored = (
-            scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= top_k)
-            .select(id_col, "term", "tf", "tfidf", F.col("rank").cast("int"))
-        )
-    return scored
 
 
 def unigram_logprob(
@@ -335,33 +322,31 @@ def _hashed_grams(
     id_col: str,
     text_col: str,
     n_buckets: int,
-    use_bigrams: bool,
     method: str,
     seed: int,
 ) -> DataFrame:
     """(id, bucket) feature stream for dsir_logweight: whitespace
-    unigrams (the shared ``_ws_tokens`` definition) plus optional word
-    bigrams, each hashed into ``n_buckets`` by the repo's standard
-    md5/xxhash64 bucket rule (``hashing.hash_bucket``). One map-only
+    unigrams (the shared ``_ws_tokens`` definition) plus word bigrams,
+    each hashed into ``n_buckets`` by the repo's standard md5/xxhash64
+    bucket rule (``hashing.hash_bucket``). One map-only
     projection + one explode — no shuffle; gram strings never leave
     the map stage (only the hashed bucket id is emitted)."""
     toks = _ws_tokens(F.col(text_col))
-    grams = toks
-    if use_bigrams:
-        # bigram i = toks[i] + ' ' + toks[i+1]; the last position maps
-        # to NULL (no successor) and is filtered out — pure JVM
-        big = F.filter(
-            F.transform(
-                toks,
-                lambda t, i: F.when(
-                    i < F.size(toks) - 1,
-                    F.concat(t, F.lit(" "), F.element_at(toks, i + 2)),
-                ),
+    # bigram i = toks[i] + ' ' + toks[i+1]; the last position maps to
+    # NULL (no successor) and is filtered out — pure JVM
+    big = F.filter(
+        F.transform(
+            toks,
+            lambda t, i: F.when(
+                i < F.size(toks) - 1,
+                F.concat(t, F.lit(" "), F.element_at(toks, i + 2)),
             ),
-            lambda g: g.isNotNull(),
-        )
-        grams = F.concat(toks, big)
-    out = df.select(F.col(id_col), F.explode(grams).alias("__gram"))
+        ),
+        lambda g: g.isNotNull(),
+    )
+    out = df.select(
+        F.col(id_col), F.explode(F.concat(toks, big)).alias("__gram")
+    )
     return out.select(
         id_col,
         hash_bucket([F.col("__gram")], method, seed, n_buckets).alias("__bkt"),
@@ -375,7 +360,6 @@ def dsir_logweight(
     text_col: str = "text",
     n_buckets: int = 1 << 13,
     alpha: float = 0.5,
-    use_bigrams: bool = True,
     method: str = "xxhash64",
     seed: int = 42,
     out_col: str = "dsir_logweight",
@@ -418,12 +402,8 @@ def dsir_logweight(
         raise ValueError("n_buckets must be >= 2")
     if alpha <= 0:
         raise ValueError("alpha must be > 0 (smoothing)")
-    tgt = _hashed_grams(
-        target, id_col, text_col, n_buckets, use_bigrams, method, seed
-    )
-    rawf = _hashed_grams(
-        raw, id_col, text_col, n_buckets, use_bigrams, method, seed
-    )
+    tgt = _hashed_grams(target, id_col, text_col, n_buckets, method, seed)
+    rawf = _hashed_grams(raw, id_col, text_col, n_buckets, method, seed)
     tcnt = tgt.groupBy("__bkt").agg(F.count(F.lit(1)).alias("__tgt_n"))
 
     def _gram_total(df: DataFrame) -> F.Column:
@@ -434,7 +414,7 @@ def dsir_logweight(
         # either corpus (NULL text counts 0 on both paths)
         n = _token_count(F.col(text_col))
         per_doc = F.when(n.isNull() | (n <= 0), F.lit(0)).otherwise(
-            n * 2 - 1 if use_bigrams else n
+            n * 2 - 1
         )
         return F.coalesce(F.sum(per_doc).cast("double"), F.lit(0.0))
 
@@ -508,7 +488,6 @@ def hash_tokenize(
     text_col: str = "text",
     vocab_size: int = 2**15,
     out_col: str = "token_ids",
-    method: str = "xxhash64",
 ) -> DataFrame:
     """Feature-hashing tokenizer: text → array<int> of token ids with
     NO trained vocabulary — ``id = hash(token) mod vocab_size`` (the
@@ -523,24 +502,18 @@ def hash_tokenize(
     Pure JVM map-only (split + transform higher-order function — no
     Python workers, no shuffle, whole-stage codegen). Tokenization is
     the shared ``_ws_tokens`` definition (lower/trim/RE2-whitespace),
-    so counts line up with ``add_token_count`` family. method='md5' is
-    the engine-portable bridge (``hashing.hex_u32(md5_hex(token))`` —
-    the first 8 hex chars of md5(token) as a uint32 — mod vocab,
-    reproducible in any SQL engine); 'xxhash64' is the faster JVM
-    default (the unseeded ``xxhash64(token)`` mod vocab). Ids are
-    non-negative; NULL text yields NULL."""
+    so counts line up with ``add_token_count`` family. The id is the
+    unseeded ``xxhash64(token)`` mod vocab (JVM-only; both curation
+    jobs tokenize this way). Ids are non-negative; NULL text yields
+    NULL."""
     if vocab_size < 2 or vocab_size > 2**31 - 1:
         raise ValueError(f"vocab_size out of range: {vocab_size}")
     toks = _ws_tokens(F.col(text_col))
-    if method == "md5":
-        h = lambda t: hex_u32(md5_hex([t]))  # noqa: E731
-    elif method == "xxhash64":
-        h = F.xxhash64
-    else:
-        raise ValueError(f"unknown method {method!r}")
     return df.withColumn(
         out_col,
-        F.transform(toks, lambda t: F.pmod(h(t), F.lit(vocab_size)).cast("int")),
+        F.transform(
+            toks, lambda t: F.pmod(F.xxhash64(t), F.lit(vocab_size)).cast("int")
+        ),
     )
 
 

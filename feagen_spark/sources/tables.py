@@ -35,10 +35,10 @@ def read_table(
     spark: SparkSession,
     location: str,
     fmt: str = "parquet",
-    ts_col: str | None = "ts",
 ) -> DataFrame:
-    """Read an input table; NTZ timestamps are normalized to session-TZ
-    timestamps so window range frames and as-of joins are well-defined."""
+    """Read an input table; an NTZ ``ts`` column is normalized to a
+    session-TZ timestamp so window range frames and as-of joins are
+    well-defined."""
     if fmt == "iceberg" and not iceberg_available(spark):
         raise IcebergUnavailableError(
             f"read_table({location!r}, fmt='iceberg'): the Iceberg "
@@ -46,8 +46,6 @@ def read_table(
             "--packages org.apache.iceberg:...)"
         )
     df = spark.read.format(fmt).load(location)
-    if ts_col and ts_col in df.columns and df.schema[ts_col].dataType.typeName() == (
-        "timestamp_ntz"
-    ):
-        df = df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
+    if "ts" in df.columns and df.schema["ts"].dataType.typeName() == "timestamp_ntz":
+        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df

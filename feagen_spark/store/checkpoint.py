@@ -57,14 +57,20 @@ class CheckpointStore:
         """``bucket_by=(n_buckets, key_col_or_cols)`` writes each
         checkpoint as Spark-native BUCKETED files and registers them as
         an EXTERNAL catalog table over the checkpoint's directory under
-        ``root``: the resume join-back then reads a table whose
-        HashPartitioning is already known to the planner, so the
-        checkpoint side of the join needs NO exchange. Bucket on the
-        FULL join-back key set (the Engine's ``keys``): Spark's default
+        ``root``: a join-back then reads a table whose HashPartitioning
+        is already known to the planner, so when the join is a
+        sort-merge join the checkpoint side needs NO exchange; the flow
+        side still shuffles. Bucket on the FULL join-back key set (the
+        Engine's ``keys``): Spark's default
         ``requireAllClusterKeysForCoPartition=true`` demands exact-key
         co-partitioning for a join side to skip its shuffle — a prefix
-        is not enough (verified by the plan tests). Default None keeps
-        the plain path-based parquet layout."""
+        is not enough (verified by the plan tests). A checkpoint small
+        enough to broadcast is joined back by a BroadcastExchange
+        either way: the ``conf/run.yml`` golden plan (cold and resume)
+        has 1 hash + 2 BroadcastExchanges bucketed or not, and with
+        ``spark.sql.autoBroadcastJoinThreshold=-1`` 5 hash Exchanges
+        bucketed vs 7 unbucketed. Default None keeps the plain
+        path-based parquet layout."""
         self.root = root
         self.bucket_by = bucket_by
         self.manifest_dir = os.path.join(root, "manifest.d")

@@ -143,9 +143,11 @@ def main() -> None:
     )
     # checkpoint_bucket_by: [n_buckets, key_or_key_list] switches the
     # store to BUCKETED checkpoints (external tables under the store
-    # root) — the plan-proved shuffle-free resume join-back becomes the
-    # DEPLOYED configuration (VERDICT r3 #8). Absent: plain unbucketed
-    # parquet checkpoints.
+    # root). It saves the checkpoint side's shuffle of a sort-merge
+    # join-back only: the conf/run.yml golden plan has 1 hash + 2
+    # BroadcastExchanges bucketed or not, and 5 vs 7 hash Exchanges
+    # with broadcast joins off (see conf/run.yml). Absent: plain
+    # unbucketed parquet checkpoints.
     bucket_by = None
     if cfg.get("checkpoint_bucket_by"):
         n, cols = cfg["checkpoint_bucket_by"]

@@ -116,14 +116,13 @@ def test_stratified_sample_deterministic_and_exact(spark):
     import pytest as _pytest
 
     # a NULL id: md5 has no bucket for it, so even a fraction of 1.0
-    # drops the row; xxhash64 buckets the seed alone and keeps it
+    # drops the row
     with_null = df.unionByName(
         spark.createDataFrame([(None, "en")], "doc_id long, lang string")
     )
-    for method, kept in (("md5", False), ("xxhash64", True)):
-        got = stratified_sample(with_null, "lang", {"en": 1.0}, method=method)
-        assert got.where(F.col("doc_id").isNull()).count() == int(kept), method
-        assert got.count() == len([i for i in range(2000) if i % 3 == 0]) + kept
+    got = stratified_sample(with_null, "lang", {"en": 1.0})
+    assert got.where(F.col("doc_id").isNull()).count() == 0
+    assert got.count() == len([i for i in range(2000) if i % 3 == 0])
 
     with _pytest.raises(ValueError, match="fractions"):
         stratified_sample(df, "lang", {"en": 1.5})
@@ -438,9 +437,9 @@ def test_sample_to_token_budget_int_strata(spark):
 
 def test_deterministic_negatives_md5_and_id_contract(spark):
     """r6: method='md5' (the oracle bridge) is deterministic, ignores
-    the seed and obeys the same invariants; NULL ids are rejected up front; and
-    exclude_self=False admits id-coincident pairs for disjoint entity
-    spaces (ADVICE r5)."""
+    the seed and obeys the same invariants; NULL ids are rejected up
+    front; and an id-coincident candidate is always excluded as a
+    self-pair."""
     from feagen_spark.operators.cleaning import deterministic_negatives
 
     corpus = spark.range(300).select(F.col("id").alias("doc_id"))
@@ -487,15 +486,10 @@ def test_deterministic_negatives_md5_and_id_contract(spark):
     ).collect()
     assert all(r["doc_id"] == 1 and r["neg_id"] is not None for r in got)
 
-    # disjoint id spaces: with exclude_self=False an id-coincident
-    # candidate is a VALID negative
+    # an id-coincident candidate is a self-pair: excluded, so a corpus
+    # holding only the anchor's id yields no negative
     one_anchor = spark.createDataFrame([(7,)], "qid long")
     tiny_corpus = spark.createDataFrame([(7,)], "doc_id long")
-    kept = deterministic_negatives(
-        one_anchor, tiny_corpus, "qid", "doc_id", k=2, n_buckets=1,
-        exclude_self=False,
-    ).collect()
-    assert {r["neg_id"] for r in kept} == {7}
     dropped = deterministic_negatives(
         one_anchor, tiny_corpus, "qid", "doc_id", k=2, n_buckets=1,
     ).collect()

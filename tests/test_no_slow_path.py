@@ -19,6 +19,8 @@ FORBIDDEN = [
     (re.compile(r"\bsc\.parallelize\b"), "sc.parallelize"),
     (re.compile(r"createDataFrame\(\s*\["), "Python-list createDataFrame: a Python RDD job"),
     (re.compile(r"\.collect\(\)\s*\)?[^\n]*$\n?.*for\s", re.M), "driver-side loop over collect()"),
+    (re.compile(r"\bitertuples\("), "per-row pandas loop (itertuples)"),
+    (re.compile(r"\biterrows\("), "per-row pandas loop (iterrows)"),
 ]
 
 
@@ -44,9 +46,7 @@ def test_collect_only_in_allowed_places():
     """collect()/first() pulls data to the driver — allowed only where a
     scalar/summary is genuinely needed (store audit, dim sniffing)."""
     allowed = {
-        "store/checkpoint.py",        # write audit metrics (1-row observe)
         "operators/similarity.py",    # bounded IVF sample / dim sniff
-        "operators/dedup.py",         # CC convergence scalar (1-row agg)
     }
     offenders = []
     for py in PKG.rglob("*.py"):
@@ -102,6 +102,17 @@ def test_no_literal_partition_counts():
     assert not offenders, offenders
 
 
+def _caller_trees():
+    """Parsed source of every ``.py`` outside tests/ and dot-dirs: the
+    queries, jobs, perfbench, tools and the library itself."""
+    root = PKG.parent
+    for py in root.rglob("*.py"):
+        rel = py.relative_to(root).parts
+        if rel[0] == "tests" or any(p.startswith(".") for p in rel):
+            continue
+        yield ast.parse(py.read_text(), str(py))
+
+
 def _module_definitions(tree: ast.Module):
     """(lineno, name) of every top-level def, class and assigned name
     (``x = ...``, ``x: T = ...``, each ``Name`` of a tuple target)."""
@@ -130,11 +141,8 @@ def test_every_library_definition_has_a_caller():
     allowed: dict[str, str] = {"__all__": "the package's export list"}
     root = PKG.parent
     named = set()
-    for py in root.rglob("*.py"):
-        rel = py.relative_to(root).parts
-        if rel[0] == "tests" or any(p.startswith(".") for p in rel):
-            continue
-        for node in ast.walk(ast.parse(py.read_text(), str(py))):
+    for tree in _caller_trees():
+        for node in ast.walk(tree):
             if isinstance(node, ast.Name):
                 if not isinstance(node.ctx, ast.Store):
                     named.add(node.id)
@@ -149,3 +157,99 @@ def test_every_library_definition_has_a_caller():
         if name not in named and name not in allowed
     ]
     assert not uncalled, uncalled
+
+
+def _functions(tree: ast.Module):
+    """(called name, def, leading positionals a call does not spell) of
+    every top-level function and class method. A method's ``self`` or
+    ``cls`` is bound by the call, a staticmethod's is not; ``__init__``
+    is called by its class name."""
+    for node in tree.body:
+        if isinstance(node, ast.FunctionDef):
+            yield node.name, node, 0
+        elif isinstance(node, ast.ClassDef):
+            for fn in node.body:
+                if not isinstance(fn, ast.FunctionDef):
+                    continue
+                static = any(
+                    isinstance(d, ast.Name) and d.id == "staticmethod"
+                    for d in fn.decorator_list
+                )
+                name = node.name if fn.name == "__init__" else fn.name
+                yield name, fn, 0 if static else 1
+
+
+def _branching_options(fn: ast.FunctionDef):
+    """(name, position or None for keyword-only) of each defaulted
+    parameter that an ``if``/``elif``/``while``/conditional-expression
+    test in ``fn``'s body reads: a mode that selects a code path."""
+    tested = {
+        name.id
+        for node in ast.walk(fn)
+        if isinstance(node, (ast.If, ast.While, ast.IfExp))
+        for name in ast.walk(node.test)
+        if isinstance(name, ast.Name)
+    }
+    args = fn.args
+    positional = args.posonlyargs + args.args
+    first = len(positional) - len(args.defaults)
+    for i, arg in enumerate(positional[first:], first):
+        if arg.arg in tested:
+            yield arg.arg, i
+    for arg, default in zip(args.kwonlyargs, args.kw_defaults):
+        if default is not None and arg.arg in tested:
+            yield arg.arg, None
+
+
+def test_every_branching_option_has_a_caller():
+    """Every defaulted parameter that a library function branches on is
+    passed by some call outside tests/ (same callers as
+    ``test_every_library_definition_has_a_caller``; a call matches by
+    the function's name, and passes the option by keyword, by position,
+    or by a ``*``/``**`` splat, which counts as passing every option).
+    An option no caller passes keeps a code path that only tests run:
+    delete the mode, keep the value every caller uses. An ``allowed``
+    entry must say which query, job or north-rule clause needs it."""
+    allowed: dict[str, tuple[tuple[str, ...], str]] = {
+        "connected_components": (
+            ("method",),
+            "ROADMAP direction 3 keeps _cc_star until the long-chain "
+            "tests converge another way",
+        ),
+        "vacuum": (
+            ("spark", "grace_s"),
+            "crash-leftover recovery for the rename-aside swap (safety "
+            "code)",
+        ),
+    }
+    calls: dict[str, list] = {}
+    for tree in _caller_trees():
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            if isinstance(f, ast.Name):
+                name = f.id
+            elif isinstance(f, ast.Attribute):
+                name = f.attr
+            else:
+                continue
+            splat = any(isinstance(a, ast.Starred) for a in node.args) or any(
+                k.arg is None for k in node.keywords
+            )
+            calls.setdefault(name, []).append(
+                (len(node.args), {k.arg for k in node.keywords}, splat)
+            )
+    unpassed = []
+    for py in sorted(PKG.rglob("*.py")):
+        for name, fn, bound in _functions(ast.parse(py.read_text())):
+            for opt, pos in _branching_options(fn):
+                if opt in allowed.get(name, ((), ""))[0] or any(
+                    splat or opt in kws or (pos is not None and pos - bound < n)
+                    for n, kws, splat in calls.get(name, [])
+                ):
+                    continue
+                unpassed.append(
+                    f"{py.relative_to(PKG.parent)}:{fn.lineno} {name}({opt}=)"
+                )
+    assert not unpassed, unpassed

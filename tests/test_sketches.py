@@ -14,25 +14,22 @@ def zipfish(spark):
     """10k rows over ~1k distinct tokens with a heavy head: token =
     id % (1 + id % 37) picks small values far more often."""
     return spark.range(10_000).select(
-        (F.col("id") % 4).alias("src"),
         F.pmod(F.xxhash64("id"), F.lit(1) + F.pmod("id", F.lit(37)))
         .cast("string")
         .alias("tok"),
     )
 
 
-def _hh(df, threshold, keys=(), capacity=4096):
+def _hh(df, threshold, capacity=4096):
     """One summary over ``df`` merged back against ``df`` itself."""
-    summ = SK.hh_summary(df, "tok", keys=keys, capacity=capacity)
-    return SK.heavy_hitters_from_summaries(
-        summ, df, "tok", threshold=threshold, keys=keys
-    )
+    summ = SK.hh_summary(df, "tok", capacity=capacity)
+    return SK.heavy_hitters_from_summaries(summ, df, "tok", threshold=threshold)
 
 
-def _exact(df, threshold, keys=()):
+def _exact(df, threshold):
     return {
         tuple(r)
-        for r in df.groupBy(*keys, "tok")
+        for r in df.groupBy("tok")
         .count()
         .where(F.col("count") >= threshold)
         .collect()
@@ -44,15 +41,6 @@ def test_heavy_hitters_exact_parity_and_layout_invariance(zipfish):
     for layout in (zipfish, zipfish.repartition(1), zipfish.repartition(13)):
         got = {tuple(r) for r in _hh(layout, 300, capacity=256).collect()}
         assert got == exp and got  # exact under every layout
-
-
-def test_heavy_hitters_per_key_groups(zipfish):
-    exp = _exact(zipfish, 120, keys=("src",))
-    got = {
-        tuple(r)
-        for r in _hh(zipfish, 120, keys=["src"], capacity=256).collect()
-    }
-    assert got == exp and got
 
 
 def test_heavy_hitters_zero_error_when_capacity_covers_domain(spark):
@@ -89,16 +77,6 @@ def test_heavy_hitters_ignores_null_items(spark):
     )
     got = _hh(df, threshold=2, capacity=16).collect()
     assert [(r["item"], r["n"]) for r in got] == [("a", 3)]
-
-
-def test_heavy_hitters_null_key_rejected(spark):
-    from pyspark.errors import PySparkException
-
-    df = spark.createDataFrame(
-        [("a", "x"), (None, "x"), ("a", "y")], "src string, tok string"
-    )
-    with pytest.raises(PySparkException, match="NULL key"):
-        _hh(df, threshold=1, keys=["src"], capacity=8).collect()
 
 
 def test_hh_summaries_merge_across_batches(spark):
@@ -140,9 +118,8 @@ def test_hh_summaries_merge_across_batches(spark):
 
 def test_hh_from_summaries_d_positive_and_guards(spark):
     """The incremental path in the REAL D>0 regime (decrements fire),
-    plus its loud-failure guards: merged-D >= threshold raises, an
-    empty summary table raises, a corpus key group with no summary
-    rows raises, and corpus-side NULL keys raise."""
+    plus its loud-failure guards: merged-D >= threshold raises and an
+    empty summary table raises."""
     from pyspark.errors import PySparkException
 
     base = spark.range(20_000).select(
@@ -188,24 +165,6 @@ def test_hh_from_summaries_d_positive_and_guards(spark):
     with pytest.raises(PySparkException, match="no summary rows"):
         SK.heavy_hitters_from_summaries(
             empty, base, "tok", threshold=thr
-        ).collect()
-    # a corpus key group the summaries never saw -> loud
-    keyed = base.withColumn("src", F.lit("a"))
-    ks = SK.hh_summary(keyed, "tok", keys=["src"], capacity=64)
-    corpus2 = keyed.unionByName(
-        keyed.limit(10).withColumn("src", F.lit("b"))
-    )
-    with pytest.raises(PySparkException, match="no summary rows"):
-        SK.heavy_hitters_from_summaries(
-            ks, corpus2, "tok", threshold=10_000, keys=["src"]
-        ).collect()
-    # corpus-side NULL key -> loud
-    corpus3 = keyed.unionByName(
-        keyed.limit(5).withColumn("src", F.lit(None).cast("string"))
-    )
-    with pytest.raises(PySparkException, match="NULL key"):
-        SK.heavy_hitters_from_summaries(
-            ks, corpus3, "tok", threshold=10_000, keys=["src"]
         ).collect()
 
 
