@@ -51,24 +51,6 @@ class Plan:
     requested: tuple[str, ...]
     fingerprints: dict[str, str]  # node name -> hex fingerprint
 
-    @property
-    def node_names(self) -> list[str]:
-        return [n.name for n in self.nodes]
-
-    def to_dot(self) -> str:
-        """DOT rendering of the involved DAG (feagen draw_involved_dag
-        analogue, §2.A A10 — text-only, no graphviz dependency)."""
-        produced = {o: n.name for n in self.nodes for o in n.outputs}
-        lines = ["digraph feature_dag {", "  rankdir=LR;"]
-        for n in self.nodes:
-            lines.append(f'  "{n.name}" [label="{n.name}\\n{",".join(n.outputs)}"];')
-        for n in self.nodes:
-            for d in n.deps:
-                if d in produced:
-                    lines.append(f'  "{produced[d]}" -> "{n.name}";')
-        lines.append("}")
-        return "\n".join(lines)
-
 
 class FeatureDAG:
     """Registry of nodes + templates over a set of input columns."""

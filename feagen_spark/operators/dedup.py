@@ -40,6 +40,11 @@ from pyspark.sql.functions import pandas_udf
 from ..functions.hashing import hex_u32
 
 
+class ComponentsDidNotConvergeError(RuntimeError):
+    """``connected_components`` reached ``max_iter`` rounds before its
+    labels stopped changing."""
+
+
 def _norm(text_col: str) -> F.Column:
     from .textstats import WS_SPLIT  # RE2-exact whitespace (no \v) — ADVICE r3
 
@@ -1160,27 +1165,28 @@ def connected_components(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iter: int = 25,
-    method: str = "min_label",
 ) -> DataFrame:
     """Connected components over a near-duplicate pair graph → one
     ``(id, cluster_id)`` row per vertex, ``cluster_id`` = min id in the
     component (the canonical survivor a dedup pass keeps).
 
-    Distributed min-label propagation: symmetrize the edges in one read
-    of the input (each edge row emits both directions), then
-    iterate ``label(v) ← min(label(v), min over neighbors' labels)``
-    until a fixpoint. Each iteration is one hash join + one groupBy (two
-    shuffles) over the PAIR graph — which is orders of magnitude smaller
-    than the corpus (only near-dup candidates appear), so the loop runs
-    on sketch-sized data even at 100 TB corpus scale. Iterations needed
-    = max component diameter; dup clusters are template families with
-    tiny diameters (pairs exist between most members), so 2-4 rounds in
-    practice. For adversarial long-chain graphs pass
-    ``method='star'`` — the large-star/small-star formulation (Kiveris
-    et al., "Connected Components in MapReduce and Beyond", public),
-    O(log²)-round convergence regardless of diameter; ``min_label``
-    stays the default because dedup-shaped graphs converge faster under
-    it and ``max_iter`` guards the pathological case loudly.
+    One algorithm: ``_forest_reduce`` first collapses each input
+    partition's edges to its component stars (one map-only union-find
+    per partition, one row per distinct vertex), then distributed
+    min-label propagation runs over those stars: symmetrize the edges
+    in one read (each edge row emits both directions), then iterate
+    ``label(v) ← min(label(v), min over neighbors' labels)`` until a
+    fixpoint. Each hop is one hash join + one groupBy (two shuffles)
+    over the reduced PAIR graph — orders of magnitude smaller than the
+    corpus (only near-dup candidates appear), so the loop runs on
+    sketch-sized data even at 100 TB corpus scale. Hops needed = the
+    reduced graph's max component diameter, two hops per round; dup
+    clusters are template families whose partition stars have diameter
+    2, so ~1 round in practice. ``max_iter`` bounds the rounds: a graph
+    whose reduced diameter still needs more (a long chain scattered so
+    that every partition holds disconnected fragments) raises
+    ``ComponentsDidNotConvergeError`` rather than return a partially
+    propagated labeling.
 
     Convergence: labels only ever decrease, so a hop whose observed
     count of ``nmin < label`` rows is 0 has reached the fixpoint — the
@@ -1188,10 +1194,6 @@ def connected_components(
     extra action. ``localCheckpoint`` cuts the iterative
     lineage so the plan does not double each round (a real cluster
     deployment would use a reliable checkpoint dir instead)."""
-    if method == "star":
-        return _cc_star(pairs, id_a, id_b, max_iter)
-    if method != "min_label":
-        raise ValueError(f"unknown connected_components method {method!r}")
     # partition-local star reduction (r7, guide §2.3): components are
     # invariant under ANY edge set with the same connectivity, and a
     # dense dup family of m docs contributes ~m²/2 pair edges where
@@ -1270,128 +1272,12 @@ def connected_components(
         if int(obs.get["c"] or 0) == 0:
             break
     else:
-        raise RuntimeError(
+        raise ComponentsDidNotConvergeError(
             f"connected_components did not converge in {max_iter} rounds "
-            "(pathological chain graph? use a larger max_iter or a "
-            "star-contraction variant)"
+            "(a long-chain graph needs about diameter/2 rounds: raise "
+            "max_iter)"
         )
     return labels.select("id", F.col("label").alias("cluster_id"))
-
-
-def _cc_star(
-    pairs: DataFrame, id_a: str, id_b: str, max_iter: int
-) -> DataFrame:
-    """Alternating large-star/small-star connected components (Kiveris
-    et al. 2014, public algorithm) — the escape hatch for adversarial
-    long-chain graphs where min-label propagation needs diameter/2
-    rounds (VERDICT r3 #9). Converges in O(log² n) rounds regardless of
-    component diameter:
-
-    - large-star: every neighbor LARGER than u re-attaches to
-      m(u) = min(Γ(u) ∪ {u});
-    - small-star: u and its SMALLER neighbors all attach to their
-      minimum.
-
-    Edges are kept normalized as (hi > lo); at the fixpoint the edge
-    set IS the star (node → component-min), so labels fall out without
-    a final propagation. Each half-round is one groupBy + one join over
-    the pair graph (sketch-sized, same as min-label); fixpoint detected
-    by an order-independent edge-set signature (count + decimal xxhash
-    sum — the same overflow-proof convention as the write-audit
-    checksum)."""
-    # same connectivity-preserving star reduction as min_label (r7):
-    # star contraction's per-round joins scale with |edges|. Every
-    # input vertex appears in the reduced rows (roots emit their own
-    # (r, r) row), so the singleton-cluster rows `verts` produces below
-    # are exactly the input's.
-    pairs = _forest_reduce(pairs, id_a, id_b)
-    e0 = pairs.select(F.col(id_a).alias("s"), F.col(id_b).alias("d"))
-    # every vertex the pair list mentions — self-loop-only vertices have
-    # no (hi > lo) edge but must still come back as their own singleton
-    # cluster, exactly like min_label (code-review r4 finding)
-    verts = e0.select(F.explode(F.array("s", "d")).alias("id")).distinct()
-    from pyspark.sql import Observation
-
-    # ONE definition of the order-independent edge-set signature,
-    # observed on every materializing job (code-review r6: a separate
-    # _sig() aggregate both duplicated these expressions — letting the
-    # two copies drift — and cost one extra full-plan action before
-    # the loop)
-    def _sig_metrics():
-        return (
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.xxhash64("hi", "lo").cast("decimal(38,0)")).alias("h"),
-        )
-
-    def _sig_of(obs: Observation) -> tuple:
-        m = obs.get
-        return (int(m["n"]), int(m["h"] or 0))
-
-    obs0 = Observation()
-    e = (
-        e0.where(F.col("s") != F.col("d"))
-        .select(
-            F.greatest("s", "d").alias("hi"), F.least("s", "d").alias("lo")
-        )
-        .distinct()
-        .observe(obs0, *_sig_metrics())
-        .localCheckpoint()
-    )
-    prev = _sig_of(obs0)
-
-    def _large(edges: DataFrame) -> DataFrame:
-        adj = edges.select(F.col("hi").alias("u"), F.col("lo").alias("v")).union(
-            edges.select(F.col("lo").alias("u"), F.col("hi").alias("v"))
-        )
-        mins = adj.groupBy("u").agg(F.min("v").alias("mv"))
-        mins = mins.select("u", F.least("mv", F.col("u")).alias("m"))
-        return (
-            adj.join(mins, "u")
-            .where(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("hi"), F.col("m").alias("lo"))
-            .where(F.col("hi") != F.col("lo"))
-            .distinct()
-        )
-
-    def _small(edges: DataFrame) -> DataFrame:
-        # all edges already satisfy hi > lo, so Γ⁻(hi) = its lo side
-        mins = edges.groupBy("hi").agg(F.min("lo").alias("m"))
-        withm = edges.join(mins, "hi")
-        re_lo = withm.select(
-            F.col("lo").alias("hi"), F.col("m").alias("lo")
-        ).where(F.col("hi") != F.col("lo"))
-        re_hi = withm.select("hi", F.col("m").alias("lo"))
-        return re_lo.union(re_hi).distinct()
-
-    for _ in range(max_iter):
-        # fixpoint signature rides the checkpoint job (VERDICT r5 #6):
-        # one action per half-round pair instead of checkpoint + agg
-        obs = Observation()
-        e = (
-            _small(_large(e))
-            .observe(obs, *_sig_metrics())
-            .localCheckpoint()
-        )
-        cur = _sig_of(obs)
-        if cur == prev:
-            break
-        prev = cur
-    else:
-        raise RuntimeError(
-            f"star connected_components did not converge in {max_iter} "
-            "rounds"
-        )
-    # non-roots point at their component min; every other mentioned
-    # vertex (roots AND self-loop-only singletons) labels itself
-    non_roots = e.select(
-        F.col("hi").alias("id"), F.col("lo").alias("cluster_id")
-    )
-    selfs = verts.join(
-        e.select(F.col("hi").alias("id")).distinct(), "id", "left_anti"
-    )
-    return non_roots.union(
-        selfs.select("id", F.col("id").alias("cluster_id"))
-    )
 
 
 # -- SimHash ---------------------------------------------------------------------

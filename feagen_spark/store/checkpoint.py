@@ -28,6 +28,11 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
 
+# age past which ``CheckpointStore.vacuum`` treats a ``.staging-*`` or
+# ``.old-*`` dir as stranded by a crash rather than held by a live swap
+VACUUM_GRACE_S = 24 * 3600
+
+
 class NaNWriteError(ValueError):
     """Reference parity: H5py handler rejects NaN-containing arrays."""
 
@@ -80,16 +85,6 @@ class CheckpointStore:
     def _entry_path(self, fingerprint: str) -> str:
         return os.path.join(self.manifest_dir, f"{fingerprint}.json")
 
-    def _load_manifest(self) -> dict:
-        """Full manifest view (audits/tooling)."""
-        m = {}
-        for fn in sorted(os.listdir(self.manifest_dir)):
-            if fn.endswith(".json"):
-                with open(os.path.join(self.manifest_dir, fn)) as f:
-                    e = json.load(f)
-                m[e["fingerprint"]] = e
-        return m
-
     def _save_entry(self, entry: dict) -> None:
         path = self._entry_path(entry["fingerprint"])
         tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
@@ -107,12 +102,6 @@ class CheckpointStore:
     def exists(self, fingerprint: str) -> bool:
         entry = self.entry(fingerprint)
         return entry is not None and os.path.exists(entry["path"])
-
-    def invalidate(self, fingerprint: str) -> None:
-        """Remove the per-fingerprint entry file."""
-        p = self._entry_path(fingerprint)
-        if os.path.exists(p):
-            os.remove(p)
 
     # -- read/write -----------------------------------------------------------
     def read(self, spark: SparkSession, fingerprint: str) -> DataFrame:
@@ -364,19 +353,20 @@ class CheckpointStore:
         collide on (node, fingerprint)."""
         return f"ckpt_{self._root_tag()}_{node_name}_{fingerprint[:16]}".lower()
 
-    def vacuum(
-        self, spark: SparkSession | None = None, grace_s: float = 24 * 3600
-    ) -> list[str]:
-        """Remove crash leftovers the swap discipline can strand:
+    def vacuum(self, spark: SparkSession) -> list[str]:
+        """Remove crash leftovers the swap discipline can strand; a job
+        calls it right after it opens its store:
 
-        - ``.staging-*`` / ``.old-*`` dirs older than ``grace_s`` (the
-          grace period protects writers that are mid-swap right now);
-        - with a session: orphaned ``_stg_`` CATALOG tables from
+        - ``.staging-*`` / ``.old-*`` dirs older than ``VACUUM_GRACE_S``
+          (the grace period protects writers of other sessions that are
+          mid-swap right now);
+        - orphaned ``_stg_`` CATALOG tables of ``spark`` from
           bucketed-mode crashes (no age is tracked for these — only run
-          the catalog sweep when no writer is active). The sweep is
-          scoped to THIS store's ``ckpt_<root_tag>_`` prefix (ADVICE
-          r4): vacuuming store A must never drop a mid-swap staging
-          table belonging to store B in the same session.
+          the catalog sweep when no writer of ``spark`` is active, as at
+          job start). The sweep is scoped to THIS store's
+          ``ckpt_<root_tag>_`` prefix (ADVICE r4): vacuuming store A
+          must never drop a mid-swap staging table belonging to store B
+          in the same session.
 
         Never touches live tables or live entries. Returns what it
         removed (for the operator's log)."""
@@ -389,16 +379,15 @@ class CheckpointStore:
             if (
                 (".staging-" in fn or ".old-" in fn)
                 and os.path.isdir(p)
-                and now - os.path.getmtime(p) >= grace_s
+                and now - os.path.getmtime(p) >= VACUUM_GRACE_S
             ):
                 shutil.rmtree(p, ignore_errors=True)
                 removed.append(fn)
-        if spark is not None:
-            prefix = f"ckpt_{self._root_tag()}_"
-            for t in spark.catalog.listTables():
-                if t.name.startswith(prefix) and "_stg_" in t.name:
-                    spark.sql(f"DROP TABLE IF EXISTS {t.name}")
-                    removed.append(f"table:{t.name}")
+        prefix = f"ckpt_{self._root_tag()}_"
+        for t in spark.catalog.listTables():
+            if t.name.startswith(prefix) and "_stg_" in t.name:
+                spark.sql(f"DROP TABLE IF EXISTS {t.name}")
+                removed.append(f"table:{t.name}")
         return removed
 
     @staticmethod

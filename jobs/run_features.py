@@ -157,6 +157,10 @@ def main() -> None:
         if cfg.get("checkpoint_root")
         else None
     )
+    # clear what a crashed earlier run stranded under the root (aged
+    # staging/aside dirs, this store's staging tables): no writer of
+    # this session is mid-swap yet
+    vacuumed = store.vacuum(spark) if store is not None else []
     eng = Engine(
         dag,
         store=store,
@@ -328,6 +332,7 @@ def main() -> None:
                 "backfill_rows": backfill_rows,
                 "packed_rows": packed_rows,
                 "ordered_rows": ordered_rows,
+                "vacuumed": vacuumed,
             }
         )
     )

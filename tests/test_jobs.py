@@ -186,6 +186,59 @@ def test_run_features_counts_writes_in_the_write_job(
     assert len(launched) == JOBS, sorted(launched)
 
 
+def test_run_features_vacuums_its_store_on_open(
+    spark, tmp_path, monkeypatch, capsys
+):
+    """A run clears what a crashed earlier run stranded in its
+    checkpoint root: a ``.staging-*`` dir older than the vacuum grace
+    period goes; a fresh one (a writer mid-swap) and the live
+    checkpoints stay, and the run still resumes from them."""
+    import os
+    import time
+
+    from feagen_spark.datagen.transcripts import transcripts
+
+    inp = str(tmp_path / "transcripts")
+    transcripts(spark, n_conv=8).write.parquet(inp)
+    root = tmp_path / "ckpt"
+    cfg = tmp_path / "run.yml"
+    cfg.write_text(
+        "\n".join(
+            [
+                "app_name: run_vacuum_test",
+                f"input_path: {inp}",
+                'keys: ["conv_id", "turn_idx"]',
+                'features: ["text_len", "session_id"]',
+                'checkpoint_nodes: ["session_id"]',
+                f"checkpoint_root: {root}",
+                f"output_path: {tmp_path / 'out'}",
+            ]
+        )
+    )
+    monkeypatch.setattr(sys, "argv", ["run_features", "--config", str(cfg)])
+    _load_runner().main()
+    live = sorted(p.name for p in root.iterdir() if p.name.startswith("session_id-"))
+    assert len(live) == 1
+
+    aged = root / "session_id-x.staging-dead"
+    fresh = root / "session_id-x.staging-live"
+    aged.mkdir()
+    fresh.mkdir()
+    then = time.time() - 48 * 3600
+    os.utime(aged, (then, then))
+    capsys.readouterr()
+
+    _load_runner().main()
+    summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert summary["vacuumed"] == [aged.name]
+    assert not aged.exists()
+    assert fresh.is_dir()
+    assert summary["skipped"] == ["session_id"]
+    assert sorted(
+        p.name for p in root.iterdir() if p.name.startswith("session_id-")
+    ) == sorted(live + [fresh.name])
+
+
 def test_repeated_pit_op_compiles_no_classes(spark, tiny_transcripts, tmp_path):
     """A JVM that runs the same plans again compiles each generated class
     once: a second pit-shaped op (cold bucketed-store generate + write,

@@ -114,8 +114,10 @@ def _caller_trees():
 
 
 def _module_definitions(tree: ast.Module):
-    """(lineno, name) of every top-level def, class and assigned name
-    (``x = ...``, ``x: T = ...``, each ``Name`` of a tuple target)."""
+    """(lineno, name) of every top-level def, class, method of a
+    top-level class (dunders are called by the language, not by name)
+    and assigned name (``x = ...``, ``x: T = ...``, each ``Name`` of a
+    tuple target)."""
     for node in tree.body:
         if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
             yield node.lineno, node.name
@@ -125,13 +127,21 @@ def _module_definitions(tree: ast.Module):
                 for name in ast.walk(target):
                     if isinstance(name, ast.Name):
                         yield node.lineno, name.id
+        if isinstance(node, ast.ClassDef):
+            for fn in node.body:
+                if isinstance(fn, ast.FunctionDef) and not (
+                    fn.name.startswith("__") and fn.name.endswith("__")
+                ):
+                    yield fn.lineno, fn.name
 
 
 def test_every_library_definition_has_a_caller():
-    """Every top-level def, class and module constant in feagen_spark/
-    is named by code outside tests/: a query, a job, perfbench, a tool
-    or another library module (a constant is usually read by its own
-    module). Only real references count (AST ``Name`` loads,
+    """Every top-level def, class, class method and module constant in
+    feagen_spark/ is named by code outside tests/: a query, a job,
+    perfbench, a tool or another library module (a constant is usually
+    read by its own module). A method counts as named when any
+    ``Attribute`` or ``Name`` spells it, whatever its receiver; dunder
+    methods are exempt. Only real references count (AST ``Name`` loads,
     ``Attribute`` attrs and import aliases), so a docstring or comment
     that mentions a name is not a caller. A definition that only tests
     call is an alternative the library keeps for no workload: delete
@@ -210,18 +220,7 @@ def test_every_branching_option_has_a_caller():
     An option no caller passes keeps a code path that only tests run:
     delete the mode, keep the value every caller uses. An ``allowed``
     entry must say which query, job or north-rule clause needs it."""
-    allowed: dict[str, tuple[tuple[str, ...], str]] = {
-        "connected_components": (
-            ("method",),
-            "ROADMAP direction 3 keeps _cc_star until the long-chain "
-            "tests converge another way",
-        ),
-        "vacuum": (
-            ("spark", "grace_s"),
-            "crash-leftover recovery for the rename-aside swap (safety "
-            "code)",
-        ),
-    }
+    allowed: dict[str, tuple[tuple[str, ...], str]] = {}
     calls: dict[str, list] = {}
     for tree in _caller_trees():
         for node in ast.walk(tree):

@@ -1004,38 +1004,49 @@ def test_semantic_dedup_keeps_null_vector_row(spark, vectors):
 
 
 def test_connected_components_matches_union_find(spark):
-    """Min-label propagation vs a plain-python union-find on a graph
-    with a chain, a triangle, an isolated edge and shared-min collisions."""
-    pairs = [
-        (1, 2), (2, 3), (3, 4),          # chain -> cluster 1
-        (10, 11), (11, 12), (10, 12),    # triangle -> cluster 10
-        (20, 21),                        # edge -> cluster 20
-        (5, 4),                          # extends the chain -> still 1
+    """Connected components vs a plain-python union-find on: a graph
+    with a chain, a triangle, an isolated edge and shared-min
+    collisions; a random 80-vertex graph; and a self-loop-only vertex
+    next to an edge (it comes back as its own singleton cluster)."""
+    rng = np.random.RandomState(3)
+    graphs = [
+        [
+            (1, 2), (2, 3), (3, 4),          # chain -> cluster 1
+            (10, 11), (11, 12), (10, 12),    # triangle -> cluster 10
+            (20, 21),                        # edge -> cluster 20
+            (5, 4),                          # extends the chain -> still 1
+        ],
+        [
+            (int(a), int(b))
+            for a, b in rng.randint(0, 80, size=(120, 2))
+            if a != b
+        ],
+        [(7, 7), (1, 2)],                    # 7 -> singleton cluster 7
     ]
-    df = spark.createDataFrame(pairs, "id_a long, id_b long")
-    got = {
-        r["id"]: r["cluster_id"]
-        for r in D.connected_components(df).collect()
-    }
 
-    parent = {}
+    def union_find(pairs):
+        parent = {}
 
-    def find(x):
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
+        def find(x):
+            parent.setdefault(x, x)
+            while parent[x] != x:
+                parent[x] = parent[parent[x]]
+                x = parent[x]
+            return x
 
-    def union(a, b):
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
+        for a, b in pairs:
+            ra, rb = find(a), find(b)
+            if ra != rb:
+                parent[max(ra, rb)] = min(ra, rb)
+        return {v: find(v) for v in parent}
 
-    for a, b in pairs:
-        union(a, b)
-    want = {v: find(v) for v in parent}
-    assert got == want
+    for pairs in graphs:
+        df = spark.createDataFrame(pairs, "id_a long, id_b long")
+        got = {
+            r["id"]: r["cluster_id"]
+            for r in D.connected_components(df).collect()
+        }
+        assert got == union_find(pairs), pairs
 
 
 def test_connected_components_empty_and_single_edge(spark):
@@ -1050,7 +1061,10 @@ def test_connected_components_long_chain_guard(spark):
     """A long chain (pathological diameter) must either converge within
     max_iter two-hop rounds or fail LOUDLY — never return a partially
     propagated labeling. 24 nodes / diameter 23 converges in <= 12
-    rounds; max_iter=2 on the same graph raises."""
+    rounds; max_iter=2 on the same graph raises. A 1000-edge chain
+    scattered over 64 partitions keeps a large diameter after the
+    partition-local star reduction (every partition holds disconnected
+    fragments), so max_iter=3 raises on it too."""
     chain = [(i, i + 1) for i in range(23)]
     df = spark.createDataFrame(chain, "id_a long, id_b long")
     got = {r["id"]: r["cluster_id"] for r in D.connected_components(df).collect()}
@@ -1058,6 +1072,12 @@ def test_connected_components_long_chain_guard(spark):
 
     with pytest.raises(RuntimeError, match="did not converge"):
         D.connected_components(df, max_iter=2)
+
+    scattered = spark.range(1000).select(
+        F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
+    ).repartition(64)
+    with pytest.raises(D.ComponentsDidNotConvergeError, match="did not converge"):
+        D.connected_components(scattered, max_iter=3)
 
 
 def test_cross_ngram_overlap_matches_python(spark):
@@ -1094,48 +1114,6 @@ def test_cross_ngram_overlap_matches_python(spark):
     assert got == want and (1, 10) in got and (3, 10) in got
 
 
-def test_connected_components_star_long_chain_and_parity(spark):
-    """method='star' (large-star/small-star, Kiveris et al.) must solve
-    the adversarial long-chain graph min-label loudly refuses: a
-    1000-edge chain needs ~250 two-hop min-label rounds (> the default
-    25) but converges in O(log² n) star rounds (VERDICT r3 #9). Also
-    parity vs min_label on a mixed random graph."""
-    import numpy as np
-
-    # scatter the chain across many partitions: the r7 partition-local
-    # star reduction legitimately SOLVES a co-located chain (one
-    # union-find pass), so the adversarial case is a chain whose edges
-    # are spread so every partition holds disconnected fragments and
-    # the reduced graph keeps a large diameter
-    chain = spark.range(1000).select(
-        F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
-    ).repartition(64)
-    with pytest.raises(RuntimeError, match="did not converge"):
-        D.connected_components(chain, max_iter=3)
-    got = D.connected_components(chain, method="star", max_iter=30).toPandas()
-    assert len(got) == 1001
-    assert (got["cluster_id"] == 0).all()
-    assert sorted(got["id"]) == list(range(1001))
-
-    rng = np.random.RandomState(3)
-    edges = [
-        (int(a), int(b))
-        for a, b in rng.randint(0, 80, size=(120, 2))
-        if a != b
-    ]
-    p2 = spark.createDataFrame(edges, "id_a long, id_b long")
-    star = (
-        D.connected_components(p2, method="star")
-        .toPandas().sort_values("id").reset_index(drop=True)
-    )
-    ml = (
-        D.connected_components(p2, method="min_label")
-        .toPandas().sort_values("id").reset_index(drop=True)
-    )
-    assert (star["id"].values == ml["id"].values).all()
-    assert (star["cluster_id"].values == ml["cluster_id"].values).all()
-
-
 def test_label_centroids_matches_numpy_and_plan(vectors):
     """Per-label centroid aggregate: values match numpy means; the plan
     is ONE hash exchange with NO Generate/explode node — the per-
@@ -1164,21 +1142,6 @@ def test_label_centroids_matches_numpy_and_plan(vectors):
         n, cent = got[lbl]
         assert n == len(members)
         assert np.allclose(np.array(cent), members.mean(axis=0), atol=1e-9)
-
-
-def test_connected_components_star_self_loop_parity(spark):
-    """Self-loop-only vertices must come back as singleton clusters from
-    BOTH methods — star used to drop them with its s != d edge filter
-    (code-review r4 finding)."""
-    df = spark.createDataFrame(
-        [(7, 7), (1, 2)], "id_a long, id_b long"
-    )
-    for method in ("min_label", "star"):
-        got = {
-            r["id"]: r["cluster_id"]
-            for r in D.connected_components(df, method=method).collect()
-        }
-        assert got == {1: 1, 2: 1, 7: 7}, (method, got)
 
 
 def test_interval_join_semantics_and_plan(spark):
