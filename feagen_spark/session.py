@@ -8,7 +8,10 @@ The codegen class cache is sized to the engine's working set, so a JVM
 that runs the same plans again (a resume, a refresh, the next batch)
 compiles each generated class once. Tungsten pages are the smallest the
 driver heap allows, so a task that aggregates or sorts a few rows does
-not take a 64 MiB array for them.
+not take a 64 MiB array for them. The broadcast chunk, into which every
+stage's task binary and every broadcast is serialized, is at most a
+quarter of a G1 region of the driver heap, so a small closure is not a
+humongous allocation either.
 """
 
 from __future__ import annotations
@@ -40,18 +43,52 @@ CODEGEN_CACHE_ENTRIES = 2048
 # 8192 pages (TaskMemoryManager.PAGE_TABLE_SIZE), so the page is the smallest
 # power of two >= 1 MiB with 8192 pages >= the driver heap (1 MiB at 8g).
 PAGE_TABLE_SIZE = 8192
+
+# Broadcast chunk (spark.broadcast.blockSize, default 4 MiB). TorrentBroadcast
+# serializes every stage's task binary and every broadcast into chunks of this
+# size, so even a closure of a few KiB takes a whole first chunk. G1 splits the
+# heap into about 2048 regions (4 MiB at an 8g heap, 32 MiB at 48g, as the JVM
+# reports G1HeapRegionSize), and an array of half a region or more is a
+# humongous object, allocated outside the TLABs into regions of its own: at the
+# default a perfbench corpus_dedup op (local[2], 8g) made 47 of them, 188 MB of
+# its ~1.16 GB heap allocation. The chunk is the largest power of two
+# <= heap / (4 * 2048), at most Spark's 4 MiB: at most a quarter region
+# whether the JVM rounds the region size up or down, so with its 16-byte array
+# header it stays below the humongous threshold. 1 MiB at 8g, 512 KiB at 4g,
+# 4 MiB (Spark's own) from 32g. Over alternating perfbench pairs on a 4-core
+# VM, 1 MiB cut the median heap allocation per op from 1 146 to 808 MB on
+# corpus_dedup (11 pairs) and from 2 574 to 2 263 MB on pit_resume_refresh
+# (8 pairs); op times stayed inside the parent's spread.
+G1_TARGET_REGIONS = 2048
+BROADCAST_BLOCK_MAX = 4 << 20
 _MEM_UNITS = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
 
 
-def page_bytes(driver_memory: str) -> int:
-    """Tungsten page size for a driver heap given as a Spark memory string
-    (``"8g"``; a bare number is MiB, as for ``spark.driver.memory``)."""
+def _heap_bytes(driver_memory: str) -> int:
+    """Bytes of a Spark memory string (``"8g"``; a bare number is MiB, as
+    for ``spark.driver.memory``)."""
     s = driver_memory.strip().lower().removesuffix("b")
-    heap = int(s[:-1]) * _MEM_UNITS[s[-1]] if s[-1] in _MEM_UNITS else int(s) << 20
+    return int(s[:-1]) * _MEM_UNITS[s[-1]] if s[-1] in _MEM_UNITS else int(s) << 20
+
+
+def page_bytes(driver_memory: str) -> int:
+    """Tungsten page size for a driver heap given as a Spark memory string."""
+    heap = _heap_bytes(driver_memory)
     page = 1 << 20
     while page * PAGE_TABLE_SIZE < heap:
         page *= 2
     return page
+
+
+def broadcast_block_bytes(driver_memory: str) -> int:
+    """Broadcast chunk size for a driver heap given as a Spark memory
+    string: the largest power of two <= heap / (4 * G1_TARGET_REGIONS),
+    at most BROADCAST_BLOCK_MAX."""
+    heap = _heap_bytes(driver_memory)
+    block = BROADCAST_BLOCK_MAX
+    while block * 4 * G1_TARGET_REGIONS > heap:
+        block //= 2
+    return block
 
 
 def get_spark(
@@ -87,6 +124,8 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.buffer.pageSize", str(page_bytes(driver_memory)))
+        # a bare number here is KiB, not bytes
+        .config("spark.broadcast.blockSize", f"{broadcast_block_bytes(driver_memory) >> 10}k")
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

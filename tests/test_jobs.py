@@ -311,6 +311,30 @@ def test_session_page_spans_driver_heap(spark):
     assert env.memoryManager().pageSizeBytes() == page_bytes(conf.get("spark.driver.memory"))
 
 
+def test_session_broadcast_block_not_humongous(spark):
+    """The broadcast chunk that every task binary is serialized into is the
+    largest power of two <= heap / 8192, at most Spark's 4 MiB, and the
+    session's chunk plus its array header stays below half of the live
+    JVM's G1 region, so G1 never allocates it as a humongous object (at
+    Spark's 4 MiB default it is one at an 8g heap's 4 MiB regions)."""
+    from feagen_spark.session import broadcast_block_bytes
+
+    assert broadcast_block_bytes("8g") == 1 << 20
+    assert broadcast_block_bytes("4g") == 512 << 10
+    assert broadcast_block_bytes("48g") == broadcast_block_bytes("96g") == 4 << 20
+    assert broadcast_block_bytes("512m") == broadcast_block_bytes("512") == 64 << 10
+    jvm = spark.sparkContext._jvm
+    block_kib = jvm.org.apache.spark.SparkEnv.get().conf().getSizeAsKb("spark.broadcast.blockSize")
+    assert block_kib * 1024 == broadcast_block_bytes(
+        spark.sparkContext.getConf().get("spark.driver.memory")
+    )
+    bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+    )
+    region = int(bean.getVMOption("G1HeapRegionSize").getValue())
+    assert block_kib * 1024 + 16 < region // 2
+
+
 def test_run_features_pack_tokenize_vocab(spark, tmp_path, monkeypatch, capsys):
     """tokenize_vocab packs BY TOKEN BUDGET with hash-token-id payloads
     derived in-stage — no len_col/payload_col in the config."""
